@@ -27,219 +27,131 @@ import scala.jdk.CollectionConverters._
   * canceled, compute is not reclaimed. The reference has the same gap
   * unless the owning process consumes the cancel message itself.
   */
-final class FileQueueBroker(queueRoot: File, store: JobStateStore) extends JobBroker {
+final class FileQueueBroker(queueRoot: File, store: JobStateStore) extends BrokerBase(store) {
   require(queueRoot.isDirectory || queueRoot.mkdirs(), s"cannot create $queueRoot")
-  @volatile private var closed = false
-  private val seq = new java.util.concurrent.atomic.AtomicLong()
 
-  private def queueDir(queue: String): Path = {
-    val p = queueRoot.toPath.resolve(FileQueue.safe(queue))
-    Files.createDirectories(p)
-    p
-  }
+  protected def enqueue(job: Job, task: Task, epoch: Long): Unit =
+    FileQueue.publish(queueRoot, job, epoch, 1)
 
-  override def submit(job: Job, task: Task): Boolean = {
-    require(!closed, "broker stopped")
-    val epoch = store.tryAdmit(job.id)
-    if (epoch < 0) return false
-    try {
-      // monotonic name: (millis, per-JVM seq, pid) orders the backlog and
-      // never collides across submitting processes
-      val name = f"${System.currentTimeMillis()}%013d_${seq.incrementAndGet()}%06d_" +
-        s"${ProcessHandle.current().pid()}_${FileQueue.safe(job.id)}.props"
-      FileQueue.writeJob(queueDir(job.queue).resolve(name), job, epoch)
-      true
-    } catch {
-      case e: Throwable =>
-        store.rollback(job.id) // failed enqueue must not wedge the ID
-        throw e
-    }
-  }
-
-  override def pendingJobs(queue: String): Seq[String] = {
-    val stream = Files.list(queueDir(queue))
-    // newest-first, like the reference's reversed pending listing
-    try stream.iterator().asScala.toSeq
+  /** Newest-first, like the reference's reversed pending listing. */
+  override def pendingJobs(queue: String): Seq[String] =
+    FileQueue.list(FileQueue.queueDir(queueRoot, queue))
       .filter(_.getFileName.toString.endsWith(".props"))
       .sortBy(_.getFileName.toString).reverse
       .flatMap(p => FileQueue.readJob(p).map(_._1.id))
-    finally stream.close()
-  }
 
-  override def cancel(jobId: String, purge: Boolean, backends: SourcePool): Unit = {
-    store.get(jobId) match {
-      case None => throw new NoSuchElementException(s"unknown job: $jobId")
-      case Some(st) =>
-        val completed = st.state == JobState.Success || st.state == JobState.Failure
-        if (completed && !purge)
-          throw new IllegalStateException("can't cancel a completed job without purge")
-        store.remove(jobId) // workers' pre-run checks key off absence
-        // drop the unclaimed queue file, if any (claimed files are gone; a
-        // claim racing this delete is stopped by the store check instead)
-        val stream = Files.list(queueRoot.toPath)
-        try stream.iterator().asScala.foreach { qd =>
-          if (Files.isDirectory(qd)) {
-            val files = Files.list(qd)
-            try files.iterator().asScala.foreach { p =>
-              if (p.getFileName.toString.endsWith(s"_${FileQueue.safe(jobId)}.props"))
-                Files.deleteIfExists(p)
-            } finally files.close()
-          }
-        } finally stream.close()
-        if (purge) ResultPurge.purge(backends, jobId)
-    }
-  }
-
-  override def cancelGroup(groupId: String, purge: Boolean, backends: SourcePool): Unit = {
-    val ids = store.groupJobIds(groupId)
-      .getOrElse(throw new NoSuchElementException(s"unknown group: $groupId"))
-    val statuses = ids.flatMap(store.get)
-    val allDone = statuses.nonEmpty && statuses.forall(s =>
-      s.state == JobState.Success || s.state == JobState.Failure)
-    if (allDone && !purge)
-      throw new IllegalStateException("can't cancel a completed group without purge")
-    ids.foreach { id =>
-      store.get(id).foreach { st =>
-        val completed = st.state == JobState.Success || st.state == JobState.Failure
-        if (completed && !purge) store.remove(id)
-        else cancel(id, purge, backends)
+  /** Delete the unclaimed queue file, if any (claimed files are gone). */
+  protected def dropQueued(jobId: String): Unit =
+    FileQueue.list(queueRoot.toPath).filter(Files.isDirectory(_)).foreach { qd =>
+      FileQueue.list(qd).foreach { p =>
+        if (p.getFileName.toString.endsWith(s"_${FileQueue.safe(jobId)}.props"))
+          Files.deleteIfExists(p)
       }
     }
-    store.removeGroup(groupId)
-  }
 
-  /** Drained when no queue files remain unclaimed and no shared-store entry
-    * is still live (workers may be mid-run in other processes). */
-  override def awaitQuiescence(timeoutMs: Long = 120000): Boolean = {
-    val deadline = System.currentTimeMillis + timeoutMs
-    while (System.currentTimeMillis < deadline) {
-      val stream = Files.walk(queueRoot.toPath)
-      val queued = try stream.iterator().asScala.exists(
-        _.getFileName.toString.endsWith(".props")) finally stream.close()
-      val live = store.snapshot.values.exists(s => s.state == JobState.Pending ||
-        s.state == JobState.Started || s.state == JobState.Retry)
-      if (!queued && !live) return true
-      Thread.sleep(25)
-    }
-    false
+  /** Unclaimed files, and claims not yet handed to a scheduler. */
+  protected def anyQueued: Boolean = {
+    val stream = Files.walk(queueRoot.toPath)
+    try stream.iterator().asScala.exists(_.getFileName.toString.endsWith(".props"))
+    finally stream.close()
   }
-
-  override def shutdown(): Unit = closed = true
 }
 
 /** Worker-process side: claims queue files by atomic rename and executes
-  * them through a local [[Scheduler]] (full retry/TTL/cancel machinery)
-  * against the SHARED state store. `queues = None` consumes everything —
-  * the reference's `--worker-only` with queue filters maps to `Some(...)`. */
+  * them through the [[ClaimLoop]] against the SHARED state store.
+  * `queues = None` consumes everything — the reference's `--worker-only`
+  * with queue filters maps to `Some(...)`. */
 final class FileQueueWorker(
     spark: org.apache.spark.sql.SparkSession,
     tasks: Map[String, Task],
     store: JobStateStore,
     queueRoot: File,
     queues: Option[Seq[String]] = None,
-    pollMs: Long = 50) {
+    pollMs: Long = ClaimLoop.DefaultPollMs)
+  extends ClaimLoop(spark, tasks, store, new FileClaims(queueRoot, queues), pollMs,
+    "graft-file-queue-worker")
 
-  private val scheduler = new Scheduler(spark, store)
+/** The file plane's claim primitive: an atomic rename into `_claimed`,
+  * named `<claimerPid>__<queueDir>__<file>` so a claim whose owner died
+  * before executing it can be told from a live one. */
+private[graft] final class FileClaims(queueRoot: File, queues: Option[Seq[String]])
+    extends ClaimBackend {
+  type Receipt = Path
   private val claimedDir = queueRoot.toPath.resolve("_claimed")
   Files.createDirectories(claimedDir)
-  @volatile private var stopped = false
-  private val retrySeq = new java.util.concurrent.atomic.AtomicLong()
+  private val pid = ProcessHandle.current().pid()
+  /** The current sweep's unclaimed files, oldest first per queue. */
+  private var listed: Iterator[(Path, Path)] = Iterator.empty
 
-  // Retryable failures re-publish through the SHARED queue directory (state
-  // Retry is already stamped in the shared store by the scheduler): any
-  // worker in the fleet — not just this one — claims the next attempt, so a
-  // worker that is sick (full disk, bad mount, dying JVM) doesn't pin the
-  // job's remaining retries to itself. The queue poll cadence is the
-  // backoff. Publish failure → return false → the scheduler falls back to
-  // retrying locally, so the attempt is never dropped either way.
-  scheduler.retryPublisher = (job, nextAttempt, epoch) => {
-    if (stopped) false
-    else {
-      val qd = queueRoot.toPath.resolve(FileQueue.safe(job.queue))
-      Files.createDirectories(qd)
-      val name = f"${System.currentTimeMillis()}%013d_${retrySeq.incrementAndGet()}%06d_" +
-        s"${ProcessHandle.current().pid()}_${FileQueue.safe(job.id)}.props"
-      FileQueue.writeJob(qd.resolve(name), job, epoch, nextAttempt)
-      true
-    }
-  }
-
-  // Crash recovery: claims are named <claimerPid>__<queueDir>__<file>, so a
-  // starting worker can detect claims whose owner died between claim and
-  // execution (a crash there strands the job as PENDING forever — the store
-  // entry is live but nobody holds the file) and requeue them. Claims by
-  // live processes are left alone.
-  locally {
-    val stream = Files.list(claimedDir)
-    try stream.iterator().asScala.foreach { p =>
+  /** A claim whose owner died between claim and execution strands the job
+    * as PENDING forever (the store entry is live but nobody holds the
+    * file): move it back. Claims by live processes are left alone. */
+  def recoverOrphans(): Unit =
+    FileQueue.list(claimedDir).foreach { p =>
       p.getFileName.toString.split("__", 3) match {
-        case Array(pid, qdir, rest) if pid.forall(_.isDigit) &&
-            ProcessHandle.of(pid.toLong).isEmpty =>
+        case Array(owner, qdir, rest) if owner.forall(_.isDigit) &&
+            ProcessHandle.of(owner.toLong).isEmpty =>
           val back = queueRoot.toPath.resolve(qdir).resolve(rest)
           Files.createDirectories(back.getParent)
           try Files.move(p, back, StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.io.IOException => () } // another starter won
+          catch { case _: java.io.IOException => () } // another worker won
         case _ => ()
       }
-    } finally stream.close()
-  }
-
-  private val loop = new Thread(() => {
-    while (!stopped) {
-      try pollOnce() catch { case _: InterruptedException => () }
-      try Thread.sleep(pollMs) catch { case _: InterruptedException => () }
     }
-  }, "graft-file-queue-worker")
-  loop.setDaemon(true)
-  loop.start()
 
   private def wantedQueue(dirName: String): Boolean =
     queues.forall(_.exists(q => FileQueue.safe(q) == dirName))
 
-  private def pollOnce(): Unit = {
-    val qs = Files.list(queueRoot.toPath)
-    val dirs = try qs.iterator().asScala.toList.filter(p =>
-      Files.isDirectory(p) && p.getFileName.toString != "_claimed" &&
-        wantedQueue(p.getFileName.toString)) finally qs.close()
-    dirs.foreach { qd =>
-      val files = Files.list(qd)
-      val batch = try files.iterator().asScala.toList
-        .filter(_.getFileName.toString.endsWith(".props"))
-        .sortBy(_.getFileName.toString) finally files.close()
-      batch.foreach { p =>
-        // claim = atomic rename; exactly one worker process wins a file.
-        // Name carries (claimer pid, queue dir) for crash recovery above.
-        val mine = claimedDir.resolve(
-          s"${ProcessHandle.current().pid()}__${qd.getFileName}__${p.getFileName}")
-        val won =
-          try { Files.move(p, mine, StandardCopyOption.ATOMIC_MOVE); true }
-          catch { case _: java.io.IOException => false }
-        if (won) FileQueue.readJob(mine) match {
-          case Some((job, epoch, attempt)) =>
-            tasks.get(job.taskName) match {
-              case Some(task) => scheduler.executeClaimed(job, task, epoch, attempt)
-              case None => // this worker doesn't carry the task dir: refuse
-                store.setIfPresent(job.id, JobState.Failure, -1,
-                  s"worker has no task '${job.taskName}'")
-            }
-            Files.deleteIfExists(mine): Unit
-          case None => () // torn/foreign file: leave in _claimed for autopsy
-        }
+  def claim(): Option[Claimed[Path]] = {
+    if (!listed.hasNext)
+      listed = FileQueue.list(queueRoot.toPath).filter(p => Files.isDirectory(p) &&
+          p != claimedDir && wantedQueue(p.getFileName.toString))
+        .flatMap(qd => FileQueue.list(qd)
+          .filter(_.getFileName.toString.endsWith(".props"))
+          .sortBy(_.getFileName.toString).map(qd -> _))
+        .iterator
+    while (listed.hasNext) {
+      val (qd, p) = listed.next()
+      // exactly one worker process wins the rename
+      val mine = claimedDir.resolve(s"${pid}__${qd.getFileName}__${p.getFileName}")
+      val won =
+        try { Files.move(p, mine, StandardCopyOption.ATOMIC_MOVE); true }
+        catch { case _: java.io.IOException => false }
+      // a torn/foreign file stays in _claimed for autopsy
+      if (won) FileQueue.readJob(mine) match {
+        case Some((job, epoch, attempt)) => return Some(Claimed(job, epoch, attempt, mine))
+        case None => ()
       }
     }
+    None
   }
 
-  def awaitQuiescence(timeoutMs: Long = 120000): Boolean =
-    scheduler.awaitQuiescence(timeoutMs)
+  def ack(c: Claimed[Path]): Unit = Files.deleteIfExists(c.receipt): Unit
 
-  def stop(): Unit = {
-    stopped = true
-    loop.interrupt()
-    scheduler.shutdown()
-  }
+  def republish(job: Job, attempt: Int, epoch: Long): Unit =
+    FileQueue.publish(queueRoot, job, epoch, attempt)
 }
 
 private[graft] object FileQueue {
+  private val seq = new java.util.concurrent.atomic.AtomicLong()
+
+  def list(dir: Path): List[Path] = {
+    val stream = Files.list(dir)
+    try stream.iterator().asScala.toList finally stream.close()
+  }
+
+  def queueDir(queueRoot: File, queue: String): Path =
+    Files.createDirectories(queueRoot.toPath.resolve(safe(queue)))
+
+  /** Drop a queue file for `attempt` of an admitted job. The name
+    * (millis, per-JVM seq, pid) orders the backlog and never collides
+    * across publishing processes. */
+  def publish(queueRoot: File, job: Job, epoch: Long, attempt: Int): Unit = {
+    val name = f"${System.currentTimeMillis()}%013d_${seq.incrementAndGet()}%06d_" +
+      s"${ProcessHandle.current().pid()}_${safe(job.id)}.props"
+    writeJob(queueDir(queueRoot, job.queue).resolve(name), job, epoch, attempt)
+  }
+
   def safe(s: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(10)

@@ -98,10 +98,8 @@ final class FileJobStateStore(rootDir: File) extends JobStateStore {
   }
 
   override def tryAdmit(id: String): Long = withLock(id) {
-    val running = readProps(jobFile(id)).exists { p =>
-      val st = JobState.withName(p.getProperty("state"))
-      st == JobState.Pending || st == JobState.Started || st == JobState.Retry
-    }
+    val running = readProps(jobFile(id)).exists(p =>
+      JobState.isLive(JobState.withName(p.getProperty("state"))))
     if (running) -1L
     else {
       val next = epoch(id) + 1

@@ -26,14 +26,22 @@ final class HttpApi(core: GraftCore, port: Int = 0) {
 
   def boundPort: Int = server.getAddress.getPort
 
+  /** Request threads, named `graft-http-<port>-<n>`; [[stop]] releases
+    * them (they are non-daemon, so a leaked pool keeps the JVM alive). */
+  private val executor = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    java.util.concurrent.Executors.newFixedThreadPool(4,
+      (r: Runnable) => new Thread(r, s"graft-http-$boundPort-${n.incrementAndGet()}"))
+  }
+
   def start(): HttpApi = {
     server.createContext("/", (ex: HttpExchange) => route(ex))
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    server.setExecutor(executor)
     server.start()
     this
   }
 
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = { server.stop(0); executor.shutdown() }
 
   // ------------------------------------------------------------ routing
   private def route(ex: HttpExchange): Unit = {

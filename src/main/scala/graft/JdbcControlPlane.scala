@@ -35,10 +35,7 @@ import java.time.LocalDateTime
 final class JdbcJobStateStore(url: String) extends JobStateStore {
   JdbcControlPlane.ensureSchema(url)
 
-  private def withConn[A](f: Connection => A): A = {
-    val c = DriverManager.getConnection(url)
-    try f(c) finally c.close()
-  }
+  private def withConn[A](f: Connection => A): A = JdbcControlPlane.withConn(url)(f)
 
   private val Live = Seq(JobState.Pending, JobState.Started, JobState.Retry).map(_.toString)
 
@@ -223,35 +220,13 @@ final class JdbcJobStateStore(url: String) extends JobStateStore {
 }
 
 /** API-node side: admit through the shared store, enqueue a row. */
-final class JdbcQueueBroker(url: String, store: JobStateStore) extends JobBroker {
+final class JdbcQueueBroker(url: String, store: JobStateStore) extends BrokerBase(store) {
   JdbcControlPlane.ensureSchema(url)
-  @volatile private var closed = false
 
-  private def withConn[A](f: Connection => A): A = {
-    val c = DriverManager.getConnection(url)
-    try f(c) finally c.close()
-  }
+  private def withConn[A](f: Connection => A): A = JdbcControlPlane.withConn(url)(f)
 
-  override def submit(job: Job, task: Task): Boolean = {
-    require(!closed, "broker stopped")
-    val epoch = store.tryAdmit(job.id)
-    if (epoch < 0) return false
-    try withConn { c =>
-      val ps = c.prepareStatement(
-        "INSERT INTO graft_queue(job_id, queue, task, eta, retries, ttl, args, db, epoch, attempt) " +
-          "VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, 1)")
-      ps.setString(1, job.id); ps.setString(2, job.queue); ps.setString(3, job.taskName)
-      ps.setString(4, job.eta.map(_.toString).orNull)
-      ps.setInt(5, job.retries); ps.setInt(6, job.ttlSec)
-      ps.setString(7, JdbcControlPlane.encodeArgs(job.args))
-      ps.setString(8, job.db.orNull); ps.setLong(9, epoch)
-      try { ps.executeUpdate(); true } finally ps.close()
-    } catch {
-      case e: Throwable =>
-        store.rollback(job.id) // failed enqueue must not wedge the ID
-        throw e
-    }
-  }
+  protected def enqueue(job: Job, task: Task, epoch: Long): Unit =
+    withConn(JdbcControlPlane.insertQueueRow(_, job, epoch, 1))
 
   override def pendingJobs(queue: String): Seq[String] = withConn { c =>
     val ps = c.prepareStatement(
@@ -263,141 +238,50 @@ final class JdbcQueueBroker(url: String, store: JobStateStore) extends JobBroker
     finally { rs.close(); ps.close() }
   }
 
-  override def cancel(jobId: String, purge: Boolean, backends: SourcePool): Unit = {
-    store.get(jobId) match {
-      case None => throw new NoSuchElementException(s"unknown job: $jobId")
-      case Some(st) =>
-        val completed = st.state == JobState.Success || st.state == JobState.Failure
-        if (completed && !purge)
-          throw new IllegalStateException("can't cancel a completed job without purge")
-        store.remove(jobId) // workers' pre-run checks key off absence
-        withConn { c =>
-          // unclaimed row only — a claim racing this delete is stopped by
-          // the store check instead (same contract as FileQueueBroker)
-          val del = c.prepareStatement(
-            "DELETE FROM graft_queue WHERE job_id = ? AND claimed_by IS NULL")
-          del.setString(1, jobId)
-          try del.executeUpdate() finally del.close()
-        }
-        if (purge) ResultPurge.purge(backends, jobId)
-    }
+  /** Delete the unclaimed row only. */
+  protected def dropQueued(jobId: String): Unit = withConn { c =>
+    val del = c.prepareStatement(
+      "DELETE FROM graft_queue WHERE job_id = ? AND claimed_by IS NULL")
+    del.setString(1, jobId)
+    try del.executeUpdate() finally del.close()
   }
 
-  override def cancelGroup(groupId: String, purge: Boolean, backends: SourcePool): Unit = {
-    val ids = store.groupJobIds(groupId)
-      .getOrElse(throw new NoSuchElementException(s"unknown group: $groupId"))
-    val statuses = ids.flatMap(store.get)
-    val allDone = statuses.nonEmpty && statuses.forall(s =>
-      s.state == JobState.Success || s.state == JobState.Failure)
-    if (allDone && !purge)
-      throw new IllegalStateException("can't cancel a completed group without purge")
-    ids.foreach { id =>
-      store.get(id).foreach { st =>
-        val completed = st.state == JobState.Success || st.state == JobState.Failure
-        if (completed && !purge) store.remove(id)
-        else cancel(id, purge, backends)
-      }
-    }
-    store.removeGroup(groupId)
+  /** Any row, claimed or not: a claimed row is deleted once handed off. */
+  protected def anyQueued: Boolean = withConn { c =>
+    val ps = c.prepareStatement("SELECT COUNT(*) FROM graft_queue")
+    val rs = ps.executeQuery()
+    try { rs.next(); rs.getLong(1) > 0 } finally { rs.close(); ps.close() }
   }
-
-  override def awaitQuiescence(timeoutMs: Long = 120000): Boolean = {
-    val deadline = System.currentTimeMillis + timeoutMs
-    while (System.currentTimeMillis < deadline) {
-      val queued = withConn { c =>
-        val ps = c.prepareStatement("SELECT COUNT(*) FROM graft_queue")
-        val rs = ps.executeQuery()
-        try { rs.next(); rs.getLong(1) > 0 } finally { rs.close(); ps.close() }
-      }
-      val live = store.snapshot.values.exists(s => s.state == JobState.Pending ||
-        s.state == JobState.Started || s.state == JobState.Retry)
-      if (!queued && !live) return true
-      Thread.sleep(25)
-    }
-    false
-  }
-
-  override def shutdown(): Unit = closed = true
 }
 
-/** Worker-process side: claim rows by conditional UPDATE, execute through a
-  * local [[Scheduler]] against the shared store, lease-recover claims whose
-  * owner died between claim and execution. */
+/** Worker-process side: claims rows by conditional UPDATE and executes
+  * them through the [[ClaimLoop]] against the shared store; claims whose
+  * owner died between claim and execution are lease-recovered. */
 final class JdbcQueueWorker(
     spark: org.apache.spark.sql.SparkSession,
     tasks: Map[String, Task],
     store: JobStateStore,
     url: String,
     queues: Option[Seq[String]] = None,
-    pollMs: Long = 50,
-    claimLeaseMs: Long = 30000) {
-  JdbcControlPlane.ensureSchema(url)
+    pollMs: Long = ClaimLoop.DefaultPollMs,
+    claimLeaseMs: Long = ClaimLoop.DefaultClaimLeaseMs)
+  extends ClaimLoop(spark, tasks, store, new JdbcClaims(url, store, queues, claimLeaseMs),
+    pollMs, "graft-jdbc-queue-worker")
 
-  private val scheduler = new Scheduler(spark, store)
+/** The JDBC plane's claim primitive: `UPDATE ... SET claimed_by WHERE
+  * seq = ? AND claimed_by IS NULL` — exactly one worker per row. The
+  * receipt is the row's `seq`. */
+private[graft] final class JdbcClaims(url: String, store: JobStateStore,
+    queues: Option[Seq[String]], claimLeaseMs: Long) extends ClaimBackend {
+  JdbcControlPlane.ensureSchema(url)
+  type Receipt = Long
   private val workerId =
     s"${java.net.InetAddress.getLocalHost.getHostName}-${ProcessHandle.current().pid()}-${System.nanoTime()}"
-  @volatile private var stopped = false
 
-  private def withConn[A](f: Connection => A): A = {
-    val c = DriverManager.getConnection(url)
-    try f(c) finally c.close()
-  }
-
-  // Retryable failures re-insert the queue row (attempt+1, same admission
-  // epoch) instead of retrying on this worker's timers: the retry is visible
-  // in the shared table and ANY worker claims the next attempt — mirrors
-  // [[FileQueueWorker]]'s re-publish; see [[Scheduler.retryPublisher]].
-  scheduler.retryPublisher = (job, nextAttempt, epoch) => {
-    if (stopped) false
-    else withConn { c =>
-      val ps = c.prepareStatement(
-        "INSERT INTO graft_queue(job_id, queue, task, eta, retries, ttl, args, db, epoch, attempt) " +
-          "VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, ?)")
-      ps.setString(1, job.id); ps.setString(2, job.queue); ps.setString(3, job.taskName)
-      ps.setString(4, job.eta.map(_.toString).orNull)
-      ps.setInt(5, job.retries); ps.setInt(6, job.ttlSec)
-      ps.setString(7, JdbcControlPlane.encodeArgs(job.args))
-      ps.setString(8, job.db.orNull); ps.setLong(9, epoch); ps.setInt(10, nextAttempt)
-      try { ps.executeUpdate(); true } finally ps.close()
-    }
-  }
-
-  private val loop = new Thread(() => {
-    while (!stopped) {
-      try pollOnce() catch {
-        case _: InterruptedException => ()
-        case _: SQLException => () // transient (e.g. Derby shutdown race)
-      }
-      try Thread.sleep(pollMs) catch { case _: InterruptedException => () }
-    }
-  }, "graft-jdbc-queue-worker")
-  loop.setDaemon(true)
-  loop.start()
+  private def withConn[A](f: Connection => A): A = JdbcControlPlane.withConn(url)(f)
 
   private def queueFilter: String =
     queues.map(qs => s" AND queue IN (${qs.map(_ => "?").mkString(",")})").getOrElse("")
-
-  private def pollOnce(): Unit = {
-    recoverExpiredClaims()
-    var more = true
-    while (more && !stopped) {
-      more = claimOne() match {
-        case Some((seq, job, epoch, attempt)) =>
-          tasks.get(job.taskName) match {
-            case Some(task) => scheduler.executeClaimed(job, task, epoch, attempt)
-            case None => store.setIfPresent(job.id, JobState.Failure, -1,
-              s"worker has no task '${job.taskName}'")
-          }
-          withConn { c =>
-            val del = c.prepareStatement("DELETE FROM graft_queue WHERE seq = ?")
-            del.setLong(1, seq)
-            try del.executeUpdate() finally del.close()
-          }
-          true
-        case None => false
-      }
-    }
-  }
 
   /** Claims whose owner died between claim and execution strand the job as
     * PENDING with nobody holding the row. PID liveness doesn't cross
@@ -406,7 +290,7 @@ final class JdbcQueueWorker(
     * finished one has deleted the row. The reset is conditional on the
     * exact (claimer, stamp) observed, so a live worker that just started
     * executing can't be double-claimed. */
-  private def recoverExpiredClaims(): Unit = withConn { c =>
+  def recoverOrphans(): Unit = withConn { c =>
     val sel = c.prepareStatement(
       "SELECT seq, job_id, claimed_by, claimed_at FROM graft_queue " +
         "WHERE claimed_by IS NOT NULL AND claimed_at < ?")
@@ -423,7 +307,7 @@ final class JdbcQueueWorker(
               "WHERE seq = ? AND claimed_by = ? AND claimed_at = ?")
           up.setLong(1, seq); up.setString(2, by); up.setLong(3, at)
           try up.executeUpdate() finally up.close()
-        case Some(st) if st.state == JobState.Success || st.state == JobState.Failure =>
+        case Some(st) if JobState.isDone(st.state) =>
           // owner died AFTER execution completed but before deleting its
           // row: nobody will ever claim or delete it, and awaitQuiescence
           // counts every graft_queue row — reap it here (conditional on the
@@ -445,7 +329,7 @@ final class JdbcQueueWorker(
     try del.executeUpdate() finally del.close()
   }
 
-  private def claimOne(): Option[(Long, Job, Long, Int)] = withConn { c =>
+  def claim(): Option[Claimed[Long]] = withConn { c =>
     val sel = c.prepareStatement(
       s"SELECT MIN(seq) FROM graft_queue WHERE claimed_by IS NULL$queueFilter")
     queues.getOrElse(Nil).zipWithIndex.foreach { case (q, i) => sel.setString(i + 1, q) }
@@ -470,28 +354,45 @@ final class JdbcQueueWorker(
         val r = get.executeQuery()
         try {
           if (!r.next()) None
-          else Some((seq, Job(
+          else Some(Claimed(Job(
             r.getString(1), r.getString(3), r.getString(2),
             Option(r.getString(4)).map(LocalDateTime.parse),
             r.getInt(5), r.getInt(6),
             JdbcControlPlane.decodeArgs(r.getString(7)),
-            Option(r.getString(8))), r.getLong(9), r.getInt(10)))
+            Option(r.getString(8))), r.getLong(9), r.getInt(10), seq))
         } finally { r.close(); get.close() }
       }
     }
   }
 
-  def awaitQuiescence(timeoutMs: Long = 120000): Boolean =
-    scheduler.awaitQuiescence(timeoutMs)
-
-  def stop(): Unit = {
-    stopped = true
-    loop.interrupt()
-    scheduler.shutdown()
+  def ack(c: Claimed[Long]): Unit = withConn { conn =>
+    val del = conn.prepareStatement("DELETE FROM graft_queue WHERE seq = ?")
+    del.setLong(1, c.receipt)
+    try del.executeUpdate() finally del.close()
   }
+
+  def republish(job: Job, attempt: Int, epoch: Long): Unit =
+    withConn(JdbcControlPlane.insertQueueRow(_, job, epoch, attempt))
 }
 
 private[graft] object JdbcControlPlane {
+  def withConn[A](url: String)(f: Connection => A): A = {
+    val c = DriverManager.getConnection(url)
+    try f(c) finally c.close()
+  }
+
+  def insertQueueRow(c: Connection, job: Job, epoch: Long, attempt: Int): Unit = {
+    val ps = c.prepareStatement(
+      "INSERT INTO graft_queue(job_id, queue, task, eta, retries, ttl, args, db, epoch, attempt) " +
+        "VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, ?)")
+    ps.setString(1, job.id); ps.setString(2, job.queue); ps.setString(3, job.taskName)
+    ps.setString(4, job.eta.map(_.toString).orNull)
+    ps.setInt(5, job.retries); ps.setInt(6, job.ttlSec)
+    ps.setString(7, encodeArgs(job.args))
+    ps.setString(8, job.db.orNull); ps.setLong(9, epoch); ps.setInt(10, attempt)
+    try ps.executeUpdate() finally ps.close()
+  }
+
   /** Create the four control-plane tables if absent; races between processes
     * are benign (duplicate-CREATE errors are swallowed). Types stick to the
     * SQL-92 subset Derby/Postgres/MySQL all accept. */

@@ -14,6 +14,10 @@ object JobState extends Enumeration {
   /** The reference's public states (`core.go:574-580`). */
   val Pending, Started, Retry, Success, Failure = Value
   def label(v: Value): String = v.toString.toUpperCase
+  /** Terminal: the job ran to an outcome (re-admission is allowed). */
+  def isDone(v: Value): Boolean = v == Success || v == Failure
+  /** Queued or running: the ID is held against re-admission. */
+  def isLive(v: Value): Boolean = !isDone(v)
 }
 
 /** JobReq (`models/models.go:8-19`): caller-supplied job parameters. */
@@ -104,9 +108,7 @@ final class StatusStore extends JobStateStore {
   def tryAdmit(id: String): Long = {
     var myEpoch = -1L
     jobs.compute(id, (_, cur) => {
-      val running = cur != null &&
-        (cur.state == JobState.Pending || cur.state == JobState.Started ||
-         cur.state == JobState.Retry)
+      val running = cur != null && JobState.isLive(cur.state)
       if (running) cur
       else {
         canceled.remove(id)

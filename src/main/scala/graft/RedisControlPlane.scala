@@ -29,7 +29,7 @@ import java.nio.charset.StandardCharsets
   *   - `processing:<worker>` the reliable-queue parking list: a claim is
   *                   `LMOVE queue:<q> processing:<w> RIGHT LEFT` (atomic
   *                   pop-and-park), acked with LREM once handed to the
-  *                   local scheduler; [[RedisQueueWorker]]'s reaper
+  *                   local scheduler; [[RedisClaims]]'s reaper
   *                   recovers orphans (see there)
   *   - `group:<gid>` member-ID list
   *
@@ -93,7 +93,7 @@ object RedisControlPlane {
       * LMOVE/RPOPLPUSH are in the set for the same no-blind-retry reason
       * (a replay would claim a SECOND payload), but their lost reply is
       * no longer lost DATA: the atomic move parks the payload in the
-      * worker's processing list, where [[RedisQueueWorker]]'s reaper
+      * worker's processing list, where [[RedisClaims]]'s reaper
       * recovers it — the standard Redis reliable-queue pattern. */
     private val noRetry =
       Set("RPOP", "LPOP", "BRPOP", "BLPOP", "LMOVE", "RPOPLPUSH", "BLMOVE")
@@ -272,8 +272,7 @@ final class RedisJobStateStore(host: String, port: Int, prefix: String = "graft:
       "count", count.toString, "error", error): Unit
 
   override def tryAdmit(id: String): Long = withLock(id) {
-    val live = readStatus(id).exists(s => s.state == JobState.Pending ||
-      s.state == JobState.Started || s.state == JobState.Retry)
+    val live = readStatus(id).exists(s => JobState.isLive(s.state))
     if (live) -1L
     else {
       val next = c.cmdLong("INCR", metaKey(id))
@@ -347,26 +346,14 @@ final class RedisJobStateStore(host: String, port: Int, prefix: String = "graft:
 
 /** API-node [[JobBroker]] over Redis lists. */
 final class RedisQueueBroker(host: String, port: Int, store: JobStateStore,
-    prefix: String = "graft:") extends JobBroker {
+    prefix: String = "graft:") extends BrokerBase(store) {
   import RedisControlPlane._
   private val c = new RespClient(host, port)
-  @volatile private var closed = false
 
   private def queueKey(q: String) = s"${prefix}queue:$q"
 
-  override def submit(job: Job, task: Task): Boolean = {
-    require(!closed, "broker stopped")
-    val epoch = store.tryAdmit(job.id)
-    if (epoch < 0) return false
-    try {
-      c.cmd("LPUSH", queueKey(job.queue), encodeJob(job, epoch, 1))
-      true
-    } catch {
-      case e: Throwable =>
-        store.rollback(job.id) // failed enqueue must not wedge the ID
-        throw e
-    }
-  }
+  protected def enqueue(job: Job, task: Task, epoch: Long): Unit =
+    c.cmd("LPUSH", queueKey(job.queue), encodeJob(job, epoch, 1)): Unit
 
   /** Newest-first: LPUSH puts the newest at the head, LRANGE walks
     * head→tail — the reference's reversed pending listing for free. */
@@ -374,73 +361,34 @@ final class RedisQueueBroker(host: String, port: Int, store: JobStateStore,
     c.cmdSeq("LRANGE", queueKey(queue), "0", "-1")
       .flatMap(p => decodeJob(p.toString).map(_._1.id))
 
-  override def cancel(jobId: String, purge: Boolean, backends: SourcePool): Unit = {
-    store.get(jobId) match {
-      case None => throw new NoSuchElementException(s"unknown job: $jobId")
-      case Some(st) =>
-        val completed = st.state == JobState.Success || st.state == JobState.Failure
-        if (completed && !purge)
-          throw new IllegalStateException("can't cancel a completed job without purge")
-        store.remove(jobId) // workers' pre-run checks key off absence
-        // drop unclaimed payloads: LREM the exact strings LRANGE returned
-        // (payloads round-trip bytes-exactly; a claim racing this is
-        // stopped by the store check instead)
-        c.cmdSeq("KEYS", s"${prefix}queue:*").map(_.toString).foreach { qk =>
-          c.cmdSeq("LRANGE", qk, "0", "-1").map(_.toString).foreach { p =>
-            if (decodeJob(p).exists(_._1.id == jobId))
-              c.cmd("LREM", qk, "0", p): Unit
-          }
-        }
-        if (purge) ResultPurge.purge(backends, jobId)
-    }
-  }
-
-  override def cancelGroup(groupId: String, purge: Boolean, backends: SourcePool): Unit = {
-    val ids = store.groupJobIds(groupId)
-      .getOrElse(throw new NoSuchElementException(s"unknown group: $groupId"))
-    val statuses = ids.flatMap(store.get)
-    val allDone = statuses.nonEmpty && statuses.forall(s =>
-      s.state == JobState.Success || s.state == JobState.Failure)
-    if (allDone && !purge)
-      throw new IllegalStateException("can't cancel a completed group without purge")
-    ids.foreach { id =>
-      store.get(id).foreach { st =>
-        val completed = st.state == JobState.Success || st.state == JobState.Failure
-        if (completed && !purge) store.remove(id)
-        else cancel(id, purge, backends)
+  /** Drop unclaimed payloads: LREM the exact strings LRANGE returned
+    * (payloads round-trip bytes-exactly). */
+  protected def dropQueued(jobId: String): Unit =
+    c.cmdSeq("KEYS", s"${prefix}queue:*").map(_.toString).foreach { qk =>
+      c.cmdSeq("LRANGE", qk, "0", "-1").map(_.toString).foreach { p =>
+        if (decodeJob(p).exists(_._1.id == jobId))
+          c.cmd("LREM", qk, "0", p): Unit
       }
     }
-    store.removeGroup(groupId)
-  }
 
-  override def awaitQuiescence(timeoutMs: Long = 120000): Boolean = {
-    val deadline = System.currentTimeMillis + timeoutMs
-    while (System.currentTimeMillis < deadline) {
-      val queued = c.cmdSeq("KEYS", s"${prefix}queue:*").map(_.toString)
-        .exists(qk => c.cmdLong("LLEN", qk) > 0)
-      val live = store.snapshot.values.exists(s => s.state == JobState.Pending ||
-        s.state == JobState.Started || s.state == JobState.Retry)
-      if (!queued && !live) return true
-      Thread.sleep(25)
-    }
-    false
-  }
+  protected def anyQueued: Boolean =
+    c.cmdSeq("KEYS", s"${prefix}queue:*").map(_.toString)
+      .exists(qk => c.cmdLong("LLEN", qk) > 0)
 
-  override def shutdown(): Unit = { closed = true; c.close() }
+  override def shutdown(): Unit = { super.shutdown(); c.close() }
 }
 
 /** Worker-process side: claims payloads with an atomic
   * `LMOVE queue:<q> processing:<workerId> RIGHT LEFT` (exactly one worker
   * wins each, and a reply lost with the socket parks the payload in the
   * processing list instead of losing it — the Redis reliable-queue
-  * pattern) and executes them through a local [[Scheduler]] with the full
-  * retry/TTL/cancel machinery against the SHARED Redis state. A claim is
-  * acked (LREM from the processing list) as soon as it is handed to the
-  * scheduler; [[reapProcessing]] recovers everything else. Retryable
-  * failures re-publish through the SHARED queue (LPUSH of the next
-  * attempt), so any worker in the fleet claims the retry — the same
-  * cross-worker hop the file plane proves. `queues = None` consumes every
-  * `queue:*` key (the reference's worker consumes its configured queues).
+  * pattern) and executes them through the [[ClaimLoop]] against the SHARED
+  * Redis state. A claim is acked (LREM from the processing list) as soon
+  * as it is handed to the scheduler; [[RedisClaims.recoverOrphans]]
+  * recovers everything else. Retryable failures re-publish through the
+  * SHARED queue (LPUSH of the next attempt), so any worker in the fleet
+  * claims the retry. `queues = None` consumes every `queue:*` key (the
+  * reference's worker consumes its configured queues).
   *
   * `workerId` must be UNIQUE per live worker and STABLE across restarts
   * of the same worker slot (the standard reliable-queue deployment
@@ -455,47 +403,23 @@ final class RedisQueueWorker(
     host: String, port: Int,
     queues: Option[Seq[String]] = None,
     prefix: String = "graft:",
-    pollMs: Long = 50,
-    workerId: String = "w0") {
+    pollMs: Long = ClaimLoop.DefaultPollMs,
+    workerId: String = "w0")
+  extends ClaimLoop(spark, tasks, store,
+    new RedisClaims(store, host, port, queues, prefix, workerId), pollMs,
+    "graft-redis-queue-worker")
+
+/** The Redis plane's claim primitive: `LMOVE queue:<q> processing:<w>
+  * RIGHT LEFT`, with a reaper over the processing list. The receipt is
+  * the payload string, which LREM removes exactly. */
+private[graft] final class RedisClaims(store: JobStateStore, host: String, port: Int,
+    queues: Option[Seq[String]], prefix: String, workerId: String) extends ClaimBackend {
   import RedisControlPlane._
+  type Receipt = String
   private val c = new RespClient(host, port)
-  private val scheduler = new Scheduler(spark, store)
-  @volatile private var stopped = false
-
-  scheduler.retryPublisher = (job, nextAttempt, epoch) => {
-    if (stopped) false
-    else {
-      c.cmd("LPUSH", s"${prefix}queue:${job.queue}",
-        encodeJob(job, epoch, nextAttempt))
-      true
-    }
-  }
-
-  private val loop = new Thread(() => {
-    while (!stopped) {
-      // Socket/protocol errors (broker restart, dropped connection) are
-      // transient, same contract as the JDBC worker's SQLException catch —
-      // a dead broker must not kill the daemon thread and silently stop
-      // the worker claiming forever. Reconnect lazily and retry next tick.
-      try pollOnce() catch {
-        case _: InterruptedException => ()
-        case _: java.io.IOException | _: IllegalStateException =>
-          // reconnect() itself throws while the broker is still down —
-          // swallow and retry next tick.
-          try c.reconnect() catch { case _: Exception => () }
-      }
-      try Thread.sleep(pollMs) catch { case _: InterruptedException => () }
-    }
-  }, "graft-redis-queue-worker")
-  loop.setDaemon(true)
-  loop.start()
-
-  private def queueKeys(): Seq[String] = queues match {
-    case Some(qs) => qs.map(q => s"${prefix}queue:$q")
-    case None => c.cmdSeq("KEYS", s"${prefix}queue:*").map(_.toString)
-  }
-
   private val processingKey = s"${prefix}processing:$workerId"
+  /** The current sweep's queue keys; the head is drained before the next. */
+  private var sweep: List[String] = Nil
 
   /** Payloads handed to the local scheduler whose ack (LREM) has not been
     * confirmed yet — the reaper's disambiguator between "hand-off done,
@@ -520,9 +444,9 @@ final class RedisQueueWorker(
     *     epoch, torn): drop — a re-queue would double-run.
     *
     * Every step removes the head, so the LLEN-bounded loop terminates. */
-  private def reapProcessing(): Unit = {
+  def recoverOrphans(): Unit = {
     var remaining = c.cmdLong("LLEN", processingKey)
-    while (remaining > 0 && !stopped) {
+    while (remaining > 0) {
       remaining -= 1
       val head = c.cmd("LINDEX", processingKey, "0")
       if (head == null) return
@@ -537,8 +461,7 @@ final class RedisQueueWorker(
       }
       else decodeJob(p) match {
         case Some((job, epoch, _)) if
-            store.get(job.id).exists(s => s.state == JobState.Pending ||
-              s.state == JobState.Started || s.state == JobState.Retry) &&
+            store.get(job.id).exists(s => JobState.isLive(s.state)) &&
             store.epoch(job.id) == epoch =>
           c.cmd("LMOVE", processingKey, s"${prefix}queue:${job.queue}",
             "LEFT", "RIGHT")
@@ -547,47 +470,44 @@ final class RedisQueueWorker(
     }
   }
 
-  private def pollOnce(): Unit = {
-    reapProcessing()
-    queueKeys().foreach { qk =>
-      var payload = c.cmd("LMOVE", qk, processingKey, "RIGHT", "LEFT")
-      while (payload != null && !stopped) {
-        val p = payload.toString
-        decodeJob(p) match {
-          case Some((job, epoch, attempt)) =>
-            tasks.get(job.taskName) match {
-              case Some(task) =>
-                // mark AFTER a successful hand-off (nothing between the two
-                // statements does I/O, so the mark can't be missed): if the
-                // ack below dies with the socket, the reaper knows this
-                // payload already runs; a hand-off that THROWS (scheduler
-                // closing / pool rejection) leaves the payload parked and
-                // UN-marked, so the reaper re-queues it through the store
-                // gate instead of acking a job that never started
-                scheduler.executeClaimed(job, task, epoch, attempt)
-                handedOff.add(p)
-              case None =>
-                store.setIfPresent(job.id, JobState.Failure, -1,
-                  s"worker has no task '${job.taskName}'")
-            }
-          case None => () // torn/foreign payload: drop (logged by store state)
-        }
-        c.cmd("LREM", processingKey, "1", p) // ack the claim
-        handedOff.remove(p)
-        payload =
-          if (stopped) null
-          else c.cmd("LMOVE", qk, processingKey, "RIGHT", "LEFT")
+  private def queueKeys(): List[String] = queues match {
+    case Some(qs) => qs.map(q => s"${prefix}queue:$q").toList
+    case None => c.cmdSeq("KEYS", s"${prefix}queue:*").map(_.toString).toList
+  }
+
+  def claim(): Option[Claimed[String]] = {
+    if (sweep.isEmpty) sweep = queueKeys()
+    while (sweep.nonEmpty) {
+      val payload = c.cmd("LMOVE", sweep.head, processingKey, "RIGHT", "LEFT")
+      if (payload == null) sweep = sweep.tail
+      else decodeJob(payload.toString) match {
+        case Some((job, epoch, attempt)) =>
+          return Some(Claimed(job, epoch, attempt, payload.toString))
+        case None => c.cmd("LREM", processingKey, "1", payload.toString) // torn/foreign: drop
       }
     }
+    None
   }
 
-  def awaitQuiescence(timeoutMs: Long = 120000): Boolean =
-    scheduler.awaitQuiescence(timeoutMs)
-
-  def stop(): Unit = {
-    stopped = true
-    loop.interrupt()
-    scheduler.shutdown()
-    c.close()
+  /** Mark, ack, un-mark. The loop acks right after the hand-off (nothing
+    * between does I/O): if the LREM dies with the socket, the mark tells
+    * the reaper this payload already runs. A hand-off that THROWS never
+    * reaches here, so its payload stays parked UN-marked and the reaper
+    * re-queues it through the store gate instead of dropping a job that
+    * never started. */
+  def ack(cl: Claimed[String]): Unit = {
+    handedOff.add(cl.receipt)
+    c.cmd("LREM", processingKey, "1", cl.receipt)
+    handedOff.remove(cl.receipt): Unit
   }
+
+  def republish(job: Job, attempt: Int, epoch: Long): Unit =
+    c.cmd("LPUSH", s"${prefix}queue:${job.queue}", encodeJob(job, epoch, attempt)): Unit
+
+  /** Socket/protocol errors (broker restart, dropped connection) are
+    * transient: dial a fresh connection (throws while the broker is still
+    * down; the loop retries next tick). */
+  override def reset(): Unit = { sweep = Nil; c.reconnect() }
+
+  override def close(): Unit = c.close()
 }

@@ -23,7 +23,7 @@ import org.apache.spark.sql.SparkSession
   *   - cancel refuses completed jobs unless purge, kills the in-flight query,
   *     and deletes from the store (`core.go:244-271`).
   */
-final class Scheduler(spark: SparkSession, store: JobStateStore) extends JobBroker {
+final class Scheduler(spark: SparkSession, store: JobStateStore) extends BrokerBase(store) {
   private val pools = new ConcurrentHashMap[String, ThreadPoolExecutor]()
   private val pending = new ConcurrentHashMap[String, ConcurrentLinkedDeque[String]]()
   private val running = new ConcurrentHashMap[String, Thread]()
@@ -31,11 +31,10 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends JobBrok
   // task, core.go:437-440); fixed at first sight like queue concurrency
   private val taskSlots = new ConcurrentHashMap[String, java.util.concurrent.Semaphore]()
   private val timers = Executors.newScheduledThreadPool(2, daemonFactory("graft-timer"))
-  @volatile private var closed = false
 
-  /** Cross-process retry hop (set by a queue worker, e.g.
-    * [[FileQueueWorker]]): when non-null, a retryable failure re-publishes
-    * the job THROUGH THE BROKER (`(job, nextAttempt) => published`) instead
+  /** Cross-process retry hop (set by a queue worker's [[ClaimLoop]]): when
+    * non-null, a retryable failure re-publishes the job THROUGH THE BROKER
+    * (`(job, nextAttempt, epoch) => published`) instead
     * of re-running on this process's timers — so the retry is visible in
     * the shared queue and ANY worker in the fleet can claim the next
     * attempt (the reference gets this from tasqueue re-enqueueing through
@@ -64,35 +63,15 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends JobBrok
   private def backlog(queue: String): ConcurrentLinkedDeque[String] =
     pending.computeIfAbsent(queue, _ => new ConcurrentLinkedDeque[String]())
 
-  /** Enqueue a validated job (NewJob, core.go:86-105). Returns false if the
-    * same ID is already queued/running (core.go:332-339). */
-  def submit(job: Job, task: Task): Boolean = {
-    require(!closed, "scheduler stopped")
-    val myEpoch = store.tryAdmit(job.id)
-    if (myEpoch < 0) return false
-    try {
-      backlog(job.queue).addLast(job.id)
-      val delayMs = job.eta
-        .map(e => Duration.between(LocalDateTime.now, e).toMillis.max(0L))
-        .getOrElse(0L)
-      val runnable: Runnable = () => runWithRetries(job, task, 1, myEpoch)
-      if (delayMs > 0)
-        timers.schedule(
-          (() => poolExecuteOrFail(job, task, myEpoch, runnable)): Runnable,
-          delayMs, TimeUnit.MILLISECONDS)
-      else pool(job.queue, task.conc).execute(runnable)
-      true
-    } catch {
+  /** Enqueue an admitted job (NewJob, core.go:86-105); [[BrokerBase]]
+    * admits first and rolls the admission back if this throws. */
+  protected def enqueue(job: Job, task: Task, epoch: Long): Unit =
+    try executeClaimed(job, task, epoch)
+    catch {
       case e: Throwable =>
-        // failed enqueue must not leave a Pending admission that would block
-        // this job ID forever (core.go's enqueue failures surface the same way);
-        // rollback ≠ cancel: the ID stays unaccounted so a group holding it
-        // reads PENDING rather than skipping the member
         backlog(job.queue).remove(job.id)
-        store.rollback(job.id)
         throw e
     }
-  }
 
   /** Execute through the queue pool from a timer thread; after shutdown()
     * the pool rejects, and a ScheduledThreadPoolExecutor would swallow the
@@ -198,72 +177,31 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends JobBrok
   def pendingJobs(queue: String): Seq[String] =
     Option(pending.get(queue)).map(_.iterator().asScala.toSeq.reverse).getOrElse(Nil)
 
-  /** CancelJob (core.go:244-271). */
-  def cancel(jobId: String, purge: Boolean, backends: SourcePool): Unit = {
-    store.get(jobId) match {
-      case None => throw new NoSuchElementException(s"unknown job: $jobId")
-      case Some(st) =>
-        val completed = st.state == JobState.Success || st.state == JobState.Failure
-        if (completed && !purge)
-          throw new IllegalStateException("can't cancel a completed job without purge")
-        store.remove(jobId) // before interrupt: the worker's catch keys off absence
-        // drop the pending-backlog entry too: the job's runnable no longer
-        // touches the backlog once its admission is stale, so cancel owns
-        // the removal (otherwise a cancel + resubmit leaves a ghost entry)
-        pending.values().asScala.foreach(_.remove(jobId))
-        spark.sparkContext.cancelJobGroup(jobId)
-        // the in-flight query may still be in planning (no Spark jobs tagged
-        // yet) — interrupt the worker thread so the driver-side wait aborts;
-        // the worker then re-fires cancelJobGroup for late-submitted stages.
-        Option(running.get(jobId)).foreach(_.interrupt())
-        if (purge) ResultPurge.purge(backends, jobId)
-    }
+  /** Cancel's local half, after [[BrokerBase.cancel]] removed the store
+    * entry (the worker's catch keys off its absence). */
+  protected def dropQueued(jobId: String): Unit = {
+    // drop the pending-backlog entry too: the job's runnable no longer
+    // touches the backlog once its admission is stale, so cancel owns
+    // the removal (otherwise a cancel + resubmit leaves a ghost entry)
+    pending.values().asScala.foreach(_.remove(jobId))
+    spark.sparkContext.cancelJobGroup(jobId)
+    // the in-flight query may still be in planning (no Spark jobs tagged
+    // yet) — interrupt the worker thread so the driver-side wait aborts;
+    // the worker then re-fires cancelJobGroup for late-submitted stages.
+    Option(running.get(jobId)).foreach(_.interrupt())
   }
 
-  /** CancelJobGroup (core.go:274-322): per-member cancel with the
-    * *group-level* completed guard only — a mixed group (some members done,
-    * some running) cancels the running members and removes the finished
-    * ones, like the reference's per-member delete loop. */
-  def cancelGroup(groupId: String, purge: Boolean, backends: SourcePool): Unit = {
-    val ids = store.groupJobIds(groupId)
-      .getOrElse(throw new NoSuchElementException(s"unknown group: $groupId"))
-    val statuses = ids.flatMap(store.get)
-    val allDone = statuses.nonEmpty && statuses.forall(s =>
-      s.state == JobState.Success || s.state == JobState.Failure)
-    if (allDone && !purge)
-      throw new IllegalStateException("can't cancel a completed group without purge")
-    ids.foreach { id =>
-      store.get(id).foreach { st =>
-        val completed = st.state == JobState.Success || st.state == JobState.Failure
-        if (completed && !purge) store.remove(id) // done: just drop from store
-        else cancel(id, purge, backends)
-      }
-    }
-    store.removeGroup(groupId)
-  }
+  protected def anyQueued: Boolean =
+    pools.values().asScala.exists(p => p.getActiveCount > 0 || !p.getQueue.isEmpty) ||
+      pending.values().asScala.exists(!_.isEmpty)
 
-  /** Block until all queues drain (test/CLI helper; the reference's worker
-    * loop blocks forever instead, core.go:68-78). */
-  def awaitQuiescence(timeoutMs: Long = 120000): Boolean = {
-    val deadline = System.currentTimeMillis + timeoutMs
-    while (System.currentTimeMillis < deadline) {
-      val busy = pools.values().asScala.exists(p => p.getActiveCount > 0 || !p.getQueue.isEmpty) ||
-        pending.values().asScala.exists(!_.isEmpty) ||
-        store.snapshot.values.exists(s => s.state == JobState.Pending ||
-          s.state == JobState.Started || s.state == JobState.Retry)
-      if (!busy) return true
-      Thread.sleep(25)
-    }
-    false
-  }
-
-  /** Execute a job ALREADY ADMITTED by another process (a queue worker's
-    * entry point — see [[FileQueueWorker]]): skips the admission gate, runs
+  /** Execute a job ALREADY ADMITTED — by [[submit]], or by another process
+    * (a queue worker's entry point, see [[ClaimLoop]]): skips the gate, runs
     * through this process's queue pools with the full retry/TTL/cancel
     * machinery. The epoch is the remote admission's; every staleness and
     * cancellation check inside `runWithRetries` reads the SHARED store, so
     * a cancel issued by any process stops the claimed job before it starts
-    * (and stops its retries after). ETA honored like submit(). */
+    * (and stops its retries after). ETA = delayed start. */
   private[graft] def executeClaimed(job: Job, task: Task, epoch: Long,
       attempt: Int = 1): Unit = {
     require(!closed, "scheduler stopped")
@@ -279,8 +217,8 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends JobBrok
     else pool(job.queue, task.conc).execute(runnable)
   }
 
-  def shutdown(): Unit = {
-    closed = true
+  override def shutdown(): Unit = {
+    super.shutdown()
     pools.values().asScala.foreach(_.shutdown())
     timers.shutdown()
   }

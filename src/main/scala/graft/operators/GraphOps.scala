@@ -199,19 +199,20 @@ object GraphOps {
     * an ungated aggregate) set [[SweepAqeKey]] = true. */
   val SweepAqeKey = "graft.sweep.aqe"
 
-  /** A/B switch for [[graphComponentsImpl]]'s per-round propagate pin:
-    * true = the r14 eager `sweepCheckpoint` (own job + barrier per
-    * round), false (default) = the r15 barrier-free `sweepPin`. Env var
-    * so each bench JVM runs exactly one variant. */
-  private[graft] def componentsEagerProp: Boolean =
-    sys.env.get("GRAFT_COMPONENTS_EAGER_PROP").contains("true")
+  // org.apache.spark.util.CallSite.{SHORT_FORM, LONG_FORM} (private[spark])
+  private val CallSiteShort = "callSite.short"
+  private val CallSiteLong = "callSite.long"
+
   private[graft] def noSweepAqe[A](s: SparkSession)(body: => A): A = {
     // Name the loop's jobs. Iterative queries materialize DECLARED sweeps
     // at construction; with AQE off their convergence actions would
     // surface raw count()/isEmpty callsites, indistinguishable from the
     // eager-construction bug class RoundFiveOpsSpec rejects (with AQE on
     // they hid under AQE's withThreadLocalCaptured submission thread).
+    // The call site lives in two local properties; save the caller's and
+    // put it back afterwards (clearCallSite would drop a caller's own).
     val sc = s.sparkContext
+    val saved = Seq(CallSiteShort, CallSiteLong).map(k => k -> sc.getLocalProperty(k))
     sc.setCallSite("sweep at GraphOps (declared loop materialization)")
     try {
       if (s.conf.getOption(SweepAqeKey).contains("true")) body
@@ -220,7 +221,7 @@ object GraphOps {
         s.conf.set("spark.sql.adaptive.enabled", "false")
         try body finally s.conf.set("spark.sql.adaptive.enabled", old)
       }
-    } finally sc.clearCallSite()
+    } finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
   /** Per-vertex degree of the undirected edge set: explode both endpoints,
@@ -387,13 +388,7 @@ object GraphOps {
       // count has run by then (paranoid-release suite covers this loop)
       val propRaw = if (iter == 1) componentsFirstPropagate(adj)
         else componentsPropagate(adj, labels, small)
-      // r16 A/B hook (r15 verdict #2): GRAFT_COMPONENTS_EAGER_PROP=true
-      // restores the r14 eager spelling so the pin-vs-checkpoint choice
-      // can be measured one-variant-per-JVM. Result-identical either way
-      // (eagerness only moves materialization timing); the measured
-      // decision lives in OPTIMIZATION_r16.md.
-      val prop = if (componentsEagerProp) propRaw.sweepCheckpoint()
-        else propRaw.sweepPin()
+      val prop = propRaw.sweepPin()
       // jump: label ← label's own label (labels are vertex ids, every one
       // has a row, so the self-join resolves one extra hop — the doubling
       // step); lazily checkpointed, materialized by the convergence count

@@ -202,26 +202,36 @@ object ArtifactCache {
     * rebuilding on every switch. */
   private val keepSiblings = 2
 
+  /** Kind names no build publishes any more: `graph_pair_counts` became
+    * `graph_pair_counts_<codec>` when the pair codec joined the key. */
+  private val retiredKinds = Seq("graph_pair_counts")
+
   /** Published artifacts are immutable but must not be eternal: without
     * eviction every fixture regeneration and recompile strands the prior
     * generation's directories forever (observed: 79 GB of superseded
     * `graph_pair_counts` builds on a 252 GB disk). Runs after each
     * publish, outside any query path: same-kind siblings beyond the
-    * newest [[keepSiblings]] are deleted once idle past [[evictMs]], and
-    * a crashed builder's orphaned `.build-…` staging trees are swept
-    * after a day. Deleting a directory another process is actively
+    * newest [[keepSiblings]] are deleted once idle past [[evictMs]], so
+    * are idle builds of [[retiredKinds]], and a crashed builder's orphaned
+    * `.build-…` staging trees are swept after a day. Deleting a directory another process is actively
     * reading is excluded by the same LRU clock — active readers touch
     * their artifact on every `getOrBuild`. */
   private def evictStale(kind: String, current: File): Unit = {
     val now = System.currentTimeMillis
-    val sib = java.util.regex.Pattern
-      .compile(java.util.regex.Pattern.quote(kind + "_") + "[0-9a-f]{16}")
+    def builds(k: String) = java.util.regex.Pattern
+      .compile(java.util.regex.Pattern.quote(k + "_") + "[0-9a-f]{16}")
+    val sib = builds(kind)
     def ls = Option(root.listFiles()).getOrElse(Array.empty[File])
     ls.filter(f => f.isDirectory && f.getName != current.getName &&
         sib.matcher(f.getName).matches())
       .sortBy(-_.lastModified)
       .drop(keepSiblings)
       .filter(now - _.lastModified > evictMs)
+      .foreach(graft.FsUtil.deleteRecursive)
+    // no current kind has these names, so no publish would ever sweep them
+    val retired = retiredKinds.map(builds)
+    ls.filter(f => f.isDirectory && retired.exists(_.matcher(f.getName).matches()) &&
+        now - f.lastModified > evictMs)
       .foreach(graft.FsUtil.deleteRecursive)
     ls.filter(f => f.getName.contains(".build-") &&
         now - f.lastModified > 24L * 3600 * 1000)

@@ -46,4 +46,29 @@ class ArtifactEvictionSpec extends AnyFunSuite {
       case None => sys.props -= "graft.artifacts.evictMs"
     }
   }
+
+  test("idle builds of a retired kind name are swept on any publish") {
+    val prev = sys.props.get("graft.artifacts.evictMs")
+    sys.props("graft.artifacts.evictMs") = "0"
+    try {
+      val root = new File(sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft-artifacts")
+      val fp = f"${System.nanoTime()}%016x".takeRight(16)
+      // the pre-codec spelling of the pair-count artifact, and today's
+      val retired = new File(root, s"graph_pair_counts_$fp")
+      val current = new File(root, s"graph_pair_counts_snappy_$fp")
+      Seq(retired, current).foreach { d =>
+        d.mkdirs(); d.setLastModified(System.currentTimeMillis - 60000)
+      }
+      val published = new File(ArtifactCache.getOrBuild(
+          s"evictretired${System.nanoTime()}", freshSrc(), Seq.empty, Seq(getClass)) { dir =>
+        java.nio.file.Files.writeString(new File(dir, "marker").toPath, "x")
+      })
+      assert(!retired.exists, "a retired-kind build must be swept")
+      assert(current.isDirectory, "another kind's build is not this publish's to sweep")
+      Seq(current, published).foreach(FsUtil.deleteRecursive)
+    } finally prev match {
+      case Some(v) => sys.props("graft.artifacts.evictMs") = v
+      case None => sys.props -= "graft.artifacts.evictMs"
+    }
+  }
 }

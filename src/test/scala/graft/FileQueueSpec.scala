@@ -1,143 +1,40 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
-import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
-/** API-node / worker-node split over the shared-directory control plane
-  * ([[FileQueueBroker]] + [[FileQueueWorker]] + [[FileJobStateStore]]):
-  * the submitting side and the executing side hold SEPARATE store/broker
-  * instances over the same directories — the in-JVM stand-in for the
-  * reference's API nodes + worker fleet sharing Redis. */
-class FileQueueSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+/** The shared-directory control plane ([[FileQueueBroker]] +
+  * [[FileQueueWorker]] + [[FileJobStateStore]]) under the
+  * [[ControlPlaneContract]]: store, broker and worker instances are
+  * separate objects over the same directories. */
+class FileQueueSpec extends ControlPlaneContract(Map(
+    "run" -> "API core enqueues; a separate worker claims, executes, API sees SUCCESS",
+    "dup" -> "duplicate ID is refused cross-process while queued/running",
+    "cancel" -> "cancel before any worker claims: job never runs, backlog is empty",
+    "orphan" -> "claims stranded by a dead worker are requeued and executed on restart",
+    "notask" -> "a worker lacking the task marks the job FAILURE instead of losing it")) {
 
-  private def fixture() = {
-    val root = Files.createTempDirectory("graft-fq").toFile
-    val stateDir = new java.io.File(root, "state")
-    val queueDir = new java.io.File(root, "queue")
-    val tasksDir = Files.createTempDirectory("graft-fq-tasks")
-    Files.writeString(tasksDir.resolve("t.sql"),
-      """-- name: count_events
-        |SELECT COUNT(*) AS n FROM events;
-        |
-        |-- name: profit
-        |SELECT CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events WHERE user_id = $1;
-        |""".stripMargin)
-    val results = Files.createTempDirectory("graft-fq-results").toString
-    val src = SourcePool(Map("db" -> TestSpark.sf0001))
-    val bk = SourcePool(Map("res" -> results))
-    val tasks = TaskRegistry.load(spark, Seq(tasksDir.toString), src, bk)
-    (stateDir, queueDir, tasks, src, bk, results)
-  }
+  protected def newPlane(): Plane = new Plane {
+    private val root = Files.createTempDirectory("graft-fq").toFile
+    private val stateDir = new File(root, "state")
+    private val queueDir = new File(root, "queue")
+    private def claimedDir = Files.createDirectories(queueDir.toPath.resolve("_claimed"))
 
-  private def awaitState(store: JobStateStore, id: String, timeoutMs: Long = 60000): Option[JobStatus] = {
-    val deadline = System.currentTimeMillis + timeoutMs
-    while (System.currentTimeMillis < deadline) {
-      store.get(id) match {
-        case s @ Some(st) if st.state == JobState.Success || st.state == JobState.Failure =>
-          return s
-        case _ => Thread.sleep(30)
-      }
+    def store(): JobStateStore = new FileJobStateStore(stateDir)
+    def broker(st: JobStateStore): JobBroker = new FileQueueBroker(queueDir, st)
+    def backend(st: JobStateStore): ClaimBackend = new FileClaims(queueDir, None)
+    def worker(tasks: Map[String, Task], st: JobStateStore, pollMs: Long): ClaimLoop =
+      new FileQueueWorker(spark, tasks, st, queueDir, pollMs = pollMs)
+
+    /** Move the queue file into `_claimed` under a PID that is not alive. */
+    def strandClaim(job: Job): Unit = {
+      val deadPid = Iterator.from(99999, -7).find(p => ProcessHandle.of(p.toLong).isEmpty).get
+      val qdir = FileQueue.queueDir(queueDir, job.queue)
+      val qfile = FileQueue.list(qdir).find(_.getFileName.toString.endsWith(".props")).get
+      Files.move(qfile,
+        claimedDir.resolve(s"${deadPid}__${qdir.getFileName}__${qfile.getFileName}"))
     }
-    store.get(id)
-  }
 
-  test("API core enqueues; a separate worker claims, executes, API sees SUCCESS") {
-    val (stateDir, queueDir, tasks, src, bk, results) = fixture()
-    // API node: broker only, no workers
-    val apiStore = new FileJobStateStore(stateDir)
-    val api = new GraftCore(spark, tasks, src, bk,
-      mkStore = () => apiStore,
-      mkBroker = (_, st) => new FileQueueBroker(queueDir, st))
-    // worker node: its own store/worker instances over the same dirs
-    val worker = new FileQueueWorker(spark, tasks,
-      new FileJobStateStore(stateDir), queueDir)
-    try {
-      val job = api.postJob(JobReq("profit", jobId = "fq-1", args = Seq("1")))
-      val st = awaitState(apiStore, job.id)
-      assert(st.exists(_.state == JobState.Success), s"API-side saw: $st")
-      assert(st.exists(_.count > 0))
-      assert(new java.io.File(Executor.resultDir(results, "fq-1")).isDirectory,
-        "result must be materialized by the worker")
-      // same-ID resubmission refused while nothing has freed it? (it's done
-      // — terminal states re-admit, so this must succeed with a NEW epoch)
-      val second = api.postJob(JobReq("profit", jobId = "fq-1", args = Seq("2")))
-      assert(awaitState(apiStore, second.id).exists(_.state == JobState.Success))
-    } finally { worker.stop(); api.scheduler.shutdown() }
-  }
-
-  test("duplicate ID is refused cross-process while queued/running") {
-    val (stateDir, queueDir, tasks, src, bk, _) = fixture()
-    val storeA = new FileJobStateStore(stateDir)
-    val brokerA = new FileQueueBroker(queueDir, storeA)
-    // no worker running: the job stays queued
-    val job = JobFactory.make(JobReq("count_events", jobId = "fq-dup"), tasks("count_events"))
-    assert(brokerA.submit(job, tasks("count_events")))
-    // a SECOND broker (another API process) must refuse the same ID
-    val brokerB = new FileQueueBroker(queueDir, new FileJobStateStore(stateDir))
-    assert(!brokerB.submit(job, tasks("count_events")), "dup ID admitted twice")
-    assert(brokerA.pendingJobs("default") == Seq("fq-dup"))
-  }
-
-  test("cancel before any worker claims: job never runs, backlog is empty") {
-    val (stateDir, queueDir, tasks, src, bk, results) = fixture()
-    val store = new FileJobStateStore(stateDir)
-    val broker = new FileQueueBroker(queueDir, store)
-    val job = JobFactory.make(JobReq("count_events", jobId = "fq-cancel"), tasks("count_events"))
-    assert(broker.submit(job, tasks("count_events")))
-    broker.cancel("fq-cancel", purge = false, bk)
-    assert(broker.pendingJobs("default").isEmpty, "queue file must be gone")
-    assert(store.get("fq-cancel").isEmpty)
-    // late-starting worker finds nothing to run; even if a claim raced the
-    // delete, the store check stops execution — state stays canceled
-    val worker = new FileQueueWorker(spark, tasks, new FileJobStateStore(stateDir), queueDir)
-    try {
-      Thread.sleep(300)
-      assert(store.get("fq-cancel").isEmpty)
-      assert(!new java.io.File(Executor.resultDir(results, "fq-cancel")).exists())
-    } finally worker.stop()
-  }
-
-  test("claims stranded by a dead worker are requeued and executed on restart") {
-    val (stateDir, queueDir, tasks, src, bk, results) = fixture()
-    val store = new FileJobStateStore(stateDir)
-    val broker = new FileQueueBroker(queueDir, store)
-    val job = JobFactory.make(JobReq("count_events", jobId = "fq-orphan"), tasks("count_events"))
-    assert(broker.submit(job, tasks("count_events")))
-    // simulate a worker that claimed and died: move the queue file into
-    // _claimed under a pid that is not alive
-    val deadPid = Iterator.from(99999, -7).find(p => ProcessHandle.of(p.toLong).isEmpty).get
-    val qdir = java.nio.file.Files.list(queueDir.toPath).iterator().asScala
-      .filter(java.nio.file.Files.isDirectory(_)).next()
-    val qfile = java.nio.file.Files.list(qdir).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".props")).next()
-    val claimed = queueDir.toPath.resolve("_claimed")
-    java.nio.file.Files.createDirectories(claimed)
-    java.nio.file.Files.move(qfile,
-      claimed.resolve(s"${deadPid}__${qdir.getFileName}__${qfile.getFileName}"))
-    assert(broker.pendingJobs("default").isEmpty, "job is stranded pre-recovery")
-    // a fresh worker requeues the orphan and runs it
-    val worker = new FileQueueWorker(spark, tasks, new FileJobStateStore(stateDir), queueDir)
-    try {
-      val st = awaitState(store, "fq-orphan")
-      assert(st.exists(_.state == JobState.Success), s"got $st")
-    } finally worker.stop()
-  }
-
-  test("a worker lacking the task marks the job FAILURE instead of losing it") {
-    val (stateDir, queueDir, tasks, src, bk, _) = fixture()
-    val store = new FileJobStateStore(stateDir)
-    val broker = new FileQueueBroker(queueDir, store)
-    val job = JobFactory.make(JobReq("count_events", jobId = "fq-notask"), tasks("count_events"))
-    assert(broker.submit(job, tasks("count_events")))
-    val worker = new FileQueueWorker(spark, tasks = Map.empty,
-      new FileJobStateStore(stateDir), queueDir)
-    try {
-      val st = awaitState(store, "fq-notask", 10000)
-      assert(st.exists(s => s.state == JobState.Failure && s.error.contains("no task")),
-        s"got $st")
-    } finally worker.stop()
+    def claimsHeld(): Long = FileQueue.list(claimedDir).size.toLong
   }
 }

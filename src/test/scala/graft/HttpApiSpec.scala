@@ -15,7 +15,7 @@ class HttpApiSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
   private val client = HttpClient.newHttpClient()
 
-  private lazy val (api, base) = {
+  private lazy val core = {
     val tasksDir = Files.createTempDirectory("http-tasks")
     Files.writeString(tasksDir.resolve("t.sql"),
       """-- name: summary
@@ -23,8 +23,11 @@ class HttpApiSpec extends AnyFunSuite {
         |SELECT CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total FROM events WHERE user_id = $1;
         |""".stripMargin)
     val out = Files.createTempDirectory("http-out").toString
-    val core = GraftCore(spark, Seq(tasksDir.toString),
+    GraftCore(spark, Seq(tasksDir.toString),
       Map("db" -> TestSpark.sf0001), Map("res" -> out))
+  }
+
+  private lazy val (api, base) = {
     val a = new HttpApi(core).start()
     (a, s"http://127.0.0.1:${a.boundPort}")
   }
@@ -115,5 +118,22 @@ class HttpApiSpec extends AnyFunSuite {
     val (c2, _) = delete("/jobs/http-1?purge=1")
     assert(c2 == 200)
     assert(get("/jobs/http-1")._1 == 404)
+  }
+
+  test("stop() releases the request threads that start() created") {
+    import scala.jdk.CollectionConverters._
+    val a = new HttpApi(core).start()
+    val prefix = s"graft-http-${a.boundPort}-"
+    def live = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith(prefix) && t.isAlive)
+    val r = client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:${a.boundPort}/")).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(r.statusCode() == 200)
+    assert(live.nonEmpty, "serving a request must have started a pool thread")
+    a.stop()
+    val deadline = System.currentTimeMillis + 5000
+    while (live.nonEmpty && System.currentTimeMillis < deadline) Thread.sleep(20)
+    assert(live.isEmpty, s"request threads outlived stop(): ${live.map(_.getName)}")
   }
 }

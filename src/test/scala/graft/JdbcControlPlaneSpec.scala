@@ -1,51 +1,52 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Cross-process control plane over JDBC ([[JdbcJobStateStore]] /
   * [[JdbcQueueBroker]] / [[JdbcQueueWorker]]) — the deployment topology with
-  * no shared filesystem. Embedded Derby stands in for the network database;
-  * every test drives TWO independent store/broker instances over the same
-  * URL the way two machines would.
+  * no shared filesystem — under the [[ControlPlaneContract]], plus its
+  * backend-only cases. Embedded Derby stands in for the network database;
+  * every test drives independent store/broker instances over the same URL
+  * the way two machines would.
   */
-class JdbcControlPlaneSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+class JdbcControlPlaneSpec extends ControlPlaneContract(Map(
+    "run" -> "API core enqueues over JDBC; a separate worker claims, executes, API sees SUCCESS",
+    "dup" -> "duplicate ID is refused across brokers while queued",
+    "cancel" -> "cancel before any worker claims: row gone, job never runs",
+    "race" -> "setIfPresent is a no-op against a removed entry",
+    "orphan" -> "expired claims whose owner died pre-execution are lease-recovered",
+    "notask" -> "a worker lacking the task marks the job FAILURE instead of losing it")) {
   private val dbSeq = new AtomicInteger(0)
 
-  private def fixture() = {
-    val url = s"jdbc:derby:memory:graftctrl${dbSeq.incrementAndGet()};create=true"
-    val tasksDir = Files.createTempDirectory("graft-jq-tasks")
-    Files.writeString(tasksDir.resolve("t.sql"),
-      """-- name: count_events
-        |SELECT COUNT(*) AS n FROM events;
-        |
-        |-- name: profit
-        |SELECT CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events WHERE user_id = $1;
-        |""".stripMargin)
-    val results = Files.createTempDirectory("graft-jq-results").toString
-    val src = SourcePool(Map("db" -> TestSpark.sf0001))
-    val bk = SourcePool(Map("res" -> results))
-    val tasks = TaskRegistry.load(spark, Seq(tasksDir.toString), src, bk)
-    (url, tasks, src, bk, results)
-  }
+  private def freshUrl(): String =
+    s"jdbc:derby:memory:graftctrl${dbSeq.incrementAndGet()};create=true"
 
-  private def awaitState(store: JobStateStore, id: String, timeoutMs: Long = 60000): Option[JobStatus] = {
-    val deadline = System.currentTimeMillis + timeoutMs
-    while (System.currentTimeMillis < deadline) {
-      store.get(id) match {
-        case s @ Some(st) if st.state == JobState.Success || st.state == JobState.Failure =>
-          return s
-        case _ => Thread.sleep(30)
-      }
+  protected def newPlane(): Plane = new Plane {
+    private val url = freshUrl()
+    def store(): JobStateStore = new JdbcJobStateStore(url)
+    def broker(st: JobStateStore): JobBroker = new JdbcQueueBroker(url, st)
+    // a short lease, so the orphan case need not wait out the default
+    def backend(st: JobStateStore): ClaimBackend = new JdbcClaims(url, st, None, 1000)
+    def worker(tasks: Map[String, Task], st: JobStateStore, pollMs: Long): ClaimLoop =
+      new JdbcQueueWorker(spark, tasks, st, url, pollMs = pollMs, claimLeaseMs = 1000)
+
+    /** Mark the row claimed by a dead host, with an ancient stamp. */
+    def strandClaim(job: Job): Unit = JdbcControlPlane.withConn(url) { c =>
+      val up = c.prepareStatement(
+        "UPDATE graft_queue SET claimed_by = 'dead-host-1', claimed_at = ? WHERE job_id = ?")
+      up.setLong(1, System.currentTimeMillis - 3600000L); up.setString(2, job.id)
+      try assert(up.executeUpdate() == 1) finally up.close()
     }
-    store.get(id)
+
+    def claimsHeld(): Long = JdbcControlPlane.withConn(url) { c =>
+      val rs = c.createStatement().executeQuery(
+        "SELECT COUNT(*) FROM graft_queue WHERE claimed_by IS NOT NULL")
+      try { rs.next(); rs.getLong(1) } finally rs.close()
+    }
   }
 
   test("tryAdmit is atomic: 16 racing threads admit an ID exactly once") {
-    val (url, _, _, _, _) = fixture()
+    val url = freshUrl()
     val store = new JdbcJobStateStore(url)
     val wins = new AtomicInteger(0)
     val threads = (1 to 16).map(_ => new Thread(() => {
@@ -61,7 +62,7 @@ class JdbcControlPlaneSpec extends AnyFunSuite {
   }
 
   test("epoch survives cancellation (stale-timer detection)") {
-    val (url, _, _, _, _) = fixture()
+    val url = freshUrl()
     val store = new JdbcJobStateStore(url)
     val e1 = store.tryAdmit("canc-1")
     store.remove("canc-1")
@@ -71,17 +72,8 @@ class JdbcControlPlaneSpec extends AnyFunSuite {
     assert(e2 == e1 + 1)
   }
 
-  test("setIfPresent is a no-op against a removed entry") {
-    val (url, _, _, _, _) = fixture()
-    val store = new JdbcJobStateStore(url)
-    store.tryAdmit("gone-1")
-    store.remove("gone-1")
-    store.setIfPresent("gone-1", JobState.Success, 5)
-    assert(store.get("gone-1").isEmpty, "a finishing worker must not resurrect a canceled job")
-  }
-
   test("group lattice: canceled members excluded, any failure dominates") {
-    val (url, _, _, _, _) = fixture()
+    val url = freshUrl()
     val store = new JdbcJobStateStore(url)
     Seq("g1-a", "g1-b", "g1-c").foreach(store.tryAdmit)
     store.putGroup("g1", Seq("g1-a", "g1-b", "g1-c"))
@@ -94,79 +86,9 @@ class JdbcControlPlaneSpec extends AnyFunSuite {
     assert(store.groupStatus("g1").exists(_.state == JobState.Failure))
   }
 
-  test("API core enqueues over JDBC; a separate worker claims, executes, API sees SUCCESS") {
-    val (url, tasks, src, bk, results) = fixture()
-    val apiStore = new JdbcJobStateStore(url)
-    val api = new GraftCore(spark, tasks, src, bk,
-      mkStore = () => apiStore,
-      mkBroker = (_, st) => new JdbcQueueBroker(url, st))
-    val worker = new JdbcQueueWorker(spark, tasks, new JdbcJobStateStore(url), url)
-    try {
-      val job = api.postJob(JobReq("profit", jobId = "jq-1", args = Seq("1")))
-      val st = awaitState(apiStore, job.id)
-      assert(st.exists(_.state == JobState.Success), s"API-side saw: $st")
-      assert(st.exists(_.count > 0))
-      assert(new java.io.File(Executor.resultDir(results, "jq-1")).isDirectory,
-        "result must be materialized by the worker")
-      val second = api.postJob(JobReq("profit", jobId = "jq-1", args = Seq("2")))
-      assert(awaitState(apiStore, second.id).exists(_.state == JobState.Success))
-    } finally { worker.stop(); api.scheduler.shutdown() }
-  }
-
-  test("duplicate ID is refused across brokers while queued") {
-    val (url, tasks, _, _, _) = fixture()
-    val storeA = new JdbcJobStateStore(url)
-    val brokerA = new JdbcQueueBroker(url, storeA)
-    val job = JobFactory.make(JobReq("count_events", jobId = "jq-dup"), tasks("count_events"))
-    assert(brokerA.submit(job, tasks("count_events")))
-    val brokerB = new JdbcQueueBroker(url, new JdbcJobStateStore(url))
-    assert(!brokerB.submit(job, tasks("count_events")), "dup ID admitted twice")
-    assert(brokerA.pendingJobs("default") == Seq("jq-dup"))
-  }
-
-  test("cancel before any worker claims: row gone, job never runs") {
-    val (url, tasks, _, bk, results) = fixture()
-    val store = new JdbcJobStateStore(url)
-    val broker = new JdbcQueueBroker(url, store)
-    val job = JobFactory.make(JobReq("count_events", jobId = "jq-cancel"), tasks("count_events"))
-    assert(broker.submit(job, tasks("count_events")))
-    broker.cancel("jq-cancel", purge = false, bk)
-    assert(broker.pendingJobs("default").isEmpty)
-    assert(store.get("jq-cancel").isEmpty)
-    val worker = new JdbcQueueWorker(spark, tasks, new JdbcJobStateStore(url), url)
-    try {
-      Thread.sleep(300)
-      assert(store.get("jq-cancel").isEmpty)
-      assert(!new java.io.File(Executor.resultDir(results, "jq-cancel")).exists())
-    } finally worker.stop()
-  }
-
-  test("expired claims whose owner died pre-execution are lease-recovered") {
-    val (url, tasks, _, _, _) = fixture()
-    val store = new JdbcJobStateStore(url)
-    val broker = new JdbcQueueBroker(url, store)
-    val job = JobFactory.make(JobReq("count_events", jobId = "jq-orphan"), tasks("count_events"))
-    assert(broker.submit(job, tasks("count_events")))
-    // simulate a dead claimer: mark the row claimed with an ancient stamp
-    val c = java.sql.DriverManager.getConnection(url)
-    try {
-      val up = c.prepareStatement(
-        "UPDATE graft_queue SET claimed_by = 'dead-host-1', claimed_at = ? WHERE job_id = ?")
-      up.setLong(1, System.currentTimeMillis - 3600000L); up.setString(2, "jq-orphan")
-      assert(up.executeUpdate() == 1); up.close()
-    } finally c.close()
-    assert(broker.pendingJobs("default").isEmpty, "job is stranded pre-recovery")
-    // a fresh worker (short lease) recovers and executes it
-    val worker = new JdbcQueueWorker(spark, tasks, new JdbcJobStateStore(url), url,
-      claimLeaseMs = 1000)
-    try {
-      val st = awaitState(store, "jq-orphan")
-      assert(st.exists(_.state == JobState.Success), s"got $st")
-    } finally worker.stop()
-  }
-
   test("expired claims with a terminal or purged store entry are reaped, not stranded") {
-    val (url, tasks, _, _, _) = fixture()
+    val url = freshUrl()
+    val tasks = fixture().tasks
     val store = new JdbcJobStateStore(url)
     val broker = new JdbcQueueBroker(url, store)
     // job 1: owner died AFTER completing (store says Success, row never deleted)
@@ -204,23 +126,9 @@ class JdbcControlPlaneSpec extends AnyFunSuite {
     assert(JdbcControlPlane.decodeArgs("") == Nil)
   }
 
-  test("a worker lacking the task marks the job FAILURE instead of losing it") {
-    val (url, tasks, _, _, _) = fixture()
-    val store = new JdbcJobStateStore(url)
-    val broker = new JdbcQueueBroker(url, store)
-    val job = JobFactory.make(JobReq("count_events", jobId = "jq-notask"), tasks("count_events"))
-    assert(broker.submit(job, tasks("count_events")))
-    val worker = new JdbcQueueWorker(spark, tasks = Map.empty,
-      new JdbcJobStateStore(url), url)
-    try {
-      val st = awaitState(store, "jq-notask", 10000)
-      assert(st.exists(s => s.state == JobState.Failure && s.error.contains("no task")),
-        s"got $st")
-    } finally worker.stop()
-  }
-
   test("queue-filtered worker consumes only its queues") {
-    val (url, tasks, _, _, _) = fixture()
+    val url = freshUrl()
+    val tasks = fixture().tasks
     val store = new JdbcJobStateStore(url)
     val broker = new JdbcQueueBroker(url, store)
     val mk = (id: String) =>
@@ -235,7 +143,7 @@ class JdbcControlPlaneSpec extends AnyFunSuite {
     } finally idle.stop()
     val right = new JdbcQueueWorker(spark, tasks, new JdbcJobStateStore(url), url,
       queues = Some(Seq("default")))
-    try assert(awaitState(store, "jq-f1").exists(_.state == JobState.Success))
+    try assert(awaitDone(store, "jq-f1").exists(_.state == JobState.Success))
     finally right.stop()
   }
 }

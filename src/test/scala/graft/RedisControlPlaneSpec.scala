@@ -1,44 +1,45 @@
 package graft
 
-import java.nio.file.Files
-import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-/** The Redis-protocol control plane over the embedded RESP server: the
-  * API-node / worker-node split with SEPARATE client connections per role —
-  * the in-JVM stand-in for the reference's API nodes + worker fleet sharing
-  * one Redis (`cmd/init.go:200-229`), here over a real TCP round-trip. */
-class RedisControlPlaneSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+/** The Redis-protocol control plane over the embedded RESP server under
+  * the [[ControlPlaneContract]], plus its backend-only cases: separate
+  * client connections per role stand in for the reference's API nodes +
+  * worker fleet sharing one Redis (`cmd/init.go:200-229`), here over a
+  * real TCP round-trip. */
+class RedisControlPlaneSpec extends ControlPlaneContract(Map(
+    "run" -> "API core enqueues; a separate Redis worker claims, executes, API sees SUCCESS",
+    "dup" -> "duplicate ID refused across brokers; cancel drops the queued payload",
+    "retry" -> "redis broker: a failed attempt is re-published and another worker finishes it",
+    "orphan" -> "reliable queue: a parked claim whose reply was lost is reaped back and executed")) {
+
+  protected def newPlane(): Plane = new Plane {
+    private val srv = new RespServer().start()
+    private val (h, p) = ("127.0.0.1", srv.boundPort)
+    private val probe = new RedisControlPlane.RespClient(h, p)
+    def store(): JobStateStore = new RedisJobStateStore(h, p)
+    def broker(st: JobStateStore): JobBroker = new RedisQueueBroker(h, p, st)
+    def backend(st: JobStateStore): ClaimBackend =
+      new RedisClaims(st, h, p, None, "graft:", "w0")
+    def worker(tasks: Map[String, Task], st: JobStateStore, pollMs: Long): ClaimLoop =
+      new RedisQueueWorker(spark, tasks, st, h, p, pollMs = pollMs)
+
+    /** The lost-reply claim: the payload moved into worker `w0`'s
+      * processing list, but no worker ever saw the reply. A worker with
+      * the same ID restarting must recover it. */
+    def strandClaim(job: Job): Unit =
+      assert(probe.cmd("LMOVE", s"graft:queue:${job.queue}", "graft:processing:w0",
+        "RIGHT", "LEFT") != null)
+
+    def claimsHeld(): Long = probe.cmdSeq("KEYS", "graft:processing:*")
+      .map(k => probe.cmdLong("LLEN", k.toString)).sum
+
+    override def close(): Unit = { probe.close(); srv.stop() }
+  }
 
   private def withServer[A](f: (String, Int) => A): A = {
     val srv = new RespServer().start()
     try f("127.0.0.1", srv.boundPort) finally srv.stop()
-  }
-
-  private def fixture() = {
-    val tasksDir = Files.createTempDirectory("graft-redis-tasks")
-    Files.writeString(tasksDir.resolve("t.sql"),
-      """-- name: count_events
-        |SELECT COUNT(*) AS n FROM events;
-        |
-        |-- name: profit
-        |SELECT CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events WHERE user_id = $1;
-        |""".stripMargin)
-    val results = Files.createTempDirectory("graft-redis-results").toString
-    val src = SourcePool(Map("db" -> TestSpark.sf0001))
-    val bk = SourcePool(Map("res" -> results))
-    val tasks = TaskRegistry.load(spark, Seq(tasksDir.toString), src, bk)
-    (tasks, src, bk, results)
-  }
-
-  private def await(timeoutMs: Long)(cond: => Boolean): Boolean = {
-    val deadline = System.currentTimeMillis + timeoutMs
-    while (System.currentTimeMillis < deadline) {
-      if (cond) return true
-      Thread.sleep(30)
-    }
-    cond
   }
 
   test("RESP wire basics: strings w/ NX+PX, hashes, lists, INCR, KEYS") {
@@ -77,110 +78,11 @@ class RedisControlPlaneSpec extends AnyFunSuite {
     }
   }
 
-  test("API core enqueues; a separate Redis worker claims, executes, API sees SUCCESS") {
-    withServer { (h, p) =>
-      val (tasks, src, bk, results) = fixture()
-      val apiStore = new RedisJobStateStore(h, p)
-      val api = new GraftCore(spark, tasks, src, bk,
-        mkStore = () => apiStore,
-        mkBroker = (_, st) => new RedisQueueBroker(h, p, st))
-      // worker node: its own connections over the same server
-      val worker = new RedisQueueWorker(spark, tasks,
-        new RedisJobStateStore(h, p), h, p)
-      try {
-        val job = api.postJob(JobReq("profit", jobId = "redis-1", args = Seq("1")))
-        assert(await(60000)(apiStore.get(job.id).exists(_.state == JobState.Success)),
-          s"API-side saw: ${apiStore.get(job.id)}")
-        assert(apiStore.get(job.id).exists(_.count > 0))
-        assert(new java.io.File(Executor.resultDir(results, "redis-1")).isDirectory,
-          "result must be materialized by the worker")
-        // terminal states re-admit with a NEW epoch
-        val e1 = apiStore.epoch(job.id)
-        val second = api.postJob(JobReq("profit", jobId = "redis-1", args = Seq("2")))
-        assert(await(60000)(apiStore.get(second.id).exists(_.state == JobState.Success)))
-        assert(apiStore.epoch(job.id) > e1, "re-admission must bump the epoch")
-      } finally { worker.stop(); api.scheduler.shutdown(); apiStore.close() }
-    }
-  }
-
-  test("duplicate ID refused across brokers; cancel drops the queued payload") {
-    withServer { (h, p) =>
-      val (tasks, src, bk, _) = fixture()
-      val storeA = new RedisJobStateStore(h, p)
-      val brokerA = new RedisQueueBroker(h, p, storeA)
-      // no worker: the job stays queued
-      val job = JobFactory.make(JobReq("count_events", jobId = "redis-dup"),
-        tasks("count_events"))
-      assert(brokerA.submit(job, tasks("count_events")))
-      val brokerB = new RedisQueueBroker(h, p, new RedisJobStateStore(h, p))
-      assert(!brokerB.submit(job, tasks("count_events")), "dup ID admitted twice")
-      assert(brokerA.pendingJobs(job.queue) == Seq("redis-dup"))
-      // cancel removes the store entry AND the unclaimed payload
-      brokerA.cancel("redis-dup", purge = false, bk)
-      assert(storeA.get("redis-dup").isEmpty)
-      assert(brokerA.pendingJobs(job.queue).isEmpty)
-      // canceled ≠ never-admitted: group reduction still accounts for it
-      storeA.putGroup("g1", Seq("redis-dup"))
-      val gs = storeA.groupStatus("g1")
-      assert(gs.exists(_.state == JobState.Pending)) // canceled member, no live jobs
-      brokerA.shutdown(); storeA.close()
-    }
-  }
-
-  test("redis broker: a failed attempt is re-published and another worker finishes it") {
-    withServer { (h, p) =>
-      // empty source dir: attempt 1 fails; then the table materializes and
-      // the RETRY attempt succeeds — on a DIFFERENT worker (worker A's only
-      // poll is the startup one; worker B starts after the retry payload
-      // is observed sitting in the queue)
-      val tasksDir = Files.createTempDirectory("graft-redis-xr-tasks")
-      Files.writeString(tasksDir.resolve("t.sql"),
-        """-- name: count_events
-          |SELECT COUNT(*) AS n FROM events;
-          |""".stripMargin)
-      val srcDir = Files.createTempDirectory("graft-redis-xr-src")
-      val results = Files.createTempDirectory("graft-redis-xr-results").toString
-      val src = SourcePool(Map("db" -> srcDir.toString))
-      val bk = SourcePool(Map("res" -> results))
-      val tasks = TaskRegistry.load(spark, Seq(tasksDir.toString), src, bk)
-
-      val apiStore = new RedisJobStateStore(h, p)
-      val broker = new RedisQueueBroker(h, p, apiStore)
-      val probe = new RedisControlPlane.RespClient(h, p)
-      val job = JobFactory.make(
-        JobReq("count_events", jobId = "redis-xretry", retries = 1),
-        tasks("count_events"))
-      assert(broker.submit(job, tasks("count_events")))
-
-      val workerA = new RedisQueueWorker(spark, tasks,
-        new RedisJobStateStore(h, p), h, p, pollMs = 600000)
-      try {
-        // attempt 1 fails → retry payload (attempt=2) re-published to Redis
-        assert(await(30000) {
-          probe.cmdSeq("LRANGE", s"graft:queue:${job.queue}", "0", "-1")
-            .exists(s => RedisControlPlane.decodeJob(s.toString).exists(_._3 == 2))
-        }, s"retry payload never appeared; state=${apiStore.get(job.id)}")
-        assert(apiStore.get(job.id).exists(_.state == JobState.Retry))
-        // now the data exists; worker B claims the retry
-        import spark.implicits._
-        Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("event_id", "user_id")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(srcDir.resolve("events.parquet").toString)
-        val workerB = new RedisQueueWorker(spark, tasks,
-          new RedisJobStateStore(h, p), h, p)
-        try {
-          assert(await(60000)(apiStore.get(job.id).exists(_.state == JobState.Success)),
-            s"retry never completed; state=${apiStore.get(job.id)}")
-        } finally workerB.stop()
-      } finally { workerA.stop(); broker.shutdown(); apiStore.close(); probe.close() }
-    }
-  }
-
   test("worker survives a broker outage and resumes claiming after restart") {
     val srv1 = new RespServer().start()
     val h = "127.0.0.1"; val p = srv1.boundPort
-    val (tasks, src, bk, _) = fixture()
-    val worker = new RedisQueueWorker(spark, tasks,
+    val fx = fixture()
+    val worker = new RedisQueueWorker(spark, fx.tasks,
       new RedisJobStateStore(h, p), h, p)
     try {
       srv1.stop()
@@ -195,23 +97,12 @@ class RedisControlPlaneSpec extends AnyFunSuite {
       val srv2 = new RespServer(p).start()
       try {
         val apiStore = new RedisJobStateStore(h, p)
-        val api = new GraftCore(spark, tasks, src, bk,
+        val api = new GraftCore(spark, fx.tasks, fx.src, fx.bk,
           mkStore = () => apiStore,
           mkBroker = (_, st) => new RedisQueueBroker(h, p, st))
         try {
           val job = api.postJob(JobReq("count_events", jobId = "redis-revive"))
           val ok = await(60000)(apiStore.get(job.id).exists(_.state == JobState.Success))
-          if (!ok) {
-            val probe = new RedisControlPlane.RespClient("127.0.0.1", p)
-            println(s"DEBUG queues=${probe.cmdSeq("KEYS", "graft:queue:*")}")
-            println(s"DEBUG q-content=${probe.cmdSeq("LRANGE", s"graft:queue:${job.queue}", "0", "-1")}")
-            probe.close()
-            import scala.jdk.CollectionConverters._
-            Thread.getAllStackTraces.asScala.foreach { case (t, st) =>
-              if (t.getName == "graft-redis-queue-worker")
-                println(s"DEBUG worker thread ${t.getState}:\n  " + st.take(12).mkString("\n  "))
-            }
-          }
           assert(ok,
             s"worker never resumed after restart; state=${apiStore.get(job.id)}")
         } finally { api.scheduler.shutdown(); apiStore.close() }
@@ -266,52 +157,12 @@ class RedisControlPlaneSpec extends AnyFunSuite {
     }
   }
 
-  test("reliable queue: a parked claim whose reply was lost is reaped back and executed") {
-    withServer { (h, p) =>
-      val (tasks, _, _, _) = fixture()
-      val apiStore = new RedisJobStateStore(h, p)
-      val broker = new RedisQueueBroker(h, p, apiStore)
-      val probe = new RedisControlPlane.RespClient(h, p)
-      try {
-        val job = JobFactory.make(JobReq("count_events", jobId = "redis-reap-1"),
-          tasks("count_events"))
-        assert(broker.submit(job, tasks("count_events")))
-        // simulate the lost-reply claim: the payload moved into a worker's
-        // processing list but no worker ever saw the reply (the window the
-        // old RPOP spelling lost the payload in — permanently)
-        assert(probe.cmd("LMOVE", s"graft:queue:${job.queue}",
-          "graft:processing:w0", "RIGHT", "LEFT") != null)
-        assert(probe.cmdLong("LLEN", s"graft:queue:${job.queue}") == 0)
-        assert(apiStore.get(job.id).exists(_.state == JobState.Pending))
-        // a worker with the SAME workerId starts (the restart-recovery
-        // contract): its reaper must re-queue the orphan and execute it
-        val worker = new RedisQueueWorker(spark, tasks,
-          new RedisJobStateStore(h, p), h, p, workerId = "w0")
-        try {
-          assert(await(60000)(apiStore.get(job.id).exists(_.state == JobState.Success)),
-            s"orphaned claim never recovered; state=${apiStore.get(job.id)}")
-          assert(probe.cmdLong("LLEN", "graft:processing:w0") == 0,
-            "processing list must drain after the ack")
-        } finally worker.stop()
-      } finally { broker.shutdown(); apiStore.close(); probe.close() }
-    }
-  }
-
   test("reliable queue: a terminal orphan is dropped, never re-run") {
     withServer { (h, p) =>
       // empty source: ANY (re-)run of the task fails, so a wrongly
       // re-queued orphan would flip the store to Retry/Failure — the state
       // staying Success is the proof the reaper dropped instead of re-ran
-      val tasksDir = Files.createTempDirectory("graft-redis-reap2-tasks")
-      Files.writeString(tasksDir.resolve("t.sql"),
-        """-- name: count_events
-          |SELECT COUNT(*) AS n FROM events;
-          |""".stripMargin)
-      val srcDir = Files.createTempDirectory("graft-redis-reap2-src")
-      val results = Files.createTempDirectory("graft-redis-reap2-results").toString
-      val src = SourcePool(Map("db" -> srcDir.toString))
-      val bk = SourcePool(Map("res" -> results))
-      val tasks = TaskRegistry.load(spark, Seq(tasksDir.toString), src, bk)
+      val tasks = fixture(emptySource = true).tasks
       val apiStore = new RedisJobStateStore(h, p)
       val probe = new RedisControlPlane.RespClient(h, p)
       try {
@@ -359,6 +210,39 @@ class RedisControlPlaneSpec extends AnyFunSuite {
         assert(c.cmd("RPOP", "dq") == "p1")
         assert(c.cmd("RPOP", "dq") == "p2")
       } finally c.close()
+    }
+  }
+
+  test("30 workers started in a row each survive their first poll and claim a job") {
+    withServer { (h, p) =>
+      val fx = fixture()
+      val apiStore = new RedisJobStateStore(h, p)
+      val broker = new RedisQueueBroker(h, p, apiStore)
+      def pollThreads = Thread.getAllStackTraces.keySet.asScala
+        .filter(_.getName == "graft-redis-queue-worker").toSet
+      val workers = scala.collection.mutable.Buffer.empty[RedisQueueWorker]
+      try {
+        // each worker has a queue of its own, so the job it claims is known;
+        // earlier workers' jobs keep running while the later ones start
+        val jobs = (1 to 30).map { i =>
+          val job = JobFactory.make(
+            JobReq("count_events", jobId = s"redis-start-$i", queue = s"start-$i"), fx.task)
+          assert(broker.submit(job, fx.task))
+          val before = pollThreads
+          workers += new RedisQueueWorker(spark, fx.tasks, new RedisJobStateStore(h, p), h, p,
+            queues = Some(Seq(job.queue)), workerId = s"start-$i")
+          // a poll thread sleeps in its poll interval once its first poll
+          // is done; one that died in it may already be gone from the set
+          val fresh = pollThreads -- before
+          await(10000)(fresh.forall(t => !t.isAlive || t.getState == Thread.State.TIMED_WAITING))
+          assert(fresh.exists(_.isAlive), s"worker $i's poll thread died in its first poll")
+          job
+        }
+        jobs.foreach { job =>
+          assert(awaitDone(apiStore, job.id).exists(_.state == JobState.Success),
+            s"${job.id} was never claimed; state=${apiStore.get(job.id)}")
+        }
+      } finally { workers.foreach(_.stop()); broker.shutdown(); apiStore.close() }
     }
   }
 }
