@@ -72,8 +72,10 @@ final class FileQueueWorker(
     "graft-file-queue-worker")
 
 /** The file plane's claim primitive: an atomic rename into `_claimed`,
-  * named `<claimerPid>__<queueDir>__<file>` so a claim whose owner died
-  * before executing it can be told from a live one. */
+  * named `<host>__<claimerPid>__<queueDir>__<file>` so a claim whose owner
+  * died before executing it can be told from a live one. PID liveness only
+  * means something on the claimer's own host, so a worker judges only the
+  * claims made on its host and leaves every other host's claims alone. */
 private[graft] final class FileClaims(queueRoot: File, queues: Option[Seq[String]])
     extends ClaimBackend {
   type Receipt = Path
@@ -85,11 +87,13 @@ private[graft] final class FileClaims(queueRoot: File, queues: Option[Seq[String
 
   /** A claim whose owner died between claim and execution strands the job
     * as PENDING forever (the store entry is live but nobody holds the
-    * file): move it back. Claims by live processes are left alone. */
+    * file): move it back. Claims by live processes, and claims made on
+    * other hosts, are left alone. */
   def recoverOrphans(): Unit =
     FileQueue.list(claimedDir).foreach { p =>
-      p.getFileName.toString.split("__", 3) match {
-        case Array(owner, qdir, rest) if owner.forall(_.isDigit) &&
+      p.getFileName.toString.split("__", 4) match {
+        case Array(host, owner, qdir, rest) if host == FileQueue.host &&
+            owner.nonEmpty && owner.forall(_.isDigit) &&
             ProcessHandle.of(owner.toLong).isEmpty =>
           val back = queueRoot.toPath.resolve(qdir).resolve(rest)
           Files.createDirectories(back.getParent)
@@ -113,7 +117,8 @@ private[graft] final class FileClaims(queueRoot: File, queues: Option[Seq[String
     while (listed.hasNext) {
       val (qd, p) = listed.next()
       // exactly one worker process wins the rename
-      val mine = claimedDir.resolve(s"${pid}__${qd.getFileName}__${p.getFileName}")
+      val mine = claimedDir.resolve(
+        s"${FileQueue.host}__${pid}__${qd.getFileName}__${p.getFileName}")
       val won =
         try { Files.move(p, mine, StandardCopyOption.ATOMIC_MOVE); true }
         catch { case _: java.io.IOException => false }
@@ -134,6 +139,13 @@ private[graft] final class FileClaims(queueRoot: File, queues: Option[Seq[String
 
 private[graft] object FileQueue {
   private val seq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** This host's name as a claim-name field: no `_`, so never `__`. */
+  lazy val host: String = {
+    val name = try java.net.InetAddress.getLocalHost.getHostName
+      catch { case _: java.net.UnknownHostException => sys.env.getOrElse("HOSTNAME", "") }
+    Some(name.replaceAll("[^A-Za-z0-9.-]", "-")).filter(_.nonEmpty).getOrElse("localhost")
+  }
 
   def list(dir: Path): List[Path] = {
     val stream = Files.list(dir)

@@ -29,6 +29,8 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
     def strandClaim(job: Job): Unit
     /** Claims currently held by any worker, live or dead. */
     def claimsHeld(): Long
+    /** The attempt number `job` waits in the queue with, if it is queued. */
+    def queuedAttempt(job: Job): Option[Int]
     def close(): Unit = ()
   }
 
@@ -193,10 +195,14 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
       // the retry, so the attempt provably crosses workers
       val workerA = p.worker(fx.tasks, p.store(), pollMs = 600000)
       try {
+        // the re-published entry carries attempt 2: a republish that kept
+        // attempt 1 would retry across workers forever
         assert(await(30000) {
           apiStore.get(job.id).exists(_.state == JobState.Retry) &&
-            broker.pendingJobs(job.queue).contains(job.id)
-        }, s"the retry was never re-published; state=${apiStore.get(job.id)}")
+            broker.pendingJobs(job.queue).contains(job.id) &&
+            p.queuedAttempt(job).contains(2)
+        }, s"attempt 2 was never re-published; state=${apiStore.get(job.id)}, " +
+          s"queued attempt=${p.queuedAttempt(job)}")
         fx.makeEvents()
         val workerB = p.worker(fx.tasks, p.store(), pollMs = 25)
         try assert(awaitDone(apiStore, job.id).exists(_.state == JobState.Success),

@@ -1,7 +1,7 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 /** The shared-directory control plane ([[FileQueueBroker]] +
   * [[FileQueueWorker]] + [[FileJobStateStore]]) under the
@@ -14,7 +14,9 @@ class FileQueueSpec extends ControlPlaneContract(Map(
     "orphan" -> "claims stranded by a dead worker are requeued and executed on restart",
     "notask" -> "a worker lacking the task marks the job FAILURE instead of losing it")) {
 
-  protected def newPlane(): Plane = new Plane {
+  protected def newPlane(): Plane = new FilePlane
+
+  private final class FilePlane extends Plane {
     private val root = Files.createTempDirectory("graft-fq").toFile
     private val stateDir = new File(root, "state")
     private val queueDir = new File(root, "queue")
@@ -26,15 +28,47 @@ class FileQueueSpec extends ControlPlaneContract(Map(
     def worker(tasks: Map[String, Task], st: JobStateStore, pollMs: Long): ClaimLoop =
       new FileQueueWorker(spark, tasks, st, queueDir, pollMs = pollMs)
 
-    /** Move the queue file into `_claimed` under a PID that is not alive. */
-    def strandClaim(job: Job): Unit = {
-      val deadPid = Iterator.from(99999, -7).find(p => ProcessHandle.of(p.toLong).isEmpty).get
+    /** Move the queue file into `_claimed` under a PID that is not alive
+      * on this host. */
+    def strandClaim(job: Job): Unit = strandClaim(job, FileQueue.host): Unit
+
+    def strandClaim(job: Job, host: String): Path = {
       val qdir = FileQueue.queueDir(queueDir, job.queue)
-      val qfile = FileQueue.list(qdir).find(_.getFileName.toString.endsWith(".props")).get
-      Files.move(qfile,
-        claimedDir.resolve(s"${deadPid}__${qdir.getFileName}__${qfile.getFileName}"))
+      val qfile = queueFiles(job).head
+      Files.move(qfile, claimedDir.resolve(
+        s"${host}__${deadPid}__${qdir.getFileName}__${qfile.getFileName}"))
     }
 
     def claimsHeld(): Long = FileQueue.list(claimedDir).size.toLong
+
+    def queuedAttempt(job: Job): Option[Int] =
+      queueFiles(job).flatMap(FileQueue.readJob).map(_._3).headOption
+
+    private def queueFiles(job: Job): List[Path] =
+      FileQueue.list(FileQueue.queueDir(queueDir, job.queue))
+        .filter(_.getFileName.toString.endsWith(s"_${FileQueue.safe(job.id)}.props"))
+  }
+
+  private def deadPid: Int =
+    Iterator.from(99999, -7).find(p => ProcessHandle.of(p.toLong).isEmpty).get
+
+  test("a claim made on another host is left alone, even under a PID dead here") {
+    val p = new FilePlane
+    val fx = fixture()
+    val store = p.store()
+    val broker = p.broker(store)
+    val job = fx.job("fq-foreign-claim")
+    assert(broker.submit(job, fx.task))
+    // host B's worker (whose PID means nothing here) is between its claim
+    // rename and its ack
+    val claimed = p.strandClaim(job, "other-host.example")
+    val worker = p.worker(fx.tasks, p.store(), pollMs = 10)
+    try {
+      Thread.sleep(500) // many ticks, each running recoverOrphans
+      assert(Files.exists(claimed), "a live worker took another host's claim")
+      assert(p.claimsHeld() == 1)
+      assert(store.get(job.id).exists(_.state == JobState.Pending))
+      assert(!fx.ran(job.id))
+    } finally { worker.stop(); broker.shutdown() }
   }
 }

@@ -43,6 +43,16 @@ class JdbcControlPlaneSpec extends ControlPlaneContract(Map(
         "SELECT COUNT(*) FROM graft_queue WHERE claimed_by IS NOT NULL")
       try { rs.next(); rs.getLong(1) } finally rs.close()
     }
+
+    def queuedAttempt(job: Job): Option[Int] = JdbcControlPlane.withConn(url) { c =>
+      val ps = c.prepareStatement(
+        "SELECT attempt FROM graft_queue WHERE job_id = ? AND claimed_by IS NULL")
+      ps.setString(1, job.id)
+      try {
+        val rs = ps.executeQuery()
+        if (rs.next()) Some(rs.getInt(1)) else None
+      } finally ps.close()
+    }
   }
 
   test("tryAdmit is atomic: 16 racing threads admit an ID exactly once") {

@@ -34,6 +34,11 @@ class RedisControlPlaneSpec extends ControlPlaneContract(Map(
     def claimsHeld(): Long = probe.cmdSeq("KEYS", "graft:processing:*")
       .map(k => probe.cmdLong("LLEN", k.toString)).sum
 
+    def queuedAttempt(job: Job): Option[Int] =
+      probe.cmdSeq("LRANGE", s"graft:queue:${job.queue}", "0", "-1")
+        .flatMap(e => RedisControlPlane.decodeJob(e.toString))
+        .collectFirst { case (j, _, attempt) if j.id == job.id => attempt }
+
     override def close(): Unit = { probe.close(); srv.stop() }
   }
 
