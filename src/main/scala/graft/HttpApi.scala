@@ -108,7 +108,8 @@ final class HttpApi(core: GraftCore, port: Int = 0) {
     val body = readJson(ex)
     val gid = Option(body.get("group_id")).map(_.asText).getOrElse("")
     val jobs = Option(body.get("jobs")).map(_.elements().asScala.toSeq).getOrElse(Nil)
-      .map(j => parseJobReq(j, j.get("task").asText))
+      .map(j => parseJobReq(j, Option(j.get("task")).map(_.asText).filter(_.nonEmpty)
+        .getOrElse(throw new IllegalArgumentException("group job without a \"task\""))))
     val (groupId, made) = core.postJobGroup(gid, jobs)
     val o = mapper.createObjectNode()
     o.put("group_id", groupId)
@@ -197,7 +198,11 @@ final class HttpApi(core: GraftCore, port: Int = 0) {
 
   private def readJson(ex: HttpExchange): JsonNode = {
     val bytes = ex.getRequestBody.readAllBytes()
-    if (bytes.isEmpty) mapper.createObjectNode() else mapper.readTree(bytes)
+    if (bytes.isEmpty) mapper.createObjectNode()
+    else try mapper.readTree(bytes) catch {
+      case e: com.fasterxml.jackson.core.JsonProcessingException =>
+        throw new IllegalArgumentException(s"malformed JSON body: ${e.getOriginalMessage}")
+    }
   }
 
   private def ok(ex: HttpExchange, data: JsonNode): Unit = {

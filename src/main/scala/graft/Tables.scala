@@ -125,21 +125,12 @@ object Tables {
     }.getOrElse(throw new IllegalArgumentException(
       s"no $table.{parquet,csv,json,orc} under $sfDir"))
 
-  /** Register every *available* table as a temp view so task SQL can refer
-    * to tables by name, the way reference task SQL refers to source-DB
-    * tables. A source dir may carry any subset of the tables in any
-    * supported format. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach { t =>
-      if (Seq("parquet", "csv", "json", "orc").exists(exists(sfDir, t, _)))
-        load(spark, sfDir, t).createOrReplaceTempView(t)
-    }
-
-  /** Register only the named subset (lowercased names) — the per-job path:
-    * creating a DataFrame reads footers/infers schema eagerly, so a job
-    * touching one table must not pay a schema read for every fixture table
-    * the source happens to carry. Unknown names are ignored; the subsequent
-    * resolution error for a genuinely missing table is the same either way. */
+  /** Register the named tables (lowercased names) as temp views so task SQL
+    * can refer to them by name — the per-job path: creating a DataFrame
+    * reads footers/infers schema eagerly, so a job touching one table must
+    * not pay a schema read for every fixture table the source happens to
+    * carry. Unknown names are ignored; the subsequent resolution error for
+    * a genuinely missing table is the same either way. */
   def registerReferenced(spark: SparkSession, sfDir: String, referenced: Set[String]): Unit =
     names.filter(referenced.contains).foreach { t =>
       if (Seq("parquet", "csv", "json", "orc").exists(exists(sfDir, t, _)))

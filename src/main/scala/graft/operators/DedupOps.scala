@@ -827,16 +827,6 @@ object DedupOps {
         .write.parquet(s"$dir/clusters")
     }
 
-  /** Session conf switch for the CC loop's lineage truncation — since
-    * round 13 an alias for the ENGINE-WIDE switch
-    * ([[graft.plans.Checkpoints.ReliableKey]]): `localCheckpoint`
-    * (default — executor-local blocks, right for `local[N]`) vs reliable
-    * `checkpoint()` (HDFS/object storage via `sc.setCheckpointDir`;
-    * survives executor loss on a real cluster, the mode docs/SCALE.md
-    * prescribes for 100×). Kept so round-12 deployments that set the
-    * dedup-scoped key keep their durability. */
-  val ReliableCheckpointKey: String = graft.plans.Checkpoints.LegacyReliableKey
-
   private def ccCheckpoint(df: DataFrame, eager: Boolean = true): DataFrame =
     graft.plans.Checkpoints.sweep(df, eager)
 

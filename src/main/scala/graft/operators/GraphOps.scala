@@ -180,6 +180,10 @@ object GraphOps {
   private[graft] def gatedBc(df: DataFrame, small: Boolean): DataFrame =
     if (small) broadcast(df) else df.hint("shuffle_hash")
 
+  // org.apache.spark.util.CallSite.{SHORT_FORM, LONG_FORM} (private[spark])
+  private val CallSiteShort = "callSite.short"
+  private val CallSiteLong = "callSite.long"
+
   /** Run an iterative sweep loop with AQE replanning OFF (restored after).
     *
     * AQE re-optimizes the remaining plan after every exchange
@@ -194,15 +198,7 @@ object GraphOps {
     * re-derived per round). Measured at sf0.1 local[32], interleaved
     * one-variant-per-JVM: pagerank 2.9–3.4 → 2.56 s; loop-family subset
     * sum 12.8 → 11.0 s. Results are unaffected (AQE never changes
-    * results; the hinted hash joins plan identically without it).
-    * Deployments that want AQE back inside sweep loops (e.g. heavy skew in
-    * an ungated aggregate) set [[SweepAqeKey]] = true. */
-  val SweepAqeKey = "graft.sweep.aqe"
-
-  // org.apache.spark.util.CallSite.{SHORT_FORM, LONG_FORM} (private[spark])
-  private val CallSiteShort = "callSite.short"
-  private val CallSiteLong = "callSite.long"
-
+    * results; the hinted hash joins plan identically without it). */
   private[graft] def noSweepAqe[A](s: SparkSession)(body: => A): A = {
     // Name the loop's jobs. Iterative queries materialize DECLARED sweeps
     // at construction; with AQE off their convergence actions would
@@ -215,12 +211,9 @@ object GraphOps {
     val saved = Seq(CallSiteShort, CallSiteLong).map(k => k -> sc.getLocalProperty(k))
     sc.setCallSite("sweep at GraphOps (declared loop materialization)")
     try {
-      if (s.conf.getOption(SweepAqeKey).contains("true")) body
-      else {
-        val old = s.conf.get("spark.sql.adaptive.enabled")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        try body finally s.conf.set("spark.sql.adaptive.enabled", old)
-      }
+      val aqe = s.conf.get("spark.sql.adaptive.enabled")
+      s.conf.set("spark.sql.adaptive.enabled", "false")
+      try body finally s.conf.set("spark.sql.adaptive.enabled", aqe)
     } finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
@@ -455,6 +448,17 @@ object GraphOps {
     * BINDS — the declared semantics are what the gate tests. */
   val wedgeDegreeCap = 128
 
+  /** Codec for the classified pair-count outputs, MEASURED both ways on
+    * the sf2 non-edge side (1.1 B rows): zstd is 1.9x smaller (2.5 vs
+    * 4.7 GB) but its decode CPU inverts the low-parallelism rung — warm
+    * top-20 at 4 cores 33.9 s (zstd) vs 26.2 s (snappy) vs 28.2 s (the old
+    * wide layout), i.e. zstd gave back MORE than the narrow layout won; at
+    * 32 cores all three tie (~7.5 s, decode amortized). Snappy wins or ties
+    * every locally measurable regime (and the sf0.1 first-touch scan, 1.8
+    * vs 5.6 s). The codec is part of the artifact kind name
+    * (`graph_pair_counts_snappy`). */
+  private val PairsCodec = "snappy"
+
   /** The wedge-pair COUNT TABLE — (packed pair, shared-small-neighbor
     * count) for every unordered part pair with ≥1 common neighbor of
     * degree ≤ [[wedgeDegreeCap]] — is itself a pay-once
@@ -470,8 +474,8 @@ object GraphOps {
     * version) so each query is a pre-filtered parquet scan with no
     * edge-membership probe at all. The classified outputs are NARROW
     * (int32 `a`, `b`, `c`, partition-sorted — r16): −48 % bytes on the
-    * non-edge side at sf0.1 (468 → 242 MB snappy; codec trade measured
-    * and parameterised, see [[pairsCodec]]) with bit-identical results
+    * non-edge side at sf0.1 (468 → 242 MB snappy; codec trade measured,
+    * see [[PairsCodec]]) with bit-identical results
     * (consumers re-widen to long at the scan edge).
     *
     * Build plan (the one-time cost): each qualifying center's sorted
@@ -485,28 +489,8 @@ object GraphOps {
     * per-element allocation). Partition count 2×parallelism bounds the
     * per-task map (~0.9 M keys at sf0.1, presized past it) and scales
     * with the cluster. */
-  /** Codec for the classified pair-count outputs. Parameterised
-    * (`graft.graph.pairsCodec`) because the right answer is regime-dependent
-    * and was MEASURED both ways on the sf2 non-edge side (1.1 B rows):
-    * zstd is 1.9x smaller (2.5 vs 4.7 GB) but its decode CPU inverts the
-    * low-parallelism rung — warm top-20 at 4 cores 33.9 s (zstd) vs 26.2 s
-    * (snappy) vs 28.2 s (the old wide layout), i.e. zstd gave back MORE
-    * than the narrow layout won; at 32 cores all three tie (~7.5 s,
-    * decode amortized). Default snappy: it wins or ties every locally
-    * measurable regime (and the sf0.1 first-touch scan, 1.8 vs 5.6 s).
-    * Deployments whose scans are genuinely I/O-bound (object storage,
-    * disks slower than ~1 GB/s per 4 cores) should set zstd — there the
-    * byte ratio is the whole bill. The codec participates in the artifact
-    * key (kind suffix) so differently-encoded builds cannot alias. */
-  private def pairsCodec(s: SparkSession): String = {
-    val c = s.conf.get("graft.graph.pairsCodec", "snappy")
-    require(c == "snappy" || c == "zstd", s"graft.graph.pairsCodec: $c")
-    c
-  }
-
   private[graft] def pairCountsPath(s: SparkSession, d: String): String = {
-    val codec = pairsCodec(s)
-    graft.plans.ArtifactCache.getOrBuild(s"graph_pair_counts_$codec", d,
+    graft.plans.ArtifactCache.getOrBuild(s"graph_pair_counts_$PairsCodec", d,
       Seq("lineitem"),
       // consumes edges() ⇒ stamps [[edgesLogic]] (transitive-staleness rule)
       edgesLogic) { dir =>
@@ -537,7 +521,7 @@ object GraphOps {
       // sort within the hash partitions (no shuffle — dictionary/RLE
       // pages + runs for the codec). Measured at sf0.1 on the 58.9 M-row
       // non-edge side: 468 → 242 MB snappy / 134 MB zstd (codec trade
-      // measured at 4/8/32 cores, see [[pairsCodec]]), cold top-20 scan
+      // measured at 4/8/32 cores, see [[PairsCodec]]), cold top-20 scan
       // 1.30 → 0.84/0.93 s, top-20 bit-identical ((c desc, p) ≡
       // (c desc, a, b) for packed non-negative fixed-width fields).
       // Consumers re-widen to long at the scan edge so every downstream
@@ -548,7 +532,7 @@ object GraphOps {
         col("c").cast("int").as("c"))
       def writeNarrow(df: DataFrame, path: String): Unit =
         df.sortWithinPartitions(col("a"), col("b"))
-          .write.option("compression", codec).parquet(path)
+          .write.option("compression", PairsCodec).parquet(path)
       writeNarrow(unpacked(counts.join(edgeSide, Seq("p"), "left_semi")),
         s"$dir/pairs_edge")
       writeNarrow(unpacked(counts.join(edgeSide, Seq("p"), "left_anti")),
@@ -564,7 +548,7 @@ object GraphOps {
         .select(shiftright(col("p"), 32).cast("int").as("a"),
           col("p").bitwiseAND(lit(0xFFFFFFFFL)).cast("int").as("b"))
         .sortWithinPartitions(col("a"), col("b"))
-        .write.option("compression", codec).parquet(s"$dir/edges_unsupported")
+        .write.option("compression", PairsCodec).parquet(s"$dir/edges_unsupported")
       // the raw (p, c) stream was only the classification input — queries
       // never read it; dropping it halves the artifact's disk (477 MB of
       // the 955 MB at sf0.1)

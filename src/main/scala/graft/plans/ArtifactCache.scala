@@ -203,8 +203,9 @@ object ArtifactCache {
   private val keepSiblings = 2
 
   /** Kind names no build publishes any more: `graph_pair_counts` became
-    * `graph_pair_counts_<codec>` when the pair codec joined the key. */
-  private val retiredKinds = Seq("graph_pair_counts")
+    * `graph_pair_counts_<codec>` when the pair codec joined the key, and
+    * the codec is now always snappy, so `graph_pair_counts_zstd` is gone. */
+  private val retiredKinds = Seq("graph_pair_counts", "graph_pair_counts_zstd")
 
   /** Published artifacts are immutable but must not be eternal: without
     * eviction every fixture regeneration and recompile strands the prior

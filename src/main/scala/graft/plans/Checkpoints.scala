@@ -40,31 +40,16 @@ object Checkpoints {
     * truncation in the engine. Requires `sc.setCheckpointDir` first. */
   val ReliableKey = "graft.sweep.reliableCheckpoint"
 
-  /** The round-12 dedup-only key, honored as an alias so existing
-    * deployments that set it keep their CC-loop durability (and gain it
-    * everywhere else, which is strictly what they asked for). */
-  val LegacyReliableKey = "graft.cc.reliableCheckpoint"
-
-  /** One-per-JVM flag for the legacy-key scope warning below. */
-  private val legacyWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
+  /** The round-12 dedup-only key, formerly an alias for [[ReliableKey]].
+    * A session that still sets it fails fast instead of quietly falling
+    * back to `localCheckpoint`. */
+  private val RemovedReliableKey = "graft.cc.reliableCheckpoint"
 
   private def reliable(df: DataFrame): Boolean = {
     val c = df.sparkSession.conf
-    val modern = c.getOption(ReliableKey)
-    val legacy = c.getOption(LegacyReliableKey)
-    // A round-12 deployment that set the legacy key asked for durability
-    // on the dedup CC loop only; under this engine-wide switch it now
-    // gains distributed-storage writes on EVERY sweep and multi-consumer
-    // pin — intentional (strictly more of what they asked for) but a
-    // real perf change on upgrade, so say so once instead of silently
-    if (modern.isEmpty && legacy.contains("true") &&
-        legacyWarned.compareAndSet(false, true)) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"$LegacyReliableKey now flips ALL sweep truncations engine-wide " +
-          s"to reliable checkpoint() (formerly the dedup CC loop only); " +
-          s"set $ReliableKey explicitly to acknowledge the widened scope")
-    }
-    modern.orElse(legacy).contains("true")
+    require(c.getOption(RemovedReliableKey).isEmpty,
+      s"$RemovedReliableKey was removed: set $ReliableKey instead")
+    c.getOption(ReliableKey).contains("true")
   }
 
   /** Truncate `df`'s lineage under the session's configured mode. `eager`

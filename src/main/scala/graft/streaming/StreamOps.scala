@@ -115,12 +115,6 @@ object StreamOps {
   // otherwise race the set/restore and leave the session mis-sized.
   private val runLock = new Object
 
-  /** Dev/test conf: "true" ⇒ [[runToCompletion]] ignores `skipNoDataBatch`
-    * and runs the trailing no-data micro-batch anyway — the hook that keeps
-    * [[graft.tools.ProfileNoData]]'s on/off A/B meaningful for queries that
-    * have already opted into the skip. Never set in production paths. */
-  val ForceNoDataKey = "graft.stream.forceNoDataBatch"
-
   private val CkptManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   /** Run `body` with the FileSystem-based checkpoint file manager when the
@@ -170,12 +164,7 @@ object StreamOps {
     // skipping it. Queries whose output depends on the final watermark
     // advance must NOT set this.
     val oldNoData = s.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    // Test hook (ProfileNoData's A/B): with [[ForceNoDataKey]] = true the
-    // opt-in is ignored, so the 'on' arm of a no-data-batch comparison
-    // genuinely runs the trailing batch even for queries that opted out.
-    val skip = skipNoDataBatch &&
-      !s.conf.getOption(ForceNoDataKey).contains("true")
-    if (skip)
+    if (skipNoDataBatch)
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     // Checkpoint + state-store deltas are commit-latency-bound, not
     // volume-bound, on a finite replay: prefer tmpfs when present (a real
@@ -227,7 +216,7 @@ object StreamOps {
       }
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", old)
-      if (skip) oldNoData match {
+      if (skipNoDataBatch) oldNoData match {
         case Some(v) => s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
         case None => s.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
       }

@@ -53,10 +53,12 @@ class ArtifactEvictionSpec extends AnyFunSuite {
     try {
       val root = new File(sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft-artifacts")
       val fp = f"${System.nanoTime()}%016x".takeRight(16)
-      // the pre-codec spelling of the pair-count artifact, and today's
+      // the pre-codec spelling of the pair-count artifact, the retired
+      // zstd one, and today's
       val retired = new File(root, s"graph_pair_counts_$fp")
+      val zstd = new File(root, s"graph_pair_counts_zstd_$fp")
       val current = new File(root, s"graph_pair_counts_snappy_$fp")
-      Seq(retired, current).foreach { d =>
+      Seq(retired, zstd, current).foreach { d =>
         d.mkdirs(); d.setLastModified(System.currentTimeMillis - 60000)
       }
       val published = new File(ArtifactCache.getOrBuild(
@@ -64,6 +66,7 @@ class ArtifactEvictionSpec extends AnyFunSuite {
         java.nio.file.Files.writeString(new File(dir, "marker").toPath, "x")
       })
       assert(!retired.exists, "a retired-kind build must be swept")
+      assert(!zstd.exists, "a zstd pair-count build must be swept")
       assert(current.isDirectory, "another kind's build is not this publish's to sweep")
       Seq(current, published).foreach(FsUtil.deleteRecursive)
     } finally prev match {

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftCoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def newCore(): GraftCore = {
+  private def newCore(results: String =
+      Files.createTempDirectory("graft-e2e-results").toString): GraftCore = {
     val tasksDir = Files.createTempDirectory("graft-e2e-tasks")
     Files.writeString(tasksDir.resolve("tasks.sql"),
       """-- name: get_profit_summary
@@ -37,7 +38,6 @@ class GraftCoreSpec extends AnyFunSuite {
         |-- name: broken_query
         |SELECT no_such_column FROM events;
         |""".stripMargin)
-    val results = Files.createTempDirectory("graft-e2e-results").toString
     GraftCore(spark, Seq(tasksDir.toString),
       sources = Map("my_db" -> TestSpark.sf0001),
       resultBackends = Map("my_results" -> results))
@@ -67,6 +67,31 @@ class GraftCoreSpec extends AnyFunSuite {
     assert(res.schema("total").dataType == DoubleType)      // NUMERIC class
     assert(res.schema("entry_date").dataType == DateType)   // DATE
     core.shutdown()
+  }
+
+  test("a job matching no rows ends SUCCESS with count 0 and an empty " +
+       "results_<id>, on the Parquet and the JDBC result backend") {
+    val parquetRoot = Files.createTempDirectory("graft-e2e-results").toString
+    val derby = "jdbc:derby:memory:graftzerorows;create=true"
+    for ((backend, rowsIn) <- Seq[(String, String => Long)](
+        parquetRoot -> (id => spark.read.parquet(s"$parquetRoot/results_$id").count()),
+        derby -> { id =>
+          val conn = java.sql.DriverManager.getConnection(derby)
+          try {
+            val rs = conn.createStatement()
+              .executeQuery(s"""SELECT COUNT(*) FROM "results_$id"""")
+            rs.next(); rs.getLong(1)
+          } finally conn.close()
+        })) {
+      val core = newCore(backend)
+      try {
+        val job = core.postJob(JobReq("get_profit_entries", args = Seq("-1")))
+        val st = await(core, job.id)
+        assert(st.state == JobState.Success, st.error)
+        assert(st.count == 0L)
+        assert(rowsIn(job.id) == 0L, s"results_${job.id} on $backend")
+      } finally core.shutdown()
+    }
   }
 
   test("args bind typed: range query with timestamps (test.postgres.sql:19-21)") {

@@ -106,6 +106,17 @@ class HttpApiSpec extends AnyFunSuite {
     assert(c2 == 400)
   }
 
+  test("client errors are 400 in the error envelope: malformed JSON, group job without a task") {
+    def isClientError(r: (Int, String)): Unit = {
+      assert(r._1 == 400, r._2)
+      assert(mapper.readTree(r._2).get("status").asText == "error", r._2)
+    }
+    isClientError(post("/tasks/summary/jobs", """{"job_id":"""))
+    isClientError(post("/groups", "not json"))
+    isClientError(post("/groups", """{"group_id":"http-g2","jobs":[{"args":["1"]}]}"""))
+    assert(get("/groups/http-g2")._1 == 404, "a refused group must not be admitted")
+  }
+
   test("DELETE completed job without purge is 409; purge succeeds") {
     val (c1, _) = delete("/jobs/http-1")
     assert(c1 == 409)

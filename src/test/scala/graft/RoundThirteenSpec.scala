@@ -121,23 +121,19 @@ class RoundThirteenSpec extends AnyFunSuite {
       local.collect().map(_.getLong(0)).sorted.toSeq)
   }
 
-  test("Checkpoints.sweep: the round-12 dedup-scoped key still flips the " +
-      "mode (alias contract)") {
-    assert(operators.DedupOps.ReliableCheckpointKey ==
-      Checkpoints.LegacyReliableKey)
-    // getCheckpointDir is a URI string (file:/…/<uuid>) — strip the scheme
-    // to walk it from the driver side; ensure our own dir (order
-    // independence — this test formerly NPE'd when run alone)
-    val ckDir = ensureCkDir().stripPrefix("file:")
-    def files(): Int = {
-      def walk(f: java.io.File): Int =
-        if (f.isDirectory) f.listFiles().map(walk).sum else 1
-      walk(new java.io.File(ckDir).getParentFile)
+  test("Checkpoints.sweep: the removed round-12 dedup-scoped key fails " +
+      "fast and names its replacement") {
+    // a deployment that still sets the old key must hear about it rather
+    // than quietly fall back to localCheckpoint
+    val s2 = sessionWith("graft.cc.reliableCheckpoint")
+    for (truncate <- Seq[org.apache.spark.sql.DataFrame => Any](
+        Checkpoints.sweep(_), Checkpoints.pin(_))) {
+      val e = intercept[IllegalArgumentException] {
+        truncate(s2.range(50).toDF("id"))
+      }
+      assert(e.getMessage.contains("graft.cc.reliableCheckpoint") &&
+        e.getMessage.contains(Checkpoints.ReliableKey), e.getMessage)
     }
-    val before = files()
-    val s2 = sessionWith(Checkpoints.LegacyReliableKey)
-    assert(Checkpoints.sweep(s2.range(50).toDF("id")).count() == 50)
-    assert(files() > before, "legacy key must take reliable checkpoint()")
   }
 
   test("graph_components: bit-identical between local and reliable sweep " +
