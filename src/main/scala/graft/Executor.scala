@@ -1,16 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnShim, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, ParsedStatement, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.functions.{count, lit}
 import scala.util.Random
 
 /** Single-job execution: the port of `execJob` + `writeResults`
   * (`internal/core/core.go:450-572`).
   *
-  * A job runs inside its own Spark *session* (shared SparkContext, isolated
-  * temp-view catalog) so concurrent jobs against different named sources
-  * can't see each other's table registrations. The executing thread tags all
-  * Spark jobs with the job ID as the job group with `interruptOnCancel=true`
-  * — `sparkContext.cancelJobGroup(jobId)` is then the 1:1 port of the
+  * A job runs on the session it is given — the server's one session, like
+  * the reference's one pool per named source (`core.go:496`). Isolation
+  * between concurrent jobs comes from binding, not from a session per job:
+  * [[buildFrame]] binds each table straight into the job's plan and touches
+  * no catalog. The executing thread tags all Spark jobs with the job ID as
+  * the job group with `interruptOnCancel=true` —
+  * `sparkContext.cancelJobGroup(jobId)` is then the 1:1 port of the
   * reference's per-job `context.CancelFunc` (`core.go:457-468`), and strictly
   * stronger: it kills every stage of the plan, not just the driver-side wait.
   *
@@ -18,7 +23,8 @@ import scala.util.Random
   * backend, cast the result to the canonical 6-type schema (§1.2), and write
   * `results_<jobID>` parquet with overwrite — the atomic per-directory commit
   * replaces the reference's DROP TABLE + CREATE + tx (`sqldb.go:159-217`).
-  * The returned row count is stored as the job result (`core.go:436`).
+  * The row count the write observed is stored as the job result
+  * (`core.go:436`).
   */
 object Executor {
 
@@ -42,120 +48,62 @@ object Executor {
 
   /** Build the job's DataFrame without materializing (shared by run()).
     *
-    * A source is either a parquet directory or a `jdbc:` URL — the latter is
-    * the direct analog of the reference's external source databases
-    * (`dbpool.go`): each table the task SQL references becomes a
-    * `spark.read.jdbc` relation, and Catalyst pushes filters + column
-    * pruning down into the remote DB exactly the way the reference delegates
-    * whole queries to it.
+    * The bound statement is parsed once and every table it names — except
+    * CTE names — is bound into the plan as `SubqueryAlias(<its name>,
+    * relation)`, so column qualifiers (`users.id`, `pub.users.id`) resolve
+    * as written. The relation is [[Tables.load]]'s plan for a directory
+    * source and a `spark.read.jdbc` plan for a `jdbc:` source — the direct
+    * analog of the reference's external source databases (`dbpool.go`):
+    * Catalyst pushes filters and column pruning down into the remote DB the
+    * way the reference delegates whole queries to it. Nothing is registered
+    * in the session's catalog, so jobs sharing a session cannot see each
+    * other's tables; statements that would change the session (`SET`,
+    * `CREATE TEMPORARY VIEW`, `CACHE TABLE`, DML, ...) are refused.
     */
   def buildFrame(session: SparkSession, sourceDir: String, task: Task, args: Seq[String]): DataFrame = {
-    val sql = ArgBinder.bind(task.raw, args)
-    graft.functions.GraftFunctions.registerAll(session) // custom fns for task SQL
-    ClickHouseDialect.ensureRegistered() // no-op after first call
-    if (sourceDir.startsWith("jdbc:")) jdbcFrame(session, sourceDir, sql)
-    else {
-      // register only the tables the statement references: creating a
-      // DataFrame reads parquet footers eagerly, so a job touching one
-      // table must not pay a schema read per fixture table (the per-job
-      // overhead is what a job server multiplies)
-      val (cteNames, tables) = collectRelations(session, sql)
-      val referenced = tables.collect {
-        case parts if parts.size == 1 && !cteNames.contains(parts.head.toLowerCase) =>
-          parts.head.toLowerCase
-      }.toSet
-      Tables.registerReferenced(session, sourceDir, referenced)
-      session.sql(sql)
+    val parsed = session.sessionState.sqlParser.parsePlan(ArgBinder.bind(task.raw, args))
+    parsed.find { case _: Command | _: ParsedStatement => true; case _ => false }.foreach { c =>
+      throw new IllegalArgumentException(s"task ${task.name}: only queries run as jobs, " +
+        s"not commands or statements (${c.nodeName}); a command would change the " +
+        "session every later job runs on")
     }
-  }
-
-  /** CTE names + referenced relations of a statement (shared by the parquet
-    * and JDBC source paths). CTE bodies live in `UnresolvedWith.cteRelations`
-    * (inner children, not traversed by `collect`) — walked explicitly so
-    * tables referenced inside a CTE count, while CTE names themselves don't. */
-  private def collectRelations(session: SparkSession, sql: String): (Set[String], Vector[Seq[String]]) = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
-    val parsed = session.sessionState.sqlParser.parsePlan(sql)
-    var cteNames = Set.empty[String]
-    var tables = Vector.empty[Seq[String]]
-    var work = List[LogicalPlan](parsed)
-    while (work.nonEmpty) {
-      val p = work.head
-      work = work.tail
-      p.foreach { node =>
-        node.subqueries.foreach(sq => work = sq :: work) // IN/EXISTS/scalar subqueries
-        node match {
-          case w: UnresolvedWith =>
-            cteNames ++= w.cteRelations.map(_._1.toLowerCase)
-            work = w.cteRelations.map(_._2: LogicalPlan).toList ++ work
-          case r: UnresolvedRelation => tables :+= r.multipartIdentifier
-          case _ => ()
-        }
-      }
-    }
-    (cteNames, tables)
-  }
-
-  /** Build the frame for a jdbc: source: register a JDBC relation for every
-    * table the statement references — excluding CTE-defined names, which are
-    * not remote tables — and rewrite the parsed plan to point at the
-    * registered views. Schema-qualified names (`public.users`) are invalid as
-    * temp-view names, so each goes under a sanitized alias and the plan's
-    * `UnresolvedRelation`s are substituted (the reference delegates such SQL
-    * verbatim to the source DB; here the qualified name travels in `dbtable`).
-    */
-  private def jdbcFrame(session: SparkSession, url: String, sql: String): DataFrame = {
-    import org.apache.spark.sql.GraftColumnShim
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
-    val parsed = session.sessionState.sqlParser.parsePlan(sql)
-    val (cteNames, tables) = collectRelations(session, sql)
-    def isCte(parts: Seq[String]): Boolean =
-      parts.size == 1 && cteNames.contains(parts.head.toLowerCase)
-    // key case-insensitively (Spark resolution default) but keep the
-    // original-case name for `dbtable` — the remote DB may be case-sensitive
-    val remote: Map[Seq[String], Seq[String]] = tables.filterNot(isCte)
-      .map(parts => parts.map(_.toLowerCase) -> parts).toMap
-    // single-part names keep their own name as the view; qualified names get
-    // a sanitized alias (`public.users` → `graft_jdbc_public_users_<hash>`;
-    // the hash disambiguates names that sanitize to the same string)
-    val alias: Map[Seq[String], String] = remote.map { case (key, parts) =>
-      val v =
-        if (parts.size == 1) parts.head
-        else {
-          val joined = parts.mkString(".")
-          val h = java.security.MessageDigest.getInstance("MD5")
-            .digest(joined.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-          "graft_jdbc_" + joined.replaceAll("[^A-Za-z0-9_]", "_") + "_" + h
-        }
-      key -> v
-    }
-    alias.foreach { case (key, view) =>
-      session.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", remote(key).mkString("."))
-        .load()
-        .createOrReplaceTempView(view)
-    }
-    def rewrite(p: LogicalPlan): LogicalPlan = p.transformDownWithSubqueries {
+    val load: Seq[String] => LogicalPlan =
+      if (sourceDir.startsWith("jdbc:")) {
+        ClickHouseDialect.ensureRegistered() // no-op after first call
+        parts => session.read.format("jdbc").option("url", sourceDir)
+          .option("dbtable", parts.mkString(".")).load().queryExecution.analyzed
+      } else parts => Tables.load(session, sourceDir, parts.mkString(".").toLowerCase)
+        .queryExecution.analyzed
+    // one relation per distinct name (case-insensitive, Spark's default),
+    // keeping the first-seen case for `dbtable`: a remote DB may be
+    // case-sensitive
+    val bound = scala.collection.mutable.HashMap.empty[Seq[String], LogicalPlan]
+    val cte = cteNames(parsed)
+    def bind(p: LogicalPlan): LogicalPlan = p.transformDownWithSubqueries {
+      // CTE bodies are inner children, which the transform does not visit
       case w: UnresolvedWith =>
-        w.copy(cteRelations = w.cteRelations.map { case (n, s, o) =>
-          (n, rewrite(s).asInstanceOf[SubqueryAlias], o)
+        w.copy(cteRelations = w.cteRelations.map { case (n, body, o) =>
+          (n, bind(body).asInstanceOf[SubqueryAlias], o)
         })
-      case r: UnresolvedRelation if r.multipartIdentifier.size > 1 =>
-        alias.get(r.multipartIdentifier.map(_.toLowerCase)) match {
-          case Some(view) => r.copy(multipartIdentifier = Seq(view))
-          case None       => r
-        }
+      case r: UnresolvedRelation
+          if !(r.multipartIdentifier.size == 1 && cte(r.multipartIdentifier.head.toLowerCase)) =>
+        val parts = r.multipartIdentifier
+        SubqueryAlias(parts, bound.getOrElseUpdate(parts.map(_.toLowerCase), load(parts)))
     }
-    GraftColumnShim.ofRows(session, rewrite(parsed))
+    GraftColumnShim.ofRows(session, bind(parsed))
   }
+
+  /** Every CTE name defined anywhere in a statement, lowercased — CTE
+    * bodies nest inside `UnresolvedWith.cteRelations`, walked explicitly. */
+  private def cteNames(p: LogicalPlan): Set[String] =
+    p.collectWithSubqueries {
+      case w: UnresolvedWith =>
+        w.cteRelations.flatMap { case (n, body, _) => cteNames(body) + n.toLowerCase }
+    }.flatten.toSet
 
   /** Execute one job end-to-end on the calling thread. */
   def run(spark: SparkSession, job: Job, task: Task, rnd: Random = Random): ExecResult = {
-    val session = spark.newSession()
-    val sc = session.sparkContext
+    val sc = spark.sparkContext
     sc.setJobGroup(job.id, s"graft task=${task.name} job=${job.id}", interruptOnCancel = true)
     try {
       // named DB else random pick (core.go:483-492)
@@ -164,29 +112,30 @@ object Executor {
         case None       => task.dbs.getRandom(rnd)
       }
       val (_, backendDir) = task.resultBackends.getRandom(rnd) // core.go:515
-      val df = buildFrame(session, srcDir, task, job.args)
-      val out = CanonicalTypes.castToCanonical(df)
-      if (backendDir.startsWith("jdbc:")) {
-        // external result DB, like the reference's MySQL/PG backends:
-        // overwrite = DROP TABLE IF EXISTS + CREATE (sqldb.go:159-188)
-        ClickHouseDialect.ensureRegistered()
-        val table = quotedResultTable(backendDir, job.id)
-        val writer = out.write.mode("overwrite")
-        // ClickHouse CREATE TABLE requires an engine clause
-        (if (ClickHouseDialect.canHandle(backendDir))
-          writer.option("createTableOptions", ClickHouseDialect.resultTableEngine)
-        else writer)
-          .jdbc(backendDir, table, new java.util.Properties)
-        ResultClock.touch(backendDir, resultTable(job.id)) // refresh sweeper TTL
-        val count = session.read.jdbc(backendDir, table, new java.util.Properties).count()
-        ExecResult(count, s"$backendDir#${resultTable(job.id)}", srcName)
-      } else {
-        val dest = resultDir(backendDir, job.id)
-        out.write.mode("overwrite").parquet(dest)
-        // count from the committed files' footers (metadata-only, no rescan)
-        val count = session.read.parquet(dest).count()
-        ExecResult(count, dest, srcName)
-      }
+      // the write counts its own rows, like the reference's row pump
+      // (core.go:511-572)
+      val observed = new Observation()
+      val out = CanonicalTypes.castToCanonical(buildFrame(spark, srcDir, task, job.args))
+        .observe(observed, count(lit(1)).as("rows"))
+      val dest =
+        if (backendDir.startsWith("jdbc:")) {
+          // external result DB, like the reference's MySQL/PG backends:
+          // overwrite = DROP TABLE IF EXISTS + CREATE (sqldb.go:159-188)
+          ClickHouseDialect.ensureRegistered()
+          val writer = out.write.mode("overwrite")
+          // ClickHouse CREATE TABLE requires an engine clause
+          (if (ClickHouseDialect.canHandle(backendDir))
+            writer.option("createTableOptions", ClickHouseDialect.resultTableEngine)
+          else writer)
+            .jdbc(backendDir, quotedResultTable(backendDir, job.id), new java.util.Properties)
+          ResultClock.touch(backendDir, resultTable(job.id)) // refresh sweeper TTL
+          s"$backendDir#${resultTable(job.id)}"
+        } else {
+          val dir = resultDir(backendDir, job.id)
+          out.write.mode("overwrite").parquet(dir)
+          dir
+        }
+      ExecResult(observed.get("rows").asInstanceOf[Long], dest, srcName)
     } finally sc.clearJobGroup()
   }
 }

@@ -31,6 +31,8 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends BrokerB
   // task, core.go:437-440); fixed at first sight like queue concurrency
   private val taskSlots = new ConcurrentHashMap[String, java.util.concurrent.Semaphore]()
   private val timers = Executors.newScheduledThreadPool(2, daemonFactory("graft-timer"))
+  // task SQL's custom functions, once on the session every job runs on
+  graft.functions.GraftFunctions.registerAll(spark)
 
   /** Cross-process retry hop (set by a queue worker's [[ClaimLoop]]): when
     * non-null, a retryable failure re-publishes the job THROUGH THE BROKER

@@ -13,16 +13,13 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * filters/prune columns into the parquet scan.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Analyzed-plan cache: creating a reader DataFrame runs a small parquet
     * footer/file-listing job (and a full inference pass for CSV/JSON), and a
-    * Verify/Bench run constructs hundreds of queries that each load the same
-    * handful of tables — so the resolved DataFrame is memoized per (session,
-    * file identity). The key includes length+mtime, so a rewritten fixture
-    * reloads; the value is a logical plan (no data), so the map stays tiny. */
+    * Verify/Bench run constructs hundreds of queries — and a job server
+    * binds thousands of jobs — that each load the same handful of tables;
+    * so the resolved DataFrame is memoized per (session, file identity).
+    * The key includes length+mtime, so a rewritten fixture reloads; the
+    * value is a logical plan (no data), so the map stays tiny. */
   private val planCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
@@ -124,16 +121,4 @@ object Tables {
       case ext if exists(sfDir, table, ext) => new java.io.File(s"$sfDir/$table.$ext")
     }.getOrElse(throw new IllegalArgumentException(
       s"no $table.{parquet,csv,json,orc} under $sfDir"))
-
-  /** Register the named tables (lowercased names) as temp views so task SQL
-    * can refer to them by name — the per-job path: creating a DataFrame
-    * reads footers/infers schema eagerly, so a job touching one table must
-    * not pay a schema read for every fixture table the source happens to
-    * carry. Unknown names are ignored; the subsequent resolution error for
-    * a genuinely missing table is the same either way. */
-  def registerReferenced(spark: SparkSession, sfDir: String, referenced: Set[String]): Unit =
-    names.filter(referenced.contains).foreach { t =>
-      if (Seq("parquet", "csv", "json", "orc").exists(exists(sfDir, t, _)))
-        load(spark, sfDir, t).createOrReplaceTempView(t)
-    }
 }

@@ -13,8 +13,8 @@ object GraftColumnShim {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Run an unresolved logical plan through a session (Dataset.ofRows is
-    * `private[sql]`). Used by the jdbc: source path, which substitutes remote
-    * relations into the parsed plan instead of rewriting SQL text. */
+    * `private[sql]`). Used by the job path (`Executor.buildFrame`), which binds
+    * each source table into the parsed plan instead of registering views. */
   def ofRows(session: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan)

@@ -22,7 +22,8 @@ class ClientSpec extends AnyFunSuite {
         |-- name: slow_scan
         |-- queue: client_slow
         |-- conc: 1
-        |SELECT COUNT(*) AS n FROM events e1, events e2 WHERE e1.user_id = $1;
+        |SELECT n, graft_sleep(1500) AS slept
+        |FROM (SELECT COUNT(*) AS n FROM events e1, events e2 WHERE e1.user_id = $1);
         |""".stripMargin)
     val out = Files.createTempDirectory("client-out").toString
     val core = GraftCore(spark, Seq(tasksDir.toString),

@@ -321,4 +321,132 @@ class GraftCoreSpec extends AnyFunSuite {
     assert(counting.admits.get() == 1, "facade must route admission through the SPI store")
     core.shutdown(); base.shutdown()
   }
+
+  /** A core over one tasks file and the given directory sources. */
+  private def coreOver(tasksSql: String, sources: Map[String, String]): GraftCore = {
+    val tasksDir = Files.createTempDirectory("graft-session-tasks")
+    Files.writeString(tasksDir.resolve("t.sql"), tasksSql)
+    GraftCore(spark, Seq(tasksDir.toString), sources,
+      Map("res" -> Files.createTempDirectory("graft-session-res").toString))
+  }
+
+  /** A source directory holding only `events.parquet`, copied from `from`. */
+  private def eventsDir(from: String): java.nio.file.Path = {
+    val dir = Files.createTempDirectory("graft-session-src")
+    Files.copy(java.nio.file.Path.of(from, "events.parquet"), dir.resolve("events.parquet"))
+    dir
+  }
+
+  private def eventRows(dir: String): Long =
+    spark.read.parquet(s"$dir/events.parquet").count()
+
+  test("a filter-only task's job group runs exactly one Spark job: the write") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val core = newCore()
+    try {
+      // warm the source's table plan: its footer read is paid once per file
+      await(core, core.postJob(JobReq("get_profit_entries", args = Seq("1"))).id)
+      val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == "one-job"))
+            sites.add(js.stageInfos.map(_.name).mkString(" | "))
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val st = await(core, core.postJob(
+          JobReq("get_profit_entries", jobId = "one-job", args = Seq("2"))).id)
+        assert(st.state == JobState.Success, st.error)
+        assert(st.count == core.results("one-job").count())
+        Thread.sleep(500) // listener bus settle
+      } finally spark.sparkContext.removeSparkListener(listener)
+      val jobs = scala.jdk.CollectionConverters.IteratorHasAsScala(sites.iterator()).asScala.toSeq
+      assert(jobs.size == 1 && jobs.head.contains("parquet at"), s"Spark jobs: $jobs")
+    } finally core.shutdown()
+  }
+
+  test("command tasks fail and leave the server session's conf and temp views unchanged") {
+    val core = coreOver(
+      """-- name: set_conf
+        |-- raw: 1
+        |SET spark.sql.shuffle.partitions=3;
+        |
+        |-- name: temp_view
+        |-- raw: 1
+        |CREATE TEMPORARY VIEW v AS SELECT 1;
+        |""".stripMargin, Map("db" -> TestSpark.sf0001))
+    def tempViews = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    val views = tempViews
+    try for (task <- Seq("set_conf", "temp_view")) {
+      val st = await(core, core.postJob(JobReq(task)).id)
+      assert(st.state == JobState.Failure, s"$task: $st")
+      assert(st.error.contains("only queries run as jobs"), s"$task: ${st.error}")
+    } finally core.shutdown()
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions)
+    assert(tempViews == views)
+  }
+
+  test("concurrent jobs pinned to two directory sources each count their own source") {
+    val small = eventsDir(TestSpark.sf0001)
+    val large = eventsDir(TestSpark.sf001)
+    val expected = Map("small" -> eventRows(small.toString), "large" -> eventRows(large.toString))
+    assert(expected("small") != expected("large"))
+    val core = coreOver(
+      """-- name: all_events
+        |-- conc: 8
+        |SELECT * FROM events;
+        |""".stripMargin, Map("small" -> small.toString, "large" -> large.toString))
+    try {
+      val jobs = (0 until 8).map { i =>
+        val db = if (i % 2 == 0) "small" else "large"
+        db -> core.postJob(JobReq("all_events", jobId = s"pinned-$i", db = Some(db)))
+      }
+      for ((db, job) <- jobs) {
+        val st = await(core, job.id)
+        assert(st.state == JobState.Success, st.error)
+        assert(st.count == expected(db), s"${job.id} on $db")
+      }
+    } finally core.shutdown()
+  }
+
+  test("a self-join with a CTE and an IN subquery over events matches a hand count") {
+    val core = coreOver(
+      """-- name: buyer_pairs
+        |WITH buyers AS (SELECT user_id FROM events WHERE event_type = 'purchase')
+        |SELECT a.user_id, COUNT(*) AS pairs
+        |FROM events a JOIN events b ON a.user_id = b.user_id AND a.event_id < b.event_id
+        |WHERE a.user_id IN (SELECT user_id FROM buyers)
+        |GROUP BY a.user_id;
+        |""".stripMargin, Map("db" -> TestSpark.sf0001))
+    try {
+      val job = core.postJob(JobReq("buyer_pairs"))
+      assert(await(core, job.id).state == JobState.Success)
+      val got = core.results(job.id).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val events = spark.read.parquet(s"${TestSpark.sf0001}/events.parquet")
+        .select("user_id", "event_type").collect().map(r => (r.getLong(0), r.getString(1)))
+      val buyers = events.collect { case (u, "purchase") => u }.toSet
+      val expected = events.groupBy(_._1).collect {
+        case (u, es) if buyers(u) => u -> es.length.toLong * (es.length - 1) / 2
+      }
+      assert(expected.nonEmpty && got == expected)
+    } finally core.shutdown()
+  }
+
+  test("a source's events.parquet rewritten between two jobs: the second job sees the new file") {
+    val src = eventsDir(TestSpark.sf0001)
+    val core = coreOver(
+      """-- name: all_events
+        |SELECT * FROM events;
+        |""".stripMargin, Map("db" -> src.toString))
+    try {
+      val first = await(core, core.postJob(JobReq("all_events")).id)
+      assert(first.state == JobState.Success && first.count == eventRows(TestSpark.sf0001))
+      Files.copy(java.nio.file.Path.of(TestSpark.sf001, "events.parquet"),
+        src.resolve("events.parquet"), java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      val second = await(core, core.postJob(JobReq("all_events")).id)
+      assert(second.state == JobState.Success, second.error)
+      assert(second.count == eventRows(TestSpark.sf001))
+    } finally core.shutdown()
+  }
 }

@@ -117,7 +117,7 @@ class JdbcSourceSpec extends AnyFunSuite {
            SELECT user_id, SUM(amount) AS s FROM entries GROUP BY user_id)
          SELECT COUNT(*) AS n FROM top_users WHERE s > 0""",
       SourcePool.single("db", url), SourcePool.single("res", "/tmp"), isRaw = true)
-    val df = Executor.buildFrame(spark.newSession(), url, task, Nil)
+    val df = Executor.buildFrame(spark, url, task, Nil)
     assert(df.head.getLong(0) == 3) // u0,u1,u2 all have positive sums
   }
 
@@ -130,13 +130,18 @@ class JdbcSourceSpec extends AnyFunSuite {
       st.execute("CREATE TABLE pub.users (id INT, name VARCHAR(16))")
       st.execute("INSERT INTO pub.users VALUES (1, 'ada'), (2, 'bob'), (3, 'eve')")
     } finally conn.close()
-    val task = Task("t", "default", 1,
-      """WITH grown AS (SELECT id + 10 AS id2, name FROM pub.users)
-         SELECT COUNT(*) AS n FROM grown g JOIN pub.users u ON g.id2 = u.id + 10
-         WHERE u.id >= $1""",
-      SourcePool.single("db", url), SourcePool.single("res", "/tmp"), isRaw = true)
-    val df = Executor.buildFrame(spark.newSession(), url, task, Seq("2"))
-    assert(df.head.getLong(0) == 2)
+    // a column qualified by the table's own name parts resolves as written
+    for (sql <- Seq(
+        """WITH grown AS (SELECT id + 10 AS id2, name FROM pub.users)
+           SELECT COUNT(*) AS n FROM grown g JOIN pub.users u ON g.id2 = u.id + 10
+           WHERE u.id >= $1""",
+        "SELECT COUNT(*) FROM pub.users WHERE pub.users.id >= $1",
+        "SELECT COUNT(*) FROM pub.users WHERE users.id >= $1")) {
+      val task = Task("t", "default", 1, sql,
+        SourcePool.single("db", url), SourcePool.single("res", "/tmp"), isRaw = true)
+      val df = Executor.buildFrame(spark, url, task, Seq("2"))
+      assert(df.head.getLong(0) == 2, sql)
+    }
   }
 
   test("filters push down into the JDBC source (delegation, like the reference)") {
@@ -144,7 +149,7 @@ class JdbcSourceSpec extends AnyFunSuite {
     val task = Task("t", "default", 1,
       "SELECT amount FROM entries WHERE user_id = 'u1'",
       SourcePool.single("db", url), SourcePool.single("res", "/tmp"), isRaw = true)
-    val df = Executor.buildFrame(spark.newSession(), url, task, Nil)
+    val df = Executor.buildFrame(spark, url, task, Nil)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") &&
       plan.toLowerCase.contains("equalto(user_id,u1)"),
