@@ -19,7 +19,9 @@ final class GraftCore(
     // shared state store + queue-backed broker here without touching this
     // facade (the reference's Redis seam, cmd/init.go:200-229)
     mkStore: () => JobStateStore = () => new StatusStore,
-    mkBroker: (SparkSession, JobStateStore) => JobBroker = new Scheduler(_, _)) {
+    mkBroker: (SparkSession, JobStateStore) => JobBroker = new Scheduler(_, _),
+    // `[app] default_job_ttl`: the TTL of a job whose request names none
+    defaultTtlSec: Int = JobFactory.DefaultTtlSec) {
 
   val store: JobStateStore = mkStore()
   val scheduler: JobBroker = mkBroker(spark, store)
@@ -37,7 +39,7 @@ final class GraftCore(
   // POST /tasks/{task}/jobs (handlePostJob, http.go:79-112)
   def postJob(req: JobReq): Job = {
     val t = task(req.taskName)
-    val job = JobFactory.make(req, t)
+    val job = JobFactory.make(req, t, defaultTtlSec)
     if (!scheduler.submit(job, t))
       throw new IllegalStateException(
         s"job ${job.id} is already queued or running") // core.go:336-338
@@ -60,7 +62,7 @@ final class GraftCore(
     val gid = if (groupId.nonEmpty) groupId else s"group_${UUID.randomUUID()}"
     val jobs = reqs.map { r =>
       val t = task(r.taskName)
-      (JobFactory.make(r, t), t)
+      (JobFactory.make(r, t, defaultTtlSec), t)
     }
     // record membership before submission so group status is immediately whole
     store.putGroup(gid, jobs.map(_._1.id))
@@ -108,11 +110,14 @@ object GraftCore {
       spark: SparkSession,
       taskDirs: Seq[String],
       sources: Map[String, String],
-      resultBackends: Map[String, String]): GraftCore = {
+      resultBackends: Map[String, String],
+      defaultQueue: String = TaskRegistry.DefaultQueue,
+      defaultTtlSec: Int = JobFactory.DefaultTtlSec): GraftCore = {
     require(sources.nonEmpty, "at least one source is required")        // init.go guard
     require(resultBackends.nonEmpty, "at least one result backend is required")
     val src = SourcePool(sources)
     val bk = SourcePool(resultBackends)
-    new GraftCore(spark, TaskRegistry.load(spark, taskDirs, src, bk), src, bk)
+    new GraftCore(spark, TaskRegistry.load(spark, taskDirs, src, bk, defaultQueue), src, bk,
+      defaultTtlSec = defaultTtlSec)
   }
 }

@@ -85,6 +85,68 @@ abstract class BrokerBase(store: JobStateStore) extends JobBroker {
   def shutdown(): Unit = closed = true
 }
 
+/** The [[JobStateStore]] skeleton the in-memory, File and Redis stores
+  * share: admission, status writes, cancel, rollback and the group
+  * reduction are written once here, each write under the store's per-ID
+  * lock. A store supplies only its storage primitives:
+  *
+  *   - [[locked]]: run `f` exclusively for one ID, across every instance
+  *     over the same storage;
+  *   - `get` / [[write]] / [[delete]]: one ID's status entry (present ⇔
+  *     admitted);
+  *   - [[nextEpoch]]: bump and return the ID's admission epoch. The counter
+  *     survives cancel, so a cancel + re-admit always bumps and a stale
+  *     retry timer in any process sees that its epoch is old;
+  *   - [[markCanceled]] / [[clearCanceled]] / [[isCanceled]]: the cancel
+  *     mark, which tells a canceled group member from one never admitted.
+  *
+  * Admission writes PENDING over the old entry and deletes nothing, so a
+  * reader never finds a re-admitted ID missing. [[JdbcJobStateStore]] keeps
+  * its own single-statement admission and shares only the reduction.
+  */
+abstract class LockedStore extends JobStateStore {
+  protected def locked[A](id: String)(f: => A): A
+  protected def write(s: JobStatus): Unit
+  protected def delete(id: String): Unit
+  protected def nextEpoch(id: String): Long
+  protected def markCanceled(id: String): Unit
+  protected def clearCanceled(id: String): Unit
+  protected def isCanceled(id: String): Boolean
+
+  def tryAdmit(id: String): Long = locked(id) {
+    if (get(id).exists(s => JobState.isLive(s.state))) -1L
+    else {
+      val epoch = nextEpoch(id)
+      clearCanceled(id)
+      write(JobStatus(id, JobState.Pending))
+      epoch
+    }
+  }
+
+  def set(id: String, st: JobState.Value, count: Long, error: String): Unit =
+    locked(id)(write(JobStatus(id, st, count, error)))
+
+  def setIfPresent(id: String, st: JobState.Value, count: Long, error: String): Unit =
+    locked(id) { if (get(id).isDefined) write(JobStatus(id, st, count, error)) }
+
+  /** CancelJob's delete-from-store step (core.go:268), remembered as a
+    * cancel for the group reduction. */
+  def remove(id: String): Unit = locked(id) { markCanceled(id); delete(id) }
+
+  def rollback(id: String): Unit = locked(id)(delete(id))
+
+  def groupStatus(groupId: String): Option[GroupStatus] =
+    groupJobIds(groupId).map(GroupStatus.reduce(groupId, _, get, isCanceled))
+}
+
+object LockedStore {
+  // JVM-global serialization per key: two stores over the same storage in
+  // one JVM must contend on the same object
+  private val stripes = Array.fill(64)(new Object)
+  private[graft] def stripe(key: String): Object =
+    stripes(math.floorMod(key.hashCode, stripes.length))
+}
+
 /** A job a queue worker has claimed, with what its backend needs to ack it
   * (the claimed file, the queue row, the parked payload). */
 final case class Claimed[R](job: Job, epoch: Long, attempt: Int, receipt: R)

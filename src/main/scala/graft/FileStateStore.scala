@@ -6,27 +6,23 @@ import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 import java.util.Properties
 import scala.jdk.CollectionConverters._
 
-/** Shared-directory [[JobStateStore]]: the first cross-process
-  * implementation of the control-plane SPI (Spi.scala).
+/** Shared-directory [[JobStateStore]]: the [[LockedStore]] skeleton
+  * (ControlPlane.scala) over files, which runs admission, cancel and the
+  * group reduction; this class supplies only the storage.
   *
   * N server/worker processes pointing at the same directory (local disk in
   * tests, NFS/EFS in a deployment) share job state the way the reference's
   * N instances share Redis hashes (`cmd/init.go:200-229`): admissions,
   * status, cancellation, and groups made by one process are visible to all.
-  * This is deliberately the SIMPLEST durable shared store that honors the
-  * SPI's contracts — a deployment with Redis/JDBC available implements the
-  * same trait over `SETNX`/`INSERT ON CONFLICT` instead; the scheduler
-  * relies only on the contracts, not the medium:
   *
-  *   - `tryAdmit` atomicity: a per-ID advisory file lock (cross-process) +
-  *     a per-JVM stripe lock (threads of one process can't both hold the
-  *     same FileLock) bracket the read-modify-write, so exactly one caller
-  *     per ID wins a round no matter how processes race.
-  *   - epoch monotonicity: the admission counter lives in a metadata file
-  *     that cancellation does NOT delete, so a cancel + re-admit always
-  *     bumps — stale retry timers in ANY process see their epoch is old.
+  *   - the per-ID lock: an advisory file lock (cross-process) inside a
+  *     per-JVM stripe lock (threads of one process can't both hold the
+  *     same FileLock).
+  *   - the epoch counter lives in a metadata file that cancellation does
+  *     NOT delete.
   *   - torn reads: state files are written to a temp name and atomically
-  *     renamed into place, so readers see an old or a new file, never half.
+  *     renamed into place, so readers see an old or a new file, never half
+  *     and never none.
   *
   * File layout per job ID (names carry an md5 suffix — IDs are
   * caller-supplied and may collide after sanitization):
@@ -35,7 +31,7 @@ import scala.jdk.CollectionConverters._
   * canceled, for the group reduction), `lock_<safe>` (advisory lock file),
   * `group_<safe>.props` (member IDs).
   */
-final class FileJobStateStore(rootDir: File) extends JobStateStore {
+final class FileJobStateStore(rootDir: File) extends LockedStore {
   require(rootDir.isDirectory || rootDir.mkdirs(), s"cannot create $rootDir")
 
   private val root: Path = rootDir.toPath
@@ -56,9 +52,9 @@ final class FileJobStateStore(rootDir: File) extends JobStateStore {
     * directory in one JVM must share it, or `FileChannel.lock` throws
     * `OverlappingFileLockException`) serializes threads of THIS process;
     * the file lock serializes against other processes. */
-  private def withLock[A](id: String)(f: => A): A = {
+  protected def locked[A](id: String)(f: => A): A = {
     val path = lockFile(id)
-    FileJobStateStore.stripe(path.toAbsolutePath.toString).synchronized {
+    LockedStore.stripe(path.toAbsolutePath.toString).synchronized {
       val ch = FileChannel.open(path,
         StandardOpenOption.CREATE, StandardOpenOption.WRITE)
       try {
@@ -88,53 +84,37 @@ final class FileJobStateStore(rootDir: File) extends JobStateStore {
     JobStatus(id, JobState.withName(props.getProperty("state")),
       props.getProperty("count", "-1").toLong, props.getProperty("error", ""))
 
-  private def writeStatus(id: String, st: JobState.Value, count: Long, error: String): Unit = {
+  protected def write(s: JobStatus): Unit = {
     val props = new Properties()
-    props.setProperty("id", id)
-    props.setProperty("state", st.toString)
-    props.setProperty("count", count.toString)
-    props.setProperty("error", error)
-    writeProps(jobFile(id), props)
+    props.setProperty("id", s.jobId)
+    props.setProperty("state", s.state.toString)
+    props.setProperty("count", s.count.toString)
+    props.setProperty("error", s.error)
+    writeProps(jobFile(s.jobId), props)
   }
 
-  override def tryAdmit(id: String): Long = withLock(id) {
-    val running = readProps(jobFile(id)).exists(p =>
-      JobState.isLive(JobState.withName(p.getProperty("state"))))
-    if (running) -1L
-    else {
-      val next = epoch(id) + 1
-      val meta = new Properties()
-      meta.setProperty("epoch", next.toString)
-      writeProps(metaFile(id), meta)
-      Files.deleteIfExists(cancelFile(id))
-      writeStatus(id, JobState.Pending, -1, "")
-      next
-    }
+  protected def delete(id: String): Unit = Files.deleteIfExists(jobFile(id)): Unit
+
+  protected def nextEpoch(id: String): Long = {
+    val next = epoch(id) + 1
+    val meta = new Properties()
+    meta.setProperty("epoch", next.toString)
+    writeProps(metaFile(id), meta)
+    next
   }
+
+  protected def markCanceled(id: String): Unit =
+    try Files.createFile(cancelFile(id))
+    catch { case _: java.nio.file.FileAlreadyExistsException => () }
+
+  protected def clearCanceled(id: String): Unit = Files.deleteIfExists(cancelFile(id)): Unit
+  protected def isCanceled(id: String): Boolean = Files.exists(cancelFile(id))
 
   override def epoch(id: String): Long =
     readProps(metaFile(id)).map(_.getProperty("epoch", "0").toLong).getOrElse(0L)
 
-  override def set(id: String, st: JobState.Value, count: Long, error: String): Unit =
-    withLock(id) { writeStatus(id, st, count, error) }
-
-  override def setIfPresent(id: String, st: JobState.Value, count: Long, error: String): Unit =
-    withLock(id) {
-      if (Files.exists(jobFile(id))) writeStatus(id, st, count, error)
-    }
-
   override def get(id: String): Option[JobStatus] =
     readProps(jobFile(id)).map(statusOf(id, _))
-
-  override def remove(id: String): Unit = withLock(id) {
-    Files.createDirectories(root)
-    try Files.createFile(cancelFile(id)) catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    Files.deleteIfExists(jobFile(id)): Unit
-  }
-
-  override def rollback(id: String): Unit = withLock(id) {
-    Files.deleteIfExists(jobFile(id)): Unit
-  }
 
   override def putGroup(groupId: String, jobIds: Seq[String]): Unit = {
     val props = new Properties()
@@ -151,21 +131,6 @@ final class FileJobStateStore(rootDir: File) extends JobStateStore {
   override def removeGroup(groupId: String): Unit =
     Files.deleteIfExists(groupFile(groupId)): Unit
 
-  /** Same reduction lattice + canceled-member exclusion as [[StatusStore]]
-    * (the contract is documented there); membership tests go to the files. */
-  override def groupStatus(groupId: String): Option[GroupStatus] =
-    groupJobIds(groupId).map { ids =>
-      val sts = ids.flatMap(get)
-      val unaccounted = ids.exists(id =>
-        !Files.exists(jobFile(id)) && !Files.exists(cancelFile(id)))
-      val state =
-        if (sts.exists(_.state == JobState.Failure)) JobState.Failure
-        else if (sts.nonEmpty && !unaccounted && sts.forall(_.state == JobState.Success)) JobState.Success
-        else if (sts.exists(s => s.state == JobState.Started || s.state == JobState.Retry)) JobState.Started
-        else JobState.Pending
-      GroupStatus(groupId, state, sts)
-    }
-
   override def snapshot: Map[String, JobStatus] = {
     val stream = Files.list(root)
     try stream.iterator().asScala
@@ -176,11 +141,4 @@ final class FileJobStateStore(rootDir: File) extends JobStateStore {
       .toMap
     finally stream.close()
   }
-}
-
-object FileJobStateStore {
-  // JVM-global intra-process serialization per lock file (see withLock)
-  private val stripes = Array.fill(64)(new Object)
-  private def stripe(key: String): Object =
-    stripes(math.floorMod(key.hashCode, stripes.length))
 }

@@ -54,21 +54,25 @@ final case class GraftConfig(
     // surface stream sizing on the session so the stream runner (which has
     // no GraftConfig handle) honors it; 0 = derive from input volume
     spark.conf.set(GraftConfig.StateStoresConfKey, streamStateStores.toString)
-    if (!hasControlPlane) GraftCore(spark, taskDirs, sources, resultBackends)
+    if (!hasControlPlane)
+      GraftCore(spark, taskDirs, sources, resultBackends, defaultQueue, defaultTtlSec)
     else {
       // shared control plane: file- or JDBC-backed state store + queue
       // broker; a queue worker (started by Main when not API-only)
       // executes claims
       val src = SourcePool(sources)
       val bk = SourcePool(resultBackends)
+      val tasks = TaskRegistry.load(spark, taskDirs, src, bk, defaultQueue)
       if (controlDir.nonEmpty)
-        new GraftCore(spark, TaskRegistry.load(spark, taskDirs, src, bk), src, bk,
+        new GraftCore(spark, tasks, src, bk,
           mkStore = () => new FileJobStateStore(new java.io.File(controlDir, "state")),
-          mkBroker = (_, st) => new FileQueueBroker(new java.io.File(controlDir, "queue"), st))
+          mkBroker = (_, st) => new FileQueueBroker(new java.io.File(controlDir, "queue"), st),
+          defaultTtlSec = defaultTtlSec)
       else
-        new GraftCore(spark, TaskRegistry.load(spark, taskDirs, src, bk), src, bk,
+        new GraftCore(spark, tasks, src, bk,
           mkStore = () => new JdbcJobStateStore(controlJdbcUrl),
-          mkBroker = (_, st) => new JdbcQueueBroker(controlJdbcUrl, st))
+          mkBroker = (_, st) => new JdbcQueueBroker(controlJdbcUrl, st),
+          defaultTtlSec = defaultTtlSec)
     }
   }
 
@@ -79,7 +83,7 @@ final case class GraftConfig(
     else {
       val src = SourcePool(sources)
       val bk = SourcePool(resultBackends)
-      val tasks = TaskRegistry.load(spark, taskDirs, src, bk)
+      val tasks = TaskRegistry.load(spark, taskDirs, src, bk, defaultQueue)
       val qs = if (workerQueues.isEmpty) None else Some(workerQueues)
       if (controlDir.nonEmpty) {
         val w = new FileQueueWorker(spark, tasks,

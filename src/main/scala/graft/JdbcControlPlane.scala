@@ -16,8 +16,7 @@ import java.time.LocalDateTime
   *   - `tryAdmit` exclusivity: the admission is a PRIMARY-KEY `INSERT` (one
   *     winner) or, for a finished entry, a conditional
   *     `UPDATE ... WHERE state IN (terminal)` (0 rows = somebody else holds
-  *     the ID live) — the `SETNX` / `INSERT ON CONFLICT` shape the SPI doc
-  *     promises. Only the winner bumps the epoch, so epochs stay monotonic
+  *     the ID live) — the `SETNX` / `INSERT ON CONFLICT` shape. Only the winner bumps the epoch, so epochs stay monotonic
   *     per admission with no read-modify-write race.
   *   - queue claims: `UPDATE ... SET claimed_by WHERE seq = ? AND
   *     claimed_by IS NULL` — exactly one worker per row, the rename-claim of
@@ -26,6 +25,10 @@ import java.time.LocalDateTime
   *     carry a lease timestamp; a claim past its lease whose store entry is
   *     still PENDING (claimer died between claim and execution) is returned
   *     to the queue by a conditional reset.
+  *
+  * The store is not a [[LockedStore]]: a lock around a read-modify-write
+  * would be weaker than these single statements. It shares only the group
+  * reduction ([[GroupStatus.reduce]]).
   *
   * Tested against embedded Derby (the only JDBC engine in the sandbox);
   * the SQL sticks to the portable subset (no RETURNING, no ON CONFLICT),
@@ -37,7 +40,7 @@ final class JdbcJobStateStore(url: String) extends JobStateStore {
 
   private def withConn[A](f: Connection => A): A = JdbcControlPlane.withConn(url)(f)
 
-  private val Live = Seq(JobState.Pending, JobState.Started, JobState.Retry).map(_.toString)
+  private val Live = JobState.values.toSeq.filter(JobState.isLive).map(_.toString)
 
   override def tryAdmit(id: String): Long = withConn { c =>
     val admitted =
@@ -51,7 +54,7 @@ final class JdbcJobStateStore(url: String) extends JobStateStore {
           // an entry exists: re-admit only a finished one (conditional CAS)
           val ps = c.prepareStatement(
             "UPDATE graft_jobs SET state = ?, jcount = -1, error = '' " +
-              "WHERE id = ? AND state NOT IN (?, ?, ?)")
+              s"WHERE id = ? AND state NOT IN (${Live.map(_ => "?").mkString(", ")})")
           ps.setString(1, JobState.Pending.toString); ps.setString(2, id)
           Live.zipWithIndex.foreach { case (s, i) => ps.setString(i + 3, s) }
           try ps.executeUpdate() == 1 finally ps.close()
@@ -187,26 +190,15 @@ final class JdbcJobStateStore(url: String) extends JobStateStore {
     try del.executeUpdate() finally del.close()
   }
 
-  /** Same reduction lattice + canceled-member exclusion as [[StatusStore]];
-    * membership tests go to the tables (canceled marker = meta.canceled). */
+  /** The shared [[GroupStatus.reduce]]; the cancel mark is `meta.canceled`,
+    * looked up by ID for members with no job row. */
   override def groupStatus(groupId: String): Option[GroupStatus] =
-    groupJobIds(groupId).map { ids =>
-      val sts = ids.flatMap(get)
-      val canceled = withConn { c =>
-        val ps = c.prepareStatement("SELECT id FROM graft_meta WHERE canceled = 1")
-        val rs = ps.executeQuery()
-        try Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toSet
-        finally { rs.close(); ps.close() }
-      }
-      val present = sts.map(_.jobId).toSet
-      val unaccounted = ids.exists(id => !present.contains(id) && !canceled.contains(id))
-      val state =
-        if (sts.exists(_.state == JobState.Failure)) JobState.Failure
-        else if (sts.nonEmpty && !unaccounted && sts.forall(_.state == JobState.Success)) JobState.Success
-        else if (sts.exists(s => s.state == JobState.Started || s.state == JobState.Retry)) JobState.Started
-        else JobState.Pending
-      GroupStatus(groupId, state, sts)
-    }
+    groupJobIds(groupId).map(GroupStatus.reduce(groupId, _, get, id => withConn { c =>
+      val ps = c.prepareStatement("SELECT canceled FROM graft_meta WHERE id = ?")
+      ps.setString(1, id)
+      val rs = ps.executeQuery()
+      try rs.next() && rs.getInt(1) == 1 finally { rs.close(); ps.close() }
+    }))
 
   override def snapshot: Map[String, JobStatus] = withConn { c =>
     val ps = c.prepareStatement("SELECT id, state, jcount, error FROM graft_jobs")

@@ -20,7 +20,7 @@ import java.nio.charset.StandardCharsets
   *                   is what keeps epochs monotonic across cancel+re-admit)
   *   - `cancel:<id>` canceled marker (group reduction needs canceled vs
   *                   never-admitted)
-  *   - `lock:<id>`   admission lock: `SET … NX PX <ttl>` — the standard
+  *   - `lock:<id>`   per-ID write lock: `SET … NX PX <ttl>` — the standard
   *                   single-instance Redis lock; the TTL bounds the damage
   *                   of a lock-holder crash
   *   - `queue:<q>`   job payload list — LPUSH at head, claim from tail
@@ -35,9 +35,8 @@ import java.nio.charset.StandardCharsets
   *
   * Atomicity: every single Redis command is atomic (the server is
   * single-threaded over its keyspace — [[RespServer]] reproduces this with
-  * one command mutex), and the only read-modify-write — admission — runs
-  * under the `lock:<id>` NX lock exactly like [[FileJobStateStore]]'s file
-  * lock. The claim is an atomic LMOVE into the worker's processing list:
+  * one command mutex), and the store's writes run under the `lock:<id>` NX
+  * lock, the per-ID lock of the [[LockedStore]] skeleton. The claim is an atomic LMOVE into the worker's processing list:
   * exactly one worker moves each payload, and a reply lost with the socket
   * leaves the payload parked there (recoverable) instead of gone — the
   * Redis reliable-queue pattern (RPOPLPUSH in pre-6.2 spellings). Snapshot
@@ -218,11 +217,12 @@ object RedisControlPlane {
   } catch { case _: Exception => None }
 }
 
-/** [[JobStateStore]] over Redis. Mirrors [[FileJobStateStore]]'s semantics
-  * 1:1 (the scaladoc there states the contracts); see the key layout in
-  * [[RedisControlPlane]]. */
+/** [[JobStateStore]] over Redis: the [[LockedStore]] skeleton
+  * (ControlPlane.scala, which states the contracts) over the key layout in
+  * [[RedisControlPlane]]. The per-ID lock is `SET … NX PX` with
+  * compare-and-delete; every other primitive is one command. */
 final class RedisJobStateStore(host: String, port: Int, prefix: String = "graft:")
-    extends JobStateStore with AutoCloseable {
+    extends LockedStore with AutoCloseable {
   import RedisControlPlane.RespClient
   private val c = new RespClient(host, port)
 
@@ -234,7 +234,7 @@ final class RedisJobStateStore(host: String, port: Int, prefix: String = "graft:
 
   /** Run `f` under the per-ID NX lock (5 s TTL bounds a holder crash;
     * admission's critical section is a handful of commands). */
-  private def withLock[A](id: String)(f: => A): A = {
+  protected def locked[A](id: String)(f: => A): A = {
     val key = lockKey(id)
     val token = s"${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
     val deadline = System.currentTimeMillis + 10000
@@ -257,7 +257,7 @@ final class RedisJobStateStore(host: String, port: Int, prefix: String = "graft:
     }
   }
 
-  private def readStatus(id: String): Option[JobStatus] = {
+  override def get(id: String): Option[JobStatus] = {
     val kv = c.cmdSeq("HGETALL", jobKey(id)).map(_.toString)
     if (kv.isEmpty) None
     else {
@@ -267,43 +267,19 @@ final class RedisJobStateStore(host: String, port: Int, prefix: String = "graft:
     }
   }
 
-  private def writeStatus(id: String, st: JobState.Value, count: Long, error: String): Unit =
-    c.cmd("HSET", jobKey(id), "state", st.toString,
-      "count", count.toString, "error", error): Unit
+  /** Rewrites all three fields, so no field of the previous run survives. */
+  protected def write(s: JobStatus): Unit =
+    c.cmd("HSET", jobKey(s.jobId), "state", s.state.toString,
+      "count", s.count.toString, "error", s.error): Unit
 
-  override def tryAdmit(id: String): Long = withLock(id) {
-    val live = readStatus(id).exists(s => JobState.isLive(s.state))
-    if (live) -1L
-    else {
-      val next = c.cmdLong("INCR", metaKey(id))
-      c.cmd("DEL", cancelKey(id))
-      c.cmd("DEL", jobKey(id)) // clear a stale error field from the last run
-      writeStatus(id, JobState.Pending, -1, "")
-      next
-    }
-  }
+  protected def delete(id: String): Unit = c.cmd("DEL", jobKey(id)): Unit
+  protected def nextEpoch(id: String): Long = c.cmdLong("INCR", metaKey(id))
+  protected def markCanceled(id: String): Unit = c.cmd("SET", cancelKey(id), "1"): Unit
+  protected def clearCanceled(id: String): Unit = c.cmd("DEL", cancelKey(id)): Unit
+  protected def isCanceled(id: String): Boolean = c.cmdLong("EXISTS", cancelKey(id)) == 1
 
   override def epoch(id: String): Long =
     Option(c.cmd("GET", metaKey(id))).map(_.toString.toLong).getOrElse(0L)
-
-  override def set(id: String, st: JobState.Value, count: Long, error: String): Unit =
-    withLock(id) { writeStatus(id, st, count, error) }
-
-  override def setIfPresent(id: String, st: JobState.Value, count: Long, error: String): Unit =
-    withLock(id) {
-      if (c.cmdLong("EXISTS", jobKey(id)) == 1) writeStatus(id, st, count, error)
-    }
-
-  override def get(id: String): Option[JobStatus] = readStatus(id)
-
-  override def remove(id: String): Unit = withLock(id) {
-    c.cmd("SET", cancelKey(id), "1")
-    c.cmd("DEL", jobKey(id)): Unit
-  }
-
-  override def rollback(id: String): Unit = withLock(id) {
-    c.cmd("DEL", jobKey(id)): Unit
-  }
 
   override def putGroup(groupId: String, jobIds: Seq[String]): Unit = {
     c.cmd("DEL", groupKey(groupId))
@@ -318,26 +294,11 @@ final class RedisJobStateStore(host: String, port: Int, prefix: String = "graft:
   override def removeGroup(groupId: String): Unit =
     c.cmd("DEL", groupKey(groupId)): Unit
 
-  /** Same reduction lattice + canceled-member exclusion as [[StatusStore]]. */
-  override def groupStatus(groupId: String): Option[GroupStatus] =
-    groupJobIds(groupId).map { ids =>
-      val sts = ids.flatMap(get)
-      val unaccounted = ids.exists(id =>
-        c.cmdLong("EXISTS", jobKey(id)) == 0 &&
-          c.cmdLong("EXISTS", cancelKey(id)) == 0)
-      val state =
-        if (sts.exists(_.state == JobState.Failure)) JobState.Failure
-        else if (sts.nonEmpty && !unaccounted && sts.forall(_.state == JobState.Success)) JobState.Success
-        else if (sts.exists(s => s.state == JobState.Started || s.state == JobState.Retry)) JobState.Started
-        else JobState.Pending
-      GroupStatus(groupId, state, sts)
-    }
-
   override def snapshot: Map[String, JobStatus] = {
     val pat = s"${prefix}job:*"
     c.cmdSeq("KEYS", pat).map(_.toString).flatMap { k =>
       val id = k.stripPrefix(s"${prefix}job:")
-      readStatus(id).map(id -> _)
+      get(id).map(id -> _)
     }.toMap
   }
 

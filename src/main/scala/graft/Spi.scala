@@ -12,11 +12,14 @@ package graft
   * seam. These two traits are that seam:
   *
   *   - [[JobStateStore]] — job/group status + the atomic same-ID admission
-  *     gate. In-memory impl: [[StatusStore]]. A shared-store impl (JDBC,
-  *     Redis) makes status visible across processes; its `tryAdmit` must be
-  *     atomic per ID (e.g. `INSERT ... ON CONFLICT` / `SETNX`) and `epoch`
-  *     monotonic per admission, which is all the scheduler relies on for its
-  *     cancel/retry races.
+  *     gate. Its `tryAdmit` must be atomic per ID and `epoch` monotonic per
+  *     admission, which is all the scheduler relies on for its cancel/retry
+  *     races. The in-memory [[StatusStore]] and the shared File and Redis
+  *     stores are one [[LockedStore]] skeleton (ControlPlane.scala) over
+  *     each backend's per-ID lock and storage primitives;
+  *     [[JdbcJobStateStore]] admits with single statements (primary-key
+  *     `INSERT`, conditional `UPDATE`). All four reduce groups with
+  *     [[GroupStatus.reduce]].
   *   - [[JobBroker]] — enqueue/cancel/backlog. In-process impl:
   *     [[Scheduler]] (JVM thread pools per queue; Spark schedules the rest).
   *     A queue-backed impl would push job IDs to a shared broker and run

@@ -68,6 +68,33 @@ class ConfigAndSweeperSpec extends AnyFunSuite {
     core.shutdown()
   }
 
+  test("[app] default_queue and default_job_ttl reach booted tasks and jobs") {
+    val taskDir = Files.createTempDirectory("cfg-defaults")
+    Files.writeString(taskDir.resolve("t.sql"),
+      "-- name: n_events\nSELECT COUNT(*) AS n FROM events;\n")
+    val out = Files.createTempDirectory("cfg-defaults-out").toString
+    val cfg = GraftConfig.fromString(
+      s"""[app]
+         |default_job_ttl = "5m"
+         |default_queue = "reports"
+         |task_dirs = ["$taskDir"]
+         |[db.main]
+         |dir = "${TestSpark.sf0001}"
+         |[results.main]
+         |dir = "$out"
+         |""".stripMargin, env = Map.empty)
+    val core = cfg.boot(TestSpark.spark)
+    try {
+      assert(core.tasks("n_events").queue == "reports", "an untagged task takes the default queue")
+      val job = core.postJob(JobReq("n_events"))
+      assert(job.queue == "reports")
+      assert(job.ttlSec == 300, "a job without a TTL takes the default TTL")
+      val (_, grouped) = core.postJobGroup("", Seq(JobReq("n_events", ttlSec = 7), JobReq("n_events")))
+      assert(grouped.map(_.ttlSec) == Seq(7, 300))
+      assert(core.scheduler.awaitQuiescence(60000))
+    } finally core.shutdown()
+  }
+
   test("result sweeper deletes only expired results_ dirs") {
     val root = Files.createTempDirectory("sweep").toString
     def mk(name: String, ageSec: Long): java.io.File = {

@@ -3,80 +3,24 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Cross-process contracts of [[FileJobStateStore]] (the shared-directory
-  * control plane): every test drives TWO independent store instances over
-  * the same directory — the in-JVM stand-in for two server processes
-  * sharing state, the reference's N-instances-one-Redis topology. */
-class FileStateStoreSpec extends AnyFunSuite {
+/** [[FileJobStateStore]] (the shared-directory control plane) under the
+  * [[StateStoreContract]]: two independent store instances over the same
+  * directory stand in for two server processes sharing state, the
+  * reference's N-instances-one-Redis topology. */
+class FileStateStoreSpec extends AnyFunSuite with StateStoreContract {
 
-  private def twoStores() = {
+  protected def withStores[A](f: (JobStateStore, JobStateStore) => A): A = {
     val dir = Files.createTempDirectory("graft-fss").toFile
     dir.deleteOnExit()
-    (new FileJobStateStore(dir), new FileJobStateStore(dir))
+    f(new FileJobStateStore(dir), new FileJobStateStore(dir))
   }
 
-  test("admission in one process is visible — and exclusive — in another") {
-    val (a, b) = twoStores()
-    assert(a.tryAdmit("j1") == 1L)
-    assert(b.get("j1").exists(_.state == JobState.Pending))
-    assert(b.tryAdmit("j1") == -1L, "same ID must not admit twice while running")
-    a.setIfPresent("j1", JobState.Success, 42)
-    assert(b.get("j1").exists(s => s.state == JobState.Success && s.count == 42))
-    // terminal state frees the ID for re-admission, epoch bumps
-    assert(b.tryAdmit("j1") == 2L)
-  }
-
-  test("cancel in one process + re-admit in another keeps epochs monotonic") {
-    val (a, b) = twoStores()
-    assert(a.tryAdmit("j2") == 1L)
-    b.remove("j2") // cancel from the other process
-    assert(a.get("j2").isEmpty)
-    assert(b.epoch("j2") == 1L, "epoch survives cancellation")
-    assert(a.tryAdmit("j2") == 2L, "re-admit bumps past the canceled epoch")
-    // the stale continuation's check: its epoch (1) no longer matches
-    assert(a.epoch("j2") == 2L)
-  }
-
-  test("setIfPresent is a no-op after cancel (no resurrection)") {
-    val (a, b) = twoStores()
-    a.tryAdmit("j3")
-    b.remove("j3")
-    a.setIfPresent("j3", JobState.Success, 7)
-    assert(b.get("j3").isEmpty, "canceled job must not resurrect as SUCCESS")
-  }
-
-  test("rollback frees the ID without marking it canceled (group stays PENDING)") {
-    val (a, b) = twoStores()
-    a.tryAdmit("g-m1"); a.setIfPresent("g-m1", JobState.Success, 1)
-    a.tryAdmit("g-m2")
-    a.putGroup("grp", Seq("g-m1", "g-m2"))
-    b.rollback("g-m2") // failed enqueue elsewhere
-    val st = b.groupStatus("grp").get
-    assert(st.state == JobState.Pending,
-      s"rolled-back member must hold the group at PENDING, got ${st.state}")
-    // canceled members are EXCLUDED instead: group of the remaining SUCCESS
-    b.remove("g-m2")
-    assert(a.groupStatus("grp").get.state == JobState.Success)
-  }
-
-  test("concurrent admission across instances: exactly one winner per round") {
-    val (a, b) = twoStores()
-    for (round <- 1 to 5) {
-      import java.util.concurrent.Executors
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration._
-      val pool = Executors.newFixedThreadPool(16)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val results = try {
-        Await.result(Future.sequence((1 to 16).toList.map(i =>
-          Future((if (i % 2 == 0) a else b).tryAdmit("race")))), 30.seconds)
-      } finally pool.shutdown()
-      val winners = results.filter(_ > 0)
-      assert(winners == List(round.toLong),
-        s"round $round: expected one winner with epoch $round, got $results")
-      a.setIfPresent("race", JobState.Success, 0) // free for the next round
-    }
-  }
+  override protected def storeNames: Map[String, String] = Map(
+    "shared" -> "admission in one process is visible — and exclusive — in another",
+    "epoch" -> "cancel in one process + re-admit in another keeps epochs monotonic",
+    "absent" -> "setIfPresent is a no-op after cancel (no resurrection)",
+    "unaccounted" -> "rollback frees the ID without marking it canceled (group stays PENDING)",
+    "race" -> "concurrent admission across instances: exactly one winner per round")
 
   test("a GraftCore on a file store runs a job end-to-end; a second core sees it") {
     val spark = TestSpark.spark

@@ -4,10 +4,10 @@ import java.util.concurrent.atomic.AtomicInteger
 
 /** Cross-process control plane over JDBC ([[JdbcJobStateStore]] /
   * [[JdbcQueueBroker]] / [[JdbcQueueWorker]]) — the deployment topology with
-  * no shared filesystem — under the [[ControlPlaneContract]], plus its
-  * backend-only cases. Embedded Derby stands in for the network database;
-  * every test drives independent store/broker instances over the same URL
-  * the way two machines would.
+  * no shared filesystem — under the [[ControlPlaneContract]] and the
+  * [[StateStoreContract]], plus its backend-only cases. Embedded Derby
+  * stands in for the network database; every test drives independent
+  * store/broker instances over the same URL the way two machines would.
   */
 class JdbcControlPlaneSpec extends ControlPlaneContract(Map(
     "run" -> "API core enqueues over JDBC; a separate worker claims, executes, API sees SUCCESS",
@@ -15,11 +15,22 @@ class JdbcControlPlaneSpec extends ControlPlaneContract(Map(
     "cancel" -> "cancel before any worker claims: row gone, job never runs",
     "race" -> "setIfPresent is a no-op against a removed entry",
     "orphan" -> "expired claims whose owner died pre-execution are lease-recovered",
-    "notask" -> "a worker lacking the task marks the job FAILURE instead of losing it")) {
+    "notask" -> "a worker lacking the task marks the job FAILURE instead of losing it"))
+    with StateStoreContract {
   private val dbSeq = new AtomicInteger(0)
 
   private def freshUrl(): String =
     s"jdbc:derby:memory:graftctrl${dbSeq.incrementAndGet()};create=true"
+
+  protected def withStores[A](f: (JobStateStore, JobStateStore) => A): A = {
+    val url = freshUrl()
+    f(new JdbcJobStateStore(url), new JdbcJobStateStore(url))
+  }
+
+  override protected def storeNames: Map[String, String] = Map(
+    "race" -> "tryAdmit is atomic: 16 racing threads admit an ID exactly once",
+    "epoch" -> "epoch survives cancellation (stale-timer detection)",
+    "canceled" -> "group lattice: canceled members excluded, any failure dominates")
 
   protected def newPlane(): Plane = new Plane {
     private val url = freshUrl()
@@ -53,47 +64,6 @@ class JdbcControlPlaneSpec extends ControlPlaneContract(Map(
         if (rs.next()) Some(rs.getInt(1)) else None
       } finally ps.close()
     }
-  }
-
-  test("tryAdmit is atomic: 16 racing threads admit an ID exactly once") {
-    val url = freshUrl()
-    val store = new JdbcJobStateStore(url)
-    val wins = new AtomicInteger(0)
-    val threads = (1 to 16).map(_ => new Thread(() => {
-      if (store.tryAdmit("race-1") >= 0) wins.incrementAndGet()
-    }))
-    threads.foreach(_.start()); threads.foreach(_.join())
-    assert(wins.get() == 1, s"${wins.get()} admissions for one ID")
-    // terminal state frees the ID; re-admission bumps the epoch
-    val e1 = store.epoch("race-1")
-    store.set("race-1", JobState.Success, 1)
-    val e2 = store.tryAdmit("race-1")
-    assert(e2 > e1, s"epoch must bump on re-admission: $e1 -> $e2")
-  }
-
-  test("epoch survives cancellation (stale-timer detection)") {
-    val url = freshUrl()
-    val store = new JdbcJobStateStore(url)
-    val e1 = store.tryAdmit("canc-1")
-    store.remove("canc-1")
-    assert(store.get("canc-1").isEmpty)
-    assert(store.epoch("canc-1") == e1, "cancel must not reset the epoch")
-    val e2 = store.tryAdmit("canc-1")
-    assert(e2 == e1 + 1)
-  }
-
-  test("group lattice: canceled members excluded, any failure dominates") {
-    val url = freshUrl()
-    val store = new JdbcJobStateStore(url)
-    Seq("g1-a", "g1-b", "g1-c").foreach(store.tryAdmit)
-    store.putGroup("g1", Seq("g1-a", "g1-b", "g1-c"))
-    store.set("g1-a", JobState.Success, 1)
-    store.set("g1-b", JobState.Success, 1)
-    store.remove("g1-c") // canceled member must not block SUCCESS
-    assert(store.groupStatus("g1").exists(_.state == JobState.Success))
-    store.tryAdmit("g1-b")
-    store.set("g1-b", JobState.Failure, -1, "boom")
-    assert(store.groupStatus("g1").exists(_.state == JobState.Failure))
   }
 
   test("expired claims with a terminal or purged store entry are reaped, not stranded") {

@@ -2,7 +2,21 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-class JobsSpec extends AnyFunSuite {
+/** [[JobFactory]], and the in-memory [[StatusStore]] under the
+  * [[StateStoreContract]]. */
+class JobsSpec extends AnyFunSuite with StateStoreContract {
+  protected def withStores[A](f: (JobStateStore, JobStateStore) => A): A = {
+    val st = new StatusStore
+    f(st, st)
+  }
+
+  override protected def storeNames: Map[String, String] = Map(
+    "admit" -> "same-ID admission gate is atomic and state-aware (core.go:332-339)",
+    "epoch" -> "admission epoch bumps per tryAdmit so stale retry timers can detect re-admission",
+    "lattice" -> "group state reduction lattice (core.go:230-241)",
+    "canceled" -> "canceled members don't pin a group below SUCCESS (ADVICE r1)",
+    "unaccounted" -> "a not-yet-admitted member holds the group at PENDING (no false SUCCESS)")
+
   private val task = Task("t", "q1", 2, "SELECT 1",
     SourcePool(Map("db" -> "/tmp")), SourcePool(Map("res" -> "/tmp")), isRaw = false)
 
@@ -31,74 +45,5 @@ class JobsSpec extends AnyFunSuite {
   test("TTL defaults to 60s (config.toml.sample:3)") {
     assert(JobFactory.make(JobReq("t"), task).ttlSec == 60)
     assert(JobFactory.make(JobReq("t", ttlSec = 5), task).ttlSec == 5)
-  }
-
-  test("same-ID admission gate is atomic and state-aware (core.go:332-339)") {
-    val st = new StatusStore
-    assert(st.tryAdmit("j1") > 0)
-    assert(st.tryAdmit("j1") < 0) // pending
-    st.set("j1", JobState.Started)
-    assert(st.tryAdmit("j1") < 0) // running
-    st.set("j1", JobState.Success, 10)
-    assert(st.tryAdmit("j1") > 0) // completed → re-runnable, result overwritten by design
-  }
-
-  test("group state reduction lattice (core.go:230-241)") {
-    val st = new StatusStore
-    st.putGroup("g", Seq("a", "b"))
-    st.set("a", JobState.Success, 1); st.set("b", JobState.Started)
-    assert(st.groupStatus("g").get.state == JobState.Started)
-    st.set("b", JobState.Success, 2)
-    assert(st.groupStatus("g").get.state == JobState.Success)
-    st.set("b", JobState.Failure, -1, "boom")
-    assert(st.groupStatus("g").get.state == JobState.Failure)
-    st.set("b", JobState.Pending)
-    assert(st.groupStatus("g").get.state == JobState.Pending)
-  }
-
-  test("canceled members don't pin a group below SUCCESS (ADVICE r1)") {
-    val st = new StatusStore
-    st.putGroup("g", Seq("a", "b", "c"))
-    st.set("a", JobState.Success, 1)
-    st.set("b", JobState.Success, 2)
-    st.set("c", JobState.Started)
-    st.remove("c") // cancel deletes from the store (core.go:268)
-    val g = st.groupStatus("g").get
-    assert(g.state == JobState.Success)
-    assert(g.jobs.map(_.jobId) == Seq("a", "b")) // canceled member excluded
-    // but a canceled member never masks a failure
-    st.set("b", JobState.Failure, -1, "boom")
-    assert(st.groupStatus("g").get.state == JobState.Failure)
-  }
-
-  test("admission epoch bumps per tryAdmit so stale retry timers can detect re-admission") {
-    val st = new StatusStore
-    assert(st.epoch("x") == 0L)
-    assert(st.tryAdmit("x") == 1L) // admission returns its own epoch atomically
-    val e1 = st.epoch("x")
-    assert(e1 == 1L)
-    assert(st.tryAdmit("x") < 0) // running: refused, epoch unchanged
-    assert(st.epoch("x") == e1)
-    st.remove("x") // cancel
-    assert(st.epoch("x") == e1) // cancel alone doesn't bump
-    assert(st.tryAdmit("x") == e1 + 1) // re-submission: a NEW job under the same ID
-    assert(st.epoch("x") == e1 + 1) // stale timer's captured epoch now mismatches
-  }
-
-  test("a not-yet-admitted member holds the group at PENDING (no false SUCCESS)") {
-    val st = new StatusStore
-    // putGroup lands before the submit loop (Api.postJobGroup): member "b"
-    // has no store entry yet and was never canceled
-    st.putGroup("g", Seq("a", "b"))
-    st.set("a", JobState.Success, 1)
-    assert(st.groupStatus("g").get.state == JobState.Pending)
-    // rollback (failed enqueue) also keeps the member unaccounted
-    assert(st.tryAdmit("b") > 0)
-    st.rollback("b")
-    assert(st.groupStatus("g").get.state == JobState.Pending)
-    // an explicit cancel is different: remaining successes complete the group
-    assert(st.tryAdmit("b") > 0)
-    st.remove("b")
-    assert(st.groupStatus("g").get.state == JobState.Success)
   }
 }

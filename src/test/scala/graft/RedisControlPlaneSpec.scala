@@ -3,7 +3,8 @@ package graft
 import scala.jdk.CollectionConverters._
 
 /** The Redis-protocol control plane over the embedded RESP server under
-  * the [[ControlPlaneContract]], plus its backend-only cases: separate
+  * the [[ControlPlaneContract]] and the [[StateStoreContract]], plus its
+  * backend-only cases: separate
   * client connections per role stand in for the reference's API nodes +
   * worker fleet sharing one Redis (`cmd/init.go:200-229`), here over a
   * real TCP round-trip. */
@@ -11,7 +12,8 @@ class RedisControlPlaneSpec extends ControlPlaneContract(Map(
     "run" -> "API core enqueues; a separate Redis worker claims, executes, API sees SUCCESS",
     "dup" -> "duplicate ID refused across brokers; cancel drops the queued payload",
     "retry" -> "redis broker: a failed attempt is re-published and another worker finishes it",
-    "orphan" -> "reliable queue: a parked claim whose reply was lost is reaped back and executed")) {
+    "orphan" -> "reliable queue: a parked claim whose reply was lost is reaped back and executed"))
+    with StateStoreContract {
 
   protected def newPlane(): Plane = new Plane {
     private val srv = new RespServer().start()
@@ -46,6 +48,12 @@ class RedisControlPlaneSpec extends ControlPlaneContract(Map(
     val srv = new RespServer().start()
     try f("127.0.0.1", srv.boundPort) finally srv.stop()
   }
+
+  protected def withStores[A](f: (JobStateStore, JobStateStore) => A): A =
+    withServer { (h, p) =>
+      val (a, b) = (new RedisJobStateStore(h, p), new RedisJobStateStore(h, p))
+      try f(a, b) finally { a.close(); b.close() }
+    }
 
   test("RESP wire basics: strings w/ NX+PX, hashes, lists, INCR, KEYS") {
     withServer { (h, p) =>
