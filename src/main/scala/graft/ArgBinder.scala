@@ -1,77 +1,82 @@
 package graft
 
+import org.apache.spark.sql.catalyst.analysis.NamedParameter
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.parser.ParserInterface
+
 /** Positional-argument binding for task SQL.
   *
   * The reference passes job args straight to the driver as query parameters
   * (`db.QueryContext(ctx, task.Raw, args...)`, `internal/core/core.go:496`)
   * with `$1..$n` (PG) or `?` (MySQL) placeholders; args are always strings
-  * (`models/models.go:15`) and the source DB coerces them. Spark SQL has no
-  * positional-parameter API over raw text, so the port substitutes typed
-  * literals: each arg is sniffed long → double → timestamp → date → string
-  * (strings are quoted with both backslash-escaping and `'` doubling — the
-  * default Spark parser treats `\` as an escape inside literals, so a bare
-  * trailing backslash in an arg would otherwise swallow the closing quote).
-  * Placeholders inside quoted strings or comments are left untouched.
+  * (`models/models.go:15`) and the source DB coerces them. The port does the
+  * same with Spark's parameter markers: before a task's one parse,
+  * [[markers]] rewrites each placeholder outside quotes and comments into the
+  * named marker `:_k`, and each job binds its own [[value]] for every marker
+  * into its copy of the parsed plan ([[Executor.buildFrame]]). An argument
+  * never becomes SQL text, so it cannot change the statement's shape.
   */
 object ArgBinder {
   private val Ts = """\d{4}-\d{2}-\d{2}[ T]\d{2}:\d{2}:\d{2}(\.\d+)?""".r
   private val Dt = """\d{4}-\d{2}-\d{2}""".r
+  private val Num = """[+-]?(\d+\.\d*|\.\d+|\d+)([eE][+-]?\d+)?""".r
+  private val MarkerName = """_(\d+)""".r
 
-  /** Render one string arg as a typed SQL literal. */
-  def literal(arg: String): String = {
+  /** One string arg as a typed literal, sniffed long → double → timestamp →
+    * date → string. A number, date or timestamp goes through the parser as
+    * that one token, so its type is the parser's (`42` → INT, `3.14` →
+    * DECIMAL(3,2), `1e6` → DOUBLE); anything else is the trimmed string. */
+  def value(parser: ParserInterface, arg: String): Literal = {
+    def parsed(token: String): Literal = parser.parseExpression(token) match {
+      case l: Literal => l
+      case e => Literal.create(e.eval(), e.dataType) // `+7` parses as UnaryPositive
+    }
     val a = arg.trim
-    if (a.matches("""[+-]?\d{1,18}""")) a
-    else if (a.matches("""[+-]?(\d+\.\d*|\.\d+|\d+)([eE][+-]?\d+)?""")) a
-    else if (Ts.matches(a)) s"TIMESTAMP '$a'"
-    else if (Dt.matches(a)) s"DATE '$a'"
-    else "'" + a.replace("\\", "\\\\").replace("'", "''") + "'"
+    if (Num.matches(a)) parsed(a)
+    else if (Ts.matches(a)) parsed(s"TIMESTAMP '$a'")
+    else if (Dt.matches(a)) parsed(s"DATE '$a'")
+    else Literal(a)
   }
 
-  /** Substitute `$N` / `?` placeholders (outside quotes/comments) with typed
-    * literals. `?` binds positionally in order of appearance; `$N` binds
-    * args(N-1) and may repeat.
+  /** The argument number k of a marker [[markers]] wrote. */
+  object Placeholder {
+    def unapply(p: NamedParameter): Option[Int] = p.name match {
+      case MarkerName(k) => Some(k.toInt)
+      case _             => None
+    }
+  }
+
+  /** Rewrite `$N` / `?` placeholders (outside quotes/comments) into the
+    * named markers [[Placeholder]] reads back. `?` binds positionally in
+    * order of appearance; `$N` binds args(N-1) and may repeat.
     */
-  def bind(sql: String, args: Seq[String]): String = {
+  def markers(sql: String): String = {
     val out = new StringBuilder(sql.length + 32)
     var i = 0
-    var qIdx = 0 // next positional '?' index
+    var qIdx = 0 // positional '?' seen so far
     val n = sql.length
-    // n=normal, s=single-quote, d=double-quote, l=line comment, b=block comment
+    // n=normal, ' or "=inside that quote, l=line comment, b=block comment
     var state: Char = 'n'
     while (i < n) {
       val c = sql.charAt(i)
       state match {
         case 'n' =>
-          if (c == '\'') { state = 's'; out.append(c); i += 1 }
-          else if (c == '"') { state = 'd'; out.append(c); i += 1 }
+          if (c == '\'' || c == '"') { state = c; out.append(c); i += 1 }
           else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') { state = 'l'; out.append("--"); i += 2 }
           else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') { state = 'b'; out.append("/*"); i += 2 }
-          else if (c == '?') {
-            if (qIdx >= args.size)
-              throw new IllegalArgumentException(s"missing argument for placeholder #${qIdx + 1}")
-            out.append(literal(args(qIdx))); qIdx += 1; i += 1
-          } else if (c == '$' && i + 1 < n && sql.charAt(i + 1).isDigit) {
+          else if (c == '?') { qIdx += 1; out.append(s":_$qIdx"); i += 1 }
+          else if (c == '$' && i + 1 < n && sql.charAt(i + 1).isDigit) {
             var j = i + 1
             while (j < n && sql.charAt(j).isDigit) j += 1
-            val k = sql.substring(i + 1, j).toInt
-            if (k < 1 || k > args.size)
-              throw new IllegalArgumentException(s"missing argument for placeholder $$$k")
-            out.append(literal(args(k - 1))); i = j
+            out.append(":_").append(sql.substring(i + 1, j)); i = j
           } else { out.append(c); i += 1 }
-        case 's' =>
+        case '\'' | '"' =>
           // Spark string literals support backslash escapes (incl. \') and
           // '' doubling — consume escape pairs so the quote state stays true
           if (c == '\\' && i + 1 < n) { out.append(c).append(sql.charAt(i + 1)); i += 2 }
           else {
             out.append(c)
-            if (c == '\'') state = 'n'
-            i += 1
-          }
-        case 'd' =>
-          if (c == '\\' && i + 1 < n) { out.append(c).append(sql.charAt(i + 1)); i += 2 }
-          else {
-            out.append(c)
-            if (c == '"') state = 'n'
+            if (c == state) state = 'n'
             i += 1
           }
         case 'l' =>
@@ -85,8 +90,4 @@ object ArgBinder {
     }
     out.toString
   }
-
-  /** Rewrite placeholders to parse-able dummies for load-time validation
-    * (mirror of the reference's prepare-then-discard, tasks.go:108-121). */
-  def validationForm(sql: String): String = bind(sql, Seq.fill(64)("0"))
 }

@@ -2,8 +2,12 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, GraftColumnShim, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, ParsedStatement, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions.{count, lit}
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.util.Random
 
 /** Single-job execution: the port of `execJob` + `writeResults`
@@ -12,9 +16,10 @@ import scala.util.Random
   * A job runs on the session it is given — the server's one session, like
   * the reference's one pool per named source (`core.go:496`). Isolation
   * between concurrent jobs comes from binding, not from a session per job:
-  * [[buildFrame]] binds each table straight into the job's plan and touches
-  * no catalog. The executing thread tags all Spark jobs with the job ID as
-  * the job group with `interruptOnCancel=true` —
+  * [[buildFrame]] binds each table and each job argument straight into the
+  * job's copy of the task's parsed plan, parses no task text and touches no
+  * catalog. The executing thread tags all Spark jobs with the job ID as the
+  * job group with `interruptOnCancel=true` —
   * `sparkContext.cancelJobGroup(jobId)` is then the 1:1 port of the
   * reference's per-job `context.CancelFunc` (`core.go:457-468`), and strictly
   * stronger: it kills every stage of the plan, not just the driver-side wait.
@@ -24,7 +29,8 @@ import scala.util.Random
   * `results_<jobID>` parquet with overwrite — the atomic per-directory commit
   * replaces the reference's DROP TABLE + CREATE + tx (`sqldb.go:159-217`).
   * The row count the write observed is stored as the job result
-  * (`core.go:436`).
+  * (`core.go:436`); a count that has not arrived [[RowCountWait]] after the
+  * write returned fails the job.
   */
 object Executor {
 
@@ -48,20 +54,23 @@ object Executor {
 
   /** Build the job's DataFrame without materializing (shared by run()).
     *
-    * The bound statement is parsed once and every table it names — except
-    * CTE names — is bound into the plan as `SubqueryAlias(<its name>,
+    * One walk over the task's shared, read-only parsed plan
+    * ([[Task.plan]]) builds the job's own bound copy. It binds every table
+    * the statement names — except CTE names — as `SubqueryAlias(<its name>,
     * relation)`, so column qualifiers (`users.id`, `pub.users.id`) resolve
-    * as written. The relation is [[Tables.load]]'s plan for a directory
-    * source and a `spark.read.jdbc` plan for a `jdbc:` source — the direct
-    * analog of the reference's external source databases (`dbpool.go`):
-    * Catalyst pushes filters and column pruning down into the remote DB the
-    * way the reference delegates whole queries to it. Nothing is registered
-    * in the session's catalog, so jobs sharing a session cannot see each
-    * other's tables; statements that would change the session (`SET`,
-    * `CREATE TEMPORARY VIEW`, `CACHE TABLE`, DML, ...) are refused.
+    * as written, and replaces every parameter marker with its job
+    * argument's typed [[ArgBinder.value]], in CTE bodies and subqueries
+    * too. The relation is [[Tables.load]]'s plan for a directory source and
+    * a `spark.read.jdbc` plan for a `jdbc:` source — the direct analog of
+    * the reference's external source databases (`dbpool.go`): Catalyst
+    * pushes filters and column pruning down into the remote DB the way the
+    * reference delegates whole queries to it. Nothing is registered in the
+    * session's catalog, so jobs sharing a session cannot see each other's
+    * tables; statements that would change the session (`SET`, `CREATE
+    * TEMPORARY VIEW`, `CACHE TABLE`, DML, ...) are refused.
     */
   def buildFrame(session: SparkSession, sourceDir: String, task: Task, args: Seq[String]): DataFrame = {
-    val parsed = session.sessionState.sqlParser.parsePlan(ArgBinder.bind(task.raw, args))
+    val parsed = task.plan(session)
     parsed.find { case _: Command | _: ParsedStatement => true; case _ => false }.foreach { c =>
       throw new IllegalArgumentException(s"task ${task.name}: only queries run as jobs, " +
         s"not commands or statements (${c.nodeName}); a command would change the " +
@@ -74,23 +83,36 @@ object Executor {
           .option("dbtable", parts.mkString(".")).load().queryExecution.analyzed
       } else parts => Tables.load(session, sourceDir, parts.mkString(".").toLowerCase)
         .queryExecution.analyzed
+    GraftColumnShim.ofRows(session, bindPlan(session, parsed, args, load))
+  }
+
+  /** The job's bound copy of a parsed plan (see [[buildFrame]]); `load`
+    * gives the relation for a table's name parts. */
+  private[graft] def bindPlan(session: SparkSession, parsed: LogicalPlan, args: Seq[String],
+      load: Seq[String] => LogicalPlan): LogicalPlan = {
     // one relation per distinct name (case-insensitive, Spark's default),
     // keeping the first-seen case for `dbtable`: a remote DB may be
     // case-sensitive
     val bound = scala.collection.mutable.HashMap.empty[Seq[String], LogicalPlan]
+    def value(k: Int): Literal =
+      if (k >= 1 && k <= args.size) ArgBinder.value(session.sessionState.sqlParser, args(k - 1))
+      else throw new IllegalArgumentException(s"missing argument for placeholder $$$k")
     val cte = cteNames(parsed)
-    def bind(p: LogicalPlan): LogicalPlan = p.transformDownWithSubqueries {
-      // CTE bodies are inner children, which the transform does not visit
-      case w: UnresolvedWith =>
-        w.copy(cteRelations = w.cteRelations.map { case (n, body, o) =>
-          (n, bind(body).asInstanceOf[SubqueryAlias], o)
-        })
-      case r: UnresolvedRelation
-          if !(r.multipartIdentifier.size == 1 && cte(r.multipartIdentifier.head.toLowerCase)) =>
-        val parts = r.multipartIdentifier
-        SubqueryAlias(parts, bound.getOrElseUpdate(parts.map(_.toLowerCase), load(parts)))
+    def bind(p: LogicalPlan): LogicalPlan = p.transformDownWithSubqueries { node =>
+      (node match {
+        // CTE bodies are inner children, which the transform does not visit
+        case w: UnresolvedWith =>
+          w.copy(cteRelations = w.cteRelations.map { case (n, body, o) =>
+            (n, bind(body).asInstanceOf[SubqueryAlias], o)
+          })
+        case r: UnresolvedRelation
+            if !(r.multipartIdentifier.size == 1 && cte(r.multipartIdentifier.head.toLowerCase)) =>
+          val parts = r.multipartIdentifier
+          SubqueryAlias(parts, bound.getOrElseUpdate(parts.map(_.toLowerCase), load(parts)))
+        case other => other
+      }).transformExpressionsDown { case ArgBinder.Placeholder(k) => value(k) }
     }
-    GraftColumnShim.ofRows(session, bind(parsed))
+    bind(parsed)
   }
 
   /** Every CTE name defined anywhere in a statement, lowercased — CTE
@@ -135,7 +157,19 @@ object Executor {
           out.write.mode("overwrite").parquet(dir)
           dir
         }
-      ExecResult(observed.get("rows").asInstanceOf[Long], dest, srcName)
+      ExecResult(rowCount(observed, RowCountWait), dest, srcName)
     } finally sc.clearJobGroup()
   }
+
+  /** How long the row count may lag the write: it arrives as a listener
+    * event once the write returns, normally within milliseconds. */
+  val RowCountWait: FiniteDuration = 30.seconds
+
+  /** The row count a write observed, waiting at most `within` from now. */
+  private[graft] def rowCount(observed: Observation, within: FiniteDuration): Long =
+    try Await.result(observed.future, within).getAs[Long]("rows")
+    catch { case _: TimeoutException =>
+      throw new IllegalStateException(s"the write finished but its row count " +
+        s"did not arrive within $within (a lost listener event)")
+    }
 }

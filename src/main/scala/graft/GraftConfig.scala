@@ -50,6 +50,12 @@ final case class GraftConfig(
   /** True when a cross-process control plane is configured. */
   def hasControlPlane: Boolean = controlDir.nonEmpty || controlJdbcUrl.nonEmpty
 
+  /** The task registry, each task parsed once, for a worker-only process.
+    * A process that also serves the API loads it once, in [[boot]], and
+    * hands `core.tasks` to [[bootWorker]]. */
+  def loadTasks(spark: org.apache.spark.sql.SparkSession): Map[String, Task] =
+    TaskRegistry.load(spark, taskDirs, SourcePool(sources), SourcePool(resultBackends), defaultQueue)
+
   def boot(spark: org.apache.spark.sql.SparkSession): GraftCore = {
     // surface stream sizing on the session so the stream runner (which has
     // no GraftConfig handle) honors it; 0 = derive from input volume
@@ -77,13 +83,11 @@ final case class GraftConfig(
   }
 
   /** Start a queue worker over the shared control plane (no-op handle when
-    * no control plane is configured). Returns the worker's stop handle. */
-  def bootWorker(spark: org.apache.spark.sql.SparkSession): Option[() => Unit] =
+    * no control plane is configured) running `tasks`. Returns the worker's
+    * stop handle. */
+  def bootWorker(spark: org.apache.spark.sql.SparkSession, tasks: Map[String, Task]): Option[() => Unit] =
     if (!hasControlPlane) None
     else {
-      val src = SourcePool(sources)
-      val bk = SourcePool(resultBackends)
-      val tasks = TaskRegistry.load(spark, taskDirs, src, bk, defaultQueue)
       val qs = if (workerQueues.isEmpty) None else Some(workerQueues)
       if (controlDir.nonEmpty) {
         val w = new FileQueueWorker(spark, tasks,

@@ -32,7 +32,7 @@ object Main {
     if (cfg.workerOnly) {
       // the reference's --worker-only mode (cmd/main.go:73-75): no HTTP API,
       // just a claim-and-execute loop over the shared control plane
-      val stopWorker = cfg.bootWorker(spark).getOrElse(
+      val stopWorker = cfg.bootWorker(spark, cfg.loadTasks(spark)).getOrElse(
         sys.error("[control] worker_only=true requires [control] dir or jdbc_url"))
       val plane = if (cfg.controlDir.nonEmpty) cfg.controlDir else cfg.controlJdbcUrl
       println(s"graft worker consuming $plane " +
@@ -43,7 +43,7 @@ object Main {
       val core = cfg.boot(spark)
       // with a shared control plane the API process also runs a worker by
       // default; a fleet turns this off by running worker_only peers
-      val localWorker = cfg.bootWorker(spark)
+      val localWorker = cfg.bootWorker(spark, core.tasks)
       val api = new HttpApi(core, port).start()
       val sweeper = new ResultSweeper(core.resultBackends, cfg.resultRetentionSec.toLong)
       sweeper.start()

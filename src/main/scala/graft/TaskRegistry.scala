@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** A named, parameterized SQL task — the port of dungbeetle's Task
   * (`internal/core/tasks.go:16-24`): Name, Queue, Conc, Raw SQL, tagged
@@ -15,7 +16,17 @@ final case class Task(
     raw: String,
     dbs: SourcePool,
     resultBackends: SourcePool,
-    isRaw: Boolean)
+    isRaw: Boolean) {
+  private[this] var parsed: LogicalPlan = _
+
+  /** The task's statement, parsed once ([[TaskRegistry.parse]]): at load
+    * unless `raw`, else on its first job. Every job binds its own copy
+    * from this shared plan and never changes it. */
+  private[graft] def plan(spark: SparkSession): LogicalPlan = synchronized {
+    if (parsed == null) parsed = TaskRegistry.parse(spark, raw)
+    parsed
+  }
+}
 
 /** goyesql-style `.sql` task loader — the port of `LoadTasks`/`loadTasks`
   * (`internal/core/tasks.go:30-151`).
@@ -35,8 +46,10 @@ final case class Task(
   *   - duplicate task names across files are rejected (`tasks.go:82-84`);
   *   - tasks without a `raw` tag are validated at load time the way the
   *     reference prepares them against every tagged DB (`tasks.go:108-121`):
-  *     here `spark.sessionState.sqlParser.parsePlan` catches syntax errors
-  *     early while deferring analysis (tables/args are bound per job).
+  *     here the task's one parse ([[parse]]) catches syntax errors early,
+  *     and its plan is the one every job binds (tables and args per job).
+  *     A `raw` task is parsed on its first job instead; a parse error
+  *     fails that job.
   */
 object TaskRegistry {
   val DefaultQueue = "default"
@@ -71,20 +84,28 @@ object TaskRegistry {
           case None    => resultBackends
         }
         val isRaw = tags.contains("raw")
+        val queue = tags.get("queue").map(_.trim).getOrElse(defaultQueue)
+        val conc = tags.get("conc").orElse(tags.get("concurrency"))
+          .map(_.trim.toInt).getOrElse(defaultConc)
+        val task = Task(name, queue, conc, sql, dbs, backends, isRaw)
         if (!isRaw) { // load-time validation ~ db.Prepare (tasks.go:115-120)
-          try spark.sessionState.sqlParser.parsePlan(ArgBinder.validationForm(sql))
+          try task.plan(spark)
           catch { case e: Exception =>
             throw new IllegalArgumentException(s"error preparing SQL query $name: ${e.getMessage}")
           }
         }
-        val queue = tags.get("queue").map(_.trim).getOrElse(defaultQueue)
-        val conc = tags.get("conc").orElse(tags.get("concurrency"))
-          .map(_.trim.toInt).getOrElse(defaultConc)
-        tasks += name -> Task(name, queue, conc, sql, dbs, backends, isRaw)
+        tasks += name -> task
       }
     }
     tasks
   }
+
+  /** Task SQL's one way into the parser: placeholders become Spark
+    * parameter markers ([[ArgBinder.markers]]), so a placeholder is legal
+    * only where Spark's grammar takes a marker (an expression, not an
+    * `INTERVAL` quantity or a type's precision). */
+  private[graft] def parse(spark: SparkSession, sql: String): LogicalPlan =
+    spark.sessionState.sqlParser.parsePlan(ArgBinder.markers(sql))
 
   private val NameTag = """^\s*--\s*name\s*:\s*(\S+)\s*$""".r
   private val KeyTag = """^\s*--\s*([A-Za-z_]+)\s*:\s*(.*?)\s*$""".r

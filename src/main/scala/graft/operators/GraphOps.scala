@@ -55,7 +55,7 @@ object GraphOps {
     * from [[graft.functions.LongPairs]] instead — the pre-round-10
     * spelling, one extra shuffle at build, nothing else changes. Also
     * stated in docs/SCALE.md's graph section. */
-  private def edges(s: SparkSession, d: String): DataFrame =
+  private[graft] def edges(s: SparkSession, d: String): DataFrame =
     graft.plans.ArtifactCache.readParquet(s, s"${edgesPath(s, d)}/edges")
 
   /** The graph_edges artifact's logic stamp list — and, by the
@@ -222,7 +222,7 @@ object GraphOps {
     * edge-sized. Used at ARTIFACT BUILDS (pay-once) and on shrinking edge
     * subsets (kcore peeling); whole-graph QUERY paths read the
     * materialized [[degTable]] instead of re-folding the 2m-row stream. */
-  private def degrees(e: DataFrame): DataFrame =
+  private[graft] def degrees(e: DataFrame): DataFrame =
     e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("degree"))
 
@@ -765,7 +765,7 @@ object GraphOps {
     * neighbor counts from the survivors. Every edge's endpoints are
     * removed at most once, so the total adjacency traffic across ALL
     * rounds is ≤ 2m rows — amortized linear — where the edge-restriction
-    * spelling ([[graphKcorePeelImpl]], kept for the A/B spec) paid a full
+    * spelling (kept in the test tree as `KcoreReference`) paid a full
     * edge-stream re-shuffle AND an edge-sized checkpoint per round
     * (O(R·m), the suite's #1 sf1 cost at 17.4 s committed). The
     * per-round pin shrinks from edge-sized to vertex-sized, and the probe
@@ -775,16 +775,6 @@ object GraphOps {
     * Bit-identity between the two spellings is spec-pinned
     * (RoundFourteenSpec); the DuckDB oracle unrolls the edge-restriction
     * rounds and both spellings agree with it. */
-  /** One peeling round: restrict the edge set to endpoints whose degree
-    * survives the cut. Extracted so PlanSpec can pin the round's physical
-    * shape (both vertex-set restrictions broadcast; the edge set never
-    * shuffles) — the per-round `localCheckpoint` in [[graphKcore]] hides
-    * the round subplan from any outer explain. */
-  private[graft] def kcoreRound(e: DataFrame, keep: DataFrame,
-      small: Boolean = true): DataFrame =
-    e.join(gatedBc(keep.withColumnRenamed("v", "a"), small), Seq("a"), "left_semi")
-      .join(gatedBc(keep.withColumnRenamed("v", "b"), small), Seq("b"), "left_semi")
-
   val graphKcore: Q = (s, d) =>
     graphKcoreDeltaImpl(s, d, Limits.maxBroadcastVertices,
       bucketed = kcoreUseBucketed(s, d))
@@ -838,71 +828,6 @@ object GraphOps {
       deg = next
     } }
     deg.filter(col("degree") >= 1)
-      .select(col("v"), col("degree").as("core_degree"))
-      .orderBy(col("v"))
-  }
-
-  /** The pre-r14 edge-restriction spelling, kept as the A/B + spec
-    * reference for [[graphKcoreDeltaImpl]] (bit-identity pinned in
-    * RoundFourteenSpec, cost comparison in docs/SCALE.md). */
-  private[graft] def graphKcorePeelImpl(s: SparkSession, d: String,
-      maxBcVerts: Long): DataFrame =
-    graphKcoreImpl(s, d, maxBcVerts)
-
-  /** The round-11 fusion EXPERIMENT for the verdict's kcore residual: one
-    * pin per round instead of two — the keep-set stays unpinned and its
-    * (identical) aggregate subplan appears under BOTH semi-joins, where
-    * ReuseExchange dedupes the broadcast build. Kept as a measured
-    * alternative, not the default — see the A/B note in docs/SCALE.md. */
-  private[graft] def graphKcoreFusedImpl(s: SparkSession, d: String,
-      maxBcVerts: Long): DataFrame = {
-    var e = edges(s, d)
-    val small = vertexBound(s, d) <= maxBcVerts
-    for (_ <- 1 to kcoreRounds) {
-      val pe = e
-      val keep = degrees(e).filter(col("degree") >= kcoreK).select(col("v"))
-      e = kcoreRound(e, keep, small).sweepCheckpoint()
-      // the new pin re-derived keep's subplan from the old edge pin; both
-      // are dead now (round 1's `pe` is the unpinned artifact scan —
-      // release() leaves non-pin frames untouched)
-      graft.plans.Checkpoints.release(pe)
-    }
-    degrees(e)
-      .select(col("v"), col("degree").as("core_degree"))
-      .orderBy(col("v"))
-  }
-
-  private[graft] def graphKcoreImpl(s: SparkSession, d: String,
-      maxBcVerts: Long): DataFrame = {
-    var e = edges(s, d)
-    // the per-round keep-set is vertex-sized — size-gated ([[gatedBc]]);
-    // the bound can only tighten as the edge set shrinks, so one gate read
-    // before round 1 covers every round
-    val small = vertexBound(s, d) <= maxBcVerts
-    for (_ <- 1 to kcoreRounds) {
-      // pin the vertex-sized keep-set per round: `keep` feeds BOTH semi-
-      // joins AND next round's degree aggregate, so left unpinned the edge
-      // lineage re-expands ~3× per round (3^R recomputes of the whole
-      // chain — measured 11.7 s vs 1.3 s at sf0.1 for R=4). Checkpointing
-      // the dimension-bounded keep-set keeps each round's plan a single
-      // linear chain over the shrinking edge list.
-      val pe = e
-      val keep = degrees(e).filter(col("degree") >= kcoreK).select(col("v"))
-        .sweepCheckpoint()
-      // pin the restricted EDGE set too (not just keep): each round's
-      // degrees(e) otherwise re-derives the whole shrinking edge chain from
-      // scratch — R rounds of plan re-execution over an unpinned lineage
-      // was the residual cost the keep-set pin alone left behind (driver-
-      // measured 4.75 s at sf0.1; the per-round chain is cheap, its
-      // R-fold re-derivation was not). The edge set only ever shrinks, so
-      // each pin is smaller than the last.
-      e = kcoreRound(e, keep, small).sweepCheckpoint()
-      // keep fed only this round's two semi-joins, and the old edge pin
-      // only this round's probe — both dead once the new pin materializes
-      graft.plans.Checkpoints.release(keep)
-      graft.plans.Checkpoints.release(pe)
-    }
-    degrees(e)
       .select(col("v"), col("degree").as("core_degree"))
       .orderBy(col("v"))
   }

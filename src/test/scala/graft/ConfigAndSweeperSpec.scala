@@ -224,7 +224,7 @@ class ConfigAndSweeperSpec extends AnyFunSuite {
          |""".stripMargin, env = Map.empty)
     assert(cfg.controlDir == control && !cfg.workerOnly)
     val core = cfg.boot(spark)
-    val stopWorker = cfg.bootWorker(spark).get
+    val stopWorker = cfg.bootWorker(spark, core.tasks).get
     try {
       val job = core.postJob(JobReq("count_events", jobId = "ctl-e2e"))
       val deadline = System.currentTimeMillis + 60000
@@ -257,7 +257,7 @@ class ConfigAndSweeperSpec extends AnyFunSuite {
          |""".stripMargin, env = Map.empty)
     assert(cfg.controlJdbcUrl.nonEmpty && cfg.hasControlPlane)
     val core = cfg.boot(spark)
-    val stopWorker = cfg.bootWorker(spark).get
+    val stopWorker = cfg.bootWorker(spark, core.tasks).get
     try {
       val job = core.postJob(JobReq("count_events", jobId = "ctl-jdbc-e2e"))
       val deadline = System.currentTimeMillis + 60000

@@ -40,4 +40,22 @@ class FunctionRegistrySpec extends AnyFunSuite {
       "cosine(v, v) must be 1.0")
     core.shutdown()
   }
+
+  test("task functions are registered once per session, not once per Scheduler") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val session = spark.newSession()
+    // a registration is its (info, builder) entry; word_shingles's builder
+    // captures nothing, so the JVM hands out one instance of it and only
+    // the info tells a replaced registration from the first
+    def registration = session.sessionState.functionRegistry
+      .lookupFunction(FunctionIdentifier("word_shingles"))
+    val schedulers = (1 to 3).map { i =>
+      val s = new Scheduler(session, new StatusStore)
+      if (i == 1) assert(registration.isDefined, "the first Scheduler registers the set")
+      s -> registration.get
+    }
+    try assert(schedulers.forall(_._2 eq schedulers.head._2),
+      "a later Scheduler replaced word_shingles on a session that already had it")
+    finally schedulers.foreach(_._1.shutdown())
+  }
 }

@@ -449,4 +449,86 @@ class GraftCoreSpec extends AnyFunSuite {
       assert(second.count == eventRows(TestSpark.sf001))
     } finally core.shutdown()
   }
+
+  test("an argument binds as a value, never as SQL text: 10-$1 with -7 is 17") {
+    // as text the job ran `SELECT 10--7 AS v`, and `--` began a comment
+    val core = coreOver("-- name: minus\nSELECT 10-$1 AS v;\n", Map("db" -> TestSpark.sf0001))
+    try {
+      val job = core.postJob(JobReq("minus", args = Seq("-7")))
+      val st = await(core, job.id)
+      assert(st.state == JobState.Success, st.error)
+      assert(core.results(job.id).collect().map(_.getLong(0)).toSeq == Seq(17L))
+    } finally core.shutdown()
+  }
+
+  test("placeholders bind in a CTE body, an IN subquery and a scalar subquery; " +
+       "a missing argument or a broken raw task fails its job") {
+    val core = coreOver(
+      """-- name: nested
+        |WITH mine AS (SELECT * FROM events WHERE user_id = $1)
+        |SELECT COUNT(*) AS n, '$1 ?' AS q, -- $9 ?
+        |       (SELECT COUNT(*) FROM events WHERE user_id = $1) AS again /* ? $9 */
+        |FROM mine
+        |WHERE event_type IN (SELECT event_type FROM events WHERE user_id = $2);
+        |
+        |-- name: ordered
+        |SELECT COUNT(*) AS n FROM events WHERE user_id = ? AND event_type = ?;
+        |
+        |-- name: broken_raw
+        |-- raw: 1
+        |SELEKT nope FROM;
+        |""".stripMargin, Map("db" -> TestSpark.sf0001))
+    val events = spark.read.parquet(s"${TestSpark.sf0001}/events.parquet")
+      .select("user_id", "event_type").collect().map(r => (r.getLong(0), r.getString(1)))
+    val (u1, u2) = (events.head._1, events.find(_._1 != events.head._1).get._1)
+    val types2 = events.collect { case (`u2`, t) => t }.toSet
+    val mine = events.filter(_._1 == u1)
+    try {
+      val nested = await(core, core.postJob(
+        JobReq("nested", jobId = "nested", args = Seq(u1.toString, u2.toString))).id)
+      assert(nested.state == JobState.Success, nested.error)
+      val row = core.results("nested").head
+      assert(row.getLong(0) == mine.count(e => types2(e._2)))
+      assert(row.getString(1) == "$1 ?")
+      assert(row.getLong(2) == mine.length)
+      val t = mine.head._2
+      val ordered = await(core, core.postJob(
+        JobReq("ordered", jobId = "ordered", args = Seq(u1.toString, t))).id)
+      assert(ordered.state == JobState.Success, ordered.error)
+      assert(core.results("ordered").head.getLong(0) == mine.count(_._2 == t))
+      val missing = await(core, core.postJob(JobReq("ordered", args = Seq(u1.toString))).id)
+      assert(missing.state == JobState.Failure)
+      assert(missing.error.contains("missing argument for placeholder"), missing.error)
+      val raw = await(core, core.postJob(JobReq("broken_raw")).id)
+      assert(raw.state == JobState.Failure)
+      assert(raw.error.contains("PARSE_SYNTAX_ERROR"), raw.error)
+    } finally core.shutdown()
+  }
+
+  test("8 concurrent jobs of one task with distinct arguments each count their own rows") {
+    val perUser = spark.read.parquet(s"${TestSpark.sf0001}/events.parquet")
+      .groupBy("user_id").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val users = perUser.toSeq.sortBy(_._1).map(_._1).take(8)
+    assert(users.size == 8 && users.map(perUser).distinct.size > 1)
+    val core = coreOver(
+      """-- name: by_user
+        |-- conc: 8
+        |SELECT * FROM events WHERE user_id = $1;
+        |""".stripMargin, Map("db" -> TestSpark.sf0001))
+    try {
+      val jobs = users.map(u => u -> core.postJob(JobReq("by_user", args = Seq(u.toString))))
+      for ((u, job) <- jobs) {
+        val st = await(core, job.id)
+        assert(st.state == JobState.Success, st.error)
+        assert(st.count == perUser(u), s"user $u")
+      }
+    } finally core.shutdown()
+  }
+
+  test("the row-count wait is bounded: a count that never arrives fails the job") {
+    import scala.concurrent.duration._
+    val e = intercept[IllegalStateException](
+      Executor.rowCount(new org.apache.spark.sql.Observation(), 200.millis))
+    assert(e.getMessage.contains("row count"), e.getMessage)
+  }
 }

@@ -272,7 +272,7 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
     val keep = Seq(2L, 3L).toDF("v")
-    val plan = operators.GraphOps.kcoreRound(e, keep)
+    val plan = operators.KcoreReference.kcoreRound(e, keep)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
     val semi = "LeftSemi".r.findAllIn(plan).length

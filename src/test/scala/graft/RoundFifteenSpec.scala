@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{DedupOps, GraphOps}
+import graft.operators.{DedupOps, GraphOps, KcoreReference}
 import graft.plans.Checkpoints
 
 /** Round-15 specs: the sweep-pin release contract is now ENFORCED, not
@@ -17,8 +17,8 @@ import graft.plans.Checkpoints
   *     frame throws AT the call site (storage level NONE);
   *   - every iterative loop in the engine now runs clean under the
   *     paranoid listener, and the loops extended with eager release this
-  *     round (closeness, BFS, the dedup-CC fixpoint, both legacy kcore
-  *     spellings) hold O(1) live pins instead of O(rounds) — the same
+  *     round (closeness, BFS, the dedup-CC fixpoint, the legacy kcore
+  *     spelling) hold O(1) live pins instead of O(rounds) — the same
   *     bound RoundFourteenSpec pins for pagerank/eigencentrality.
   */
 class RoundFifteenSpec extends AnyFunSuite {
@@ -102,12 +102,11 @@ class RoundFifteenSpec extends AnyFunSuite {
         assert(n > 0, s"$q returned no rows on the fixture")
       }
       // kcore on sf0.01 — the k=90 cut legitimately empties the sf0.001
-      // graph (the RoundFourteenSpec convention); all three spellings
+      // graph (the RoundFourteenSpec convention); both spellings
       val kdir = TestSpark.sf001
       assert(GraphOps.queries("graph_kcore")(paranoid, kdir)
         .collect().nonEmpty)
-      GraphOps.graphKcorePeelImpl(paranoid, kdir, Long.MaxValue).collect()
-      GraphOps.graphKcoreFusedImpl(paranoid, kdir, Long.MaxValue).collect()
+      KcoreReference.graphKcorePeelImpl(paranoid, kdir, Long.MaxValue).collect()
       // dedup-CC: the 200-hop chain drives ~8 pointer-jump rounds
       val pairs = paranoid.range(200).selectExpr("id AS a", "id + 1 AS b")
       assert(DedupOps.resolveClusters(pairs).collect().length == 201)
@@ -158,16 +157,12 @@ class RoundFifteenSpec extends AnyFunSuite {
 
   test("legacy kcore spellings: per-round edge (and keep) pins are " +
       "released — live pins stay O(1) in the round count") {
-    GraphOps.graphKcorePeelImpl(spark, dir, Long.MaxValue).collect() // warm
+    KcoreReference.graphKcorePeelImpl(spark, dir, Long.MaxValue).collect() // warm
     val before = pinned()
-    GraphOps.graphKcorePeelImpl(spark, dir, Long.MaxValue).collect()
+    KcoreReference.graphKcorePeelImpl(spark, dir, Long.MaxValue).collect()
     val afterPeel = pinned()
     assert(afterPeel - before <= 1,
       s"kcore peel left ${afterPeel - before} pins (final edge pin only)")
-    GraphOps.graphKcoreFusedImpl(spark, dir, Long.MaxValue).collect()
-    val afterFused = pinned()
-    assert(afterFused - afterPeel <= 1,
-      s"kcore fused left ${afterFused - afterPeel} pins")
   }
 
   // --------------- 4. the global-rank gate: both spellings, same ranks

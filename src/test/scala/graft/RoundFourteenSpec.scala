@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.GraphOps
+import graft.operators.{GraphOps, KcoreReference}
 
 /** Round-14 specs: the degenerate (edgeless) graph no longer NPEs any
   * driver-side scalar read — the r13 verdict's #3 closed the class at
@@ -65,7 +65,7 @@ class RoundFourteenSpec extends AnyFunSuite {
     // sharp core collapse the operator doc describes) — the
     // RoundTenSpec convention
     val kdir = TestSpark.sf001
-    val peel = GraphOps.graphKcorePeelImpl(spark, kdir, Long.MaxValue)
+    val peel = KcoreReference.graphKcorePeelImpl(spark, kdir, Long.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val delta = GraphOps.graphKcoreDeltaImpl(spark, kdir, Long.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.GraphOps
+import graft.operators.{GraphOps, KcoreReference}
 
 /** Round-10 specs: the vertex-broadcast size gate generalized across the
   * graph family (round-9 verdict directive #1). Every query that joins a
@@ -97,7 +97,7 @@ class RoundTenSpec extends AnyFunSuite {
     import spark.implicits._
     val e = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
     val (_, vs) = roundFrames()
-    assertShuffleHash(fmt(GraphOps.kcoreRound(e, vs, small = false)))
+    assertShuffleHash(fmt(KcoreReference.kcoreRound(e, vs, small = false)))
   }
 
   test("bfs round above the gate: keyed shuffle-hash probe + anti-join, no broadcast") {

@@ -59,6 +59,10 @@ class TaskRegistrySpec extends AnyFunSuite {
     assert(e.getMessage.contains("error preparing SQL query broken"))
     val raw = writeTasks("-- name: broken\n-- raw: 1\nSELEKT nope FROM;\n")
     assert(TaskRegistry.load(spark, Seq(raw), src, bk)("broken").isRaw)
+    // a placeholder binds only where Spark's grammar takes a parameter marker
+    val interval = writeTasks("-- name: window\nSELECT current_date - INTERVAL $1 DAY;\n")
+    val ie = intercept[IllegalArgumentException](TaskRegistry.load(spark, Seq(interval), src, bk))
+    assert(ie.getMessage.contains("error preparing SQL query window"))
   }
 
   test("rejects unknown db/results tags (dbpool.go:116-130)") {
