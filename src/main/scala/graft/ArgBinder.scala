@@ -50,8 +50,13 @@ object ArgBinder {
     * named markers [[Placeholder]] reads back. `?` binds positionally in
     * order of appearance; `$N` binds args(N-1) and may repeat.
     */
-  def markers(sql: String): String = {
+  def markers(sql: String): String = rewrite(sql)._1
+
+  /** [[markers]]' text, and for each marker's number the placeholder as the
+    * task wrote it (`"2"` → `$2`, or `?` for the second `?`). */
+  def rewrite(sql: String): (String, Map[String, String]) = {
     val out = new StringBuilder(sql.length + 32)
+    val written = Map.newBuilder[String, String]
     var i = 0
     var qIdx = 0 // positional '?' seen so far
     val n = sql.length
@@ -64,11 +69,12 @@ object ArgBinder {
           if (c == '\'' || c == '"') { state = c; out.append(c); i += 1 }
           else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') { state = 'l'; out.append("--"); i += 2 }
           else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') { state = 'b'; out.append("/*"); i += 2 }
-          else if (c == '?') { qIdx += 1; out.append(s":_$qIdx"); i += 1 }
+          else if (c == '?') { qIdx += 1; out.append(s":_$qIdx"); written += qIdx.toString -> "?"; i += 1 }
           else if (c == '$' && i + 1 < n && sql.charAt(i + 1).isDigit) {
             var j = i + 1
             while (j < n && sql.charAt(j).isDigit) j += 1
-            out.append(":_").append(sql.substring(i + 1, j)); i = j
+            val k = sql.substring(i + 1, j)
+            out.append(":_").append(k); written += k -> sql.substring(i, j); i = j
           } else { out.append(c); i += 1 }
         case '\'' | '"' =>
           // Spark string literals support backslash escapes (incl. \') and
@@ -88,6 +94,6 @@ object ArgBinder {
           else { out.append(c); i += 1 }
       }
     }
-    out.toString
+    (out.toString, written.result())
   }
 }

@@ -151,6 +151,38 @@ object LockedStore {
   * (the claimed file, the queue row, the parked payload). */
 final case class Claimed[R](job: Job, epoch: Long, attempt: Int, receipt: R)
 
+/** The one queued-job payload, carried unchanged by every queue: a File
+  * plane queue file's content, a JDBC `graft_queue.payload`, a Redis list
+  * entry. The reference likewise encodes a queued job once (msgpack of
+  * `taskMeta`, `core.go:380-387`) and its broker carries the bytes.
+  *
+  * One URL-encoded field per line in a fixed order (id, task, queue, eta,
+  * retries, ttlSec, db, epoch, attempt, arg count), then one line per arg.
+  * The payload is pure ASCII and round-trips bytes-exactly, so Redis's LREM
+  * removes the exact string LRANGE returned. `attempt` is 1 on the first
+  * publish and N+1 on a cross-worker retry, so the claiming worker resumes
+  * the retry budget where the failing one left off. */
+object JobWire {
+  private val UTF8 = java.nio.charset.StandardCharsets.UTF_8
+
+  def encode(job: Job, epoch: Long, attempt: Int): String =
+    (Seq(job.id, job.taskName, job.queue, job.eta.map(_.toString).getOrElse(""),
+      job.retries.toString, job.ttlSec.toString, job.db.getOrElse(""),
+      epoch.toString, attempt.toString, job.args.size.toString) ++ job.args)
+      .map(java.net.URLEncoder.encode(_, UTF8)).mkString("\n")
+
+  /** (job, admission epoch, attempt); None for a torn or foreign payload. */
+  def decode(s: String): Option[(Job, Long, Int)] = try {
+    val f = s.split("\n", -1).map(java.net.URLDecoder.decode(_, UTF8))
+    val nargs = f(9).toInt
+    if (f.length != 10 + nargs) None
+    else Some((Job(f(0), f(1), f(2),
+      Some(f(3)).filter(_.nonEmpty).map(java.time.LocalDateTime.parse),
+      f(4).toInt, f(5).toInt, f.drop(10).toSeq, Some(f(6)).filter(_.nonEmpty)),
+      f(7).toLong, f(8).toInt))
+  } catch { case _: Exception => None }
+}
+
 /** The backend half of a queue worker: one atomic claim primitive and the
   * bookkeeping around it. [[ClaimLoop]] owns everything else. */
 trait ClaimBackend {

@@ -42,13 +42,15 @@ object Executor {
   /** `results_%s` table-name template (sqldb.go:77-81). */
   def resultTable(jobId: String): String = s"results_$jobId"
 
-  /** Dialect-quoted form for use as a JDBC dbtable (job IDs may contain `-`;
-    * the reference quotes with the backend's dialect, sqldb.go:307-314:
-    * backticks on MySQL, double quotes elsewhere; ClickHouse takes backticks
-    * like MySQL). */
+  /** A JDBC backend's identifier quote, as the reference quotes with the
+    * backend's dialect (sqldb.go:307-314): backticks on MySQL, double quotes
+    * elsewhere; ClickHouse takes backticks like MySQL. */
+  def identQuote(url: String): String =
+    if (url.startsWith("jdbc:mysql:") || ClickHouseDialect.canHandle(url)) "`" else "\""
+
+  /** Dialect-quoted form for use as a JDBC dbtable (job IDs may contain `-`). */
   def quotedResultTable(url: String, jobId: String): String = {
-    val q = if (url.startsWith("jdbc:mysql:") ||
-      ClickHouseDialect.canHandle(url)) "`" else "\""
+    val q = identQuote(url)
     q + resultTable(jobId) + q
   }
 

@@ -2,8 +2,6 @@ package graft
 
 import java.io.File
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.time.LocalDateTime
-import java.util.Properties
 import scala.jdk.CollectionConverters._
 
 /** Shared-directory job queue — the [[JobBroker]] half of the cross-process
@@ -11,8 +9,9 @@ import scala.jdk.CollectionConverters._
   *
   * Reproduces the reference's API-node / worker-node split
   * (`cmd/main.go:73-75`, README's "workers across machines") without Redis:
-  * an API process runs [[FileQueueBroker]] (admit → drop a claim file in
-  * the queue directory), worker processes run [[FileQueueWorker]] (claim by
+  * an API process runs [[FileQueueBroker]] (admit → drop a queue file,
+  * whose content is the [[JobWire]] payload, in the queue's directory),
+  * worker processes run [[FileQueueWorker]] (claim by
   * atomic rename — exactly-once per file — then execute through a local
   * [[Scheduler]] with the full retry/TTL/cancel machinery). Both sides
   * share a [[JobStateStore]] (e.g. [[FileJobStateStore]] over the same
@@ -33,18 +32,19 @@ final class FileQueueBroker(queueRoot: File, store: JobStateStore) extends Broke
   protected def enqueue(job: Job, task: Task, epoch: Long): Unit =
     FileQueue.publish(queueRoot, job, epoch, 1)
 
-  /** Newest-first, like the reference's reversed pending listing. */
-  override def pendingJobs(queue: String): Seq[String] =
-    FileQueue.list(FileQueue.queueDir(queueRoot, queue))
-      .filter(_.getFileName.toString.endsWith(".props"))
-      .sortBy(_.getFileName.toString).reverse
-      .flatMap(p => FileQueue.readJob(p).map(_._1.id))
+  /** Newest-first, like the reference's reversed pending listing. A queue
+    * nobody has posted to has no directory, and this read makes none. */
+  override def pendingJobs(queue: String): Seq[String] = {
+    val dir = FileQueue.queueDir(queueRoot, queue)
+    if (!Files.isDirectory(dir)) Nil
+    else FileQueue.jobFiles(dir).reverse.flatMap(p => FileQueue.read(p).map(_._1.id))
+  }
 
   /** Delete the unclaimed queue file, if any (claimed files are gone). */
   protected def dropQueued(jobId: String): Unit =
     FileQueue.list(queueRoot.toPath).filter(Files.isDirectory(_)).foreach { qd =>
       FileQueue.list(qd).foreach { p =>
-        if (p.getFileName.toString.endsWith(s"_${FileQueue.safe(jobId)}.props"))
+        if (p.getFileName.toString.endsWith(s"_${FsUtil.safe(jobId)}${FileQueue.Suffix}"))
           Files.deleteIfExists(p)
       }
     }
@@ -52,7 +52,7 @@ final class FileQueueBroker(queueRoot: File, store: JobStateStore) extends Broke
   /** Unclaimed files, and claims not yet handed to a scheduler. */
   protected def anyQueued: Boolean = {
     val stream = Files.walk(queueRoot.toPath)
-    try stream.iterator().asScala.exists(_.getFileName.toString.endsWith(".props"))
+    try stream.iterator().asScala.exists(_.getFileName.toString.endsWith(FileQueue.Suffix))
     finally stream.close()
   }
 }
@@ -104,15 +104,13 @@ private[graft] final class FileClaims(queueRoot: File, queues: Option[Seq[String
     }
 
   private def wantedQueue(dirName: String): Boolean =
-    queues.forall(_.exists(q => FileQueue.safe(q) == dirName))
+    queues.forall(_.exists(q => FsUtil.safe(q) == dirName))
 
   def claim(): Option[Claimed[Path]] = {
     if (!listed.hasNext)
       listed = FileQueue.list(queueRoot.toPath).filter(p => Files.isDirectory(p) &&
           p != claimedDir && wantedQueue(p.getFileName.toString))
-        .flatMap(qd => FileQueue.list(qd)
-          .filter(_.getFileName.toString.endsWith(".props"))
-          .sortBy(_.getFileName.toString).map(qd -> _))
+        .flatMap(qd => FileQueue.jobFiles(qd).map(qd -> _))
         .iterator
     while (listed.hasNext) {
       val (qd, p) = listed.next()
@@ -123,7 +121,7 @@ private[graft] final class FileClaims(queueRoot: File, queues: Option[Seq[String
         try { Files.move(p, mine, StandardCopyOption.ATOMIC_MOVE); true }
         catch { case _: java.io.IOException => false }
       // a torn/foreign file stays in _claimed for autopsy
-      if (won) FileQueue.readJob(mine) match {
+      if (won) FileQueue.read(mine) match {
         case Some((job, epoch, attempt)) => return Some(Claimed(job, epoch, attempt, mine))
         case None => ()
       }
@@ -138,6 +136,9 @@ private[graft] final class FileClaims(queueRoot: File, queues: Option[Seq[String
 }
 
 private[graft] object FileQueue {
+  /** A queue file's suffix: a file in any other format is never claimed or
+    * counted. */
+  val Suffix = ".job"
   private val seq = new java.util.concurrent.atomic.AtomicLong()
 
   /** This host's name as a claim-name field: no `_`, so never `__`. */
@@ -152,64 +153,28 @@ private[graft] object FileQueue {
     try stream.iterator().asScala.toList finally stream.close()
   }
 
+  /** `queue`'s directory, made by the first publish to it. */
   def queueDir(queueRoot: File, queue: String): Path =
-    Files.createDirectories(queueRoot.toPath.resolve(safe(queue)))
+    queueRoot.toPath.resolve(FsUtil.safe(queue))
 
-  /** Drop a queue file for `attempt` of an admitted job. The name
-    * (millis, per-JVM seq, pid) orders the backlog and never collides
-    * across publishing processes. */
+  /** One queue directory's queue files, oldest first. */
+  def jobFiles(dir: Path): List[Path] =
+    list(dir).filter(_.getFileName.toString.endsWith(Suffix)).sortBy(_.getFileName.toString)
+
+  /** Drop a queue file for `attempt` of an admitted job: written under a
+    * temporary name, then renamed into place, so a claimer never reads half
+    * a file. The name (millis, per-JVM seq, pid) orders the backlog and
+    * never collides across publishing processes. */
   def publish(queueRoot: File, job: Job, epoch: Long, attempt: Int): Unit = {
     val name = f"${System.currentTimeMillis()}%013d_${seq.incrementAndGet()}%06d_" +
-      s"${ProcessHandle.current().pid()}_${safe(job.id)}.props"
-    writeJob(queueDir(queueRoot, job.queue).resolve(name), job, epoch, attempt)
-  }
-
-  def safe(s: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(10)
-    s.replaceAll("[^A-Za-z0-9_-]", "_").take(48) + "_" + md
-  }
-
-  def writeJob(p: Path, job: Job, epoch: Long, attempt: Int = 1): Unit = {
-    val props = new Properties()
-    props.setProperty("attempt", attempt.toString)
-    props.setProperty("id", job.id)
-    props.setProperty("task", job.taskName)
-    props.setProperty("queue", job.queue)
-    job.eta.foreach(e => props.setProperty("eta", e.toString))
-    props.setProperty("retries", job.retries.toString)
-    props.setProperty("ttlSec", job.ttlSec.toString)
-    props.setProperty("nargs", job.args.size.toString)
-    job.args.zipWithIndex.foreach { case (a, i) => props.setProperty(s"arg.$i", a) }
-    job.db.foreach(props.setProperty("db", _))
-    props.setProperty("epoch", epoch.toString)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    val out = Files.newOutputStream(tmp)
-    try props.store(out, null) finally out.close()
+      s"${ProcessHandle.current().pid()}_${FsUtil.safe(job.id)}$Suffix"
+    val p = Files.createDirectories(queueDir(queueRoot, job.queue)).resolve(name)
+    val tmp = p.resolveSibling(name + ".tmp")
+    Files.writeString(tmp, JobWire.encode(job, epoch, attempt))
     Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** (job, admission epoch, attempt) — attempt is 1 on first publish and
-    * N+1 on a cross-worker retry re-publish, so the claiming worker resumes
-    * the retry budget where the failing worker left off. */
-  def readJob(p: Path): Option[(Job, Long, Int)] =
-    if (!Files.exists(p)) None
-    else try {
-      val in = Files.newInputStream(p)
-      val props = new Properties()
-      try props.load(in) finally in.close()
-      val args = (0 until props.getProperty("nargs", "0").toInt)
-        .map(i => props.getProperty(s"arg.$i"))
-      Some((Job(
-        props.getProperty("id"),
-        props.getProperty("task"),
-        props.getProperty("queue"),
-        Option(props.getProperty("eta")).map(LocalDateTime.parse),
-        props.getProperty("retries", "0").toInt,
-        props.getProperty("ttlSec", "60").toInt,
-        args,
-        Option(props.getProperty("db"))),
-        props.getProperty("epoch", "0").toLong,
-        props.getProperty("attempt", "1").toInt))
-    } catch { case _: Exception => None }
+  /** The queue file's job; None once it is gone (claimed or dropped). */
+  def read(p: Path): Option[(Job, Long, Int)] =
+    try JobWire.decode(Files.readString(p)) catch { case _: java.io.IOException => None }
 }

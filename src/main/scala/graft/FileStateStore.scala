@@ -36,11 +36,7 @@ final class FileJobStateStore(rootDir: File) extends LockedStore {
 
   private val root: Path = rootDir.toPath
 
-  private def safe(id: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(id.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(10)
-    id.replaceAll("[^A-Za-z0-9_-]", "_").take(64) + "_" + md
-  }
+  import FsUtil.safe
   private def jobFile(id: String) = root.resolve(s"job_${safe(id)}.props")
   private def metaFile(id: String) = root.resolve(s"meta_${safe(id)}.props")
   private def cancelFile(id: String) = root.resolve(s"cancel_${safe(id)}")

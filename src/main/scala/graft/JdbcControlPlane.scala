@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.{Connection, DriverManager, SQLException}
-import java.time.LocalDateTime
 
 /** JDBC-backed control plane — the [[JobStateStore]] / [[JobBroker]] SPI
   * implementations over any network SQL database (the role the reference
@@ -20,7 +19,10 @@ import java.time.LocalDateTime
   *     per admission with no read-modify-write race.
   *   - queue claims: `UPDATE ... SET claimed_by WHERE seq = ? AND
   *     claimed_by IS NULL` — exactly one worker per row, the rename-claim of
-  *     [[FileQueueWorker]] as a conditional update.
+  *     [[FileQueueWorker]] as a conditional update. A `graft_queue` row
+  *     keeps as columns only what this SQL filters on (`seq`, `job_id`,
+  *     `queue`, `claimed_by`, `claimed_at`); the job itself is one
+  *     [[JobWire]] `payload`.
   *   - dead-claimer recovery: PID liveness doesn't cross machines, so claims
   *     carry a lease timestamp; a claim past its lease whose store entry is
   *     still PENDING (claimer died between claim and execution) is returned
@@ -339,20 +341,12 @@ private[graft] final class JdbcClaims(url: String, store: JobStateStore,
       val won = try up.executeUpdate() == 1 finally up.close()
       if (!won) None // another worker raced us: next poll tries the next row
       else {
-        val get = c.prepareStatement(
-          "SELECT job_id, queue, task, eta, retries, ttl, args, db, epoch, attempt " +
-            "FROM graft_queue WHERE seq = ?")
+        val get = c.prepareStatement("SELECT payload FROM graft_queue WHERE seq = ?")
         get.setLong(1, seq)
         val r = get.executeQuery()
-        try {
-          if (!r.next()) None
-          else Some(Claimed(Job(
-            r.getString(1), r.getString(3), r.getString(2),
-            Option(r.getString(4)).map(LocalDateTime.parse),
-            r.getInt(5), r.getInt(6),
-            JdbcControlPlane.decodeArgs(r.getString(7)),
-            Option(r.getString(8))), r.getLong(9), r.getInt(10), seq))
-        } finally { r.close(); get.close() }
+        try Option.when(r.next())(r.getString(1)).flatMap(JobWire.decode)
+          .map { case (job, epoch, attempt) => Claimed(job, epoch, attempt, seq) }
+        finally { r.close(); get.close() }
       }
     }
   }
@@ -375,19 +369,17 @@ private[graft] object JdbcControlPlane {
 
   def insertQueueRow(c: Connection, job: Job, epoch: Long, attempt: Int): Unit = {
     val ps = c.prepareStatement(
-      "INSERT INTO graft_queue(job_id, queue, task, eta, retries, ttl, args, db, epoch, attempt) " +
-        "VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, ?)")
-    ps.setString(1, job.id); ps.setString(2, job.queue); ps.setString(3, job.taskName)
-    ps.setString(4, job.eta.map(_.toString).orNull)
-    ps.setInt(5, job.retries); ps.setInt(6, job.ttlSec)
-    ps.setString(7, encodeArgs(job.args))
-    ps.setString(8, job.db.orNull); ps.setLong(9, epoch); ps.setInt(10, attempt)
+      "INSERT INTO graft_queue(job_id, queue, payload) VALUES (?, ?, ?)")
+    ps.setString(1, job.id); ps.setString(2, job.queue)
+    ps.setString(3, JobWire.encode(job, epoch, attempt))
     try ps.executeUpdate() finally ps.close()
   }
 
   /** Create the four control-plane tables if absent; races between processes
     * are benign (duplicate-CREATE errors are swallowed). Types stick to the
-    * SQL-92 subset Derby/Postgres/MySQL all accept. */
+    * SQL-92 subset Derby/Postgres/MySQL all accept. A `graft_queue` of the
+    * old per-column layout (no `payload`) is refused, not migrated: its rows
+    * are drained by the version that wrote them. */
   def ensureSchema(url: String): Unit = {
     val c = DriverManager.getConnection(url)
     try {
@@ -410,14 +402,7 @@ private[graft] object JdbcControlPlane {
              seq BIGINT GENERATED ALWAYS AS IDENTITY PRIMARY KEY,
              job_id VARCHAR(255) NOT NULL,
              queue VARCHAR(255) NOT NULL,
-             task VARCHAR(255) NOT NULL,
-             eta VARCHAR(40),
-             retries INT NOT NULL,
-             ttl INT NOT NULL,
-             args VARCHAR(20000),
-             db VARCHAR(255),
-             epoch BIGINT NOT NULL,
-             attempt INT DEFAULT 1 NOT NULL,
+             payload VARCHAR(32672) NOT NULL,
              claimed_by VARCHAR(128),
              claimed_at BIGINT)""")
       ddl.foreach { sql =>
@@ -426,16 +411,13 @@ private[graft] object JdbcControlPlane {
         catch { case e: SQLException if isTableExists(e) => () }
         finally st.close()
       }
-      // migrate a pre-`attempt` queue table in place (column-exists and
-      // other dialect quirks are benign — the INSERT/SELECT paths name the
-      // column explicitly and fail loudly if it's genuinely absent)
-      locally {
-        val st = c.createStatement()
-        try st.executeUpdate(
-          "ALTER TABLE graft_queue ADD COLUMN attempt INT DEFAULT 1 NOT NULL")
-        catch { case _: SQLException => () }
-        finally st.close()
-      }
+      val st = c.createStatement()
+      try st.executeQuery("SELECT payload FROM graft_queue WHERE 1 = 0").close()
+      catch { case e: SQLException => throw new IllegalStateException(
+        "graft_queue has the old per-column layout (no payload column): drain its " +
+          "queued jobs with the version that wrote them, then DROP TABLE graft_queue; " +
+          "the next start creates it anew", e)
+      } finally st.close()
     } finally c.close()
   }
 
@@ -451,26 +433,4 @@ private[graft] object JdbcControlPlane {
   private def isTableExists(e: SQLException): Boolean =
     Option(e.getSQLState).exists(s =>
       s == "X0Y32" || s == "42P07" || s == "42S01" || s == "42101")
-
-  /** Args travel URL-encoded and comma-joined, with a count prefix so the
-    * wire round-trips EVERY arg vector faithfully — without the prefix,
-    * Seq("") encodes to "" which decodes as Nil, a wire-fidelity divergence
-    * from the file-queue broker (a task invoked with one empty-string arg
-    * would silently run with zero args). */
-  def encodeArgs(args: Seq[String]): String =
-    args.size + ";" +
-      args.map(a => java.net.URLEncoder.encode(a, "UTF-8")).mkString(",")
-
-  def decodeArgs(s: String): Seq[String] = {
-    if (s == null || s.isEmpty) return Nil
-    val sep = s.indexOf(';')
-    // legacy form without the count prefix (rows enqueued by an older
-    // worker): keep the old best-effort decode
-    if (sep < 0 || !s.substring(0, sep).forall(_.isDigit))
-      return s.split(",", -1).toSeq.map(a => java.net.URLDecoder.decode(a, "UTF-8"))
-    val n = s.substring(0, sep).toInt
-    if (n == 0) Nil
-    else s.substring(sep + 1).split(",", -1).toSeq
-      .map(a => java.net.URLDecoder.decode(a, "UTF-8"))
-  }
 }

@@ -23,7 +23,7 @@ import java.nio.charset.StandardCharsets
   *   - `lock:<id>`   per-ID write lock: `SET … NX PX <ttl>` — the standard
   *                   single-instance Redis lock; the TTL bounds the damage
   *                   of a lock-holder crash
-  *   - `queue:<q>`   job payload list — LPUSH at head, claim from tail
+  *   - `queue:<q>`   [[JobWire]] payload list — LPUSH at head, claim from tail
   *                   (FIFO); a retry re-publish LPUSHes the next attempt so
   *                   ANY worker claims it (the cross-worker retry hop)
   *   - `processing:<worker>` the reliable-queue parking list: a claim is
@@ -193,28 +193,6 @@ object RedisControlPlane {
       socket.close()
     }
   }
-
-  /** Compact job payload codec for the queue lists: one URL-encoded field
-    * per line (order fixed), so payloads round-trip bytes-exactly — LREM
-    * removes the exact string LRANGE returned. */
-  private[graft] def encodeJob(job: Job, epoch: Long, attempt: Int): String = {
-    def enc(s: String) = java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
-    (Seq(job.id, job.taskName, job.queue, job.eta.map(_.toString).getOrElse(""),
-      job.retries.toString, job.ttlSec.toString, job.db.getOrElse(""),
-      epoch.toString, attempt.toString, job.args.size.toString) ++ job.args)
-      .map(enc).mkString("\n")
-  }
-
-  private[graft] def decodeJob(s: String): Option[(Job, Long, Int)] = try {
-    def dec(x: String) = java.net.URLDecoder.decode(x, StandardCharsets.UTF_8)
-    val f = s.split("\n", -1).map(dec)
-    val nargs = f(9).toInt
-    Some((Job(f(0), f(1), f(2),
-      Some(f(3)).filter(_.nonEmpty).map(java.time.LocalDateTime.parse),
-      f(4).toInt, f(5).toInt, (0 until nargs).map(i => f(10 + i)),
-      Some(f(6)).filter(_.nonEmpty)),
-      f(7).toLong, f(8).toInt))
-  } catch { case _: Exception => None }
 }
 
 /** [[JobStateStore]] over Redis: the [[LockedStore]] skeleton
@@ -308,26 +286,26 @@ final class RedisJobStateStore(host: String, port: Int, prefix: String = "graft:
 /** API-node [[JobBroker]] over Redis lists. */
 final class RedisQueueBroker(host: String, port: Int, store: JobStateStore,
     prefix: String = "graft:") extends BrokerBase(store) {
-  import RedisControlPlane._
+  import RedisControlPlane.RespClient
   private val c = new RespClient(host, port)
 
   private def queueKey(q: String) = s"${prefix}queue:$q"
 
   protected def enqueue(job: Job, task: Task, epoch: Long): Unit =
-    c.cmd("LPUSH", queueKey(job.queue), encodeJob(job, epoch, 1)): Unit
+    c.cmd("LPUSH", queueKey(job.queue), JobWire.encode(job, epoch, 1)): Unit
 
   /** Newest-first: LPUSH puts the newest at the head, LRANGE walks
     * head→tail — the reference's reversed pending listing for free. */
   override def pendingJobs(queue: String): Seq[String] =
     c.cmdSeq("LRANGE", queueKey(queue), "0", "-1")
-      .flatMap(p => decodeJob(p.toString).map(_._1.id))
+      .flatMap(p => JobWire.decode(p.toString).map(_._1.id))
 
   /** Drop unclaimed payloads: LREM the exact strings LRANGE returned
     * (payloads round-trip bytes-exactly). */
   protected def dropQueued(jobId: String): Unit =
     c.cmdSeq("KEYS", s"${prefix}queue:*").map(_.toString).foreach { qk =>
       c.cmdSeq("LRANGE", qk, "0", "-1").map(_.toString).foreach { p =>
-        if (decodeJob(p).exists(_._1.id == jobId))
+        if (JobWire.decode(p).exists(_._1.id == jobId))
           c.cmd("LREM", qk, "0", p): Unit
       }
     }
@@ -375,7 +353,7 @@ final class RedisQueueWorker(
   * the payload string, which LREM removes exactly. */
 private[graft] final class RedisClaims(store: JobStateStore, host: String, port: Int,
     queues: Option[Seq[String]], prefix: String, workerId: String) extends ClaimBackend {
-  import RedisControlPlane._
+  import RedisControlPlane.RespClient
   type Receipt = String
   private val c = new RespClient(host, port)
   private val processingKey = s"${prefix}processing:$workerId"
@@ -420,7 +398,7 @@ private[graft] final class RedisClaims(store: JobStateStore, host: String, port:
         c.cmd("LREM", processingKey, "1", p)
         handedOff.remove(p)
       }
-      else decodeJob(p) match {
+      else JobWire.decode(p) match {
         case Some((job, epoch, _)) if
             store.get(job.id).exists(s => JobState.isLive(s.state)) &&
             store.epoch(job.id) == epoch =>
@@ -441,7 +419,7 @@ private[graft] final class RedisClaims(store: JobStateStore, host: String, port:
     while (sweep.nonEmpty) {
       val payload = c.cmd("LMOVE", sweep.head, processingKey, "RIGHT", "LEFT")
       if (payload == null) sweep = sweep.tail
-      else decodeJob(payload.toString) match {
+      else JobWire.decode(payload.toString) match {
         case Some((job, epoch, attempt)) =>
           return Some(Claimed(job, epoch, attempt, payload.toString))
         case None => c.cmd("LREM", processingKey, "1", payload.toString) // torn/foreign: drop
@@ -463,7 +441,7 @@ private[graft] final class RedisClaims(store: JobStateStore, host: String, port:
   }
 
   def republish(job: Job, attempt: Int, epoch: Long): Unit =
-    c.cmd("LPUSH", s"${prefix}queue:${job.queue}", encodeJob(job, epoch, attempt)): Unit
+    c.cmd("LPUSH", s"${prefix}queue:${job.queue}", JobWire.encode(job, epoch, attempt)): Unit
 
   /** Socket/protocol errors (broker restart, dropped connection) are
     * transient: dial a fresh connection (throws while the broker is still

@@ -46,7 +46,7 @@ final class ResultSweeper(backends: SourcePool, retentionSec: Long) {
     }.sorted
 
   private def sweepJdbc(url: String, nowMs: Long): Seq[String] = {
-    val quote = if (url.startsWith("jdbc:mysql:")) "`" else "\""
+    val quote = Executor.identQuote(url)
     try {
       val conn = DriverManager.getConnection(url)
       try {

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import scala.util.control.NonFatal
 
 /** A named, parameterized SQL task — the port of dungbeetle's Task
   * (`internal/core/tasks.go:16-24`): Name, Queue, Conc, Raw SQL, tagged
@@ -23,7 +24,7 @@ final case class Task(
     * unless `raw`, else on its first job. Every job binds its own copy
     * from this shared plan and never changes it. */
   private[graft] def plan(spark: SparkSession): LogicalPlan = synchronized {
-    if (parsed == null) parsed = TaskRegistry.parse(spark, raw)
+    if (parsed == null) parsed = TaskRegistry.parse(spark, name, raw)
     parsed
   }
 }
@@ -103,9 +104,26 @@ object TaskRegistry {
   /** Task SQL's one way into the parser: placeholders become Spark
     * parameter markers ([[ArgBinder.markers]]), so a placeholder is legal
     * only where Spark's grammar takes a marker (an expression, not an
-    * `INTERVAL` quantity or a type's precision). */
-  private[graft] def parse(spark: SparkSession, sql: String): LogicalPlan =
-    spark.sessionState.sqlParser.parsePlan(ArgBinder.markers(sql))
+    * `INTERVAL` quantity or a type's precision). Spark's error for a marker
+    * elsewhere names the marker (`:_1`), so it is reported with the
+    * placeholder as `task` wrote it. */
+  private[graft] def parse(spark: SparkSession, task: String, sql: String): LogicalPlan = {
+    val (text, written) = ArgBinder.rewrite(sql)
+    try spark.sessionState.sqlParser.parsePlan(text)
+    catch { case NonFatal(e) =>
+      // the head of the message, not the `== SQL ==` excerpt, which shows
+      // every marker of the statement
+      val head = Option(e.getMessage).getOrElse("").split("== SQL", 2)(0)
+      Marker.findFirstMatchIn(head).flatMap(m => written.get(m.group(1))) match {
+        case Some(p) => throw new IllegalArgumentException(s"placeholder $p of task $task " +
+          "stands where Spark's grammar takes no value (an INTERVAL quantity, a type's " +
+          "precision): use it in an expression instead", e)
+        case None => throw e
+      }
+    }
+  }
+
+  private val Marker = """:_(\d+)""".r
 
   private val NameTag = """^\s*--\s*name\s*:\s*(\S+)\s*$""".r
   private val KeyTag = """^\s*--\s*([A-Za-z_]+)\s*:\s*(.*?)\s*$""".r

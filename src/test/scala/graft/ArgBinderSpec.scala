@@ -16,7 +16,7 @@ class ArgBinderSpec extends AnyFunSuite {
 
   /** The job's bound plan for task SQL, every table bound to one stub. */
   private def bound(sql: String, args: String*): LogicalPlan =
-    sameIds(Executor.bindPlan(spark, TaskRegistry.parse(spark, sql), args, _ => OneRowRelation()))
+    sameIds(Executor.bindPlan(spark, TaskRegistry.parse(spark, "t", sql), args, _ => OneRowRelation()))
 
   /** The same binding applied to SQL that holds its values as text. */
   private def text(sql: String): LogicalPlan =
@@ -99,7 +99,7 @@ class ArgBinderSpec extends AnyFunSuite {
     // the placeholders sit in a projection, a repeat, a scalar subquery and
     // beside a quoted and a commented look-alike
     val sql = "SELECT ? AS a, ? AS b, $1 AS c, '?$2' AS d, (SELECT $2 AS e) AS f /* $3 ? */"
-    val unbound = TaskRegistry.parse(spark, sql)
+    val unbound = TaskRegistry.parse(spark, "t", sql)
     val hostile = Gen.oneOf("x\\", "', 1); DROP TABLE t; --", "*/", "$1", "?", "'", "\\'")
     val arg = Gen.frequency(1 -> hostile, 2 -> Arbitrary.arbitrary[String])
     val prop = Prop.forAll(arg, arg) { (a1, a2) =>
@@ -150,7 +150,7 @@ class ArgBinderSpec extends AnyFunSuite {
   }
 
   test("both placeholder styles parse to Spark parameter markers") {
-    val plan = TaskRegistry.parse(spark, "SELECT * FROM t WHERE a = $1 AND b < ? AND c = $2")
+    val plan = TaskRegistry.parse(spark, "t", "SELECT * FROM t WHERE a = $1 AND b < ? AND c = $2")
     val markers = plan.flatMap(_.expressions).flatMap(_.collect { case NamedParameter(n) => n })
     assert(markers == Seq("_1", "_1", "_2"))
   }

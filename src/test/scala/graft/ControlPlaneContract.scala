@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * nodes and the worker fleet of the reference's shared-Redis topology.
   *
   * `names` maps a case's key (`run`, `dup`, `cancel`, `race`, `retry`,
-  * `orphan`, `notask`, `fault`) to the name of the backend test it
+  * `orphan`, `notask`, `fault`, `wire`) to the name of the backend test it
   * replaced, so that test keeps its ID.
   */
 abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
@@ -267,6 +267,31 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
         assert(broker.submit(next, fx.task))
         assert(awaitDone(store, next.id).exists(_.state == JobState.Success))
       } finally { worker.stop(); broker.shutdown() }
+    }
+  }
+
+  contract("wire", "a claim returns the job as submitted, with its epoch and attempt") {
+    withPlane { p =>
+      val fx = fixture()
+      val store = p.store()
+      val broker = p.broker(store)
+      val backend = p.backend(p.store())
+      val full = Job("cp-wire-1", "count_events", "default",
+        Some(java.time.LocalDateTime.of(2031, 1, 2, 3, 4, 5, 6000)), 2, 90,
+        Seq("", "a\nb", "c,d;e%f", "\u00fc"), Some("db"))
+      val bare = Job("cp-wire-2", "count_events", "default", None, 0, 60, Nil, None)
+      try {
+        Seq(full, bare).foreach(j => assert(broker.submit(j, fx.task)))
+        val claims = Seq(backend.claim(), backend.claim()).flatten
+        claims.foreach(backend.ack(_))
+        assert(claims.map(c => (c.job, c.epoch, c.attempt)).toSet ==
+          Set((full, store.epoch(full.id), 1), (bare, store.epoch(bare.id), 1)))
+        backend.republish(full, 2, store.epoch(full.id))
+        val retry = backend.claim()
+        retry.foreach(backend.ack(_))
+        assert(retry.map(c => (c.job, c.epoch, c.attempt)) ==
+          Some((full, store.epoch(full.id), 2)))
+      } finally { backend.close(); broker.shutdown() }
     }
   }
 }

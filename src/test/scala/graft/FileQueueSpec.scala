@@ -19,7 +19,7 @@ class FileQueueSpec extends ControlPlaneContract(Map(
   private final class FilePlane extends Plane {
     private val root = Files.createTempDirectory("graft-fq").toFile
     private val stateDir = new File(root, "state")
-    private val queueDir = new File(root, "queue")
+    val queueDir = new File(root, "queue")
     private def claimedDir = Files.createDirectories(queueDir.toPath.resolve("_claimed"))
 
     def store(): JobStateStore = new FileJobStateStore(stateDir)
@@ -42,11 +42,11 @@ class FileQueueSpec extends ControlPlaneContract(Map(
     def claimsHeld(): Long = FileQueue.list(claimedDir).size.toLong
 
     def queuedAttempt(job: Job): Option[Int] =
-      queueFiles(job).flatMap(FileQueue.readJob).map(_._3).headOption
+      queueFiles(job).flatMap(FileQueue.read).map(_._3).headOption
 
     private def queueFiles(job: Job): List[Path] =
       FileQueue.list(FileQueue.queueDir(queueDir, job.queue))
-        .filter(_.getFileName.toString.endsWith(s"_${FileQueue.safe(job.id)}.props"))
+        .filter(_.getFileName.toString.endsWith(s"_${FsUtil.safe(job.id)}${FileQueue.Suffix}"))
   }
 
   private def deadPid: Int =
@@ -70,5 +70,16 @@ class FileQueueSpec extends ControlPlaneContract(Map(
       assert(store.get(job.id).exists(_.state == JobState.Pending))
       assert(!fx.ran(job.id))
     } finally { worker.stop(); broker.shutdown() }
+  }
+
+  test("reading a queue nobody posted to creates no directory") {
+    val p = new FilePlane
+    val broker = p.broker(p.store())
+    try {
+      def dirs = FileQueue.list(p.queueDir.toPath).toSet
+      val before = dirs
+      assert(broker.pendingJobs("never-used") == Nil)
+      assert(dirs == before, "a pending-jobs read made a queue directory")
+    } finally broker.shutdown()
   }
 }

@@ -477,6 +477,10 @@ class GraftCoreSpec extends AnyFunSuite {
         |-- name: broken_raw
         |-- raw: 1
         |SELEKT nope FROM;
+        |
+        |-- name: misplaced_raw
+        |-- raw: 1
+        |SELECT current_date - INTERVAL $1 DAY AS d;
         |""".stripMargin, Map("db" -> TestSpark.sf0001))
     val events = spark.read.parquet(s"${TestSpark.sf0001}/events.parquet")
       .select("user_id", "event_type").collect().map(r => (r.getLong(0), r.getString(1)))
@@ -502,6 +506,10 @@ class GraftCoreSpec extends AnyFunSuite {
       val raw = await(core, core.postJob(JobReq("broken_raw")).id)
       assert(raw.state == JobState.Failure)
       assert(raw.error.contains("PARSE_SYNTAX_ERROR"), raw.error)
+      val misplaced = await(core, core.postJob(JobReq("misplaced_raw", args = Seq("3"))).id)
+      assert(misplaced.state == JobState.Failure)
+      assert(misplaced.error.contains("placeholder $1 of task misplaced_raw") &&
+        !misplaced.error.contains(":_1"), misplaced.error)
     } finally core.shutdown()
   }
 

@@ -57,11 +57,11 @@ class JdbcControlPlaneSpec extends ControlPlaneContract(Map(
 
     def queuedAttempt(job: Job): Option[Int] = JdbcControlPlane.withConn(url) { c =>
       val ps = c.prepareStatement(
-        "SELECT attempt FROM graft_queue WHERE job_id = ? AND claimed_by IS NULL")
+        "SELECT payload FROM graft_queue WHERE job_id = ? AND claimed_by IS NULL")
       ps.setString(1, job.id)
       try {
         val rs = ps.executeQuery()
-        if (rs.next()) Some(rs.getInt(1)) else None
+        if (rs.next()) JobWire.decode(rs.getString(1)).map(_._3) else None
       } finally ps.close()
     }
   }
@@ -96,14 +96,49 @@ class JdbcControlPlaneSpec extends ControlPlaneContract(Map(
 
   test("arg wire codec round-trips empty and delimiter-laden arg vectors") {
     val vectors = Seq(Seq.empty[String], Seq(""), Seq("", ""), Seq("a,b", "", "c%;="),
-      Seq("plain"), Seq("x", "y z"))
-    vectors.foreach { v =>
-      assert(JdbcControlPlane.decodeArgs(JdbcControlPlane.encodeArgs(v)) == v,
-        s"round-trip broke for $v")
+      Seq("plain"), Seq("x", "y z"), Seq("a\nb", "\n", "\u00fc\u6f22\ud83d\ude00"))
+    val eta = Some(java.time.LocalDateTime.of(2030, 6, 7, 8, 9, 10, 123456000))
+    for (v <- vectors; (eta, db) <- Seq((None, None), (eta, Some("db_b"))); retries <- Seq(0, 3)) {
+      val job = Job("jw-1", "profit", "reports", eta, retries, 45, v, db)
+      assert(JobWire.decode(JobWire.encode(job, 9L, 2)) == Some((job, 9L, 2)),
+        s"round-trip broke for $job")
     }
-    // legacy rows (no count prefix) still decode best-effort
-    assert(JdbcControlPlane.decodeArgs("x,y+z") == Seq("x", "y z"))
-    assert(JdbcControlPlane.decodeArgs("") == Nil)
+    assert(JobWire.decode("") == None)
+  }
+
+  test("the job payload is byte-identical to the Redis queue payload it replaced") {
+    val job = Job("golden-1", "profit", "reports",
+      Some(java.time.LocalDateTime.of(2024, 3, 1, 12, 30, 5)), 2, 90,
+      Seq("42", "a b,c", "\u00fc"), Some("db_a"))
+    assert(JobWire.encode(job, 7L, 1) ==
+      "golden-1\nprofit\nreports\n2024-03-01T12%3A30%3A05\n2\n90\ndb_a\n7\n1\n3\n" +
+        "42\na+b%2Cc\n%C3%BC")
+  }
+
+  test("a graft_queue of the old per-column layout is refused with the fix") {
+    val url = freshUrl()
+    JdbcControlPlane.withConn(url) { c =>
+      val st = c.createStatement()
+      try st.executeUpdate(
+        """CREATE TABLE graft_queue(
+             seq BIGINT GENERATED ALWAYS AS IDENTITY PRIMARY KEY,
+             job_id VARCHAR(255) NOT NULL,
+             queue VARCHAR(255) NOT NULL,
+             task VARCHAR(255) NOT NULL,
+             eta VARCHAR(40),
+             retries INT NOT NULL,
+             ttl INT NOT NULL,
+             args VARCHAR(20000),
+             db VARCHAR(255),
+             epoch BIGINT NOT NULL,
+             attempt INT DEFAULT 1 NOT NULL,
+             claimed_by VARCHAR(128),
+             claimed_at BIGINT)""")
+      finally st.close()
+    }
+    val e = intercept[IllegalStateException](JdbcControlPlane.ensureSchema(url))
+    assert(e.getMessage.contains("graft_queue") && e.getMessage.contains("DROP TABLE graft_queue"),
+      e.getMessage)
   }
 
   test("queue-filtered worker consumes only its queues") {

@@ -38,7 +38,7 @@ class RedisControlPlaneSpec extends ControlPlaneContract(Map(
 
     def queuedAttempt(job: Job): Option[Int] =
       probe.cmdSeq("LRANGE", s"graft:queue:${job.queue}", "0", "-1")
-        .flatMap(e => RedisControlPlane.decodeJob(e.toString))
+        .flatMap(e => JobWire.decode(e.toString))
         .collectFirst { case (j, _, attempt) if j.id == job.id => attempt }
 
     override def close(): Unit = { probe.close(); srv.stop() }
@@ -187,7 +187,7 @@ class RedisControlPlaneSpec extends ControlPlaneContract(Map(
         // reply lost, then the worker crashed before its reaper retried)
         apiStore.set(job.id, JobState.Success, 42, "")
         probe.cmd("LPUSH", "graft:processing:w0",
-          RedisControlPlane.encodeJob(job, epoch, 1))
+          JobWire.encode(job, epoch, 1))
         val worker = new RedisQueueWorker(spark, tasks,
           new RedisJobStateStore(h, p), h, p, workerId = "w0")
         try {

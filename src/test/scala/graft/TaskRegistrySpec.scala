@@ -59,10 +59,18 @@ class TaskRegistrySpec extends AnyFunSuite {
     assert(e.getMessage.contains("error preparing SQL query broken"))
     val raw = writeTasks("-- name: broken\n-- raw: 1\nSELEKT nope FROM;\n")
     assert(TaskRegistry.load(spark, Seq(raw), src, bk)("broken").isRaw)
-    // a placeholder binds only where Spark's grammar takes a parameter marker
-    val interval = writeTasks("-- name: window\nSELECT current_date - INTERVAL $1 DAY;\n")
-    val ie = intercept[IllegalArgumentException](TaskRegistry.load(spark, Seq(interval), src, bk))
-    assert(ie.getMessage.contains("error preparing SQL query window"))
+    // a placeholder binds only where Spark's grammar takes a parameter marker;
+    // the error names the task and the placeholder as the task wrote it,
+    // never the marker it was rewritten to
+    Seq("SELECT current_date - INTERVAL $1 DAY" -> "$1",
+        "SELECT CAST(value AS DECIMAL($1, 2)) FROM events" -> "$1",
+        "SELECT current_date - INTERVAL ? DAY" -> "?").foreach { case (sql, p) =>
+      val dir = writeTasks(s"-- name: window\n$sql;\n")
+      val ie = intercept[IllegalArgumentException](TaskRegistry.load(spark, Seq(dir), src, bk))
+      assert(ie.getMessage.contains("error preparing SQL query window"), sql)
+      assert(ie.getMessage.contains(s"placeholder $p of task window"), ie.getMessage)
+      assert(!ie.getMessage.contains(":_1"), ie.getMessage)
+    }
   }
 
   test("rejects unknown db/results tags (dbpool.go:116-130)") {
