@@ -32,7 +32,6 @@ final case class GraftConfig(
     taskDirs: Seq[String],
     sources: Map[String, String],
     resultBackends: Map[String, String],
-    streamStateStores: Int = 0,
     /** `[control] dir` — shared directory for the cross-process control
       * plane (state + queue). Empty = in-process defaults. */
     controlDir: String = "",
@@ -57,9 +56,6 @@ final case class GraftConfig(
     TaskRegistry.load(spark, taskDirs, SourcePool(sources), SourcePool(resultBackends), defaultQueue)
 
   def boot(spark: org.apache.spark.sql.SparkSession): GraftCore = {
-    // surface stream sizing on the session so the stream runner (which has
-    // no GraftConfig handle) honors it; 0 = derive from input volume
-    spark.conf.set(GraftConfig.StateStoresConfKey, streamStateStores.toString)
     if (!hasControlPlane)
       GraftCore(spark, taskDirs, sources, resultBackends, defaultQueue, defaultTtlSec)
     else {
@@ -103,10 +99,6 @@ final case class GraftConfig(
 }
 
 object GraftConfig {
-  /** Session-conf key carrying `[app] stream_state_stores` to the stream
-    * runner (0 = derive from input volume; see `StreamOps.stateStores`). */
-  val StateStoresConfKey = "graft.stream.stateStores"
-
   private val Section = """^\s*\[([A-Za-z0-9_.]+)\]\s*$""".r
   private val KeyVal = """^\s*([A-Za-z0-9_]+)\s*=\s*(.+?)\s*$""".r
 
@@ -144,7 +136,6 @@ object GraftConfig {
       taskDirs = parseArray(kv.getOrElse("app.task_dirs", "[]")),
       sources = sub("db", "dir"),
       resultBackends = sub("results", "dir"),
-      streamStateStores = str("app.stream_state_stores", "0").toInt,
       controlDir = str("control.dir", ""),
       controlJdbcUrl = str("control.jdbc_url", ""),
       workerOnly = str("control.worker_only", "false").toBoolean,

@@ -17,16 +17,28 @@ object Tables {
     * footer/file-listing job (and a full inference pass for CSV/JSON), and a
     * Verify/Bench run constructs hundreds of queries — and a job server
     * binds thousands of jobs — that each load the same handful of tables;
-    * so the resolved DataFrame is memoized per (session, file identity).
-    * The key includes length+mtime, so a rewritten fixture reloads; the
-    * value is a logical plan (no data), so the map stays tiny. */
-  private val planCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * so the resolved DataFrame is memoized per session, kind and file. The
+    * value carries the file's length+mtime stamp: a rewritten file replaces
+    * its entry instead of adding one, so the map holds one logical plan (no
+    * data) per table file however often the source is rewritten. */
+  private val planCache =
+    new java.util.concurrent.ConcurrentHashMap[(Int, String, String), ((Long, Long), DataFrame)]()
 
-  def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    val f = resolve(sfDir, table)
-    val key = s"${System.identityHashCode(spark)}:${f.getCanonicalPath}:${f.length}:${f.lastModified}"
-    planCache.computeIfAbsent(key, _ => loadUncached(spark, sfDir, table))
+  private def cached(spark: SparkSession, kind: String, f: java.io.File)(
+      build: => DataFrame): DataFrame = {
+    val stamp = (f.length, f.lastModified)
+    planCache.compute((System.identityHashCode(spark), kind, f.getCanonicalPath),
+      (_, old) => if (old != null && old._1 == stamp) old else (stamp, build))._2
   }
+
+  /** Cached plans over `sfDir`'s `table` file, across sessions and kinds. */
+  private[graft] def cachedPlanCount(sfDir: String, table: String): Int = {
+    val path = resolve(sfDir, table).getCanonicalPath
+    planCache.keySet.stream.filter(_._3 == path).count.toInt
+  }
+
+  def load(spark: SparkSession, sfDir: String, table: String): DataFrame =
+    cached(spark, "load", resolve(sfDir, table))(loadUncached(spark, sfDir, table))
 
   /** The RAW (un-normalized) parquet frame for a table, memoized like
     * [[load]] — for consumers that need the file's own schema (the stream
@@ -35,8 +47,7 @@ object Tables {
   private[graft] def loadRawParquet(spark: SparkSession, sfDir: String,
       table: String): DataFrame = {
     val f = new java.io.File(s"$sfDir/$table.parquet")
-    val key = s"raw:${System.identityHashCode(spark)}:${f.getCanonicalPath}:${f.length}:${f.lastModified}"
-    planCache.computeIfAbsent(key, _ => spark.read.parquet(f.getPath))
+    cached(spark, "raw", f)(spark.read.parquet(f.getPath))
   }
 
   private def loadUncached(spark: SparkSession, sfDir: String, table: String): DataFrame = {

@@ -69,19 +69,13 @@ object StreamOps {
     * batch fixes the number of state stores, and per-batch commit I/O scales
     * with store count — over-provisioned stores dominate small-state runs
     * (measured: 2 stores ≈ 40% faster than 4 at sf0.1), under-provisioned
-    * ones serialize large-state runs. Explicit config wins
-    * (`[app] stream_state_stores` via [[graft.GraftConfig]], surfaced on the
-    * session as `graft.stream.stateStores`); otherwise derive one store per
-    * ~2 MiB of source (the sf0.1 measurement point), capped by the session's
+    * ones serialize large-state runs. So derive one store per ~2 MiB of
+    * source (the sf0.1 measurement point), capped by the session's
     * configured parallelism so a 100× input scales stores up to the cluster
     * size instead of pinning a constant. */
-  private[graft] def stateStores(s: SparkSession, inputBytes: Long, cap: Int): Int = {
-    val configured = s.conf.getOption(graft.GraftConfig.StateStoresConfKey)
-      .map(_.toInt).getOrElse(0)
-    if (configured > 0) math.min(configured, cap)
-    else if (inputBytes <= 0) cap
+  private[graft] def stateStores(inputBytes: Long, cap: Int): Int =
+    if (inputBytes <= 0) cap
     else math.max(1, math.min(cap, ((inputBytes + (2 << 20) - 1) / (2 << 20)).toInt))
-  }
 
   // Append-sink output dirs: one shared registry + ONE exit hook, instead of
   // a hook (plus a leaked dir) per replay — a long-lived server runs these
@@ -153,7 +147,7 @@ object StreamOps {
       skipNoDataBatch: Boolean = false): DataFrame = runLock.synchronized {
     val old = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions",
-      stateStores(s, inputBytes, old.toInt).toString)
+      stateStores(inputBytes, old.toInt).toString)
     // A stateful replay normally ends with a NO-DATA micro-batch whose only
     // job is advancing the watermark: state eviction, and — for operators
     // whose OUTPUT waits on the watermark (append-mode aggregations,

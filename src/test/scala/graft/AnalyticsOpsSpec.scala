@@ -3,12 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import OpsFixture._
+
 /** Semantics + plan shape for [[graft.operators.AnalyticsOps]] and the
   * foreachBatch upsert. Values are pinned by the DuckDB oracles; these specs
   * pin the invariants and the 100 TB plan shapes.
   */
 class AnalyticsOpsSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf001
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sf)

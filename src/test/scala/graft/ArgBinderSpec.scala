@@ -6,12 +6,12 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OneRowRelation}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Arbitrary, Gen, Prop, Test => SCTest}
+import OpsFixture.spark
 
 /** Placeholder binding: task SQL is parsed once with its placeholders as
   * Spark parameter markers, and each job's arguments become typed
   * `Literal`s in its copy of the plan ([[Executor.bindPlan]]). */
 class ArgBinderSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   private def parser = spark.sessionState.sqlParser
 
   /** The job's bound plan for task SQL, every table bound to one stub. */

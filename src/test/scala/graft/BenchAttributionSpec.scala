@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import OpsFixture.spark
 
 /** The bench's artifact-attribution contract: every pay-once artifact the
   * bench warms is genuinely pay-once — a SECOND warm pass over the same
@@ -8,7 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * numbers never silently absorb an ArtifactCache build. This is the spec
   * face of Bench's `artifact_builds` / `stray_builds` reporting. */
 class BenchAttributionSpec extends AnyFunSuite {
-  private val spark = TestSpark.spark
   private val sf = TestSpark.sf0001
 
   test("second warmArtifacts invocation builds zero artifacts") {

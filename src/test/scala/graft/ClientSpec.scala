@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import OpsFixture.spark
 
 /** e2e for the remote client SDK (the port of the reference's client test
   * suite driven through `client/client.go`'s typed verbs rather than raw
@@ -10,8 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * surface as [[ClientException]] with the envelope's message.
   */
 class ClientSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
   private lazy val (api, client) = {
     val tasksDir = Files.createTempDirectory("client-tasks")
     Files.writeString(tasksDir.resolve("t.sql"),

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
+import OpsFixture.spark
 
 /** Correctness of the §2C pipelines on *planted* duplicates/neighbors —
   * the oracle can't check the hash-based ops (no xxhash64 in DuckDB), so
@@ -11,7 +12,6 @@ import graft.operators._
   * unrelated rows MUST NOT pair.
   */
 class ExtensionOpsSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   /** Fixture dir with planted documents + embeddings. */

@@ -2,12 +2,11 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import OpsFixture.spark
 
 /** Custom expressions must be callable from *task SQL* — the job layer's
   * user surface — like built-ins. */
 class FunctionRegistrySpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
   test("task SQL can call word_shingles and cosine_similarity end-to-end") {
     val tasksDir = Files.createTempDirectory("fn-tasks")
     Files.writeString(tasksDir.resolve("t.sql"),

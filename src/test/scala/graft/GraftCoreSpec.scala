@@ -3,14 +3,13 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import OpsFixture.spark
 
 /** End-to-end job lifecycle through the library facade — the port of the
   * reference's client e2e suite (`client/client_test.go`): post jobs and
   * groups, poll state transitions, pending listing, cancellation, purge.
   */
 class GraftCoreSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
   private def newCore(results: String =
       Files.createTempDirectory("graft-e2e-results").toString): GraftCore = {
     val tasksDir = Files.createTempDirectory("graft-e2e-tasks")

@@ -5,13 +5,13 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
+import OpsFixture.spark
 
 /** e2e over the wire — the port of the reference's client test suite
   * (`client/client_test.go`): post jobs/groups over HTTP, poll status, list
   * pending, delete; envelope and field names per models.go.
   */
 class HttpApiSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   private val mapper = new ObjectMapper()
   private val client = HttpClient.newHttpClient()
 

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.DriverManager
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import OpsFixture.spark
 
 /** External-DB source parity: the reference's entire job is querying external
   * databases (`dbpool.go`, CI's Postgres/MySQL `entries` table,
@@ -13,7 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * path — jdbc: source URL, arg binding, canonical cast, materialization.
   */
 class JdbcSourceSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   private val url = "jdbc:derby:memory:graftdb;create=true"
 
   private def setupEntries(): Unit = {

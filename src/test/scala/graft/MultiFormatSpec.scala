@@ -2,14 +2,13 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import OpsFixture.spark
 
 /** Sources resolve per-table files in any supported format (parquet / csv /
   * json / orc) — tasks don't care where a named source keeps its bytes, the
   * same way reference tasks don't care which tagged DB serves them.
   */
 class MultiFormatSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
   test("a source dir can mix parquet, csv, json and orc tables") {
     val src = Files.createTempDirectory("fmt-src").toString
     val nation = Tables.load(spark, TestSpark.sf0001, "nation")
@@ -26,6 +25,15 @@ class MultiFormatSpec extends AnyFunSuite {
     val csv = Tables.load(spark, src, "region")
     assert(csv.schema("n_nationkey").dataType.typeName != "string")
     intercept[IllegalArgumentException](Tables.load(spark, src, "missing"))
+  }
+
+  test("a rewritten table file reloads and keeps one cached plan") {
+    val src = Files.createTempDirectory("fmt-rewrite").toString
+    for (n <- Seq(2L, 3L, 5L, 7L)) { // one write, then three rewrites
+      spark.range(n).write.mode("overwrite").parquet(s"$src/t.parquet")
+      assert(Tables.load(spark, src, "t").count() == n)
+    }
+    assert(Tables.cachedPlanCount(src, "t") == 1)
   }
 
   test("a job can run against a csv-backed source end-to-end") {

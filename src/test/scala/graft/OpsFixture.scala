@@ -1,0 +1,45 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, collect_set}
+
+/** The set-up the operator suites share, built at most once per test JVM:
+  * the session, the fixture directories and the replay helpers. A suite
+  * takes them with `import OpsFixture._`. */
+object OpsFixture {
+  lazy val spark: SparkSession = TestSpark.spark
+  val dir: String = TestSpark.sf0001
+
+  /** Spark round() semantics on doubles: decimal HALF_UP at 6 places. */
+  def r6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** ln quantized to DECIMAL(18,6) — the repo's engine-exact log unit. A
+    * count or a ratio, without a lossy Long-to-Double widening. */
+  def qln[N](x: N)(implicit n: Numeric[N]): BigDecimal =
+    BigDecimal(math.log(n.toDouble(x))).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+
+  /** `df`'s physical plan, as EXPLAIN FORMATTED prints it. */
+  def fmt(df: DataFrame): String =
+    df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+
+  /** Shuffles a formatted plan adds. Excludes ReusedExchange too: a reuse
+    * node is not a new shuffle, and counting it would fail an
+    * exchange-count pin for the wrong reason. */
+  def nonBroadcastExchanges(plan: String): Int =
+    "(?<!Broadcast)(?<!Reused)Exchange \\(".r.findAllIn(plan).length
+
+  /** The lineitem co-purchase edge set (a < b), collected: small at
+    * sf0.001. */
+  lazy val localEdges: Set[(Long, Long)] =
+    Tables.load(spark, dir, "lineitem")
+      .groupBy(col("l_orderkey"))
+      .agg(collect_set(col("l_partkey")).as("ps"))
+      .collect()
+      .flatMap { r =>
+        val ps = r.getSeq[Long](1).sorted
+        for (i <- ps.indices; j <- (i + 1) until ps.length) yield (ps(i), ps(j))
+      }
+      .toSet
+}

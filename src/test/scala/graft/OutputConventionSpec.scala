@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import OpsFixture.spark
 
 /** Suite-wide output-schema convention: every query's result columns are
   * float-once/int64/string/date — never DECIMAL. The driver's hash gate
@@ -12,7 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * float sums; they just must be cast to DOUBLE before the final select.
   */
 class OutputConventionSpec extends AnyFunSuite {
-  private val spark = TestSpark.spark
   private val sf = TestSpark.sf0001
 
   private def decimalLeaves(dt: DataType, path: String): Seq[String] = dt match {

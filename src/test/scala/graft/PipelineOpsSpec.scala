@@ -3,6 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import OpsFixture._
+
 /** Semantics + plan shape for the corpus-curation operators
   * (`graft.operators.PipelineOps`): deterministic sampling, stratified
   * quotas, sequence packing, decontamination, range search. Value-level
@@ -11,7 +13,6 @@ import org.apache.spark.sql.functions._
   * invariants, and the physical-plan shapes that decide 100 TB behavior.
   */
 class PipelineOpsSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf001
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sf)

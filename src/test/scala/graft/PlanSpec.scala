@@ -3,12 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.RelOps
 
+import OpsFixture._
+
 /** Physical-plan hygiene: the properties that decide whether these operators
   * survive a 100 TB scale-up. Asserting them here keeps a refactor from
   * silently regressing pushdown/pruning/broadcast/codegen.
   */
 class PlanSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf0001
 
   private def formatted(name: String): String = {

@@ -6,15 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.functions.PolyHash
 import graft.operators.{AnalyticsOps, DedupOps}
 
+import OpsFixture._
+
 /** Round-8 eighth batch: the 1-bit MinHash estimator audit and the
   * seasonal-naive forecast backtest. */
 class RoundEightBatchEightSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** 3-word shingle set — the [[DedupOps]] / oracle convention. */
   private def shingleSet(text: String): Set[String] = {
     val w = text.split(" ", -1)

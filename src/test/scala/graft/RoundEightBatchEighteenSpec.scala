@@ -7,15 +7,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{AnalyticsOps, TextOps}
 
+import OpsFixture._
+
 /** Round-8 eighteenth batch: weekly growth accounting and the language-ID
   * confusion report, replayed brute-force. */
 class RoundEightBatchEighteenSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("events_lifecycle: growth quadrants replay and obey the identity") {
     val uw = Tables.load(spark, dir, "events")
       .select(col("user_id"), to_date(date_trunc("week", col("ts"))))

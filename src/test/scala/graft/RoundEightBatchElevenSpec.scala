@@ -7,18 +7,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{AnalyticsOps, GraphOps, TextOps}
 
+import OpsFixture._
+
 /** Round-8 eleventh batch: Kaplan–Meier conversion survival, cohort LTV,
   * weak ties / local bridges, and head-vocabulary coverage. */
 class RoundEightBatchElevenSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def qln(x: Double): BigDecimal =
-    BigDecimal(math.log(x)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-
   test("events_survival: KM curve replays by brute-force risk-set scan") {
     val evs = Tables.load(spark, dir, "events")
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")))

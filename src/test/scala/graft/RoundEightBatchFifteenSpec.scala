@@ -6,15 +6,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.{MultimodalOps, PipelineOps}
 
+import OpsFixture._
+
 /** Round-8 fifteenth batch: real-raster luminance histogram and the
   * deterministic Poisson-bootstrap confidence interval. */
 class RoundEightBatchFifteenSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("mm_luma_hist: BT.601 buckets replay from the synthesis arithmetic") {
     val texts = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text")).collect()

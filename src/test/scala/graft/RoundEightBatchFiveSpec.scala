@@ -6,16 +6,12 @@ import org.apache.spark.sql.functions._
 import graft.operators.{RelOps, SimilarityOps}
 import graft.streaming.StreamOps
 
+import OpsFixture._
+
 /** Round-8 fifth batch: the watermark-lateness audit, the embedding
   * hubness histogram, and the truncated exact EWMA. Brute-force local
   * replays on sf0.001, exact agreement demanded. */
 class RoundEightBatchFiveSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("watermark_audit: sequential skewed-arrival replay matches the two-phase prefix max") {
     val evs = Tables.load(spark, dir, "events")
       .select(col("event_id"), unix_micros(col("ts")), col("event_type"),

@@ -5,32 +5,16 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{AnalyticsOps, GraphOps}
 
+import OpsFixture._
+
 /** Round-8 fourth batch: synchronous label propagation, day-of-week
   * seasonality, and interpolated Kneser–Ney bigram smoothing. Each test
   * replays the operator brute-force on the sf0.001 fixture and demands
   * exact agreement — labels, counts and the integer-ratio probabilities
   * alike. */
 class RoundEightBatchFourSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  /** Spark round() semantics on doubles: decimal HALF_UP at 6 places. */
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def localEdges(): Set[(Long, Long)] = {
-    val baskets = Tables.load(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).values.map(_.map(_._2).toSet)
-    baskets.flatMap { ps =>
-      val v = ps.toSeq.sorted
-      for (i <- v.indices; j <- i + 1 until v.length) yield (v(i), v(j))
-    }.toSet
-  }
-
   test("graph_label_prop: two synchronous min-tie majority rounds replay exactly") {
-    val adj = localEdges().toSeq
+    val adj = localEdges.toSeq
       .flatMap { case (a, b) => Seq(a -> b, b -> a) }
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     var lbl: Map[Long, Long] = adj.keys.map(v => v -> v).toMap

@@ -5,16 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.SimilarityOps
 
+import OpsFixture._
+
 /** Round-8 fourteenth batch: random-hyperplane LSH ANN. The replay builds
   * signatures, multiprobe candidates and the exact-cosine rerank
   * brute-force on the driver from the raw fixture vectors. */
 class RoundEightBatchFourteenSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("sim_search_lsh: signatures, multiprobe and rerank replay brute-force") {
     val vecs = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"))

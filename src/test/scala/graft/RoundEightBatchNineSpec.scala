@@ -5,15 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{AnalyticsOps, DedupOps, GraphOps, MultimodalOps}
 
+import OpsFixture._
+
 /** Round-8 ninth batch: per-source scene cuts over really-decoded
   * rasters, the degree histogram, and exact-dedup impact accounting. */
 class RoundEightBatchNineSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("mm_scene_cut: per-source cut census replays through a REAL BMP decode") {
     val rows = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("text")).collect()

@@ -5,15 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{AnalyticsOps, TextOps}
 
+import OpsFixture._
+
 /** Round-8 nineteenth batch: duplication-vs-quality correlation and the
   * SCD2 point-in-time snapshot, replayed brute-force. */
 class RoundEightBatchNineteenSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("quality_dup_correlation: bucket stats replay brute-force") {
     val scored = Tables.load(spark, dir, "documents")
       .select(col("text")).collect().map(_.getString(0))

@@ -5,15 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{SimilarityOps, TextOps}
 
+import OpsFixture._
+
 /** Round-8 seventh batch: the IVF recall@k curve and the hapax-legomena
   * vocabulary audit, replayed brute-force on sf0.001. */
 class RoundEightBatchSevenSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("sim_recall_curve: local exact + IVF retrieval replay per cutoff") {
     val embs = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding")).collect()

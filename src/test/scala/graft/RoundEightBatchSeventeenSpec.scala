@@ -7,15 +7,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.AnalyticsOps
 
+import OpsFixture._
+
 /** Round-8 seventeenth batch: STL-shaped daily decomposition and the
   * join-key skew audit, replayed brute-force. */
 class RoundEightBatchSeventeenSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("events_decompose: rational components replay and sum back to y") {
     val daily = Tables.load(spark, dir, "events")
       .select(col("event_type"), to_date(col("ts")))

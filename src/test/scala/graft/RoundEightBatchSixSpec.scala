@@ -5,20 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.AnalyticsOps
 
+import OpsFixture._
+
 /** Round-8 sixth batch: autocorrelation, CUSUM changepoint and
   * co-occurrence PMI over the events table — each replayed brute-force
   * from the raw sf0.001 events with exact integer/decimal arithmetic. */
 class RoundEightBatchSixSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** ln quantized to DECIMAL(18,6) — the repo's engine-exact log unit. */
-  private def qln(x: Long): BigDecimal =
-    BigDecimal(math.log(x.toDouble)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-
   /** (type, epoch-day, user) triples collected once. */
   private lazy val evDays: Array[(String, Long, Long)] =
     Tables.load(spark, dir, "events")

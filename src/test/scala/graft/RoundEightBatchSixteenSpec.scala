@@ -7,15 +7,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.AnalyticsOps
 
+import OpsFixture._
+
 /** Round-8 sixteenth batch: daily new-vs-returning split and the
   * 24-hour-windowed conversion funnel, replayed brute-force. */
 class RoundEightBatchSixteenSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   private lazy val evs: Array[(Long, String, Long)] =
     Tables.load(spark, dir, "events")
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")))

@@ -6,15 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.functions.PolyHash
 import graft.operators.RelOps
 
+import OpsFixture._
+
 /** Round-8 tenth batch: the count-min sketch audit and the trailing-hour
   * RANGE window. */
 class RoundEightBatchTenSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("agg_cm_sketch: grid build, min-estimate and overestimate replay exactly") {
     val users = Tables.load(spark, dir, "events")
       .select(col("user_id")).collect().map(_.getLong(0))

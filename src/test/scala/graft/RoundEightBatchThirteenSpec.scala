@@ -7,20 +7,13 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.AnalyticsOps
 
+import OpsFixture._
+
 /** Round-8 thirteenth batch: median/MAD anomaly monitor, held-out unigram
   * perplexity, daily-count correlation matrix, and top-20 leaderboard
   * churn. Every test replays the statistic brute-force from the raw
   * fixture rows on the driver. */
 class RoundEightBatchThirteenSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def qln(x: Double): BigDecimal =
-    BigDecimal(math.log(x)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-
   private lazy val evDays: Array[(String, LocalDate, Long)] =
     Tables.load(spark, dir, "events")
       .select(col("event_type"), expr("CAST(ts AS DATE)"), col("user_id"))

@@ -5,20 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{AnalyticsOps, TextOps}
 
+import OpsFixture._
+
 /** Round-8 twelfth batch: Gini revenue concentration, whale share,
   * inter-arrival cadence histogram, unigram domain-shift KL, and word
   * burstiness. Every test replays the statistic brute-force from the raw
   * fixture rows on the driver. */
 class RoundEightBatchTwelveSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def qln(x: Double): BigDecimal =
-    BigDecimal(math.log(x)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-
   private def dec6(x: Double): BigDecimal =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
 

@@ -5,15 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{AnalyticsOps, TextOps}
 
+import OpsFixture._
+
 /** Round-8 twenty-fifth batch: ingest data-quality gate and the encoding
   * audit, replayed brute-force. */
 class RoundEightBatchTwentyFiveSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("events_dq_report: contract checks replay brute-force") {
     val evs = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("value"), unix_micros(col("ts")))

@@ -6,15 +6,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.{AnalyticsOps, RelOps}
 
+import OpsFixture._
+
 /** Round-8 twenty-fourth batch: whole-catalog migration checksum and the
   * bot-suspect z-score screen, replayed brute-force. */
 class RoundEightBatchTwentyFourSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("catalog_checksum: covers every table; fingerprints detect a flip") {
     val got = RelOps.queries("catalog_checksum")(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),

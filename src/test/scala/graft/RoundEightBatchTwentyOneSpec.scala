@@ -5,15 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.AnalyticsOps
 
+import OpsFixture._
+
 /** Round-8 twenty-first batch: masked safe view and the hour-of-day
   * activity profile, replayed brute-force. */
 class RoundEightBatchTwentyOneSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("privacy_safe_view: masking replays and no raw identifier survives") {
     val evs = Tables.load(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")), col("event_type"),

@@ -6,15 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.operators.AnalyticsOps
 import graft.streaming.StreamOps
 
+import OpsFixture._
+
 /** Round-8 twentieth batch: streaming quality gate and the k-anonymity
   * audit, replayed brute-force. */
 class RoundEightBatchTwentySpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   private def margin(t: String): Long = {
     val ws = t.split(" ", -1)
     val fLen = math.min(ws.length.toLong, 200L)

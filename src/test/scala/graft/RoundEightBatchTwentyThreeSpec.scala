@@ -5,18 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{PipelineOps, SimilarityOps}
 
+import OpsFixture._
+
 /** Round-8 twenty-third batch: leave-one-out kNN label accuracy and the
   * lognormal length model, replayed brute-force. */
 class RoundEightBatchTwentyThreeSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def qln(x: Double): BigDecimal =
-    BigDecimal(math.log(x)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-
   test("embedding_knn_eval: panel accuracy replays brute-force") {
     val vecs = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"))

@@ -5,15 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.AnalyticsOps
 
+import OpsFixture._
+
 /** Round-8 twenty-second batch: session-length distribution and the
   * Benford first-digit audit, replayed brute-force. */
 class RoundEightBatchTwentyTwoSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   test("session_stats: value-grain order statistics replay brute-force") {
     val evs = Tables.load(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")), col("event_id"))

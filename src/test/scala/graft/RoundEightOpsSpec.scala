@@ -5,25 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{AnalyticsOps, GraphOps, PipelineOps, RelOps, SimilarityOps, TextOps}
 
+import OpsFixture._
+
 /** Round-8 first batch: per-vertex clustering coefficients and brand-
   * partition modularity. Both are checked against brute-force local
   * recomputation on the sf0.001 fixture, not just shape. */
 class RoundEightOpsSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  /** The co-occurrence edge set, collected: small at sf0.001. */
-  private lazy val localEdges: Set[(Long, Long)] =
-    Tables.load(spark, dir, "lineitem")
-      .groupBy(col("l_orderkey"))
-      .agg(collect_set(col("l_partkey")).as("ps"))
-      .collect()
-      .flatMap { r =>
-        val ps = r.getSeq[Long](1).sorted
-        for (i <- ps.indices; j <- (i + 1) until ps.length) yield (ps(i), ps(j))
-      }
-      .toSet
-
   private lazy val localTriPerVertex: Map[Long, Long] = {
     val adj = localEdges.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap

@@ -5,29 +5,16 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.GraphOps
 
+import OpsFixture._
+
 /** Round-8 specs: the convergence-checked integer PageRank (≥10 sweeps,
   * per-sweep pinning) and the real-codec multimodal resample paths. Each
   * test pins the property that makes the operator correct — the exact
   * integer replay, the constant-depth sweep plan — not just its shape. */
 class RoundEightSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  /** The engine's co-occurrence edge set, derived locally. */
-  private def localEdges(): Set[(Long, Long)] = {
-    val baskets = Tables.load(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).values.map(_.map(_._2).toSet)
-    baskets.flatMap { ps =>
-      val v = ps.toSeq.sorted
-      for (i <- v.indices; j <- i + 1 until v.length) yield (v(i), v(j))
-    }.toSet
-  }
-
   test("graph_pagerank: engine sweeps equal an exact local integer replay") {
     import GraphOps.{pagerankIters, pagerankScale}
-    val edges = localEdges()
+    val edges = localEdges
     val sym = edges.toSeq.flatMap { case (a, b) => Seq((a, b), (b, a)) }
     val deg = sym.groupBy(_._1).view.mapValues(_.size.toLong).toMap
     val nv = deg.size.toLong

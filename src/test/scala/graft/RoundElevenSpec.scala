@@ -6,6 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.GraphOps
 
+import OpsFixture._
+
 /** Round-11 specs, closing the round-10 verdict's ranked directives:
   *
   *   1. `graph_random_walk` rides the new id-sorted adjacency artifact
@@ -34,18 +36,6 @@ import graft.operators.GraphOps
   *      artifact exists.
   */
 class RoundElevenSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def fmt(df: DataFrame): String =
-    df.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-
-  private def nonBroadcastExchanges(plan: String): Int =
-    // exclude ReusedExchange too: a reuse node is not a new shuffle, and
-    // counting it would fail the exchange-count pin for the wrong reason
-    "(?<!Broadcast)(?<!Reused)Exchange \\(".r.findAllIn(plan).length
-
   // ------------------------- 1. random_walk rides the sorted-adjacency
 
   test("walk hop: probes the id-sorted adjacency artifact, no in-query fold") {

@@ -6,6 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{DedupOps, GraphOps, KcoreReference}
 import graft.plans.Checkpoints
 
+import OpsFixture._
+
 /** Round-15 specs: the sweep-pin release contract is now ENFORCED, not
   * caller-discipline-only (the r14 verdict's #3 and the r14 ADVICE):
   *
@@ -22,9 +24,6 @@ import graft.plans.Checkpoints
   *     bound RoundFourteenSpec pins for pagerank/eigencentrality.
   */
 class RoundFifteenSpec extends AnyFunSuite {
-  private lazy val spark: SparkSession = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
   /** A session with the paranoid-release conf on — newSession shares the
     * SparkContext (and artifact cache) but owns its SQLConf, the
     * RoundThirteenSpec isolation convention. */

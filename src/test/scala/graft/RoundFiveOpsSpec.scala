@@ -4,6 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
+import OpsFixture._
+
 /** Round-5 regression specs: queries must be LAZY plans (constructing one
   * runs no ad-hoc Spark job) and pay-once artifacts must actually be
   * pay-once (re-requesting one triggers no rebuild). Both properties are
@@ -13,7 +15,6 @@ import org.apache.spark.sql.functions._
   * an outage.
   */
 class RoundFiveOpsSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf001
 
   /** Stage names of Spark jobs started while `body` runs. Listener delivery

@@ -4,10 +4,11 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
 
+import OpsFixture._
+
 /** Hand-computed semantics for the round-4 additions: repetition signals,
   * document-frequency scoring, and deterministic k-means clustering. */
 class RoundFourOpsSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   /** Tiny documents fixture with exactly known word statistics. */

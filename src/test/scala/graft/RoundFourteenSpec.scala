@@ -7,6 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{GraphOps, KcoreReference}
 
+import OpsFixture._
+
 /** Round-14 specs: the degenerate (edgeless) graph no longer NPEs any
   * driver-side scalar read — the r13 verdict's #3 closed the class at
   * the two remaining sites:
@@ -25,8 +27,6 @@ import graft.operators.{GraphOps, KcoreReference}
   * part of the pinned contract.
   */
 class RoundFourteenSpec extends AnyFunSuite {
-  private lazy val spark: SparkSession = TestSpark.spark
-
   /** A fixture dir with an empty (zero-row, same-schema) lineitem. */
   private lazy val emptyDir: String = {
     val d = Files.createTempDirectory("graft-empty-fixture-").toFile
@@ -56,8 +56,6 @@ class RoundFourteenSpec extends AnyFunSuite {
   }
 
   // --------------- kcore delta peeling (r13 verdict #4)
-
-  private val dir = TestSpark.sf0001
 
   test("graph_kcore: delta peeling is bit-identical to the " +
       "edge-restriction spelling, in both adjacency layouts") {

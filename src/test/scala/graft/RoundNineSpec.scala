@@ -4,6 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.GraphOps
 
+import OpsFixture._
+
 /** Round-9 specs: the size-gated broadcast state in the iterative graph
   * sweeps. Below [[Limits.maxBroadcastVertices]] the vertex-sized rank
   * state broadcasts (the sf-scale fast path); above it — the 10⁹-vertex
@@ -12,9 +14,6 @@ import graft.operators.GraphOps
   * shape of each branch and the bit-identity of their results are pinned.
   */
 class RoundNineSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
   private def sweepPlan(broadcastState: Boolean): String = {
     import spark.implicits._
     val symd = Seq((1L, 1L, Seq(2L)), (2L, 2L, Seq(1L, 3L)), (3L, 1L, Seq(2L)))

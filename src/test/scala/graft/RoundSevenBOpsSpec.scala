@@ -6,13 +6,12 @@ import java.nio.file.Files
 
 import graft.operators.{AnalyticsOps, TextOps}
 
+import OpsFixture._
+
 /** Round-7 second batch: last-touch attribution, character entropy,
   * streaming heavy hitters. Values are oracle-pinned; these specs pin the
   * semantic invariants. */
 class RoundSevenBOpsSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
   test("events_attribution: channels bounded; every conversion replays by hand") {
     val rows = AnalyticsOps.eventsAttribution(spark, dir).collect()
     assert(rows.nonEmpty)

@@ -5,14 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{AnalyticsOps, DedupOps, GraphOps, PipelineOps, RelOps, SimilarityOps}
 
+import OpsFixture._
+
 /** Round-7 third batch: multi-source BFS, daily sequence-pattern census,
   * per-dimension embedding profile. Each spec cross-checks the operator
   * against an independently computed (driver-side brute force) answer on
   * the sf0.001 fixture — the property, not just the shape. */
 class RoundSevenBatchThreeSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
   test("graph_bfs: histogram matches a driver-side BFS over the same edges") {
     // brute-force BFS from the 3 smallest vertices on the collected edge set
     val e = Tables.load(spark, dir, "lineitem")

@@ -5,13 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{GraphOps, PipelineOps, RelOps, SourceFormatOps}
 
+import OpsFixture._
+
 /** Round-7 second batch: interval-overlap sweep, table fingerprint,
   * weighted sampling, JDBC source scan, Jaccard tie strength. Each spec
   * pins the property that makes the operator correct, not just its shape. */
 class RoundSevenBatchTwoSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
   test("join_interval_overlap: sweep total equals the quadratic pair count") {
     import scala.jdk.CollectionConverters._
     // brute-force the same definition per customer on the fixture

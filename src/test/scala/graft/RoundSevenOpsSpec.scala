@@ -5,13 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{DedupOps, PipelineOps, SimilarityOps}
 
+import OpsFixture._
+
 /** Round-7 additions: JL projection, Z-order layout audit, Bloom ingest
   * prefilter. Each spec pins the property that makes the operator worth
   * running, not just its shape. */
 class RoundSevenOpsSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
   test("embedding_project: k rows per vector, deterministic, exact int arithmetic") {
     val out = SimilarityOps.embeddingProject(spark, dir)
     assert(out.schema.fieldNames.toSeq == Seq("vec_id", "j", "y"))

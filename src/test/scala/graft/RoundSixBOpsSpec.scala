@@ -4,6 +4,8 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{DedupOps, GraphOps, PipelineOps}
 
+import OpsFixture._
+
 /** Second round-6 wave: containment dedup, the co-occurrence graph family,
   * and the shard manifest. The DuckDB oracle proves engine agreement on the
   * fixtures; these specs pin the semantics the oracle can't see — that
@@ -12,7 +14,6 @@ import graft.operators.{DedupOps, GraphOps, PipelineOps}
   * assignment is a deterministic partition of the corpus.
   */
 class RoundSixBOpsSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   /** Docs: a 30-word snippet (0) pasted verbatim at the head of a 230-word

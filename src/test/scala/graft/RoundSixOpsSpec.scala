@@ -4,6 +4,8 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{AnalyticsOps, PipelineOps, TextOps}
 
+import OpsFixture._
+
 /** Round-6 curation operators on planted fixtures: the value-level oracle
   * proves engine agreement, these specs pin the SEMANTICS the oracle can't
   * see — that the dataset split is leakage-proof by construction, the mix
@@ -12,7 +14,6 @@ import graft.operators.{AnalyticsOps, PipelineOps, TextOps}
   * scorer's decision is exactly its integer margin's sign.
   */
 class RoundSixOpsSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   /** Docs fixture: two exact copies (0,1), common-word prose (2), one

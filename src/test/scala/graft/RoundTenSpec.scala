@@ -5,6 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{GraphOps, KcoreReference}
 
+import OpsFixture._
+
 /** Round-10 specs: the vertex-broadcast size gate generalized across the
   * graph family (round-9 verdict directive #1). Every query that joins a
   * vertex- or item-dimension-scaling frame now threads ONE injectable gate
@@ -28,13 +30,6 @@ import graft.operators.{GraphOps, KcoreReference}
   * in-query re-derivations.
   */
 class RoundTenSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def fmt(df: DataFrame): String =
-    df.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-
   // ---------------------------------------- 1. both paths, bit-identical
 
   private val gated: Seq[(String, (org.apache.spark.sql.SparkSession, String, Long) => DataFrame)] = Seq(

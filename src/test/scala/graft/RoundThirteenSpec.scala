@@ -9,6 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.GraphOps
 import graft.plans.Checkpoints
 
+import OpsFixture._
+
 /** Round-13 specs, closing the round-12 verdict's top directives:
   *
   *   1. The reliable-checkpoint switch is ENGINE-WIDE
@@ -30,16 +32,6 @@ import graft.plans.Checkpoints
   *      union-find oracle.
   */
 class RoundThirteenSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def fmt(df: DataFrame): String =
-    df.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-
-  private def nonBroadcastExchanges(plan: String): Int =
-    "(?<!Broadcast)(?<!Reused)Exchange \\(".r.findAllIn(plan).length
-
   /** A session whose SQLConf flips the sweep mode without touching the
     * suite-shared session (newSession shares the SparkContext — and thus
     * the checkpoint dir — but owns its conf, exactly the isolation the

@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
 
+import OpsFixture._
+
 /** Semantics of the round-3 additions beyond what the DuckDB oracle pins:
   * chunk overlap/reconstruction, quantization bounds, k-NN agreement with
   * brute force, subquery-vs-join equivalence, lossless format roundtrips,
@@ -11,7 +13,6 @@ import graft.operators._
   * rewrite of IN).
   */
 class RoundThreeOpsSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   import spark.implicits._
   private val sf = TestSpark.sf0001
 

@@ -6,6 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.GraphOps
 
+import OpsFixture._
+
 /** Round-12 specs, closing the round-11 verdict's ranked directives:
   *
   *   1. `graph_label_prop` round 1 rides the algebraic collapse
@@ -24,16 +26,6 @@ import graft.operators.GraphOps
   *      write.
   */
 class RoundTwelveSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
-  private def fmt(df: DataFrame): String =
-    df.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-
-  private def nonBroadcastExchanges(plan: String): Int =
-    "(?<!Broadcast)(?<!Reused)Exchange \\(".r.findAllIn(plan).length
-
   // --------------- 1. label_prop round 1: the algebraic collapse
 
   test("labelPropFirstRound: bit-identical to the general round on the " +

@@ -3,10 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.SaltedJoin
+import OpsFixture.spark
 
 class SaltedJoinSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
   test("salted join equals the plain equi-join (semantics preserved)") {
     val li = Tables.load(spark, TestSpark.sf0001, "lineitem")
     val part = Tables.load(spark, TestSpark.sf0001, "part")

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{Sessionize, StreamOps}
 
-class StreamingSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+import OpsFixture._
 
+class StreamingSpec extends AnyFunSuite {
   test("stream sources read a Spark-written DIRECTORY fixture, not just single files") {
     // pathGlobFilter matches leaf names — over a directory of part-files a
     // '<table>.parquet' glob silently streams ZERO rows (this hid all
@@ -135,19 +135,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.toSeq == expected.toSeq)
   }
 
-  test("stream state-store count: config wins, else derived from input volume") {
-    val key = GraftConfig.StateStoresConfKey
-    spark.conf.unset(key)
-    assert(StreamOps.stateStores(spark, 5L << 20, 32) == 3) // ceil(5MiB / 2MiB)
-    assert(StreamOps.stateStores(spark, 1L, 32) == 1)
-    assert(StreamOps.stateStores(spark, 1L << 40, 32) == 32) // capped at parallelism
-    assert(StreamOps.stateStores(spark, -1L, 32) == 32) // unknown volume: don't shrink
-    spark.conf.set(key, "5")
-    try assert(StreamOps.stateStores(spark, 1L, 32) == 5)
-    finally spark.conf.unset(key)
-    val cfg = GraftConfig.fromString("[app]\nstream_state_stores = 4", env = Map.empty)
-    assert(cfg.streamStateStores == 4)
-    assert(GraftConfig.fromString("", env = Map.empty).streamStateStores == 0)
+  test("stream state-store count: derived from input volume") {
+    assert(StreamOps.stateStores(5L << 20, 32) == 3) // ceil(5MiB / 2MiB)
+    assert(StreamOps.stateStores(1L, 32) == 1)
+    assert(StreamOps.stateStores(1L << 40, 32) == 32) // capped at parallelism
+    assert(StreamOps.stateStores(-1L, 32) == 32) // unknown volume: don't shrink
   }
 
   test("sessionization: streaming flatMapGroupsWithState equals batch sessions") {

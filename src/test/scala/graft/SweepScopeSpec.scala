@@ -1,13 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import OpsFixture.spark
 
 /** `GraphOps.noSweepAqe`, the scope around every iterative graph loop:
   * inside it, AQE is off and jobs carry the sweep call site; on exit the
   * caller's AQE setting and call site are back as they were. */
 class SweepScopeSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
   test("noSweepAqe restores the caller's call site and AQE setting") {
     val sc = spark.sparkContext
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")

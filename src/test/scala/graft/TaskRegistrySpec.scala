@@ -2,9 +2,9 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import OpsFixture.spark
 
 class TaskRegistrySpec extends AnyFunSuite {
-  private def spark = TestSpark.spark
   private val src = SourcePool(Map("db_a" -> TestSpark.sf0001, "db_b" -> TestSpark.sf0001))
   private val bk = SourcePool(Map("res1" -> "/tmp/graft-res"))
 

@@ -5,15 +5,14 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{TpchFixture, TpchOps}
 
+import OpsFixture._
+
 /** The round-7 TPC-H completions (Q2/Q7/Q8/Q9/Q11/Q12/Q13/Q15/Q16/Q17/
   * Q19/Q20/Q21/Q22). Values are pinned by the DuckDB oracle gate; these
   * specs pin the RELATIONAL properties each shape exists to exercise —
   * the invariants a value hash can accidentally survive without.
   */
 class TpchShapesSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = TestSpark.sf0001
-
   test("q7: only crossing nation pairs survive; both directions appear") {
     // sf0.01: the two-nation flow is empty at sf0.001 (8 customers/nation)
     val rows = TpchOps.tpchQ7(spark, TestSpark.sf001).collect()

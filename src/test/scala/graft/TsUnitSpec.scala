@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamOps
+import OpsFixture.spark
 
 /** Schema-on-read adaptation of `events.ts` (the round-6 breakage class):
   * fixture generations have shipped ts as TIMESTAMP(NANOS), TIMESTAMP(MICROS)
@@ -18,7 +19,6 @@ import graft.streaming.StreamOps
   * sqldb.go:254-281) and never hard-codes a unit.
   */
 class TsUnitSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   // one fixed instant, expressed in every unit the detector must classify
