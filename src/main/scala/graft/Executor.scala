@@ -23,6 +23,10 @@ import scala.util.Random
   * `sparkContext.cancelJobGroup(jobId)` is then the 1:1 port of the
   * reference's per-job `context.CancelFunc` (`core.go:457-468`), and strictly
   * stronger: it kills every stage of the plan, not just the driver-side wait.
+  * The job runs inside [[JobLiterals.asJob]], so its plan reads its
+  * primitive literals from the generated class's `references` instead of
+  * its source text: a task's generated code is compiled on its first job,
+  * and every later job, whatever its arguments, reuses the class.
   *
   * Materialization (`writeResults`, core.go:511-572): pick a random result
   * backend, cast the result to the canonical 6-type schema (§1.2), and write
@@ -129,7 +133,7 @@ object Executor {
   def run(spark: SparkSession, job: Job, task: Task, rnd: Random = Random): ExecResult = {
     val sc = spark.sparkContext
     sc.setJobGroup(job.id, s"graft task=${task.name} job=${job.id}", interruptOnCancel = true)
-    try {
+    try JobLiterals.asJob(spark, job.id) {
       // named DB else random pick (core.go:483-492)
       val (srcName, srcDir) = job.db match {
         case Some(name) => (name, task.dbs.get(name))

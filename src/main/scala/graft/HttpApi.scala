@@ -22,6 +22,10 @@ import scala.util.control.NonFatal
 final class HttpApi(core: GraftCore, port: Int = 0) {
   private val mapper = new ObjectMapper()
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[HttpApi])
+  // TCP_NODELAY on every connection: a response leaves as headers then body,
+  // and under Nagle the body waits ~40 ms for the client's delayed ACK. The
+  // JDK reads the property once, when the first server loads its config.
+  System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
 
   def boundPort: Int = server.getAddress.getPort

@@ -14,7 +14,7 @@ class ArtifactEvictionSpec extends AnyFunSuite {
   import graft.plans.ArtifactCache
 
   private def freshSrc(): String =
-    java.nio.file.Files.createTempDirectory("evictsrc").toFile.getPath
+    TempDirs.make("evictsrc").toFile.getPath
 
   test("stale same-kind siblings evict on publish; hits refresh the LRU clock") {
     val kind = s"evicttest${System.nanoTime()}"

@@ -81,7 +81,7 @@ class BpeTokenizerSpec extends AnyFunSuite {
   test("text_bpe_pairs recovers the next merge the embedded table actually learns") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-bpepairs").toString
+    val d = TempDirs.make("graft-bpepairs").toString
     // at the 28-char-pair mid-training state, 'the' is (th, e): a corpus
     // dominated by 'the' must rank that pair first — and ('th','e') IS
     // rule 29 of the embedded table, the composition a trainer learns next

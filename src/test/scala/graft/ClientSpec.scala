@@ -12,7 +12,7 @@ import OpsFixture.spark
   */
 class ClientSpec extends AnyFunSuite {
   private lazy val (api, client) = {
-    val tasksDir = Files.createTempDirectory("client-tasks")
+    val tasksDir = TempDirs.make("client-tasks")
     Files.writeString(tasksDir.resolve("t.sql"),
       """-- name: summary
         |-- queue: client_test
@@ -24,7 +24,7 @@ class ClientSpec extends AnyFunSuite {
         |SELECT n, graft_sleep(1500) AS slept
         |FROM (SELECT COUNT(*) AS n FROM events e1, events e2 WHERE e1.user_id = $1);
         |""".stripMargin)
-    val out = Files.createTempDirectory("client-out").toString
+    val out = TempDirs.make("client-out").toString
     val core = GraftCore(spark, Seq(tasksDir.toString),
       Map("db" -> TestSpark.sf0001), Map("res" -> out))
     val a = new HttpApi(core).start()

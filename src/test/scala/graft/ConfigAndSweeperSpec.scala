@@ -45,10 +45,10 @@ class ConfigAndSweeperSpec extends AnyFunSuite {
   }
 
   test("config boots a working core end-to-end") {
-    val taskDir = Files.createTempDirectory("cfg-tasks")
+    val taskDir = TempDirs.make("cfg-tasks")
     Files.writeString(taskDir.resolve("t.sql"),
       "-- name: n_events\nSELECT COUNT(*) AS n FROM events;\n")
-    val out = Files.createTempDirectory("cfg-out").toString
+    val out = TempDirs.make("cfg-out").toString
     val cfg = GraftConfig.fromString(
       s"""[app]
          |task_dirs = ["$taskDir"]
@@ -69,10 +69,10 @@ class ConfigAndSweeperSpec extends AnyFunSuite {
   }
 
   test("[app] default_queue and default_job_ttl reach booted tasks and jobs") {
-    val taskDir = Files.createTempDirectory("cfg-defaults")
+    val taskDir = TempDirs.make("cfg-defaults")
     Files.writeString(taskDir.resolve("t.sql"),
       "-- name: n_events\nSELECT COUNT(*) AS n FROM events;\n")
-    val out = Files.createTempDirectory("cfg-defaults-out").toString
+    val out = TempDirs.make("cfg-defaults-out").toString
     val cfg = GraftConfig.fromString(
       s"""[app]
          |default_job_ttl = "5m"
@@ -96,7 +96,7 @@ class ConfigAndSweeperSpec extends AnyFunSuite {
   }
 
   test("result sweeper deletes only expired results_ dirs") {
-    val root = Files.createTempDirectory("sweep").toString
+    val root = TempDirs.make("sweep").toString
     def mk(name: String, ageSec: Long): java.io.File = {
       val f = new java.io.File(root, name)
       f.mkdirs()
@@ -157,7 +157,7 @@ class ConfigAndSweeperSpec extends AnyFunSuite {
   }
 
   test("artifact cache: reuse on hit, rebuild when the source changes") {
-    val src = Files.createTempDirectory("graft-art-src")
+    val src = TempDirs.make("graft-art-src")
     Files.writeString(src.resolve("orders.parquet"), "v1")
     var builds = 0
     def build(): String = graft.plans.ArtifactCache.getOrBuild(
@@ -180,7 +180,7 @@ class ConfigAndSweeperSpec extends AnyFunSuite {
   }
 
   test("artifact cache fingerprints content, not just length+mtime (ADVICE r2)") {
-    val src = Files.createTempDirectory("graft-art-content")
+    val src = TempDirs.make("graft-art-content")
     val f = src.resolve("orders.parquet")
     Files.writeString(f, "AAAA")
     val fp1 = graft.plans.ArtifactCache.fingerprint(src.toString, Seq("orders"), Seq(getClass))
@@ -205,13 +205,13 @@ class ConfigAndSweeperSpec extends AnyFunSuite {
 
   test("[control] dir boots the shared file control plane end-to-end") {
     val spark = TestSpark.spark
-    val control = java.nio.file.Files.createTempDirectory("graft-ctl").toString
-    val tasksDir = java.nio.file.Files.createTempDirectory("graft-ctl-tasks")
+    val control = TempDirs.make("graft-ctl").toString
+    val tasksDir = TempDirs.make("graft-ctl-tasks")
     java.nio.file.Files.writeString(tasksDir.resolve("t.sql"),
       """-- name: count_events
         |SELECT COUNT(*) AS n FROM events;
         |""".stripMargin)
-    val results = java.nio.file.Files.createTempDirectory("graft-ctl-res").toString
+    val results = TempDirs.make("graft-ctl-res").toString
     val cfg = GraftConfig.fromString(
       s"""[app]
          |task_dirs = ["$tasksDir"]
@@ -239,12 +239,12 @@ class ConfigAndSweeperSpec extends AnyFunSuite {
 
   test("[control] jdbc_url boots the JDBC control plane end to end") {
     val spark = TestSpark.spark
-    val tasksDir = java.nio.file.Files.createTempDirectory("cfg-jdbc-tasks")
+    val tasksDir = TempDirs.make("cfg-jdbc-tasks")
     java.nio.file.Files.writeString(tasksDir.resolve("t.sql"),
       """-- name: count_events
         |SELECT COUNT(*) AS n FROM events;
         |""".stripMargin)
-    val results = java.nio.file.Files.createTempDirectory("cfg-jdbc-res")
+    val results = TempDirs.make("cfg-jdbc-res")
     val cfg = GraftConfig.fromString(
       s"""[app]
          |task_dirs = ["$tasksDir"]

@@ -10,9 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * instances over one plane stand in for separate processes: the API
   * nodes and the worker fleet of the reference's shared-Redis topology.
   *
-  * `names` maps a case's key (`run`, `dup`, `cancel`, `race`, `retry`,
-  * `orphan`, `notask`, `fault`, `wire`) to the name of the backend test it
-  * replaced, so that test keeps its ID.
+  * `names` maps a case's key (`run`, `codegen`, `dup`, `cancel`, `race`,
+  * `retry`, `orphan`, `notask`, `fault`, `wire`) to the name of the backend
+  * test it replaced, so that test keeps its ID.
   */
 abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
     extends AnyFunSuite {
@@ -60,7 +60,7 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
   /** `count_events` and `profit` over the sf0.001 fixture, or over an empty
     * source directory (every run fails until [[Fixture.makeEvents]]). */
   protected def fixture(emptySource: Boolean = false): Fixture = {
-    val tasksDir = Files.createTempDirectory("graft-cp-tasks")
+    val tasksDir = TempDirs.make("graft-cp-tasks")
     Files.writeString(tasksDir.resolve("t.sql"),
       """-- name: count_events
         |SELECT COUNT(*) AS n FROM events;
@@ -69,8 +69,8 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
         |SELECT CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
         |FROM events WHERE user_id = $1;
         |""".stripMargin)
-    val srcDir = Files.createTempDirectory("graft-cp-src")
-    val results = Files.createTempDirectory("graft-cp-results").toString
+    val srcDir = TempDirs.make("graft-cp-src")
+    val results = TempDirs.make("graft-cp-results").toString
     val src = SourcePool(Map("db" -> (if (emptySource) srcDir.toString else TestSpark.sf0001)))
     val bk = SourcePool(Map("res" -> results))
     new Fixture(TaskRegistry.load(spark, Seq(tasksDir.toString), src, bk), src, bk, results, srcDir)
@@ -111,6 +111,28 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
         api.postJob(JobReq("profit", jobId = "cp-run", args = Seq("2")))
         assert(awaitDone(apiStore, job.id).exists(_.state == JobState.Success))
         assert(apiStore.epoch(job.id) > e1, "re-admission must bump the epoch")
+      } finally { worker.stop(); api.scheduler.shutdown() }
+    }
+  }
+
+  contract("codegen",
+      "a worker's jobs share their task's generated code: new argument values compile nothing") {
+    withPlane { p =>
+      val fx = fixture()
+      val apiStore = p.store()
+      val api = new GraftCore(spark, fx.tasks, fx.src, fx.bk,
+        mkStore = () => apiStore, mkBroker = (_, st) => p.broker(st))
+      val worker = p.worker(fx.tasks, p.store())
+      def run(k: Int): Unit = {
+        val job = api.postJob(JobReq("profit", jobId = s"cp-codegen-$k", args = Seq(k.toString)))
+        assert(awaitDone(apiStore, job.id).exists(_.state == JobState.Success))
+      }
+      try {
+        run(1)
+        val afterFirst = OpsFixture.codegenCompiles
+        (2 to 4).foreach(run)
+        assert(OpsFixture.codegenCompiles == afterFirst,
+          "a job with a new argument value compiled code")
       } finally { worker.stop(); api.scheduler.shutdown() }
     }
   }

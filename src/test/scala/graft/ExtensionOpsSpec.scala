@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
@@ -16,7 +15,7 @@ class ExtensionOpsSpec extends AnyFunSuite {
 
   /** Fixture dir with planted documents + embeddings. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-ext").toString
+    val d = TempDirs.make("graft-ext").toString
     val base = (0 until 40).map(i => s"w${(i * 7) % 13} t${(i * 3) % 11} q$i").mkString(" ")
     val nearDup = base.replace("q7", "qX") // one token differs
     val other = (0 until 40).map(i => s"z$i y${i % 5}").mkString(" ")
@@ -41,7 +40,7 @@ class ExtensionOpsSpec extends AnyFunSuite {
   }
 
   test("embedding_kmeans stops at the exact fixpoint, within the iteration cap") {
-    val d = Files.createTempDirectory("graft-kmeans").toString
+    val d = TempDirs.make("graft-kmeans").toString
     // 8 vectors, seeds = all of them: every point is its own nearest
     // centroid with distance 0, so the FIRST update reproduces the seeds
     // bit-for-bit and the loop must stop after exactly one iteration
@@ -62,7 +61,7 @@ class ExtensionOpsSpec extends AnyFunSuite {
   }
 
   test("dedup_substring finds a planted boilerplate span at its exact offsets") {
-    val d = Files.createTempDirectory("graft-substr").toString
+    val d = TempDirs.make("graft-substr").toString
     // a 12-token boilerplate block planted inside three otherwise-distinct
     // documents at different offsets; a fourth document shares nothing
     val boiler = (0 until 12).map(i => s"B$i").mkString(" ")
@@ -145,7 +144,7 @@ class ExtensionOpsSpec extends AnyFunSuite {
     // chain: doc1 differs from doc0 by 10 tokens, doc2 from doc1 by 10 OTHER
     // tokens → adjacent Jaccard ≈ 0.59 (≥0.5), end-to-end ≈ 0.33 (<0.5):
     // only transitivity links 0 and 2
-    val tmp = Files.createTempDirectory("graft-chain").toString
+    val tmp = TempDirs.make("graft-chain").toString
     val words0 = (0 until 40).flatMap(i => Seq(s"w${i % 13}", s"t${i % 11}", s"q$i"))
     def mutate(ws: Seq[String], range: Range): Seq[String] =
       ws.map(w => if (w.matches("q\\d+") && range.contains(w.drop(1).toInt)) w + "x" else w)
@@ -200,7 +199,7 @@ class ExtensionOpsSpec extends AnyFunSuite {
     // is the planted near-dup — and its jaccard EXCLUDES the cut shingle
     // (5 shared low-df shingles of 7 per doc: 5/9, not the 6/8 that counting
     // the phrase would give), proving the cut applied, not just the ≥0.5 gate.
-    val d = Files.createTempDirectory("graft-dfcut").toString
+    val d = TempDirs.make("graft-dfcut").toString
     val a = "common stock phrase x1 x2 x3 x4 x5 x6"
     val b = "common stock phrase x1 x2 x3 x4 x5 y6"
     val fillers = (0 until 256).map(i => s"common stock phrase f${i}a f${i}b")
@@ -221,7 +220,7 @@ class ExtensionOpsSpec extends AnyFunSuite {
     // all-pairs expansion would be 2415 pairs in one task; the anchor star
     // emits 69, and the duplicate class still surfaces fully verified —
     // a dropped bucket would have reported NOTHING for the whole class
-    val d = Files.createTempDirectory("graft-star").toString
+    val d = TempDirs.make("graft-star").toString
     val boiler = (0 until 12).map(i => s"tok$i").mkString(" ")
     val docs = (0 until 70).map(i => (i.toLong, boiler, "en", s"s$i", boiler.length.toLong)) ++
       Seq((70L, "completely different text here", "en", "s70", 30L))
@@ -324,7 +323,7 @@ class ExtensionOpsSpec extends AnyFunSuite {
   }
 
   test("text_scrub_pii redacts planted emails/phones and counts them") {
-    val tmp = Files.createTempDirectory("graft-pii").toString
+    val tmp = TempDirs.make("graft-pii").toString
     val texts = Seq(
       (0L, "contact me at jane.doe@example.com or +1 555 123 4567 thanks"),
       (1L, "no pii here just words"),

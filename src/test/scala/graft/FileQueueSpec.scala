@@ -17,7 +17,7 @@ class FileQueueSpec extends ControlPlaneContract(Map(
   protected def newPlane(): Plane = new FilePlane
 
   private final class FilePlane extends Plane {
-    private val root = Files.createTempDirectory("graft-fq").toFile
+    private val root = TempDirs.make("graft-fq").toFile
     private val stateDir = new File(root, "state")
     val queueDir = new File(root, "queue")
     private def claimedDir = Files.createDirectories(queueDir.toPath.resolve("_claimed"))

@@ -10,8 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class FileStateStoreSpec extends AnyFunSuite with StateStoreContract {
 
   protected def withStores[A](f: (JobStateStore, JobStateStore) => A): A = {
-    val dir = Files.createTempDirectory("graft-fss").toFile
-    dir.deleteOnExit()
+    val dir = TempDirs.make("graft-fss").toFile
     f(new FileJobStateStore(dir), new FileJobStateStore(dir))
   }
 
@@ -24,13 +23,13 @@ class FileStateStoreSpec extends AnyFunSuite with StateStoreContract {
 
   test("a GraftCore on a file store runs a job end-to-end; a second core sees it") {
     val spark = TestSpark.spark
-    val stateDir = Files.createTempDirectory("graft-fss-e2e").toFile
-    val tasksDir = Files.createTempDirectory("graft-fss-tasks")
+    val stateDir = TempDirs.make("graft-fss-e2e").toFile
+    val tasksDir = TempDirs.make("graft-fss-tasks")
     Files.writeString(tasksDir.resolve("t.sql"),
       """-- name: count_events
         |SELECT COUNT(*) AS n FROM events;
         |""".stripMargin)
-    val results = Files.createTempDirectory("graft-fss-results").toString
+    val results = TempDirs.make("graft-fss-results").toString
     val src = SourcePool(Map("db" -> TestSpark.sf0001))
     val bk = SourcePool(Map("res" -> results))
     val tasks = TaskRegistry.load(spark, Seq(tasksDir.toString), src, bk)

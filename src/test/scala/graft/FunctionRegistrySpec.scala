@@ -8,7 +8,7 @@ import OpsFixture.spark
   * user surface — like built-ins. */
 class FunctionRegistrySpec extends AnyFunSuite {
   test("task SQL can call word_shingles and cosine_similarity end-to-end") {
-    val tasksDir = Files.createTempDirectory("fn-tasks")
+    val tasksDir = TempDirs.make("fn-tasks")
     Files.writeString(tasksDir.resolve("t.sql"),
       """-- name: shingle_stats
         |SELECT CAST(SUM(size(word_shingles(text, 3))) AS BIGINT) AS total_shingles
@@ -18,7 +18,7 @@ class FunctionRegistrySpec extends AnyFunSuite {
         |SELECT vec_id, ROUND(cosine_similarity(embedding, embedding), 6) AS self_cos
         |FROM embeddings WHERE vec_id < 3 ORDER BY vec_id;
         |""".stripMargin)
-    val out = Files.createTempDirectory("fn-out").toString
+    val out = TempDirs.make("fn-out").toString
     val core = GraftCore(spark, Seq(tasksDir.toString),
       Map("db" -> TestSpark.sf0001), Map("res" -> out))
 

@@ -11,8 +11,8 @@ import OpsFixture.spark
   */
 class GraftCoreSpec extends AnyFunSuite {
   private def newCore(results: String =
-      Files.createTempDirectory("graft-e2e-results").toString): GraftCore = {
-    val tasksDir = Files.createTempDirectory("graft-e2e-tasks")
+      TempDirs.make("graft-e2e-results").toString): GraftCore = {
+    val tasksDir = TempDirs.make("graft-e2e-tasks")
     Files.writeString(tasksDir.resolve("tasks.sql"),
       """-- name: get_profit_summary
         |-- queue: test
@@ -70,7 +70,7 @@ class GraftCoreSpec extends AnyFunSuite {
 
   test("a job matching no rows ends SUCCESS with count 0 and an empty " +
        "results_<id>, on the Parquet and the JDBC result backend") {
-    val parquetRoot = Files.createTempDirectory("graft-e2e-results").toString
+    val parquetRoot = TempDirs.make("graft-e2e-results").toString
     val derby = "jdbc:derby:memory:graftzerorows;create=true"
     for ((backend, rowsIn) <- Seq[(String, String => Long)](
         parquetRoot -> (id => spark.read.parquet(s"$parquetRoot/results_$id").count()),
@@ -99,6 +99,18 @@ class GraftCoreSpec extends AnyFunSuite {
       args = Seq("1", "2024-01-01 00:00:00", "2024-06-01 00:00:00")))
     val st = await(core, job.id)
     assert(st.state == JobState.Success && st.count >= 0)
+    core.shutdown()
+  }
+
+  test("in-process jobs share their task's generated code: new argument values compile nothing") {
+    val core = newCore()
+    def run(k: Int): Unit =
+      assert(await(core, core.postJob(JobReq("get_profit_entries", args = Seq(k.toString))).id)
+        .state == JobState.Success)
+    run(1)
+    val afterFirst = OpsFixture.codegenCompiles
+    (2 to 4).foreach(run)
+    assert(OpsFixture.codegenCompiles == afterFirst, "a job with a new argument value compiled code")
     core.shutdown()
   }
 
@@ -149,13 +161,13 @@ class GraftCoreSpec extends AnyFunSuite {
   test("retries re-attempt a failing job and succeed once the source heals") {
     // source dir starts without events.parquet: every attempt fails at
     // analysis until the test drops the file in during a RETRY backoff
-    val srcDir = Files.createTempDirectory("graft-retry-src")
+    val srcDir = TempDirs.make("graft-retry-src")
     Files.copy(java.nio.file.Path.of(TestSpark.sf0001, "region.parquet"),
       srcDir.resolve("region.parquet"))
-    val tasksDir = Files.createTempDirectory("graft-retry-tasks")
+    val tasksDir = TempDirs.make("graft-retry-tasks")
     Files.writeString(tasksDir.resolve("t.sql"),
       "-- name: n_events\nSELECT COUNT(*) AS n FROM events;\n")
-    val results = Files.createTempDirectory("graft-retry-res").toString
+    val results = TempDirs.make("graft-retry-res").toString
     val core = GraftCore(spark, Seq(tasksDir.toString),
       sources = Map("db" -> srcDir.toString),
       resultBackends = Map("res" -> results))
@@ -242,7 +254,7 @@ class GraftCoreSpec extends AnyFunSuite {
   }
 
   test("per-task concurrency limits tasks, not the queue (core.go:437-440)") {
-    val tasksDir = Files.createTempDirectory("conc-tasks")
+    val tasksDir = TempDirs.make("conc-tasks")
     Files.writeString(tasksDir.resolve("t.sql"),
       """-- name: quick
         |-- queue: mixed
@@ -253,7 +265,7 @@ class GraftCoreSpec extends AnyFunSuite {
         |-- conc: 1
         |SELECT graft_sleep(1200) AS ok;
         |""".stripMargin)
-    val out = Files.createTempDirectory("conc-out").toString
+    val out = TempDirs.make("conc-out").toString
     val core = GraftCore(spark, Seq(tasksDir.toString),
       Map("db" -> TestSpark.sf0001), Map("res" -> out))
     val t0 = System.currentTimeMillis
@@ -323,15 +335,15 @@ class GraftCoreSpec extends AnyFunSuite {
 
   /** A core over one tasks file and the given directory sources. */
   private def coreOver(tasksSql: String, sources: Map[String, String]): GraftCore = {
-    val tasksDir = Files.createTempDirectory("graft-session-tasks")
+    val tasksDir = TempDirs.make("graft-session-tasks")
     Files.writeString(tasksDir.resolve("t.sql"), tasksSql)
     GraftCore(spark, Seq(tasksDir.toString), sources,
-      Map("res" -> Files.createTempDirectory("graft-session-res").toString))
+      Map("res" -> TempDirs.make("graft-session-res").toString))
   }
 
   /** A source directory holding only `events.parquet`, copied from `from`. */
   private def eventsDir(from: String): java.nio.file.Path = {
-    val dir = Files.createTempDirectory("graft-session-src")
+    val dir = TempDirs.make("graft-session-src")
     Files.copy(java.nio.file.Path.of(from, "events.parquet"), dir.resolve("events.parquet"))
     dir
   }

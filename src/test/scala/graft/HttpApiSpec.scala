@@ -16,13 +16,13 @@ class HttpApiSpec extends AnyFunSuite {
   private val client = HttpClient.newHttpClient()
 
   private lazy val core = {
-    val tasksDir = Files.createTempDirectory("http-tasks")
+    val tasksDir = TempDirs.make("http-tasks")
     Files.writeString(tasksDir.resolve("t.sql"),
       """-- name: summary
         |-- queue: http_test
         |SELECT CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total FROM events WHERE user_id = $1;
         |""".stripMargin)
-    val out = Files.createTempDirectory("http-out").toString
+    val out = TempDirs.make("http-out").toString
     GraftCore(spark, Seq(tasksDir.toString),
       Map("db" -> TestSpark.sf0001), Map("res" -> out))
   }
@@ -146,5 +146,27 @@ class HttpApiSpec extends AnyFunSuite {
     val deadline = System.currentTimeMillis + 5000
     while (live.nonEmpty && System.currentTimeMillis < deadline) Thread.sleep(20)
     assert(live.isEmpty, s"request threads outlived stop(): ${live.map(_.getName)}")
+  }
+
+  test("a status poll on a fresh HttpApi answers in milliseconds, not a Nagle delay") {
+    // each response leaves as headers then body; without TCP_NODELAY the
+    // body waits for the client's delayed ACK, about 40 ms per request
+    val a = new HttpApi(core).start()
+    try {
+      val url = s"http://127.0.0.1:${a.boundPort}"
+      val id = "http-nodelay-1"
+      val posted = client.send(HttpRequest.newBuilder(URI.create(s"$url/tasks/summary/jobs"))
+        .POST(HttpRequest.BodyPublishers.ofString(s"""{"job_id":"$id","args":["1"]}""")).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(posted.statusCode() == 200, posted.body())
+      val status = HttpRequest.newBuilder(URI.create(s"$url/jobs/$id")).GET().build()
+      val ms = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        assert(client.send(status, HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      val median = (ms(9) + ms(10)) / 2
+      assert(median < 10, s"median GET /jobs/{id} took $median ms: ${ms.map(m => f"$m%.1f")}")
+    } finally a.stop()
   }
 }

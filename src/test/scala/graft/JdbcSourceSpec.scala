@@ -41,14 +41,14 @@ class JdbcSourceSpec extends AnyFunSuite {
 
   test("jobs run against a live JDBC source end-to-end (reference CI shape)") {
     setupEntries()
-    val tasksDir = Files.createTempDirectory("jdbc-tasks")
+    val tasksDir = TempDirs.make("jdbc-tasks")
     Files.writeString(tasksDir.resolve("t.sql"),
       """-- name: get_profit_summary
         |-- raw: 1
         |SELECT SUM(amount) AS total, entry_date FROM entries
         |WHERE user_id = $1 GROUP BY entry_date ORDER BY entry_date;
         |""".stripMargin)
-    val out = Files.createTempDirectory("jdbc-out").toString
+    val out = TempDirs.make("jdbc-out").toString
     val core = GraftCore(spark, Seq(tasksDir.toString),
       sources = Map("derby_db" -> url),
       resultBackends = Map("res" -> out))
@@ -72,7 +72,7 @@ class JdbcSourceSpec extends AnyFunSuite {
   }
 
   test("results materialize into a JDBC backend (results_<id> table, DROP on purge)") {
-    val tasksDir = Files.createTempDirectory("jdbcres-tasks")
+    val tasksDir = TempDirs.make("jdbcres-tasks")
     Files.writeString(tasksDir.resolve("t.sql"),
       """-- name: daily
         |SELECT CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total,

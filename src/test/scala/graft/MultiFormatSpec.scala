@@ -10,7 +10,7 @@ import OpsFixture.spark
   */
 class MultiFormatSpec extends AnyFunSuite {
   test("a source dir can mix parquet, csv, json and orc tables") {
-    val src = Files.createTempDirectory("fmt-src").toString
+    val src = TempDirs.make("fmt-src").toString
     val nation = Tables.load(spark, TestSpark.sf0001, "nation")
     nation.write.parquet(s"$src/nation.parquet")
     nation.write.option("header", "true").csv(s"$src/region.csv") // reuse rows
@@ -28,7 +28,7 @@ class MultiFormatSpec extends AnyFunSuite {
   }
 
   test("a rewritten table file reloads and keeps one cached plan") {
-    val src = Files.createTempDirectory("fmt-rewrite").toString
+    val src = TempDirs.make("fmt-rewrite").toString
     for (n <- Seq(2L, 3L, 5L, 7L)) { // one write, then three rewrites
       spark.range(n).write.mode("overwrite").parquet(s"$src/t.parquet")
       assert(Tables.load(spark, src, "t").count() == n)
@@ -37,13 +37,13 @@ class MultiFormatSpec extends AnyFunSuite {
   }
 
   test("a job can run against a csv-backed source end-to-end") {
-    val src = Files.createTempDirectory("fmt-src2").toString
+    val src = TempDirs.make("fmt-src2").toString
     Tables.load(spark, TestSpark.sf0001, "customer")
       .write.option("header", "true").csv(s"$src/customer.csv")
-    val tasksDir = Files.createTempDirectory("fmt-tasks")
+    val tasksDir = TempDirs.make("fmt-tasks")
     Files.writeString(tasksDir.resolve("t.sql"),
       "-- name: seg_counts\nSELECT c_mktsegment, COUNT(*) AS n FROM customer GROUP BY c_mktsegment;\n")
-    val out = Files.createTempDirectory("fmt-out").toString
+    val out = TempDirs.make("fmt-out").toString
     val core = GraftCore(spark, Seq(tasksDir.toString),
       Map("csv_db" -> src), Map("res" -> out))
     val job = core.postJob(JobReq("seg_counts"))

@@ -19,6 +19,10 @@ object OpsFixture {
   def qln[N](x: N)(implicit n: Numeric[N]): BigDecimal =
     BigDecimal(math.log(n.toDouble(x))).setScale(6, BigDecimal.RoundingMode.HALF_UP)
 
+  /** Compiles of generated code in this JVM so far. */
+  def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** `df`'s physical plan, as EXPLAIN FORMATTED prints it. */
   def fmt(df: DataFrame): String =
     df.queryExecution.explainString(

@@ -1166,4 +1166,36 @@ class PlanSpec extends AnyFunSuite {
     // both the probe and the anti-join take the broadcast side
     assert(plan.linesIterator.count(_.contains("- BroadcastExchange")) == 2, plan)
   }
+
+  test("a job's plan keeps its arguments in the pushed filters and out of its FilterExec") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+    val task = Task("get_profit_entries_by_date", "default", 1,
+      "SELECT * FROM events WHERE user_id = $1 AND ts > $2 AND ts < $3",
+      SourcePool.single("db", dir), SourcePool.single("res", dir), isRaw = false)
+    val args = Seq("886", "2024-01-03 00:00:00", "2024-01-08 00:00:00")
+    def frame = Executor.buildFrame(spark, dir, task, args)
+    val inJob = JobLiterals.asJob(spark, "plan-spec")(frame.queryExecution.executedPlan)
+    val outsideJob = frame.queryExecution
+    val outside = outsideJob.executedPlan
+
+    val pushed = inJob.collectFirst { case s: FileSourceScanExec => s.metadata("PushedFilters") }
+    // the timestamp's text depends on the fixture's `ts` type (TIMESTAMP or
+    // TIMESTAMP_NTZ), so only its date is pinned
+    assert(pushed.exists(p => p.contains("EqualTo(user_id,886)") &&
+      p.contains("GreaterThan(ts,2024-01-03") && p.contains("LessThan(ts,2024-01-08")),
+      s"the scan lost a pushed argument: $pushed")
+    def conditions(p: SparkPlan) = p.collect { case f: FilterExec => f.condition }
+    def inlined(p: SparkPlan): Seq[Literal] = conditions(p).flatMap(_.collect {
+      case l: Literal if l.value != null && CodeGenerator.isPrimitiveType(l.dataType) => l
+    })
+    assert(inlined(inJob).isEmpty, s"the job's FilterExec inlines ${inlined(inJob)}:\n$inJob")
+    assert(conditions(inJob).flatMap(_.collect { case r: ReferencedLiteral => r }).size == 3, inJob)
+    // outside a job the strategy plans nothing: the plan is the one a session
+    // without it makes
+    assert(inlined(outside).size == 3, outside)
+    val bare = spark.newSession().sessionState.executePlan(outsideJob.logical).executedPlan
+    assert(bare.toString == outside.toString)
+  }
 }

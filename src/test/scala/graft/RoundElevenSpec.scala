@@ -219,7 +219,7 @@ class RoundElevenSpec extends AnyFunSuite {
   // ------------------------ 3. gate-scalar memo is content-invalidated
 
   test("partDimCount refreshes when the part fixture is rewritten in place") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_gate_memo").toFile
+    val tmp = TempDirs.make("graft_gate_memo").toFile
     try {
       val p = s"${tmp.getPath}/part.parquet"
       spark.range(3).select(col("id").as("p_partkey"))

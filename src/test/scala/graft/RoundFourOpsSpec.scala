@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
 
@@ -13,7 +12,7 @@ class RoundFourOpsSpec extends AnyFunSuite {
 
   /** Tiny documents fixture with exactly known word statistics. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-r4").toString
+    val d = TempDirs.make("graft-r4").toString
     val docs = Seq(
       // words: [w w w x] -> top w=3/4, uniq 2/4; bigrams [w w, w w, w x] -> dup 1/3
       (0L, "w w w x", "en", "s0", 7L),
@@ -56,7 +55,7 @@ class RoundFourOpsSpec extends AnyFunSuite {
   }
 
   test("text_doc_freq: cross-document words count document frequency, not occurrences") {
-    val d = Files.createTempDirectory("graft-r4df").toString
+    val d = TempDirs.make("graft-r4df").toString
     Seq(
       (0L, "k k k", "en", "s0", 5L), // k occurs 3x but in 1 doc -> df(k)=2 (docs 0,1)
       (1L, "k z", "en", "s1", 3L))

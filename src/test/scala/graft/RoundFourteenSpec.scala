@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -29,7 +28,7 @@ import OpsFixture._
 class RoundFourteenSpec extends AnyFunSuite {
   /** A fixture dir with an empty (zero-row, same-schema) lineitem. */
   private lazy val emptyDir: String = {
-    val d = Files.createTempDirectory("graft-empty-fixture-").toFile
+    val d = TempDirs.make("graft-empty-fixture-").toFile
     spark.read.parquet(s"${TestSpark.sf0001}/lineitem.parquet")
       .limit(0)
       .write.mode("overwrite")

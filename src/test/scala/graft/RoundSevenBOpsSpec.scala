@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 import graft.operators.{AnalyticsOps, TextOps}
 
@@ -41,7 +40,7 @@ class RoundSevenBOpsSpec extends AnyFunSuite {
 
   test("text_entropy: uniform text hits ln(k); constant text hits zero") {
     import spark.implicits._
-    val d = Files.createTempDirectory("graft-entropy").toString
+    val d = TempDirs.make("graft-entropy").toString
     Seq((1L, "aaaa", "en", "s", 4L), (2L, "abab", "en", "s", 4L),
         (3L, "abcd", "en", "s", 4L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -55,7 +54,7 @@ class RoundSevenBOpsSpec extends AnyFunSuite {
 
   test("mm_dedup_phash: identical payloads pair at hamming 0; disjoint ones don't") {
     import spark.implicits._
-    val d = Files.createTempDirectory("graft-phash").toString
+    val d = TempDirs.make("graft-phash").toString
     // 1/3 identical payloads, 2 distinct; 4 shares no 16-bit chunk with
     // the rest with overwhelming probability
     Seq((1L, "the same exact picture bytes", "en", "s", 28L),

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{DedupOps, GraphOps, PipelineOps}
 
@@ -19,7 +18,7 @@ class RoundSixBOpsSpec extends AnyFunSuite {
   /** Docs: a 30-word snippet (0) pasted verbatim at the head of a 230-word
     * page (1), an unrelated doc (2), and two exact copies (3, 4). */
   private lazy val docsDir: String = {
-    val d = Files.createTempDirectory("graft-r6b").toString
+    val d = TempDirs.make("graft-r6b").toString
     val snippet = (0 until 30).map(i => s"w$i").mkString(" ")
     val page = snippet + " " + (0 until 200).map(i => s"p$i").mkString(" ")
     val other = (0 until 50).map(i => s"x$i").mkString(" ")
@@ -57,7 +56,7 @@ class RoundSixBOpsSpec extends AnyFunSuite {
   /** Orders 10:{1,2,3} (a triangle), 20:{3,4} (a pendant edge), 30:{1,2}
     * (re-covers an existing edge — must not double-count). */
   private lazy val graphDir: String = {
-    val d = Files.createTempDirectory("graft-r6b-g").toString
+    val d = TempDirs.make("graft-r6b-g").toString
     Seq((10L, 1L), (10L, 2L), (10L, 3L), (20L, 3L), (20L, 4L), (30L, 1L), (30L, 2L))
       .toDF("l_orderkey", "l_partkey")
       .repartition(2).write.parquet(s"$d/lineitem.parquet")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{AnalyticsOps, PipelineOps, TextOps}
 
@@ -19,7 +18,7 @@ class RoundSixOpsSpec extends AnyFunSuite {
   /** Docs fixture: two exact copies (0,1), common-word prose (2), one
     * rare-word soup (3), a symbol-heavy doc (4); langs en×3, de, fr. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-r6").toString
+    val d = TempDirs.make("graft-r6").toString
     val common = Seq.fill(40)("the cat sat on the mat").mkString(" ")
     val rare = (0 until 240).map(i => s"zq$i").mkString(" ")
     val symbols = "@@@ ### $$$ %%% ^^^ &&& *** " * 12
@@ -66,7 +65,7 @@ class RoundSixOpsSpec extends AnyFunSuite {
   }
 
   test("data_profile counts planted nulls/distincts and renders min/max") {
-    val d = Files.createTempDirectory("graft-r6-orders").toString
+    val d = TempDirs.make("graft-r6-orders").toString
     Seq[(java.lang.Long, java.lang.Long, String, String)](
       (1L, 10L, "O", "1-URGENT"),
       (2L, 10L, "F", "2-HIGH"),
@@ -122,7 +121,7 @@ class RoundSixOpsSpec extends AnyFunSuite {
   }
 
   test("quality_gopher: each rule drops exactly the doc planted to break it") {
-    val d = Files.createTempDirectory("graft-gopher").toString
+    val d = TempDirs.make("graft-gopher").toString
     val filler = (0 until 28).map(i => s"word$i") // 28 distinct 5-6 char words
     val keeper = (filler ++ Seq("the", "a")).mkString(" ")          // 30 words, clean
     val short = "the a tiny doc"                                    // < 25 words
@@ -149,7 +148,7 @@ class RoundSixOpsSpec extends AnyFunSuite {
   }
 
   test("curation_pipeline: the funnel attributes each planted doc to its stage") {
-    val d = Files.createTempDirectory("graft-funnel").toString
+    val d = TempDirs.make("graft-funnel").toString
     val clean = (0 until 40).map(i => s"alpha$i").mkString(" ")
     val benched = (0 until 35).map(i => s"beta$i").mkString(" ") + " b1 b2 b3 b4 b5"
     Seq(
@@ -168,7 +167,7 @@ class RoundSixOpsSpec extends AnyFunSuite {
 
   test("sample_token_budget: greedy prefix matches a locally-computed reference") {
     import graft.functions.PolyHash.{Mult, P}
-    val d = Files.createTempDirectory("graft-budget").toString
+    val d = TempDirs.make("graft-budget").toString
     // ~12k+ BPE tokens so the 10k budget genuinely cuts
     val docs = (0L until 120L).map { i =>
       val t = (0 until 100).map(j => s"tk${(i * 7 + j) % 300}").mkString(" ")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -73,7 +72,7 @@ class RoundThirteenSpec extends AnyFunSuite {
   private def ensureCkDir(): String = {
     if (spark.sparkContext.getCheckpointDir.isEmpty)
       spark.sparkContext.setCheckpointDir(
-        Files.createTempDirectory("graft-ck-").toFile.getAbsolutePath)
+        TempDirs.make("graft-ck-").toFile.getAbsolutePath)
     spark.sparkContext.getCheckpointDir.get
   }
 
@@ -94,7 +93,7 @@ class RoundThirteenSpec extends AnyFunSuite {
       "reliable mode writes checkpoint blocks; rows identical") {
     // own a fresh dir for this test (order independence); ensureCkDir is
     // not enough here because the file-count assertions need an empty dir
-    val ckDir = Files.createTempDirectory("graft-ck-").toFile
+    val ckDir = TempDirs.make("graft-ck-").toFile
     spark.sparkContext.setCheckpointDir(ckDir.getAbsolutePath)
     def files(): Int = {
       def walk(f: java.io.File): Int =

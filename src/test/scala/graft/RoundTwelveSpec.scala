@@ -84,7 +84,7 @@ class RoundTwelveSpec extends AnyFunSuite {
       "rewrite") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val src = Paths.get(dir)
-    val tmp = Files.createTempDirectory("fpspec")
+    val tmp = TempDirs.make("fpspec")
     Files.list(src).forEach { p =>
       if (p.getFileName.toString.endsWith(".parquet"))
         Files.copy(p, tmp.resolve(p.getFileName),

@@ -13,7 +13,7 @@ class StreamingSpec extends AnyFunSuite {
     // '<table>.parquet' glob silently streams ZERO rows (this hid all
     // stream work on the 2× scale fixture). Rewrite the events fixture as
     // a directory and assert the replay still sees every row.
-    val d = java.nio.file.Files.createTempDirectory("graft-dirfix").toString
+    val d = TempDirs.make("graft-dirfix").toString
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read
       .format("parquet")
@@ -104,7 +104,7 @@ class StreamingSpec extends AnyFunSuite {
   test("sessionization handles a hot key spanning multiple chunks") {
     // one user owns 88% of the batch (9000 events > 2× the 4096-event chunk),
     // so the stateful step must chunk-and-merge, never buffer the whole slice
-    val dir = java.nio.file.Files.createTempDirectory("graft-hotkey").toString
+    val dir = TempDirs.make("graft-hotkey").toString
     val base = 1700000000000L
     val h = 3600 * 1000L
     val u1 = for (k <- 0 until 3; j <- 0 until 3000)

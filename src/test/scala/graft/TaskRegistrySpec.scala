@@ -9,7 +9,7 @@ class TaskRegistrySpec extends AnyFunSuite {
   private val bk = SourcePool(Map("res1" -> "/tmp/graft-res"))
 
   private def writeTasks(content: String): String = {
-    val d = Files.createTempDirectory("graft-tasks")
+    val d = TempDirs.make("graft-tasks")
     Files.writeString(d.resolve("tasks.sql"), content)
     d.toString
   }
@@ -81,7 +81,7 @@ class TaskRegistrySpec extends AnyFunSuite {
   test("rejects empty and missing dirs (tasks.go:55-60)") {
     intercept[IllegalArgumentException](
       TaskRegistry.load(spark, Seq("/tmp/does-not-exist-graft"), src, bk))
-    val empty = Files.createTempDirectory("graft-empty").toString
+    val empty = TempDirs.make("graft-empty").toString
     intercept[IllegalArgumentException](TaskRegistry.load(spark, Seq(empty), src, bk))
   }
 }

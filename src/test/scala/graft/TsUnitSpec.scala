@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.DataFrame
@@ -30,8 +29,7 @@ class TsUnitSpec extends AnyFunSuite {
   /** Write a one-row events fixture whose ts column is produced by `tsCol`,
     * return the sf-dir path holding events.parquet. */
   private def fixture(tsCol: DataFrame => DataFrame): String = {
-    val dir = Files.createTempDirectory("graft-tsunit-").toFile
-    dir.deleteOnExit()
+    val dir = TempDirs.make("graft-tsunit-").toFile
     val base = Seq((1L, 42L, "click", 1.5, """{"k":1}"""))
       .toDF("event_id", "user_id", "event_type", "value", "props")
     tsCol(base).write.mode("overwrite").parquet(s"${dir.getPath}/events.parquet")
@@ -102,7 +100,7 @@ class TsUnitSpec extends AnyFunSuite {
         .queryName(s"tsunit_${System.nanoTime()}")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation",
-          Files.createTempDirectory("graft-tsunit-ckpt-").toString)
+          TempDirs.make("graft-tsunit-ckpt-").toString)
         .start()
       q.awaitTermination()
       val streamTs = spark.table(q.name).select(col("ts")).head.getTimestamp(0)
