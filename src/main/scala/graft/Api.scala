@@ -84,21 +84,7 @@ final class GraftCore(
 
   /** Read back a completed job's materialized result (README: follow-up
     * queries hit the smaller results store). */
-  def results(jobId: String): DataFrame = {
-    val (jdbcUrls, dirs) = resultBackends.sources.values.partition(_.startsWith("jdbc:"))
-    val parquetHit = dirs.map(d => Executor.resultDir(d, jobId))
-      .find(d => new java.io.File(d).exists())
-    parquetHit match {
-      case Some(d) => spark.read.parquet(d)
-      case None =>
-        val jdbcHit = jdbcUrls.flatMap { url =>
-          try Some(spark.read.jdbc(url, Executor.quotedResultTable(url, jobId), new java.util.Properties))
-          catch { case _: Exception => None }
-        }.headOption
-        jdbcHit.getOrElse(
-          throw new IllegalArgumentException(s"no materialized results for job $jobId"))
-    }
-  }
+  def results(jobId: String): DataFrame = Results.read(spark, resultBackends, jobId)
 
   def shutdown(): Unit = scheduler.shutdown()
 }

@@ -48,7 +48,7 @@ abstract class BrokerBase(store: JobStateStore) extends JobBroker {
       throw new IllegalStateException("can't cancel a completed job without purge")
     store.remove(jobId)
     dropQueued(jobId)
-    if (purge) ResultPurge.purge(backends, jobId)
+    if (purge) Results.purge(backends, jobId)
   }
 
   /** CancelJobGroup (core.go:274-322): per-member cancel with the

@@ -1,13 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftColumnShim, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnShim, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, ParsedStatement, SubqueryAlias, UnresolvedWith}
-import org.apache.spark.sql.functions.{count, lit}
-import java.util.concurrent.TimeoutException
-import scala.concurrent.Await
-import scala.concurrent.duration._
 import scala.util.Random
 
 /** Single-job execution: the port of `execJob` + `writeResults`
@@ -23,6 +19,8 @@ import scala.util.Random
   * `sparkContext.cancelJobGroup(jobId)` is then the 1:1 port of the
   * reference's per-job `context.CancelFunc` (`core.go:457-468`), and strictly
   * stronger: it kills every stage of the plan, not just the driver-side wait.
+  * It also puts them in the scheduler pool named after the job's queue, so
+  * under `spark.scheduler.mode=FAIR` queues share the executors fairly.
   * The job runs inside [[JobLiterals.asJob]], so its plan reads its
   * primitive literals from the generated class's `references` instead of
   * its source text: a task's generated code is compiled on its first job,
@@ -30,33 +28,13 @@ import scala.util.Random
   *
   * Materialization (`writeResults`, core.go:511-572): pick a random result
   * backend, cast the result to the canonical 6-type schema (§1.2), and write
-  * `results_<jobID>` parquet with overwrite — the atomic per-directory commit
-  * replaces the reference's DROP TABLE + CREATE + tx (`sqldb.go:159-217`).
-  * The row count the write observed is stored as the job result
-  * (`core.go:436`); a count that has not arrived [[RowCountWait]] after the
-  * write returned fails the job.
+  * it there as the job's result ([[Results]]). The job result's row count
+  * (`core.go:436`) is read from the committed result once the write returns.
   */
 object Executor {
 
-  final case class ExecResult(count: Long, resultDir: String, sourceName: String)
-
-  def resultDir(backendDir: String, jobId: String): String =
-    s"$backendDir/results_$jobId"
-
-  /** `results_%s` table-name template (sqldb.go:77-81). */
-  def resultTable(jobId: String): String = s"results_$jobId"
-
-  /** A JDBC backend's identifier quote, as the reference quotes with the
-    * backend's dialect (sqldb.go:307-314): backticks on MySQL, double quotes
-    * elsewhere; ClickHouse takes backticks like MySQL. */
-  def identQuote(url: String): String =
-    if (url.startsWith("jdbc:mysql:") || ClickHouseDialect.canHandle(url)) "`" else "\""
-
-  /** Dialect-quoted form for use as a JDBC dbtable (job IDs may contain `-`). */
-  def quotedResultTable(url: String, jobId: String): String = {
-    val q = identQuote(url)
-    q + resultTable(jobId) + q
-  }
+  /** Where a job's result went, and the rows it holds. */
+  final case class ExecResult(count: Long, resultDir: String)
 
   /** Build the job's DataFrame without materializing (shared by run()).
     *
@@ -133,49 +111,18 @@ object Executor {
   def run(spark: SparkSession, job: Job, task: Task, rnd: Random = Random): ExecResult = {
     val sc = spark.sparkContext
     sc.setJobGroup(job.id, s"graft task=${task.name} job=${job.id}", interruptOnCancel = true)
+    sc.setLocalProperty(SchedulerPool, job.queue)
     try JobLiterals.asJob(spark, job.id) {
       // named DB else random pick (core.go:483-492)
-      val (srcName, srcDir) = job.db match {
-        case Some(name) => (name, task.dbs.get(name))
-        case None       => task.dbs.getRandom(rnd)
-      }
-      val (_, backendDir) = task.resultBackends.getRandom(rnd) // core.go:515
-      // the write counts its own rows, like the reference's row pump
-      // (core.go:511-572)
-      val observed = new Observation()
+      val srcDir = job.db.fold(task.dbs.getRandom(rnd)._2)(task.dbs.get)
       val out = CanonicalTypes.castToCanonical(buildFrame(spark, srcDir, task, job.args))
-        .observe(observed, count(lit(1)).as("rows"))
-      val dest =
-        if (backendDir.startsWith("jdbc:")) {
-          // external result DB, like the reference's MySQL/PG backends:
-          // overwrite = DROP TABLE IF EXISTS + CREATE (sqldb.go:159-188)
-          ClickHouseDialect.ensureRegistered()
-          val writer = out.write.mode("overwrite")
-          // ClickHouse CREATE TABLE requires an engine clause
-          (if (ClickHouseDialect.canHandle(backendDir))
-            writer.option("createTableOptions", ClickHouseDialect.resultTableEngine)
-          else writer)
-            .jdbc(backendDir, quotedResultTable(backendDir, job.id), new java.util.Properties)
-          ResultClock.touch(backendDir, resultTable(job.id)) // refresh sweeper TTL
-          s"$backendDir#${resultTable(job.id)}"
-        } else {
-          val dir = resultDir(backendDir, job.id)
-          out.write.mode("overwrite").parquet(dir)
-          dir
-        }
-      ExecResult(rowCount(observed, RowCountWait), dest, srcName)
-    } finally sc.clearJobGroup()
+      Results.backend(task.resultBackends.getRandom(rnd)._2).write(out, job.id) // core.go:515
+    } finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty(SchedulerPool, null)
+    }
   }
 
-  /** How long the row count may lag the write: it arrives as a listener
-    * event once the write returns, normally within milliseconds. */
-  val RowCountWait: FiniteDuration = 30.seconds
-
-  /** The row count a write observed, waiting at most `within` from now. */
-  private[graft] def rowCount(observed: Observation, within: FiniteDuration): Long =
-    try Await.result(observed.future, within).getAs[Long]("rows")
-    catch { case _: TimeoutException =>
-      throw new IllegalStateException(s"the write finished but its row count " +
-        s"did not arrive within $within (a lost listener event)")
-    }
+  /** The thread-local property that picks a Spark job's FAIR pool. */
+  private val SchedulerPool = "spark.scheduler.pool"
 }

@@ -26,9 +26,15 @@ import org.apache.spark.sql.types.DataType
   * pruning are as before; AQE re-planning passes through the strategy too.
   * Aggregates, windows and sorts are not touched, and inside the two
   * operators an expression whose type check needs a foldable argument
-  * (ROUND's scale) keeps its literal. A `LIKE` pattern is a string, never
-  * swapped. Plans made outside a job are planned exactly as without the
-  * strategy.
+  * (ROUND's scale) keeps its literal. Plans made outside a job are planned
+  * exactly as without the strategy.
+  *
+  * Two argument kinds still compile once per distinct value. A `LIKE $1`
+  * pattern is a string, which is never swapped, and `Like`'s code
+  * generation escapes it into the Java source. A decimal argument's
+  * precision sets the types of the expressions around it, so each
+  * precision gets its own class. Both are left alone until a workload
+  * shows them.
   */
 object JobLiterals extends SparkStrategy {
 

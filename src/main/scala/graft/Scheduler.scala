@@ -225,21 +225,3 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends BrokerB
     timers.shutdown()
   }
 }
-
-/** Result purge shared by the in-process broker and the file-queue broker:
-  * DROP the external `results_<id>` table (dialect-quoted, sqldb.go:298) or
-  * delete the result parquet directory, across every backend. */
-object ResultPurge {
-  def purge(backends: SourcePool, jobId: String): Unit =
-    backends.sources.values.foreach {
-      case url if url.startsWith("jdbc:") =>
-        val conn = java.sql.DriverManager.getConnection(url)
-        try {
-          conn.createStatement().execute(
-            s"DROP TABLE ${graft.Executor.quotedResultTable(url, jobId)}")
-          ResultClock.forget(url, graft.Executor.resultTable(jobId))
-        } catch { case _: Exception => () } finally conn.close()
-      case dir =>
-        FsUtil.deleteRecursive(new java.io.File(graft.Executor.resultDir(dir, jobId)))
-    }
-}

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions.col
 import graft._
 
 /** The reference's flagship end-to-end path as a checkable query:
-  * task SQL + bound arg → execute → canonical cast → materialize
-  * `results_<jobID>` → read the materialized table back
+  * task SQL + bound arg → execute → canonical cast → materialize the
+  * job's result → read the materialized table back
   * (`core.go:450-572` + README "results cache" reads). The returned frame is
   * the *re-read* of the result directory, so the oracle also certifies the
   * canonical-type write path (DOUBLE total, DATE entry_date — the
@@ -21,7 +21,7 @@ object MaterializeOps {
       |FROM events WHERE user_id = $1 GROUP BY CAST(ts AS DATE)""".stripMargin
 
   // One stable result root per (JVM, source dir), reused across invocations:
-  // the executor's results-cache semantics rewrite results_<jobID> in place,
+  // the executor's results-cache semantics rewrite the job's result in place,
   // so repeat runs cost zero extra disk (a fresh createTempDirectory per call
   // leaked a dir per invocation), and the single shared exit hook removes the
   // roots at JVM exit. The root name embeds the PID (two JVMs against the

@@ -88,9 +88,9 @@ class ClickHouseDialectSpec extends AnyFunSuite {
   }
 
   test("executor quotes clickhouse result tables with backticks and appends the engine clause") {
-    assert(Executor.quotedResultTable("jdbc:clickhouse://h/d", "job-1") == "`results_job-1`")
-    assert(Executor.quotedResultTable("jdbc:mysql://h/d", "job-1") == "`results_job-1`")
-    assert(Executor.quotedResultTable("jdbc:postgresql://h/d", "job-1") == "\"results_job-1\"")
+    assert(JdbcResults("jdbc:clickhouse://h/d").table("job-1") == "`results_job-1`")
+    assert(JdbcResults("jdbc:mysql://h/d").table("job-1") == "`results_job-1`")
+    assert(JdbcResults("jdbc:postgresql://h/d").table("job-1") == "\"results_job-1\"")
     assert(ClickHouseDialect.resultTableEngine.startsWith("ENGINE ="))
   }
 }

@@ -150,7 +150,7 @@ class ConfigAndSweeperSpec extends AnyFunSuite {
     val t0 = System.currentTimeMillis
     assert(sweeper.sweepOnce(t0).isEmpty)
     // the executor rewrites the table at t0+55s → retention restarts there
-    ResultClock.touch(url, "results_rw", t0 + 55 * 1000)
+    Results.lastWrite.put((url, "results_rw"), t0 + 55 * 1000)
     assert(sweeper.sweepOnce(t0 + 70 * 1000).isEmpty,
       "fresh rewrite must not be expired from the first-seen stamp")
     assert(sweeper.sweepOnce(t0 + 120 * 1000) == Seq("results_rw"))

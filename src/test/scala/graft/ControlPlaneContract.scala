@@ -47,7 +47,7 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
       JobFactory.make(JobReq("count_events", jobId = id, retries = retries),
         tasks("count_events"))
     def task: Task = tasks("count_events")
-    def ran(id: String): Boolean = new java.io.File(Executor.resultDir(results, id)).exists()
+    def ran(id: String): Boolean = new java.io.File(DirResults(results).path(id)).exists()
     /** Give an empty source directory its `events` table. */
     def makeEvents(): Unit = {
       import spark.implicits._

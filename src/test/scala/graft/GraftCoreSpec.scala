@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import OpsFixture.spark
 
 /** End-to-end job lifecycle through the library facade — the port of the
@@ -243,8 +244,7 @@ class GraftCoreSpec extends AnyFunSuite {
     val core = newCore()
     val job = core.postJob(JobReq("get_profit_summary", jobId = "purge-1", args = Seq("1")))
     await(core, job.id)
-    val dir = new java.io.File(
-      Executor.resultDir(core.resultBackends.sources.values.head, job.id))
+    val dir = new java.io.File(DirResults(core.resultBackends.sources.values.head).path(job.id))
     assert(dir.exists())
     // completed job: cancel without purge must refuse (core.go:252-254)
     intercept[IllegalStateException](core.deleteJob(job.id))
@@ -544,10 +544,78 @@ class GraftCoreSpec extends AnyFunSuite {
     } finally core.shutdown()
   }
 
-  test("the row-count wait is bounded: a count that never arrives fails the job") {
-    import scala.concurrent.duration._
-    val e = intercept[IllegalStateException](
-      Executor.rowCount(new org.apache.spark.sql.Observation(), 200.millis))
-    assert(e.getMessage.contains("row count"), e.getMessage)
+  test("a job's status count is the row count of its committed result, on a " +
+       "Parquet and a Derby JDBC backend, zero rows included") {
+    for (backend <- Seq(TempDirs.make("graft-count-res").toString,
+        s"jdbc:derby:memory:graft_count_${java.util.UUID.randomUUID()};create=true")) {
+      val core = newCore(backend)
+      try {
+        val counts = Seq("1", "-1").map { user =>
+          val id = core.postJob(JobReq("get_profit_entries", args = Seq(user))).id
+          val st = await(core, id)
+          assert(st.state == JobState.Success, s"$backend: ${st.error}")
+          assert(st.count == core.results(id).count(), s"$backend, user $user")
+          st.count
+        }
+        assert(counts.head > 0 && counts(1) == 0, s"$backend: $counts")
+      } finally core.shutdown()
+    }
+  }
+
+  test("a job that fails in analysis logs no listener ERROR on a session that ran a job") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-spark-errors", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.ERROR))
+          errors.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val sparkLog = LogManager.getLogger("org.apache.spark").asInstanceOf[Logger]
+    val core = newCore()
+    try {
+      assert(await(core, core.postJob(JobReq("get_profit_entries", args = Seq("1"))).id)
+        .state == JobState.Success)
+      OpsFixture.flushListenerBus()
+      sparkLog.addAppender(capture)
+      val st = await(core, core.postJob(JobReq("broken_query")).id)
+      assert(st.state == JobState.Failure)
+      OpsFixture.flushListenerBus()
+    } finally { sparkLog.removeAppender(capture); core.shutdown() }
+    val thrown = errors.asScala.filter(_.contains("threw an exception"))
+    assert(thrown.isEmpty, thrown.mkString("\n"))
+  }
+
+  test("a job's Spark jobs run in the scheduler pool named after its queue") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val core = coreOver(
+      """-- name: in_a
+        |-- queue: qa
+        |SELECT * FROM events WHERE user_id = $1;
+        |
+        |-- name: in_b
+        |-- queue: qb
+        |SELECT * FROM events WHERE user_id = $1;
+        |""".stripMargin, Map("db" -> TestSpark.sf0001))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).foreach { p =>
+          Option(p.getProperty("spark.jobGroup.id")).filter(_.startsWith("pool-"))
+            .foreach(g => seen.add(g -> p.getProperty("spark.scheduler.pool")))
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for ((task, id) <- Seq("in_a" -> "pool-a", "in_b" -> "pool-b"))
+        assert(await(core, core.postJob(JobReq(task, jobId = id, args = Seq("1"))).id)
+          .state == JobState.Success)
+      OpsFixture.flushListenerBus()
+    } finally { spark.sparkContext.removeSparkListener(listener); core.shutdown() }
+    val pools = seen.asScala.toSeq.groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    assert(pools == Map("pool-a" -> Set("qa"), "pool-b" -> Set("qb")), pools)
   }
 }

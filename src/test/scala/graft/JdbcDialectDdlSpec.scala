@@ -73,8 +73,8 @@ class JdbcDialectDdlSpec extends AnyFunSuite {
     assert(JdbcDialects.get("jdbc:mysql://h/db").quoteIdentifier("select") == "`select`")
     assert(JdbcDialects.get("jdbc:postgresql://h/db").quoteIdentifier("select") == "\"select\"")
     // and the result-table name template threads the same quoting
-    assert(Executor.quotedResultTable("jdbc:mysql://h/db", "job-1") == "`results_job-1`")
-    assert(Executor.quotedResultTable("jdbc:postgresql://h/db", "job-1") == "\"results_job-1\"")
+    assert(JdbcResults("jdbc:mysql://h/db").table("job-1") == "`results_job-1`")
+    assert(JdbcResults("jdbc:postgresql://h/db").table("job-1") == "\"results_job-1\"")
   }
 
   test("every canonical class maps to a concrete MySQL AND Postgres type (no default TEXT fallthrough for typed classes)") {

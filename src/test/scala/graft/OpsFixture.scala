@@ -23,6 +23,13 @@ object OpsFixture {
   def codegenCompiles: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
+  /** Wait until the session's listener bus has delivered every posted
+    * event. The bus is `private[spark]`; its getter is public in bytecode. */
+  def flushListenerBus(): Unit = {
+    val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
   /** `df`'s physical plan, as EXPLAIN FORMATTED prints it. */
   def fmt(df: DataFrame): String =
     df.queryExecution.explainString(

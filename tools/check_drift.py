@@ -13,7 +13,9 @@ measured at 4.75 s). This check makes the claims mechanical:
   same artifact the driver's gate reads) when given;
 - SURVEY.md's "<T> green across <S> suites" and "<Q> declared queries"
   claims are greped and diffed. Exit 1 on any mismatch, printing the sed
-  commands to fix them.
+  commands to fix them;
+- a Spark "Listener ... threw an exception" ERROR in the log fails too,
+  with the count.
 """
 import json, re, sys
 
@@ -46,6 +48,15 @@ else:
                    f"measured {tests} across {suites} — fix: "
                    f"s/{ct} green across {cs} suites/"
                    f"{tests} green across {suites} suites/")
+
+# A Spark listener that throws is logged as an ERROR with a stack trace and
+# the run carries on, so the tests stay green while every event it sees pays
+# for the failure (Spark's ObservationManager re-planned each failed query
+# this way until the job path stopped using an Observation).
+listener_errors = len(re.findall(r"ERROR .*Listener .*threw an exception", log))
+if listener_errors:
+    bad.append(f"the test log holds {listener_errors} Spark 'Listener threw "
+               f"an exception' ERROR(s): a listener fails on events it sees")
 
 if verify_out:
     nq = len(json.load(open(f"{verify_out}/oracle_sql.json")))
