@@ -28,8 +28,11 @@ import scala.util.Random
   *
   * Materialization (`writeResults`, core.go:511-572): pick a random result
   * backend, cast the result to the canonical 6-type schema (§1.2), and write
-  * it there as the job's result ([[Results]]). The job result's row count
-  * (`core.go:436`) is read from the committed result once the write returns.
+  * it there as the job's result ([[Results]]). On a directory backend one
+  * Spark job writes the part files into a hidden staging directory, and the
+  * commit renames it onto `results_<id>` ([[DirResults]], [[ResultWrite]]).
+  * The job result's row count (`core.go:436`) is read from the committed
+  * result once the write returns.
   */
 object Executor {
 

@@ -1,12 +1,29 @@
 package graft
 
 import java.io.File
+import java.nio.file.{Files, StandardCopyOption}
 import java.sql.{Connection, DriverManager}
+import java.util.UUID
 import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.LocalInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, GraftColumnShim, Row, SparkSession, classic}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.command.DataWritingCommand
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.metric.SQLMetric
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 import scala.util.Using
 import scala.util.control.NonFatal
 
@@ -28,20 +45,106 @@ sealed trait ResultBackend {
   def purge(jobId: String): Unit
 }
 
-/** The atomic per-directory overwrite commit replaces the reference's DROP
-  * TABLE + CREATE + tx (`sqldb.go:159-217`). */
+/** A local directory of Parquet results. [[ResultWrite]] writes a job's
+  * part files into the hidden staging directory `<root>/.results_<id>.<uuid>`;
+  * the commit deletes the old `results_<id>` and renames the staging
+  * directory onto it. This replaces the reference's DROP TABLE + CREATE + tx
+  * (`sqldb.go:159-217`): readers see the old result, then nothing, then the
+  * whole new one. A failed or cancelled write deletes its staging directory
+  * and leaves any old result as it was. */
 final case class DirResults(root: String) extends ResultBackend {
   def path(jobId: String): String = s"$root/${Results.name(jobId)}"
 
   def write(df: DataFrame, jobId: String): Executor.ExecResult = {
-    df.write.mode("overwrite").parquet(path(jobId))
-    Executor.ExecResult(Results.parquetRows(path(jobId)), path(jobId))
+    val target = new File(path(jobId))
+    val staging = new File(root, s".${Results.name(jobId)}.${UUID.randomUUID()}")
+    try {
+      val plan = df.queryExecution.analyzed
+      GraftColumnShim.ofRows(df.sparkSession,
+        ResultWrite(plan, plan.output.map(_.name), staging.getPath, target.getName))
+      FsUtil.deleteRecursive(target)
+      Files.move(staging.toPath, target.toPath, StandardCopyOption.ATOMIC_MOVE)
+    } finally FsUtil.deleteRecursive(staging)
+    Executor.ExecResult(Results.parquetRows(target.getPath), target.getPath)
   }
 
   def read(spark: SparkSession, jobId: String): Option[DataFrame] =
     Some(path(jobId)).filter(new File(_).exists()).map(spark.read.parquet(_))
 
   def purge(jobId: String): Unit = FsUtil.deleteRecursive(new File(path(jobId)))
+}
+
+/** The Spark side of [[DirResults.write]]: one Spark job whose tasks write
+  * `query`'s rows as Parquet part files into `staging`. It builds Spark's
+  * own Parquet writer ([[ResultWrite.writer]]), so a part file holds what
+  * `df.write.parquet` would write, but its tasks carry only the writer's
+  * configuration, not the session's Hadoop configuration. It runs as a
+  * `DataWritingCommand`, so its plan reports the write in the command's
+  * metrics (`numOutputRows`, `numOutputBytes`, `numFiles`) as Spark's file
+  * writers do. `name` names the Spark job. */
+private[graft] final case class ResultWrite(query: LogicalPlan, outputColumnNames: Seq[String],
+    staging: String, name: String) extends DataWritingCommand {
+
+  override def run(session: classic.SparkSession, child: SparkPlan): Seq[Row] = {
+    val schema = DataTypeUtils.fromAttributes(outputColumns)
+    val (factory, conf) = ResultWrite.writer(session, schema)
+    val shipped = new SerializableConfiguration(conf)
+    // locals, so the task closure does not capture the command and its plan
+    val (dir, counters) = (staging, Seq("numOutputRows", "numOutputBytes", "numFiles").map(metrics))
+    val sc = session.sparkContext
+    val rdd = child.execute()
+    // no partitions at all (an empty local relation): one empty task still
+    // writes partition 0, as Spark's FileFormatWriter does
+    val input = if (rdd.partitions.isEmpty) sc.parallelize(Seq.empty[InternalRow], 1) else rdd
+    val site = sc.getLocalProperty(ResultWrite.CallSite)
+    sc.setCallSite(s"parquet at $name")
+    try sc.runJob(input, (ctx: TaskContext, rows: Iterator[InternalRow]) =>
+      ResultWrite.writePart(ctx, rows, factory, shipped.value, schema, dir, counters))
+    finally sc.setLocalProperty(ResultWrite.CallSite, site)
+    Nil
+  }
+
+  override protected def withNewChildInternal(newChild: LogicalPlan): ResultWrite =
+    copy(query = newChild)
+}
+
+private[graft] object ResultWrite {
+  private val CallSite = "callSite.short"
+
+  /** Spark's Parquet writer for `schema`, and the configuration its tasks
+    * need: `ParquetFileFormat.prepareWrite` over an empty configuration
+    * leaves a dozen keys, where the session's Hadoop configuration holds
+    * over a thousand that every write would serialize and every task
+    * deserialize. */
+  def writer(session: SparkSession, schema: StructType): (OutputWriterFactory, Configuration) = {
+    val job = Job.getInstance(new Configuration(false))
+    (new ParquetFileFormat().prepareWrite(session, job, Map.empty, schema), job.getConfiguration)
+  }
+
+  /** One task: partition `n` goes to `<dir>/part-<n><ext>`. Partition 0
+    * writes a file even when empty, so a zero-row result keeps its schema;
+    * other empty partitions write nothing. A retried attempt first deletes
+    * the partial file of the attempt before it, and a failed one deletes
+    * its own. */
+  private def writePart(ctx: TaskContext, rows: Iterator[InternalRow],
+      factory: OutputWriterFactory, conf: Configuration, schema: StructType, dir: String,
+      counters: Seq[SQLMetric]): Unit = {
+    val part = ctx.partitionId()
+    if (part != 0 && !rows.hasNext) return
+    val attempt = new TaskAttemptContextImpl(conf, new TaskAttemptID(
+      new TaskID(new JobID("graft", ctx.stageId()), TaskType.MAP, part), ctx.attemptNumber()))
+    val file = new Path(dir, f"part-$part%05d${factory.getFileExtension(attempt)}")
+    val fs = file.getFileSystem(conf)
+    if (ctx.attemptNumber() > 0) fs.delete(file, false)
+    var n = 0L
+    try {
+      val out = factory.newInstance(file.toString, schema, attempt)
+      try rows.foreach { r => out.write(r); n += 1 } finally out.close()
+    } catch { case e: Throwable => fs.delete(file, false); throw e }
+    val bytes = fs.getFileStatus(file).getLen
+    counters.zip(Seq(n, bytes, 1L)).foreach { case (m, v) => m.add(v) }
+    GraftColumnShim.setOutputMetrics(ctx, n, bytes)
+  }
 }
 
 /** An external result DB, like the reference's MySQL/PG backends. */
@@ -123,7 +226,9 @@ object Results {
 }
 
 /** Result-TTL sweeper: deletes `results_<jobID>` directories and drops
-  * `results_%` tables older than a retention period. The reference
+  * `results_%` tables older than a retention period. It deletes expired
+  * `.results_*` staging directories too: a worker killed during a write
+  * leaves one behind. The reference
   * configures result expiry but its SQL result backend never enforces it
   * (README: "TTL ... unsupported by SQL result backend"); the port sweeps
   * (SURVEY §4). A directory's age is its commit mtime, which a re-run of the
@@ -146,7 +251,8 @@ final class ResultSweeper(backends: SourcePool, retentionSec: Long) {
         case j: JdbcResults => sweepJdbc(j, nowMs)
         case DirResults(root) =>
           Option(new File(root).listFiles()).getOrElse(Array.empty)
-            .filter(f => f.isDirectory && f.getName.startsWith(Results.Prefix))
+            .filter(f => f.isDirectory &&
+              f.getName.stripPrefix(".").startsWith(Results.Prefix))
             .filter(f => nowMs - f.lastModified() > retentionSec * 1000)
             .map { f => FsUtil.deleteRecursive(f); f.getName }
             .toSeq

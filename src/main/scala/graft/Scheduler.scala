@@ -111,10 +111,8 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends BrokerB
     * sleeping on the worker — the thread and the per-task slot free up so a
     * retrying job never head-of-line blocks its queue. */
   private def runAttempt(job: Job, task: Task, attempt: Int, myEpoch: Long): Unit = {
-    if (store.get(job.id).isEmpty) { // canceled while waiting for slot/retry
-      spark.sparkContext.cancelJobGroup(job.id)
-      return
-    }
+    // canceled while waiting for slot/retry: no Spark job ran under its group
+    if (store.get(job.id).isEmpty) return
     // a non-empty store entry may belong to a NEWER admission of the same ID
     // (cancel + resubmit while this attempt waited on the slot or the retry
     // backoff): a stale attempt must not touch the fresh job's state/results
@@ -186,11 +184,16 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends BrokerB
     // touches the backlog once its admission is stale, so cancel owns
     // the removal (otherwise a cancel + resubmit leaves a ghost entry)
     pending.values().asScala.foreach(_.remove(jobId))
-    spark.sparkContext.cancelJobGroup(jobId)
-    // the in-flight query may still be in planning (no Spark jobs tagged
-    // yet) — interrupt the worker thread so the driver-side wait aborts;
-    // the worker then re-fires cancelJobGroup for late-submitted stages.
-    Option(running.get(jobId)).foreach(_.interrupt())
+    // only a running job has Spark jobs to kill: a queued or finished job's
+    // group has none, and cancelling it would only log DAGScheduler's
+    // "Failed to cancel job group" WARN. The in-flight query may still be
+    // in planning (no Spark jobs tagged yet) — interrupt the worker thread
+    // so the driver-side wait aborts; the worker then re-fires
+    // cancelJobGroup for late-submitted stages.
+    Option(running.get(jobId)).foreach { worker =>
+      spark.sparkContext.cancelJobGroup(jobId)
+      worker.interrupt()
+    }
   }
 
   protected def anyQueued: Boolean =

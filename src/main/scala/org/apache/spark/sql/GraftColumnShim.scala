@@ -18,4 +18,13 @@ object GraftColumnShim {
   def ofRows(session: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan)
+
+  /** Report a write task's output in its task metrics, as both of Spark's
+    * write paths do (the setters are `private[spark]`). Used by the
+    * `results_<id>` writer (`graft.ResultWrite`). */
+  def setOutputMetrics(ctx: org.apache.spark.TaskContext, records: Long, bytes: Long): Unit = {
+    val m = ctx.taskMetrics().outputMetrics
+    m.setRecordsWritten(records)
+    m.setBytesWritten(bytes)
+  }
 }

@@ -112,6 +112,23 @@ class ConfigAndSweeperSpec extends AnyFunSuite {
     assert(!old.exists() && fresh.exists() && other.exists())
   }
 
+  test("result sweeper deletes an expired .results_* staging directory and keeps a fresh one") {
+    val root = TempDirs.make("sweep-staging").toString
+    def mk(name: String, ageSec: Long): java.io.File = {
+      val f = new java.io.File(root, name)
+      f.mkdirs()
+      java.nio.file.Files.writeString(f.toPath.resolve("part-00000.snappy.parquet"), "x")
+      f.setLastModified(System.currentTimeMillis - ageSec * 1000)
+      f
+    }
+    val old = mk(".results_killed.0b5c", 120)
+    val fresh = mk(".results_writing.7e21", 10)
+    val other = mk(".not_a_result", 999)
+    val sweeper = new ResultSweeper(SourcePool.single("b", root), retentionSec = 60)
+    assert(sweeper.sweepOnce() == Seq(".results_killed.0b5c"))
+    assert(!old.exists() && fresh.exists() && other.exists())
+  }
+
   test("result sweeper expires results_% tables in jdbc: backends (ADVICE r1)") {
     val url = "jdbc:derby:memory:sweepdb;create=true"
     val conn = java.sql.DriverManager.getConnection(url)

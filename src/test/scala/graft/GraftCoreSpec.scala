@@ -563,30 +563,46 @@ class GraftCoreSpec extends AnyFunSuite {
   }
 
   test("a job that fails in analysis logs no listener ERROR on a session that ran a job") {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val capture = new AbstractAppender("graft-spark-errors", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLevel.isMoreSpecificThan(Level.ERROR))
-          errors.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
-    }
-    capture.start()
-    val sparkLog = LogManager.getLogger("org.apache.spark").asInstanceOf[Logger]
     val core = newCore()
-    try {
+    val errors = try {
       assert(await(core, core.postJob(JobReq("get_profit_entries", args = Seq("1"))).id)
         .state == JobState.Success)
       OpsFixture.flushListenerBus()
-      sparkLog.addAppender(capture)
-      val st = await(core, core.postJob(JobReq("broken_query")).id)
-      assert(st.state == JobState.Failure)
-      OpsFixture.flushListenerBus()
-    } finally { sparkLog.removeAppender(capture); core.shutdown() }
-    val thrown = errors.asScala.filter(_.contains("threw an exception"))
+      OpsFixture.logged("org.apache.spark", org.apache.logging.log4j.Level.ERROR) {
+        val st = await(core, core.postJob(JobReq("broken_query")).id)
+        assert(st.state == JobState.Failure)
+        OpsFixture.flushListenerBus()
+      }
+    } finally core.shutdown()
+    val thrown = errors.filter(_.contains("threw an exception"))
     assert(thrown.isEmpty, thrown.mkString("\n"))
+  }
+
+  test("cancelling a queued job and purging a finished one log no 'Failed to cancel " +
+       "job group' WARN") {
+    // the DAG scheduler handles a cancel on its event loop: a Spark job
+    // submitted after the cancels finishes after they are handled
+    def drainEventLoop(): Unit = spark.sparkContext.parallelize(Seq(1), 1).count(): Unit
+    val core = newCore()
+    val warned = try OpsFixture.logged("org.apache.spark.scheduler.DAGScheduler",
+        org.apache.logging.log4j.Level.WARN) {
+      assert(await(core, core.postJob(JobReq("get_profit_entries", jobId = "warn-done",
+        args = Seq("1"))).id).state == JobState.Success)
+      // an ETA an hour away keeps the job queued
+      val eta = java.time.LocalDateTime.now.plusHours(1)
+        .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
+      core.postJob(JobReq("get_profit_entries", jobId = "warn-queued", args = Seq("1"),
+        eta = Some(eta)))
+      assert(core.getPendingJobs("test") == Seq("warn-queued"))
+      core.deleteJob("warn-queued")
+      core.deleteJob("warn-done", purge = true)
+      // the capture sees the WARN when a group with no Spark job is cancelled
+      spark.sparkContext.cancelJobGroup("warn-probe")
+      drainEventLoop()
+    } finally core.shutdown()
+    assert(warned.exists(_.contains("Failed to cancel job group warn-probe")), warned)
+    val ours = warned.filter(m => m.contains("warn-queued") || m.contains("warn-done"))
+    assert(ours.isEmpty, ours)
   }
 
   test("a job's Spark jobs run in the scheduler pool named after its queue") {

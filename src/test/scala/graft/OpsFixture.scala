@@ -30,6 +30,32 @@ object OpsFixture {
     bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
   }
 
+  /** "<logger>: <message>" for each event at `level` or above that a
+    * logger named under `prefix` logs while `body` runs. The capture hangs
+    * on the root logger's configuration, which every Spark logger uses:
+    * attaching an appender to a named logger makes log4j add a logger
+    * configuration that cuts that logger off from the console for the rest
+    * of the test JVM, and so from the counts `tools/check_drift.py` takes
+    * from the test log. */
+  def logged(prefix: String, level: org.apache.logging.log4j.Level)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender(s"graft-test-capture-${java.util.UUID.randomUUID()}",
+        null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.startsWith(prefix) && e.getLevel.isMoreSpecificThan(level))
+          seen.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext].getConfiguration.getRootLogger
+    capture.start()
+    root.addAppender(capture, null, null)
+    try body finally { root.removeAppender(capture.getName); capture.stop() }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
   /** `df`'s physical plan, as EXPLAIN FORMATTED prints it. */
   def fmt(df: DataFrame): String =
     df.queryExecution.explainString(

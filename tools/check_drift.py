@@ -15,7 +15,8 @@ measured at 4.75 s). This check makes the claims mechanical:
   claims are greped and diffed. Exit 1 on any mismatch, printing the sed
   commands to fix them;
 - a Spark "Listener ... threw an exception" ERROR in the log fails too,
-  with the count.
+  with the count;
+- the count of DAGScheduler "Failed to cancel job group" WARNs is printed.
 """
 import json, re, sys
 
@@ -57,6 +58,12 @@ listener_errors = len(re.findall(r"ERROR .*Listener .*threw an exception", log))
 if listener_errors:
     bad.append(f"the test log holds {listener_errors} Spark 'Listener threw "
                f"an exception' ERROR(s): a listener fails on events it sees")
+# A cancel of a job group that has no Spark job in flight logs DAGScheduler's
+# "Failed to cancel job group" WARN. Counted, not gated: the worker of a
+# cancelled running job re-fires the cancel once more for stages that slipped
+# in during planning, and that re-fire usually finds none.
+cancel_warns = len(re.findall(r"WARN .*Failed to cancel job group", log))
+print(f"the test log holds {cancel_warns} 'Failed to cancel job group' WARN(s)")
 
 if verify_out:
     nq = len(json.load(open(f"{verify_out}/oracle_sql.json")))
