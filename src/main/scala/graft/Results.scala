@@ -2,29 +2,25 @@ package graft
 
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
-import java.sql.{Connection, DriverManager}
 import java.util.UUID
 import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.ParquetReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, GraftColumnShim, Row, SparkSession, classic}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.{CommandResult, LogicalPlan}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.command.DataWritingCommand
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.metric.SQLMetric
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.util.SerializableConfiguration
-import scala.util.Using
 import scala.util.control.NonFatal
 
 /** A job's result, `results_<jobID>`, in one result backend: the port of
@@ -38,7 +34,7 @@ import scala.util.control.NonFatal
   */
 sealed trait ResultBackend {
   /** Materialize `df` as `results_<jobId>`, replacing an earlier result of
-    * the same ID; the count is read from the committed result, as the
+    * the same ID; the count is the rows the write committed, as the
     * reference's row pump counts what it wrote. */
   def write(df: DataFrame, jobId: String): Executor.ExecResult
   def read(spark: SparkSession, jobId: String): Option[DataFrame]
@@ -58,14 +54,15 @@ final case class DirResults(root: String) extends ResultBackend {
   def write(df: DataFrame, jobId: String): Executor.ExecResult = {
     val target = new File(path(jobId))
     val staging = new File(root, s".${Results.name(jobId)}.${UUID.randomUUID()}")
-    try {
+    val rows = try {
       val plan = df.queryExecution.analyzed
-      GraftColumnShim.ofRows(df.sparkSession,
+      val written = GraftColumnShim.ofRows(df.sparkSession,
         ResultWrite(plan, plan.output.map(_.name), staging.getPath, target.getName))
       FsUtil.deleteRecursive(target)
       Files.move(staging.toPath, target.toPath, StandardCopyOption.ATOMIC_MOVE)
+      ResultWrite.rows(written)
     } finally FsUtil.deleteRecursive(staging)
-    Executor.ExecResult(Results.parquetRows(target.getPath), target.getPath)
+    Executor.ExecResult(rows, target.getPath)
   }
 
   def read(spark: SparkSession, jobId: String): Option[DataFrame] =
@@ -81,9 +78,11 @@ final case class DirResults(root: String) extends ResultBackend {
   * configuration, not the session's Hadoop configuration. It runs as a
   * `DataWritingCommand`, so its plan reports the write in the command's
   * metrics (`numOutputRows`, `numOutputBytes`, `numFiles`) as Spark's file
-  * writers do. `name` names the Spark job. */
+  * writers do. Its one output row holds the rows its successful tasks
+  * wrote. `name` names the Spark job. */
 private[graft] final case class ResultWrite(query: LogicalPlan, outputColumnNames: Seq[String],
     staging: String, name: String) extends DataWritingCommand {
+  override val output: Seq[Attribute] = Seq(AttributeReference("rows", LongType, nullable = false)())
 
   override def run(session: classic.SparkSession, child: SparkPlan): Seq[Row] = {
     val schema = DataTypeUtils.fromAttributes(outputColumns)
@@ -98,10 +97,10 @@ private[graft] final case class ResultWrite(query: LogicalPlan, outputColumnName
     val input = if (rdd.partitions.isEmpty) sc.parallelize(Seq.empty[InternalRow], 1) else rdd
     val site = sc.getLocalProperty(ResultWrite.CallSite)
     sc.setCallSite(s"parquet at $name")
-    try sc.runJob(input, (ctx: TaskContext, rows: Iterator[InternalRow]) =>
+    val written = try sc.runJob(input, (ctx: TaskContext, rows: Iterator[InternalRow]) =>
       ResultWrite.writePart(ctx, rows, factory, shipped.value, schema, dir, counters))
     finally sc.setLocalProperty(ResultWrite.CallSite, site)
-    Nil
+    Seq(Row(written.sum))
   }
 
   override protected def withNewChildInternal(newChild: LogicalPlan): ResultWrite =
@@ -121,16 +120,22 @@ private[graft] object ResultWrite {
     (new ParquetFileFormat().prepareWrite(session, job, Map.empty, schema), job.getConfiguration)
   }
 
-  /** One task: partition `n` goes to `<dir>/part-<n><ext>`. Partition 0
-    * writes a file even when empty, so a zero-row result keeps its schema;
-    * other empty partitions write nothing. A retried attempt first deletes
-    * the partial file of the attempt before it, and a failed one deletes
-    * its own. */
+  /** The rows an executed [[ResultWrite]] wrote, from its output row. */
+  def rows(written: DataFrame): Long =
+    written.queryExecution.commandExecuted.collectFirst {
+      case r: CommandResult => r.rows.head.getLong(0)
+    }.get
+
+  /** One task: partition `n` goes to `<dir>/part-<n><ext>`; returns the
+    * rows written. Partition 0 writes a file even when empty, so a zero-row
+    * result keeps its schema; other empty partitions write nothing. A
+    * retried attempt first deletes the partial file of the attempt before
+    * it, and a failed one deletes its own. */
   private def writePart(ctx: TaskContext, rows: Iterator[InternalRow],
       factory: OutputWriterFactory, conf: Configuration, schema: StructType, dir: String,
-      counters: Seq[SQLMetric]): Unit = {
+      counters: Seq[SQLMetric]): Long = {
     val part = ctx.partitionId()
-    if (part != 0 && !rows.hasNext) return
+    if (part != 0 && !rows.hasNext) return 0L
     val attempt = new TaskAttemptContextImpl(conf, new TaskAttemptID(
       new TaskID(new JobID("graft", ctx.stageId()), TaskType.MAP, part), ctx.attemptNumber()))
     val file = new Path(dir, f"part-$part%05d${factory.getFileExtension(attempt)}")
@@ -144,10 +149,13 @@ private[graft] object ResultWrite {
     val bytes = fs.getFileStatus(file).getLen
     counters.zip(Seq(n, bytes, 1L)).foreach { case (m, v) => m.add(v) }
     GraftColumnShim.setOutputMetrics(ctx, n, bytes)
+    n
   }
 }
 
-/** An external result DB, like the reference's MySQL/PG backends. */
+/** An external result DB, like the reference's MySQL/PG backends. Spark's
+  * JDBC writer and reader move the rows; the count and the drop run through
+  * [[Jdbc]]. */
 final case class JdbcResults(url: String) extends ResultBackend {
   /** The dialect's identifier quote (sqldb.go:307-314): backticks on MySQL
     * and ClickHouse, double quotes elsewhere. */
@@ -166,10 +174,8 @@ final case class JdbcResults(url: String) extends ResultBackend {
       writer.option("createTableOptions", ClickHouseDialect.resultTableEngine)
     else writer).jdbc(url, table(jobId), new java.util.Properties)
     Results.lastWrite.put((url, Results.name(jobId)), System.currentTimeMillis)
-    val rows = connected { c =>
-      val rs = c.createStatement().executeQuery(s"SELECT COUNT(*) FROM ${table(jobId)}")
-      rs.next(); rs.getLong(1)
-    }
+    val rows = Jdbc.withConn(url)(
+      Jdbc.query(_, s"SELECT COUNT(*) FROM ${table(jobId)}")(_.getLong(1))).head
     Executor.ExecResult(rows, s"$url#${Results.name(jobId)}")
   }
 
@@ -177,15 +183,12 @@ final case class JdbcResults(url: String) extends ResultBackend {
     try Some(spark.read.jdbc(url, table(jobId), new java.util.Properties))
     catch { case _: Exception => None }
 
-  def purge(jobId: String): Unit = connected { c =>
+  def purge(jobId: String): Unit = Jdbc.withConn(url) { c =>
     try {
-      c.createStatement().execute(s"DROP TABLE ${table(jobId)}")
+      Jdbc.update(c, s"DROP TABLE ${table(jobId)}")
       Results.lastWrite.remove((url, Results.name(jobId))): Unit
     } catch { case _: Exception => () }
   }
-
-  private[graft] def connected[A](f: Connection => A): A =
-    Using.resource(DriverManager.getConnection(url))(f)
 }
 
 object Results {
@@ -207,19 +210,6 @@ object Results {
   def purge(backends: SourcePool, jobId: String): Unit =
     backends.sources.values.foreach(backend(_).purge(jobId))
 
-  // built once: building the options on every count costs more than the count
-  private val footerOptions = ParquetReadOptions.builder().build()
-
-  /** The rows of a local Parquet directory, from its part files' footers;
-    * names starting with `_` or `.` are not data, as Spark reads them. */
-  private[graft] def parquetRows(dir: String): Long =
-    Option(new File(dir).listFiles())
-      .getOrElse(throw new IllegalStateException(s"$dir is not a local directory"))
-      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .map(f => Using.resource(ParquetFileReader.open(new LocalInputFile(f.toPath),
-        footerOptions))(_.getRecordCount))
-      .sum
-
   /** (URL, table) → millis of this process's last write of a JDBC result,
     * so a re-run refreshes its retention like a directory's mtime. */
   private[graft] val lastWrite = new ConcurrentHashMap[(String, String), java.lang.Long]()
@@ -236,6 +226,8 @@ object Results {
   * its age runs from when the sweeper first saw it or from this process's
   * last write of it ([[Results.lastWrite]]), whichever is later: after a
   * restart a table is never dropped sooner than retention after it is seen.
+  * The table scan reads the connection's metadata; the drops run through
+  * [[Jdbc]].
   */
 final class ResultSweeper(backends: SourcePool, retentionSec: Long) {
   private val pool = Executors.newSingleThreadScheduledExecutor(r => {
@@ -261,7 +253,7 @@ final class ResultSweeper(backends: SourcePool, retentionSec: Long) {
 
   private def sweepJdbc(backend: JdbcResults, nowMs: Long): Seq[String] = {
     val (url, q) = (backend.url, backend.quote)
-    try backend.connected { conn =>
+    try Jdbc.withConn(url) { conn =>
       // results are written unqualified, into the connection's default
       // catalog and schema: scan only those, or another application's
       // results_* tables would expire. Throwable: a pre-JDBC-4.1 driver
@@ -283,8 +275,7 @@ final class ResultSweeper(backends: SourcePool, retentionSec: Long) {
         // per table: one undroppable table must not stop the rest
         if (nowMs - math.max(seen, written) <= retentionSec * 1000) None
         else try {
-          conn.createStatement().execute(
-            s"DROP TABLE ${schem.fold("")(s => s"$q$s$q.")}$q$t$q")
+          Jdbc.update(conn, s"DROP TABLE ${schem.fold("")(s => s"$q$s$q.")}$q$t$q")
           jdbcSeen.remove((url, t))
           Results.lastWrite.remove((url, t))
           Some(t)

@@ -16,7 +16,9 @@ import org.apache.spark.sql.SparkSession
   *     sql/test.sql comments);
   *   - ETA = delayed start (`core.go:359-367`);
   *   - retries = N re-runs with state RETRY between attempts
-  *     (`core.go:389-394`);
+  *     (`core.go:389-394`); attempt N+1 is re-enqueued with an ETA
+  *     250 ms × N later (at most 2 s), on this scheduler or through the
+  *     shared queue ([[retryPublisher]]);
   *   - TTL = max runtime; enforced by a scheduled `cancelJobGroup`
   *     (`core.go:354-357`);
   *   - pending listing returns the backlog newest-first (`core.go:156-159`);
@@ -37,12 +39,13 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends BrokerB
   /** Cross-process retry hop (set by a queue worker's [[ClaimLoop]]): when
     * non-null, a retryable failure re-publishes the job THROUGH THE BROKER
     * (`(job, nextAttempt, epoch) => published`) instead
-    * of re-running on this process's timers — so the retry is visible in
-    * the shared queue and ANY worker in the fleet can claim the next
+    * of re-enqueueing it on this process's pools — so the retry is visible
+    * in the shared queue and ANY worker in the fleet can claim the next
     * attempt (the reference gets this from tasqueue re-enqueueing through
-    * Redis, core.go:389-394). The queue's poll cadence plays the role of
-    * the local backoff. Returning false (broker closed, disk error) falls
-    * back to the local timer path so the attempt is never lost. The
+    * Redis, core.go:389-394). The published job carries its backoff as its
+    * ETA, so the claiming worker starts it no sooner than a local retry
+    * would start. Returning false (broker closed, disk error) falls back to
+    * this process's pools so the attempt is never lost. The
     * attempt's admission epoch rides along so a cancel+resubmit during the
     * failure window can't be resurrected under a newer epoch (and the
     * claim side re-checks the epoch against the shared store anyway). */
@@ -68,27 +71,15 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends BrokerB
   /** Enqueue an admitted job (NewJob, core.go:86-105); [[BrokerBase]]
     * admits first and rolls the admission back if this throws. */
   protected def enqueue(job: Job, task: Task, epoch: Long): Unit =
-    try executeClaimed(job, task, epoch)
-    catch {
-      case e: Throwable =>
-        backlog(job.queue).remove(job.id)
-        throw e
-    }
+    executeClaimed(job, task, epoch)
 
-  /** Execute through the queue pool from a timer thread; after shutdown()
-    * the pool rejects, and a ScheduledThreadPoolExecutor would swallow the
-    * RejectedExecutionException — mark the job failed instead of leaving it
-    * parked in PENDING/RETRY forever. Epoch-gated like every other async
-    * continuation: a stale timer must not stamp FAILURE onto a newer
-    * admission of the same ID. */
-  private def poolExecuteOrFail(job: Job, task: Task, myEpoch: Long, r: Runnable): Unit =
-    try pool(job.queue, task.conc).execute(r)
-    catch {
-      case _: java.util.concurrent.RejectedExecutionException =>
-        if (store.epoch(job.id) == myEpoch)
-          store.setIfPresent(job.id, JobState.Failure, -1,
-            "re-enqueue rejected: scheduler stopped")
-    }
+  /** A job whose next start a stopped scheduler refuses is marked failed
+    * instead of left parked in PENDING/RETRY forever. Epoch-gated like every
+    * other async continuation: a stale attempt must not stamp FAILURE onto a
+    * newer admission of the same ID. */
+  private def failStopped(job: Job, myEpoch: Long): Unit =
+    if (store.epoch(job.id) == myEpoch)
+      store.setIfPresent(job.id, JobState.Failure, -1, "re-enqueue rejected: scheduler stopped")
 
   private def runWithRetries(job: Job, task: Task, attempt: Int, myEpoch: Long): Unit = {
     // stale-first: a canceled-then-resubmitted ID enqueues a NEW runnable;
@@ -106,10 +97,10 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends BrokerB
     try runAttempt(job, task, attempt, myEpoch) finally slot.release()
   }
 
-  /** One attempt; a retryable failure RE-ENQUEUES through the pool after a
-    * capped delay (the reference re-enqueues through its broker) instead of
-    * sleeping on the worker — the thread and the per-task slot free up so a
-    * retrying job never head-of-line blocks its queue. */
+  /** One attempt; a retryable failure RE-ENQUEUES the next attempt with a
+    * capped-backoff ETA (the reference re-enqueues through its broker)
+    * instead of sleeping on the worker — the thread and the per-task slot
+    * free up so a retrying job never head-of-line blocks its queue. */
   private def runAttempt(job: Job, task: Task, attempt: Int, myEpoch: Long): Unit = {
     // canceled while waiting for slot/retry: no Spark job ran under its group
     if (store.get(job.id).isEmpty) return
@@ -148,22 +139,17 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends BrokerB
           }
           else if (attempt <= job.retries) {
             store.setIfPresent(job.id, JobState.Retry)
+            val next = job.copy(eta = Some(LocalDateTime.now.plus(
+              Duration.ofMillis(math.min(250L * attempt, 2000L)))))
             val rp = retryPublisher
             val published =
-              try rp != null && rp(job, attempt + 1, myEpoch)
+              try rp != null && rp(next, attempt + 1, myEpoch)
               catch { case _: Exception => false }
-            if (!published) {
-              val delay = math.min(250L * attempt, 2000L) // capped backoff
-              // the admission generation rides along from submit(): if the job
-              // is canceled and the same ID re-submitted as a NEW job during
-              // the backoff, the stale timer must not resurrect the old one
-              // (runAttempt re-checks the epoch after winning the slot too)
-              timers.schedule(
-                (() => poolExecuteOrFail(job, task, myEpoch, (() => {
-                  if (store.epoch(job.id) == myEpoch) runWithRetries(job, task, attempt + 1, myEpoch)
-                }): Runnable)): Runnable,
-                delay, TimeUnit.MILLISECONDS)
-            }
+            // the admission epoch rides along: runWithRetries drops the
+            // attempt if the ID was canceled and re-submitted meanwhile
+            if (!published)
+              try executeClaimed(next, task, myEpoch, attempt + 1)
+              catch { case _: Exception => failStopped(job, myEpoch) }
           }
           else store.setIfPresent(job.id, JobState.Failure, -1, safeMsg(e))
       } finally Thread.interrupted() // drop any stray TTL interrupt
@@ -215,11 +201,20 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends BrokerB
       .map(e => Duration.between(LocalDateTime.now, e).toMillis.max(0L))
       .getOrElse(0L)
     val runnable: Runnable = () => runWithRetries(job, task, attempt, epoch)
-    if (delayMs > 0)
-      timers.schedule(
-        (() => poolExecuteOrFail(job, task, epoch, runnable)): Runnable,
-        delayMs, TimeUnit.MILLISECONDS)
-    else pool(job.queue, task.conc).execute(runnable)
+    try {
+      // after shutdown() the pool rejects, and a ScheduledThreadPoolExecutor
+      // would swallow the RejectedExecutionException of a timer's execute
+      if (delayMs > 0)
+        timers.schedule((() =>
+          try pool(job.queue, task.conc).execute(runnable)
+          catch { case _: RejectedExecutionException => failStopped(job, epoch) }): Runnable,
+          delayMs, TimeUnit.MILLISECONDS)
+      else pool(job.queue, task.conc).execute(runnable)
+    } catch {
+      case e: Throwable =>
+        backlog(job.queue).remove(job.id)
+        throw e
+    }
   }
 
   override def shutdown(): Unit = {

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * nodes and the worker fleet of the reference's shared-Redis topology.
   *
   * `names` maps a case's key (`run`, `codegen`, `dup`, `cancel`, `race`,
-  * `retry`, `orphan`, `notask`, `fault`, `wire`) to the name of the backend
+  * `retry`, `backoff`, `orphan`, `notask`, `fault`, `wire`) to the name of the backend
   * test it replaced, so that test keeps its ID.
   */
 abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
@@ -213,9 +213,11 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
       val broker = p.broker(apiStore)
       val job = fx.job("cp-retry", retries = 1)
       assert(broker.submit(job, fx.task))
-      // worker A polls once, at start: it claims attempt 1 but cannot claim
-      // the retry, so the attempt provably crosses workers
-      val workerA = p.worker(fx.tasks, p.store(), pollMs = 600000)
+      // worker A claims once: it claims attempt 1 but cannot claim the
+      // retry, so the attempt provably crosses workers
+      val storeA = p.store()
+      val workerA = new ClaimLoop(spark, fx.tasks, storeA,
+        new ControlPlaneContract.ClaimOnce(p.backend(storeA)), 25, "graft-contract-worker")
       try {
         // the re-published entry carries attempt 2: a republish that kept
         // attempt 1 would retry across workers forever
@@ -231,6 +233,26 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
           s"worker B never finished the retry; state=${apiStore.get(job.id)}")
         finally workerB.stop()
       } finally { workerA.stop(); broker.shutdown() }
+    }
+  }
+
+  contract("backoff", "a retry waits its backoff: RETRY to FAILURE takes at least 250 ms") {
+    withPlane { p =>
+      val fx = fixture(emptySource = true) // every attempt fails: no events table
+      val store = p.store()
+      val broker = p.broker(store)
+      val stamps = new ControlPlaneContract.StampingStore(p.store())
+      val worker = p.worker(fx.tasks, stamps, pollMs = 25)
+      try {
+        val job = fx.job("cp-backoff", retries = 1)
+        assert(broker.submit(job, fx.task))
+        assert(awaitDone(store, job.id).exists(_.state == JobState.Failure),
+          s"state=${store.get(job.id)}")
+        val waitedMs = for (r <- stamps.at(JobState.Retry); f <- stamps.at(JobState.Failure))
+          yield (f - r) / 1000000
+        assert(waitedMs.exists(_ >= 250),
+          s"attempt 2 failed ${waitedMs.getOrElse("?")} ms after attempt 1's RETRY")
+      } finally { worker.stop(); broker.shutdown() }
     }
   }
 
@@ -319,18 +341,55 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
 }
 
 object ControlPlaneContract {
-  /** A backend whose first `claim` throws an I/O error. */
-  final class FailFirstClaim(val inner: ClaimBackend) extends ClaimBackend {
+  /** A backend that passes every call on to `inner`. */
+  abstract class Forwarding(val inner: ClaimBackend) extends ClaimBackend {
     type Receipt = inner.Receipt
-    @volatile var faults = 0
     def recoverOrphans(): Unit = inner.recoverOrphans()
-    def claim(): Option[Claimed[Receipt]] =
-      if (faults == 0) { faults += 1; throw new java.io.IOException("injected claim fault") }
-      else inner.claim()
+    def claim(): Option[Claimed[Receipt]] = inner.claim()
     def ack(c: Claimed[Receipt]): Unit = inner.ack(c)
     def republish(job: Job, attempt: Int, epoch: Long): Unit =
       inner.republish(job, attempt, epoch)
     override def reset(): Unit = inner.reset()
     override def close(): Unit = inner.close()
+  }
+
+  /** A backend whose first `claim` throws an I/O error. */
+  final class FailFirstClaim(backend: ClaimBackend) extends Forwarding(backend) {
+    @volatile var faults = 0
+    override def claim(): Option[Claimed[Receipt]] =
+      if (faults == 0) { faults += 1; throw new java.io.IOException("injected claim fault") }
+      else super.claim()
+  }
+
+  /** A backend that claims one job and then finds every queue empty. */
+  final class ClaimOnce(backend: ClaimBackend) extends Forwarding(backend) {
+    @volatile private var claimed = false
+    override def claim(): Option[Claimed[Receipt]] =
+      if (claimed) None
+      else { val c = super.claim(); claimed = c.isDefined; c }
+  }
+
+  /** A store that notes when each state was first written. */
+  final class StampingStore(inner: JobStateStore) extends JobStateStore {
+    private val first = new java.util.concurrent.ConcurrentHashMap[JobState.Value, java.lang.Long]()
+    /** `System.nanoTime` of the first write of `st`, if it was written. */
+    def at(st: JobState.Value): Option[Long] = Option(first.get(st)).map(_.longValue)
+    private def stamp(st: JobState.Value): Unit = first.putIfAbsent(st, System.nanoTime): Unit
+    def tryAdmit(id: String): Long = inner.tryAdmit(id)
+    def epoch(id: String): Long = inner.epoch(id)
+    def set(id: String, st: JobState.Value, count: Long, error: String): Unit = {
+      inner.set(id, st, count, error); stamp(st)
+    }
+    def setIfPresent(id: String, st: JobState.Value, count: Long, error: String): Unit = {
+      inner.setIfPresent(id, st, count, error); stamp(st)
+    }
+    def get(id: String): Option[JobStatus] = inner.get(id)
+    def remove(id: String): Unit = inner.remove(id)
+    def rollback(id: String): Unit = inner.rollback(id)
+    def putGroup(groupId: String, jobIds: Seq[String]): Unit = inner.putGroup(groupId, jobIds)
+    def groupJobIds(groupId: String): Option[Seq[String]] = inner.groupJobIds(groupId)
+    def removeGroup(groupId: String): Unit = inner.removeGroup(groupId)
+    def groupStatus(groupId: String): Option[GroupStatus] = inner.groupStatus(groupId)
+    def snapshot: Map[String, JobStatus] = inner.snapshot
   }
 }

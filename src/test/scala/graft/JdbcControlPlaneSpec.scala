@@ -42,20 +42,20 @@ class JdbcControlPlaneSpec extends ControlPlaneContract(Map(
       new JdbcQueueWorker(spark, tasks, st, url, pollMs = pollMs, claimLeaseMs = 1000)
 
     /** Mark the row claimed by a dead host, with an ancient stamp. */
-    def strandClaim(job: Job): Unit = JdbcControlPlane.withConn(url) { c =>
+    def strandClaim(job: Job): Unit = Jdbc.withConn(url) { c =>
       val up = c.prepareStatement(
         "UPDATE graft_queue SET claimed_by = 'dead-host-1', claimed_at = ? WHERE job_id = ?")
       up.setLong(1, System.currentTimeMillis - 3600000L); up.setString(2, job.id)
       try assert(up.executeUpdate() == 1) finally up.close()
     }
 
-    def claimsHeld(): Long = JdbcControlPlane.withConn(url) { c =>
+    def claimsHeld(): Long = Jdbc.withConn(url) { c =>
       val rs = c.createStatement().executeQuery(
         "SELECT COUNT(*) FROM graft_queue WHERE claimed_by IS NOT NULL")
       try { rs.next(); rs.getLong(1) } finally rs.close()
     }
 
-    def queuedAttempt(job: Job): Option[Int] = JdbcControlPlane.withConn(url) { c =>
+    def queuedAttempt(job: Job): Option[Int] = Jdbc.withConn(url) { c =>
       val ps = c.prepareStatement(
         "SELECT payload FROM graft_queue WHERE job_id = ? AND claimed_by IS NULL")
       ps.setString(1, job.id)
@@ -117,7 +117,7 @@ class JdbcControlPlaneSpec extends ControlPlaneContract(Map(
 
   test("a graft_queue of the old per-column layout is refused with the fix") {
     val url = freshUrl()
-    JdbcControlPlane.withConn(url) { c =>
+    Jdbc.withConn(url) { c =>
       val st = c.createStatement()
       try st.executeUpdate(
         """CREATE TABLE graft_queue(

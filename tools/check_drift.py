@@ -16,9 +16,12 @@ measured at 4.75 s). This check makes the claims mechanical:
   commands to fix them;
 - a Spark "Listener ... threw an exception" ERROR in the log fails too,
   with the count;
-- the count of DAGScheduler "Failed to cancel job group" WARNs is printed.
+- the count of DAGScheduler "Failed to cancel job group" WARNs is printed;
+- the line counts of main and test Scala are printed, counted as
+  `find src/main -name '*.scala' | xargs cat | wc -l` counts them, so
+  ROADMAP.md and CHANGES.md quote one mechanical number.
 """
-import json, re, sys
+import json, os, re, sys
 
 log_path = sys.argv[1]
 verify_out = sys.argv[2] if len(sys.argv) > 2 else None
@@ -65,6 +68,19 @@ if listener_errors:
 cancel_warns = len(re.findall(r"WARN .*Failed to cancel job group", log))
 print(f"the test log holds {cancel_warns} 'Failed to cancel job group' WARN(s)")
 
+
+def scala_lines(root):
+    n = 0
+    for d, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".scala"):
+                with open(os.path.join(d, f), "rb") as fh:
+                    n += fh.read().count(b"\n")
+    return n
+
+
+print(f"Scala lines: {scala_lines('src/main')} main, {scala_lines('src/test')} test")
+
 if verify_out:
     nq = len(json.load(open(f"{verify_out}/oracle_sql.json")))
     qclaim = re.search(r"\*\*(\d+) declared queries", survey)
@@ -96,7 +112,6 @@ if verify_out:
 #    on; if the live fixture has since been regenerated, the gate FAILS
 #    with "re-measure" instead of reporting phantom per-query drift
 #    (cross-generation timing diffs are invalid by construction).
-import os
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from fixture_fp import data_fingerprint
 bench_path = "bench/BENCH_committed.json"
