@@ -5,7 +5,7 @@ import scala.util.control.NonFatal
 
 /** The [[JobBroker]] skeleton every control plane shares: admission,
   * cancel, group cancel and the quiescence wait are the same on the
-  * in-process [[Scheduler]] and the File, JDBC and Redis brokers. A broker
+  * in-process [[Scheduler]] and a shared plane's [[QueueBroker]]. A broker
   * supplies only its queue primitives:
   *
   *   - [[enqueue]]: put an admitted job on the queue;
@@ -147,7 +147,7 @@ object LockedStore {
     stripes(math.floorMod(key.hashCode, stripes.length))
 }
 
-/** A job a queue worker has claimed, with what its backend needs to ack it
+/** A job a queue worker has claimed, with what its queue needs to ack it
   * (the claimed file, the queue row, the parked payload). */
 final case class Claimed[R](job: Job, epoch: Long, attempt: Int, receipt: R)
 
@@ -183,43 +183,64 @@ object JobWire {
   } catch { case _: Exception => None }
 }
 
-/** The backend half of a queue worker: one atomic claim primitive and the
-  * bookkeeping around it. [[ClaimLoop]] owns everything else. */
-trait ClaimBackend {
+/** A shared plane's queue, one object for the API node's [[QueueBroker]]
+  * (publish, list, drop) and every worker's [[ClaimLoop]] (claim, ack,
+  * recover orphans, publish a retry). Each plane names its queue layout in
+  * its one implementation: [[FileQueue]], [[JdbcQueue]], [[RedisQueue]]. */
+trait SharedQueue {
   type Receipt
 
+  /** Put `attempt` of an admitted job on its queue: attempt 1 is the
+    * submit, attempt N+1 the cross-worker retry of a failed attempt N. */
+  def publish(job: Job, epoch: Long, attempt: Int): Unit
+  /** The unclaimed job IDs of `queue`, newest first. */
+  def pending(queue: String): Seq[String]
+  /** Forget a canceled job's unclaimed entry, if any. */
+  def drop(jobId: String): Unit
+  /** Nothing is queued, and no claim is waiting for its hand-off. */
+  def isEmpty: Boolean
   /** Return claims whose owner died before executing them to the queue.
     * Runs at the start of every tick, so it must leave live claims alone. */
-  def recoverOrphans(): Unit
-  /** Atomically claim the next queued job; None once the queues are empty. */
-  def claim(): Option[Claimed[Receipt]]
+  def recoverOrphans(store: JobStateStore): Unit
+  /** Atomically claim the next job queued on `queues` (every queue when
+    * None); None once they are empty. */
+  def claim(queues: Option[Seq[String]]): Option[Claimed[Receipt]]
   /** Release a claim that has been handed to the local scheduler (or
     * refused for lack of the task). */
   def ack(c: Claimed[Receipt]): Unit
-  /** Publish the next attempt of a failed job to the shared queue, so any
-    * worker in the fleet can claim it. */
-  def republish(job: Job, attempt: Int, epoch: Long): Unit
   /** Recover after a failed tick (e.g. reconnect). */
   def reset(): Unit = ()
   def close(): Unit = ()
 }
 
-/** The one queue-worker loop, over any [[ClaimBackend]]: every `pollMs` it
-  * recovers orphaned claims, then drains the queues — claim, hand the job
-  * to a local [[Scheduler]] (full retry/TTL/cancel machinery against the
-  * SHARED store), ack. Retryable failures re-publish through the backend
-  * (see [[Scheduler.retryPublisher]]). Any non-fatal error ends the tick:
-  * the backend is reset and the loop tries again after `pollMs`, so a
-  * transient I/O, SQL or socket error never kills the worker.
+/** The API node's [[JobBroker]] over a shared plane's queue. */
+class QueueBroker(queue: SharedQueue, store: JobStateStore) extends BrokerBase(store) {
+  protected def enqueue(job: Job, task: Task, epoch: Long): Unit = queue.publish(job, epoch, 1)
+  override def pendingJobs(q: String): Seq[String] = queue.pending(q)
+  protected def dropQueued(jobId: String): Unit = queue.drop(jobId)
+  protected def anyQueued: Boolean = !queue.isEmpty
+  override def shutdown(): Unit = { super.shutdown(); queue.close() }
+}
+
+/** The one queue-worker loop, over any [[SharedQueue]]: every `pollMs` it
+  * stops the local runs canceled on another node, recovers orphaned
+  * claims, then drains `queues` (all of them when None) — claim, hand the
+  * job to a local [[Scheduler]] (full retry/TTL/cancel machinery against
+  * the SHARED store), ack. Retryable failures are published to the queue
+  * as the next attempt (see [[Scheduler.retryPublisher]]). Any non-fatal
+  * error ends the tick: the queue is reset and the loop tries again after
+  * `pollMs`, so a transient I/O, SQL or socket error never kills the
+  * worker.
   *
   * The poll thread starts at the end of this constructor. A worker class
-  * passes a fully built backend in and adds no state of its own, so the
+  * passes a fully built queue in and adds no state of its own, so the
   * thread never sees a half-constructed worker. */
 class ClaimLoop(
     spark: SparkSession,
     tasks: Map[String, Task],
     store: JobStateStore,
-    backend: ClaimBackend,
+    queue: SharedQueue,
+    queues: Option[Seq[String]],
     pollMs: Long,
     threadName: String) {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -229,7 +250,7 @@ class ClaimLoop(
   // a publish failure returns false (or throws) and the scheduler retries
   // locally instead, so the attempt is never dropped either way
   scheduler.retryPublisher = (job, nextAttempt, epoch) =>
-    !stopped && { backend.republish(job, nextAttempt, epoch); true }
+    !stopped && { queue.publish(job, epoch, nextAttempt); true }
 
   private val thread = new Thread(() => {
     var failing = false
@@ -240,7 +261,7 @@ class ClaimLoop(
         case NonFatal(e) =>
           if (!failing && !stopped) log.warn(s"$threadName: tick failed, retrying", e)
           failing = true
-          try backend.reset() catch { case NonFatal(_) => () }
+          try queue.reset() catch { case NonFatal(_) => () }
       }
       try Thread.sleep(pollMs) catch { case _: InterruptedException => () }
     }
@@ -249,8 +270,9 @@ class ClaimLoop(
   thread.start()
 
   private def tick(): Unit = {
-    backend.recoverOrphans()
-    var next = if (stopped) None else backend.claim()
+    scheduler.stopCanceled()
+    queue.recoverOrphans(store)
+    var next = if (stopped) None else queue.claim(queues)
     while (next.isDefined) {
       val c = next.get
       tasks.get(c.job.taskName) match {
@@ -259,8 +281,8 @@ class ClaimLoop(
           store.setIfPresent(c.job.id, JobState.Failure, -1,
             s"worker has no task '${c.job.taskName}'")
       }
-      backend.ack(c)
-      next = if (stopped) None else backend.claim()
+      queue.ack(c)
+      next = if (stopped) None else queue.claim(queues)
     }
   }
 
@@ -271,7 +293,7 @@ class ClaimLoop(
     stopped = true
     thread.interrupt()
     scheduler.shutdown()
-    backend.close()
+    queue.close()
   }
 }
 

@@ -4,98 +4,86 @@ import java.io.File
 import java.nio.file.{Files, Path, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-/** Shared-directory job queue — the [[JobBroker]] half of the cross-process
+/** Shared-directory job queue — the queue half of the cross-process
   * control plane (the state half is [[FileJobStateStore]]).
   *
   * Reproduces the reference's API-node / worker-node split
   * (`cmd/main.go:73-75`, README's "workers across machines") without Redis:
-  * an API process runs [[FileQueueBroker]] (admit → drop a queue file,
-  * whose content is the [[JobWire]] payload, in the queue's directory),
-  * worker processes run [[FileQueueWorker]] (claim by
-  * atomic rename — exactly-once per file — then execute through a local
-  * [[Scheduler]] with the full retry/TTL/cancel machinery). Both sides
-  * share a [[JobStateStore]] (e.g. [[FileJobStateStore]] over the same
-  * root), so admission exclusivity, status, and cancellation are global:
-  * a cancel issued on the API node deletes the store entry, and the
-  * worker's pre-run checks (`runWithRetries`) observe it before starting.
+  * the API node's [[QueueBroker]] admits and drops a queue file, whose
+  * content is the [[JobWire]] payload, in the queue's directory; a worker's
+  * [[ClaimLoop]] claims it by atomic rename — exactly-once per file — and
+  * executes it through a local [[Scheduler]] with the full
+  * retry/TTL/cancel machinery. Both sides share a [[JobStateStore]] (e.g.
+  * [[FileJobStateStore]] over the same root), so admission exclusivity,
+  * status, and cancellation are global: a cancel issued on the API node
+  * deletes the store entry, the worker's pre-run checks (`runWithRetries`)
+  * observe it before starting, and a running job is stopped on the
+  * worker's next tick.
   *
-  * Honest limitation, documented: cancel-while-RUNNING cannot interrupt a
-  * query executing in another process (no cross-process thread interrupt);
-  * the running attempt completes or hits its TTL, and its final
-  * `setIfPresent` is a no-op against the removed entry — state converges to
-  * canceled, compute is not reclaimed. The reference has the same gap
-  * unless the owning process consumes the cancel message itself.
+  * A claim is an atomic rename into `_claimed`, named
+  * `<host>__<claimerPid>__<queueDir>__<file>` so a claim whose owner died
+  * before executing it can be told from a live one. PID liveness only means
+  * something on the claimer's own host, so a worker judges only the claims
+  * made on its host and leaves every other host's claims alone.
   */
-final class FileQueueBroker(queueRoot: File, store: JobStateStore) extends BrokerBase(store) {
-  require(queueRoot.isDirectory || queueRoot.mkdirs(), s"cannot create $queueRoot")
+final class FileQueue(root: File) extends SharedQueue {
+  type Receipt = Path
+  val claimedDir: Path = Files.createDirectories(root.toPath.resolve("_claimed"))
+  private val pid = ProcessHandle.current().pid()
+  /** The current sweep's unclaimed files, oldest first per queue. */
+  private var listed: Iterator[(Path, Path)] = Iterator.empty
 
-  protected def enqueue(job: Job, task: Task, epoch: Long): Unit =
-    FileQueue.publish(queueRoot, job, epoch, 1)
+  /** `queue`'s directory, made by the first publish to it. */
+  def queueDir(queue: String): Path = root.toPath.resolve(FsUtil.safe(queue))
+
+  /** Drop a queue file for `attempt` of an admitted job: written under a
+    * temporary name, then renamed into place, so a claimer never reads half
+    * a file. The name (millis, per-JVM seq, pid) orders the backlog and
+    * never collides across publishing processes. */
+  def publish(job: Job, epoch: Long, attempt: Int): Unit = {
+    val name = f"${System.currentTimeMillis()}%013d_${FileQueue.seq.incrementAndGet()}%06d_" +
+      s"${pid}_${FsUtil.safe(job.id)}${FileQueue.Suffix}"
+    val p = Files.createDirectories(queueDir(job.queue)).resolve(name)
+    val tmp = p.resolveSibling(name + ".tmp")
+    Files.writeString(tmp, JobWire.encode(job, epoch, attempt))
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
+  }
 
   /** Newest-first, like the reference's reversed pending listing. A queue
     * nobody has posted to has no directory, and this read makes none. */
-  override def pendingJobs(queue: String): Seq[String] = {
-    val dir = FileQueue.queueDir(queueRoot, queue)
+  def pending(queue: String): Seq[String] = {
+    val dir = queueDir(queue)
     if (!Files.isDirectory(dir)) Nil
-    else FileQueue.jobFiles(dir).reverse.flatMap(p => FileQueue.read(p).map(_._1.id))
+    else jobFiles(dir).reverse.flatMap(p => FileQueue.read(p).map(_._1.id))
   }
 
   /** Delete the unclaimed queue file, if any (claimed files are gone). */
-  protected def dropQueued(jobId: String): Unit =
-    FileQueue.list(queueRoot.toPath).filter(Files.isDirectory(_)).foreach { qd =>
+  def drop(jobId: String): Unit =
+    FileQueue.list(root.toPath).filter(Files.isDirectory(_)).foreach { qd =>
       FileQueue.list(qd).foreach { p =>
         if (p.getFileName.toString.endsWith(s"_${FsUtil.safe(jobId)}${FileQueue.Suffix}"))
           Files.deleteIfExists(p)
       }
     }
 
-  /** Unclaimed files, and claims not yet handed to a scheduler. */
-  protected def anyQueued: Boolean = {
-    val stream = Files.walk(queueRoot.toPath)
-    try stream.iterator().asScala.exists(_.getFileName.toString.endsWith(FileQueue.Suffix))
+  /** No unclaimed files, and no claims not yet handed to a scheduler. */
+  def isEmpty: Boolean = {
+    val stream = Files.walk(root.toPath)
+    try !stream.iterator().asScala.exists(_.getFileName.toString.endsWith(FileQueue.Suffix))
     finally stream.close()
   }
-}
-
-/** Worker-process side: claims queue files by atomic rename and executes
-  * them through the [[ClaimLoop]] against the SHARED state store.
-  * `queues = None` consumes everything — the reference's `--worker-only`
-  * with queue filters maps to `Some(...)`. */
-final class FileQueueWorker(
-    spark: org.apache.spark.sql.SparkSession,
-    tasks: Map[String, Task],
-    store: JobStateStore,
-    queueRoot: File,
-    queues: Option[Seq[String]] = None,
-    pollMs: Long = ClaimLoop.DefaultPollMs)
-  extends ClaimLoop(spark, tasks, store, new FileClaims(queueRoot, queues), pollMs,
-    "graft-file-queue-worker")
-
-/** The file plane's claim primitive: an atomic rename into `_claimed`,
-  * named `<host>__<claimerPid>__<queueDir>__<file>` so a claim whose owner
-  * died before executing it can be told from a live one. PID liveness only
-  * means something on the claimer's own host, so a worker judges only the
-  * claims made on its host and leaves every other host's claims alone. */
-private[graft] final class FileClaims(queueRoot: File, queues: Option[Seq[String]])
-    extends ClaimBackend {
-  type Receipt = Path
-  private val claimedDir = queueRoot.toPath.resolve("_claimed")
-  Files.createDirectories(claimedDir)
-  private val pid = ProcessHandle.current().pid()
-  /** The current sweep's unclaimed files, oldest first per queue. */
-  private var listed: Iterator[(Path, Path)] = Iterator.empty
 
   /** A claim whose owner died between claim and execution strands the job
     * as PENDING forever (the store entry is live but nobody holds the
     * file): move it back. Claims by live processes, and claims made on
     * other hosts, are left alone. */
-  def recoverOrphans(): Unit =
+  def recoverOrphans(store: JobStateStore): Unit =
     FileQueue.list(claimedDir).foreach { p =>
       p.getFileName.toString.split("__", 4) match {
         case Array(host, owner, qdir, rest) if host == FileQueue.host &&
             owner.nonEmpty && owner.forall(_.isDigit) &&
             ProcessHandle.of(owner.toLong).isEmpty =>
-          val back = queueRoot.toPath.resolve(qdir).resolve(rest)
+          val back = root.toPath.resolve(qdir).resolve(rest)
           Files.createDirectories(back.getParent)
           try Files.move(p, back, StandardCopyOption.ATOMIC_MOVE)
           catch { case _: java.io.IOException => () } // another worker won
@@ -103,14 +91,12 @@ private[graft] final class FileClaims(queueRoot: File, queues: Option[Seq[String
       }
     }
 
-  private def wantedQueue(dirName: String): Boolean =
-    queues.forall(_.exists(q => FsUtil.safe(q) == dirName))
-
-  def claim(): Option[Claimed[Path]] = {
+  def claim(queues: Option[Seq[String]]): Option[Claimed[Path]] = {
+    def wanted(dirName: String) = queues.forall(_.exists(q => FsUtil.safe(q) == dirName))
     if (!listed.hasNext)
-      listed = FileQueue.list(queueRoot.toPath).filter(p => Files.isDirectory(p) &&
-          p != claimedDir && wantedQueue(p.getFileName.toString))
-        .flatMap(qd => FileQueue.jobFiles(qd).map(qd -> _))
+      listed = FileQueue.list(root.toPath).filter(p => Files.isDirectory(p) &&
+          p != claimedDir && wanted(p.getFileName.toString))
+        .flatMap(qd => jobFiles(qd).map(qd -> _))
         .iterator
     while (listed.hasNext) {
       val (qd, p) = listed.next()
@@ -131,8 +117,10 @@ private[graft] final class FileClaims(queueRoot: File, queues: Option[Seq[String
 
   def ack(c: Claimed[Path]): Unit = Files.deleteIfExists(c.receipt): Unit
 
-  def republish(job: Job, attempt: Int, epoch: Long): Unit =
-    FileQueue.publish(queueRoot, job, epoch, attempt)
+  /** One queue directory's queue files, oldest first. */
+  private def jobFiles(dir: Path): List[Path] =
+    FileQueue.list(dir).filter(_.getFileName.toString.endsWith(FileQueue.Suffix))
+      .sortBy(_.getFileName.toString)
 }
 
 private[graft] object FileQueue {
@@ -151,27 +139,6 @@ private[graft] object FileQueue {
   def list(dir: Path): List[Path] = {
     val stream = Files.list(dir)
     try stream.iterator().asScala.toList finally stream.close()
-  }
-
-  /** `queue`'s directory, made by the first publish to it. */
-  def queueDir(queueRoot: File, queue: String): Path =
-    queueRoot.toPath.resolve(FsUtil.safe(queue))
-
-  /** One queue directory's queue files, oldest first. */
-  def jobFiles(dir: Path): List[Path] =
-    list(dir).filter(_.getFileName.toString.endsWith(Suffix)).sortBy(_.getFileName.toString)
-
-  /** Drop a queue file for `attempt` of an admitted job: written under a
-    * temporary name, then renamed into place, so a claimer never reads half
-    * a file. The name (millis, per-JVM seq, pid) orders the backlog and
-    * never collides across publishing processes. */
-  def publish(queueRoot: File, job: Job, epoch: Long, attempt: Int): Unit = {
-    val name = f"${System.currentTimeMillis()}%013d_${seq.incrementAndGet()}%06d_" +
-      s"${ProcessHandle.current().pid()}_${FsUtil.safe(job.id)}$Suffix"
-    val p = Files.createDirectories(queueDir(queueRoot, job.queue)).resolve(name)
-    val tmp = p.resolveSibling(name + ".tmp")
-    Files.writeString(tmp, JobWire.encode(job, epoch, attempt))
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** The queue file's job; None once it is gone (claimed or dropped). */

@@ -37,7 +37,7 @@ final case class GraftConfig(
     controlDir: String = "",
     /** `[control] jdbc_url` — database-backed control plane for topologies
       * with no shared filesystem (the reference's Redis role over any SQL
-      * database). Mutually exclusive with `dir`; `dir` wins if both set. */
+      * database). Mutually exclusive with `dir`: setting both is an error. */
     controlJdbcUrl: String = "",
     /** `[control] worker_only` — consume the shared queue without serving
       * the HTTP API (the reference's `--worker-only`). Requires `dir` or
@@ -47,7 +47,17 @@ final case class GraftConfig(
     workerQueues: Seq[String] = Nil) {
 
   /** True when a cross-process control plane is configured. */
-  def hasControlPlane: Boolean = controlDir.nonEmpty || controlJdbcUrl.nonEmpty
+  def hasControlPlane: Boolean = plane.isDefined
+
+  /** The shared control plane's state store, queue and worker thread name;
+    * None for the in-process default. */
+  private def plane: Option[(() => JobStateStore, () => SharedQueue, String)] =
+    if (controlDir.nonEmpty) Some((
+      () => new FileJobStateStore(new java.io.File(controlDir, "state")),
+      () => new FileQueue(new java.io.File(controlDir, "queue")), "graft-file-queue-worker"))
+    else if (controlJdbcUrl.nonEmpty) Some((() => new JdbcJobStateStore(controlJdbcUrl),
+      () => new JdbcQueue(controlJdbcUrl), "graft-jdbc-queue-worker"))
+    else None
 
   /** The task registry, each task parsed once, for a worker-only process.
     * A process that also serves the API loads it once, in [[boot]], and
@@ -55,46 +65,27 @@ final case class GraftConfig(
   def loadTasks(spark: org.apache.spark.sql.SparkSession): Map[String, Task] =
     TaskRegistry.load(spark, taskDirs, SourcePool(sources), SourcePool(resultBackends), defaultQueue)
 
-  def boot(spark: org.apache.spark.sql.SparkSession): GraftCore = {
-    if (!hasControlPlane)
-      GraftCore(spark, taskDirs, sources, resultBackends, defaultQueue, defaultTtlSec)
-    else {
-      // shared control plane: file- or JDBC-backed state store + queue
-      // broker; a queue worker (started by Main when not API-only)
-      // executes claims
+  /** The API core: in-process, or the shared plane's store and a
+    * [[QueueBroker]] over its queue (a queue worker, started by Main when
+    * not API-only, executes the claims). */
+  def boot(spark: org.apache.spark.sql.SparkSession): GraftCore = plane match {
+    case None => GraftCore(spark, taskDirs, sources, resultBackends, defaultQueue, defaultTtlSec)
+    case Some((mkStore, mkQueue, _)) =>
       val src = SourcePool(sources)
       val bk = SourcePool(resultBackends)
-      val tasks = TaskRegistry.load(spark, taskDirs, src, bk, defaultQueue)
-      if (controlDir.nonEmpty)
-        new GraftCore(spark, tasks, src, bk,
-          mkStore = () => new FileJobStateStore(new java.io.File(controlDir, "state")),
-          mkBroker = (_, st) => new FileQueueBroker(new java.io.File(controlDir, "queue"), st),
-          defaultTtlSec = defaultTtlSec)
-      else
-        new GraftCore(spark, tasks, src, bk,
-          mkStore = () => new JdbcJobStateStore(controlJdbcUrl),
-          mkBroker = (_, st) => new JdbcQueueBroker(controlJdbcUrl, st),
-          defaultTtlSec = defaultTtlSec)
-    }
+      new GraftCore(spark, TaskRegistry.load(spark, taskDirs, src, bk, defaultQueue), src, bk,
+        mkStore = mkStore, mkBroker = (_, st) => new QueueBroker(mkQueue(), st),
+        defaultTtlSec = defaultTtlSec)
   }
 
   /** Start a queue worker over the shared control plane (no-op handle when
     * no control plane is configured) running `tasks`. Returns the worker's
     * stop handle. */
   def bootWorker(spark: org.apache.spark.sql.SparkSession, tasks: Map[String, Task]): Option[() => Unit] =
-    if (!hasControlPlane) None
-    else {
-      val qs = if (workerQueues.isEmpty) None else Some(workerQueues)
-      if (controlDir.nonEmpty) {
-        val w = new FileQueueWorker(spark, tasks,
-          new FileJobStateStore(new java.io.File(controlDir, "state")),
-          new java.io.File(controlDir, "queue"), queues = qs)
-        Some(() => w.stop())
-      } else {
-        val w = new JdbcQueueWorker(spark, tasks,
-          new JdbcJobStateStore(controlJdbcUrl), controlJdbcUrl, queues = qs)
-        Some(() => w.stop())
-      }
+    plane.map { case (mkStore, mkQueue, threadName) =>
+      val w = new ClaimLoop(spark, tasks, mkStore(), mkQueue(),
+        Some(workerQueues).filter(_.nonEmpty), ClaimLoop.DefaultPollMs, threadName)
+      () => w.stop()
     }
 }
 
@@ -127,6 +118,9 @@ object GraftConfig {
       kv.collect { case (k, v) if k.startsWith(prefix + ".") && k.endsWith("." + leaf) =>
         k.stripPrefix(prefix + ".").stripSuffix("." + leaf) -> unquote(v)
       }
+    if (str("control.dir", "").nonEmpty && str("control.jdbc_url", "").nonEmpty)
+      throw new IllegalArgumentException(
+        "[control] sets both dir and jdbc_url: choose one shared control plane")
     GraftConfig(
       defaultTtlSec = parseDuration(str("app.default_job_ttl", "60s")),
       defaultQueue = str("app.default_queue", TaskRegistry.DefaultQueue),

@@ -2,11 +2,11 @@ package graft
 
 import java.sql.{Connection, SQLException}
 
-/** JDBC-backed control plane — the [[JobStateStore]] / [[JobBroker]] SPI
-  * implementations over any network SQL database (the role the reference
+/** JDBC-backed control plane — the [[JobStateStore]] and the
+  * [[SharedQueue]] over any network SQL database (the role the reference
   * fills with Redis, `cmd/init.go:200-229`).
   *
-  * [[FileJobStateStore]]/[[FileQueueBroker]] cover deployments with a shared
+  * [[FileJobStateStore]]/[[FileQueue]] cover deployments with a shared
   * POSIX directory; this pair covers the topology they can't — API nodes and
   * worker nodes on different machines with nothing in common but a database
   * URL. Every contract the scheduler relies on maps to a single-statement
@@ -19,7 +19,7 @@ import java.sql.{Connection, SQLException}
   *     per admission with no read-modify-write race.
   *   - queue claims: `UPDATE ... SET claimed_by WHERE seq = ? AND
   *     claimed_by IS NULL` — exactly one worker per row, the rename-claim of
-  *     [[FileQueueWorker]] as a conditional update. A `graft_queue` row
+  *     [[FileQueue]] as a conditional update. A `graft_queue` row
   *     keeps as columns only what this SQL filters on (`seq`, `job_id`,
   *     `queue`, `claimed_by`, `claimed_at`); the job itself is one
   *     [[JobWire]] `payload`.
@@ -150,56 +150,34 @@ final class JdbcJobStateStore(url: String) extends JobStateStore {
   }
 }
 
-/** API-node side: admit through the shared store, enqueue a row. */
-final class JdbcQueueBroker(url: String, store: JobStateStore) extends BrokerBase(store) {
-  JdbcControlPlane.ensureSchema(url)
-
-  private def withConn[A](f: Connection => A): A = Jdbc.withConn(url)(f)
-
-  protected def enqueue(job: Job, task: Task, epoch: Long): Unit =
-    withConn(JdbcControlPlane.insertQueueRow(_, job, epoch, 1))
-
-  override def pendingJobs(queue: String): Seq[String] = withConn(Jdbc.query(_,
-    "SELECT job_id FROM graft_queue WHERE queue = ? AND claimed_by IS NULL " +
-      "ORDER BY seq DESC", queue)(_.getString(1)))
-
-  /** Delete the unclaimed row only. */
-  protected def dropQueued(jobId: String): Unit = withConn(Jdbc.update(_,
-    "DELETE FROM graft_queue WHERE job_id = ? AND claimed_by IS NULL", jobId)): Unit
-
-  /** Any row, claimed or not: a claimed row is deleted once handed off. */
-  protected def anyQueued: Boolean =
-    withConn(Jdbc.query(_, "SELECT COUNT(*) FROM graft_queue")(_.getLong(1))).head > 0
-}
-
-/** Worker-process side: claims rows by conditional UPDATE and executes
-  * them through the [[ClaimLoop]] against the shared store; claims whose
-  * owner died between claim and execution are lease-recovered. */
-final class JdbcQueueWorker(
-    spark: org.apache.spark.sql.SparkSession,
-    tasks: Map[String, Task],
-    store: JobStateStore,
-    url: String,
-    queues: Option[Seq[String]] = None,
-    pollMs: Long = ClaimLoop.DefaultPollMs,
-    claimLeaseMs: Long = ClaimLoop.DefaultClaimLeaseMs)
-  extends ClaimLoop(spark, tasks, store, new JdbcClaims(url, store, queues, claimLeaseMs),
-    pollMs, "graft-jdbc-queue-worker")
-
-/** The JDBC plane's claim primitive: `UPDATE ... SET claimed_by WHERE
-  * seq = ? AND claimed_by IS NULL` — exactly one worker per row. The
-  * receipt is the row's `seq`. */
-private[graft] final class JdbcClaims(url: String, store: JobStateStore,
-    queues: Option[Seq[String]], claimLeaseMs: Long) extends ClaimBackend {
+/** The JDBC plane's [[SharedQueue]]: one `graft_queue` row per queued
+  * attempt. A claim is `UPDATE ... SET claimed_by WHERE seq = ? AND
+  * claimed_by IS NULL` — exactly one worker per row — stamped with a lease;
+  * the receipt is the row's `seq`. */
+final class JdbcQueue(url: String, claimLeaseMs: Long = ClaimLoop.DefaultClaimLeaseMs)
+    extends SharedQueue {
   JdbcControlPlane.ensureSchema(url)
   type Receipt = Long
-  private val workerId =
+  private lazy val workerId =
     s"${java.net.InetAddress.getLocalHost.getHostName}-${ProcessHandle.current().pid()}-${System.nanoTime()}"
 
   private def withConn[A](f: Connection => A): A = Jdbc.withConn(url)(f)
 
-  private def queueFilter: String =
-    queues.map(qs => s" AND queue IN (${qs.map(_ => "?").mkString(",")})").getOrElse("")
+  def publish(job: Job, epoch: Long, attempt: Int): Unit = withConn(Jdbc.update(_,
+    "INSERT INTO graft_queue(job_id, queue, payload) VALUES (?, ?, ?)",
+    job.id, job.queue, JobWire.encode(job, epoch, attempt))): Unit
+
+  def pending(queue: String): Seq[String] = withConn(Jdbc.query(_,
+    "SELECT job_id FROM graft_queue WHERE queue = ? AND claimed_by IS NULL " +
+      "ORDER BY seq DESC", queue)(_.getString(1)))
+
+  /** Delete the unclaimed row only. */
+  def drop(jobId: String): Unit = withConn(Jdbc.update(_,
+    "DELETE FROM graft_queue WHERE job_id = ? AND claimed_by IS NULL", jobId)): Unit
+
+  /** No row, claimed or not: a claimed row is deleted once handed off. */
+  def isEmpty: Boolean =
+    withConn(Jdbc.query(_, "SELECT COUNT(*) FROM graft_queue")(_.getLong(1))).head == 0
 
   /** Claims whose owner died between claim and execution strand the job as
     * PENDING with nobody holding the row. PID liveness doesn't cross
@@ -208,7 +186,7 @@ private[graft] final class JdbcClaims(url: String, store: JobStateStore,
     * finished one has deleted the row. The reset is conditional on the
     * exact (claimer, stamp) observed, so a live worker that just started
     * executing can't be double-claimed. */
-  def recoverOrphans(): Unit = withConn { c =>
+  def recoverOrphans(store: JobStateStore): Unit = withConn { c =>
     val expired = Jdbc.query(c,
       "SELECT seq, job_id, claimed_by, claimed_at FROM graft_queue " +
         "WHERE claimed_by IS NOT NULL AND claimed_at < ?",
@@ -238,9 +216,11 @@ private[graft] final class JdbcClaims(url: String, store: JobStateStore,
     Jdbc.update(c, "DELETE FROM graft_queue WHERE seq = ? AND claimed_by = ? AND claimed_at = ?",
       seq, by, at): Unit
 
-  def claim(): Option[Claimed[Long]] = withConn { c =>
+  def claim(queues: Option[Seq[String]]): Option[Claimed[Long]] = withConn { c =>
+    val filter =
+      queues.map(qs => s" AND queue IN (${qs.map(_ => "?").mkString(",")})").getOrElse("")
     val next = Jdbc.query(c,
-      s"SELECT MIN(seq) FROM graft_queue WHERE claimed_by IS NULL$queueFilter",
+      s"SELECT MIN(seq) FROM graft_queue WHERE claimed_by IS NULL$filter",
       queues.getOrElse(Nil): _*) { r => val v = r.getLong(1); Option.when(!r.wasNull())(v) }
     next.headOption.flatten.flatMap { seq =>
       val won = Jdbc.update(c, "UPDATE graft_queue SET claimed_by = ?, claimed_at = ? " +
@@ -254,16 +234,9 @@ private[graft] final class JdbcClaims(url: String, store: JobStateStore,
 
   def ack(c: Claimed[Long]): Unit =
     withConn(Jdbc.update(_, "DELETE FROM graft_queue WHERE seq = ?", c.receipt)): Unit
-
-  def republish(job: Job, attempt: Int, epoch: Long): Unit =
-    withConn(JdbcControlPlane.insertQueueRow(_, job, epoch, attempt))
 }
 
 private[graft] object JdbcControlPlane {
-  def insertQueueRow(c: Connection, job: Job, epoch: Long, attempt: Int): Unit =
-    Jdbc.update(c, "INSERT INTO graft_queue(job_id, queue, payload) VALUES (?, ?, ?)",
-      job.id, job.queue, JobWire.encode(job, epoch, attempt)): Unit
-
   /** Create the four control-plane tables if absent; races between processes
     * are benign (duplicate-CREATE errors are swallowed). Types stick to the
     * SQL-92 subset Derby/Postgres/MySQL all accept. A `graft_queue` of the

@@ -4,8 +4,8 @@ import java.io.{BufferedInputStream, BufferedOutputStream}
 import java.net.Socket
 import java.nio.charset.StandardCharsets
 
-/** Redis-protocol control plane — the THIRD [[JobStateStore]]/[[JobBroker]]
-  * implementation, speaking RESP2 on the wire.
+/** Redis-protocol control plane — the THIRD [[JobStateStore]]/[[SharedQueue]]
+  * pair, speaking RESP2 on the wire.
   *
   * This is the reference's actual deployment topology: its only supported
   * broker/state store is Redis (`cmd/init.go:200-229` hard-rejects any
@@ -29,7 +29,7 @@ import java.nio.charset.StandardCharsets
   *   - `processing:<worker>` the reliable-queue parking list: a claim is
   *                   `LMOVE queue:<q> processing:<w> RIGHT LEFT` (atomic
   *                   pop-and-park), acked with LREM once handed to the
-  *                   local scheduler; [[RedisClaims]]'s reaper
+  *                   local scheduler; [[RedisQueue]]'s reaper
   *                   recovers orphans (see there)
   *   - `group:<gid>` member-ID list
   *
@@ -43,12 +43,10 @@ import java.nio.charset.StandardCharsets
   * uses KEYS under the prefix (SCAN in a production deployment — same
   * contract, cursor-paged).
   *
-  * Honest limitation (same as the file plane, documented there): a worker
-  * crashing AFTER the hand-off ack (payload LREMed, job running in its
-  * local scheduler) still strands the job's store entry until a
-  * re-admission — the processing list covers the claim window, not
-  * mid-execution crashes; cancel-while-RUNNING in another process
-  * converges state but cannot reclaim the compute.
+  * Honest limitation: a worker crashing AFTER the hand-off ack (payload
+  * LREMed, job running in its local scheduler) still strands the job's
+  * store entry until a re-admission — the processing list covers the claim
+  * window, not mid-execution crashes.
   */
 object RedisControlPlane {
 
@@ -92,7 +90,7 @@ object RedisControlPlane {
       * LMOVE/RPOPLPUSH are in the set for the same no-blind-retry reason
       * (a replay would claim a SECOND payload), but their lost reply is
       * no longer lost DATA: the atomic move parks the payload in the
-      * worker's processing list, where [[RedisClaims]]'s reaper
+      * worker's processing list, where [[RedisQueue]]'s reaper
       * recovers it — the standard Redis reliable-queue pattern. */
     private val noRetry =
       Set("RPOP", "LPOP", "BRPOP", "BLPOP", "LMOVE", "RPOPLPUSH", "BLMOVE")
@@ -283,59 +281,12 @@ final class RedisJobStateStore(host: String, port: Int, prefix: String = "graft:
   override def close(): Unit = c.close()
 }
 
-/** API-node [[JobBroker]] over Redis lists. */
-final class RedisQueueBroker(host: String, port: Int, store: JobStateStore,
-    prefix: String = "graft:") extends BrokerBase(store) {
-  import RedisControlPlane.RespClient
-  private val c = new RespClient(host, port)
+/** The API node's broker over the Redis queue. */
+class RedisQueueBroker(host: String, port: Int, store: JobStateStore, prefix: String = "graft:")
+  extends QueueBroker(new RedisQueue(host, port, prefix), store)
 
-  private def queueKey(q: String) = s"${prefix}queue:$q"
-
-  protected def enqueue(job: Job, task: Task, epoch: Long): Unit =
-    c.cmd("LPUSH", queueKey(job.queue), JobWire.encode(job, epoch, 1)): Unit
-
-  /** Newest-first: LPUSH puts the newest at the head, LRANGE walks
-    * head→tail — the reference's reversed pending listing for free. */
-  override def pendingJobs(queue: String): Seq[String] =
-    c.cmdSeq("LRANGE", queueKey(queue), "0", "-1")
-      .flatMap(p => JobWire.decode(p.toString).map(_._1.id))
-
-  /** Drop unclaimed payloads: LREM the exact strings LRANGE returned
-    * (payloads round-trip bytes-exactly). */
-  protected def dropQueued(jobId: String): Unit =
-    c.cmdSeq("KEYS", s"${prefix}queue:*").map(_.toString).foreach { qk =>
-      c.cmdSeq("LRANGE", qk, "0", "-1").map(_.toString).foreach { p =>
-        if (JobWire.decode(p).exists(_._1.id == jobId))
-          c.cmd("LREM", qk, "0", p): Unit
-      }
-    }
-
-  protected def anyQueued: Boolean =
-    c.cmdSeq("KEYS", s"${prefix}queue:*").map(_.toString)
-      .exists(qk => c.cmdLong("LLEN", qk) > 0)
-
-  override def shutdown(): Unit = { super.shutdown(); c.close() }
-}
-
-/** Worker-process side: claims payloads with an atomic
-  * `LMOVE queue:<q> processing:<workerId> RIGHT LEFT` (exactly one worker
-  * wins each, and a reply lost with the socket parks the payload in the
-  * processing list instead of losing it — the Redis reliable-queue
-  * pattern) and executes them through the [[ClaimLoop]] against the SHARED
-  * Redis state. A claim is acked (LREM from the processing list) as soon
-  * as it is handed to the scheduler; [[RedisClaims.recoverOrphans]]
-  * recovers everything else. Retryable failures re-publish through the
-  * SHARED queue (LPUSH of the next attempt), so any worker in the fleet
-  * claims the retry. `queues = None` consumes every `queue:*` key (the
-  * reference's worker consumes its configured queues).
-  *
-  * `workerId` must be UNIQUE per live worker and STABLE across restarts
-  * of the same worker slot (the standard reliable-queue deployment
-  * contract): unique because a reaper may only judge ITS OWN processing
-  * list (another live worker's entries are in-flight, not orphans);
-  * stable so a restarted worker inherits — and recovers — its
-  * predecessor's parked claims. */
-final class RedisQueueWorker(
+/** A queue worker over the Redis queue, with `workerId`'s processing list. */
+class RedisQueueWorker(
     spark: org.apache.spark.sql.SparkSession,
     tasks: Map[String, Task],
     store: JobStateStore,
@@ -344,21 +295,59 @@ final class RedisQueueWorker(
     prefix: String = "graft:",
     pollMs: Long = ClaimLoop.DefaultPollMs,
     workerId: String = "w0")
-  extends ClaimLoop(spark, tasks, store,
-    new RedisClaims(store, host, port, queues, prefix, workerId), pollMs,
-    "graft-redis-queue-worker")
+  extends ClaimLoop(spark, tasks, store, new RedisQueue(host, port, prefix, workerId), queues,
+    pollMs, "graft-redis-queue-worker")
 
-/** The Redis plane's claim primitive: `LMOVE queue:<q> processing:<w>
-  * RIGHT LEFT`, with a reaper over the processing list. The receipt is
-  * the payload string, which LREM removes exactly. */
-private[graft] final class RedisClaims(store: JobStateStore, host: String, port: Int,
-    queues: Option[Seq[String]], prefix: String, workerId: String) extends ClaimBackend {
+/** The Redis plane's [[SharedQueue]] over lists. Publish LPUSHes the
+  * payload at the head of `queue:<q>`. A worker claims with an atomic
+  * `LMOVE queue:<q> processing:<workerId> RIGHT LEFT` (exactly one worker
+  * wins each, and a reply lost with the socket parks the payload in the
+  * processing list instead of losing it — the Redis reliable-queue
+  * pattern); the receipt is the payload string, which LREM removes
+  * exactly. A claim is acked (LREM from the processing list) as soon as it
+  * is handed to the scheduler; [[recoverOrphans]] recovers everything
+  * else. `queues = None` claims from every `queue:*` key (the reference's
+  * worker consumes its configured queues).
+  *
+  * `workerId` must be UNIQUE per live worker and STABLE across restarts
+  * of the same worker slot (the standard reliable-queue deployment
+  * contract): unique because a reaper may only judge ITS OWN processing
+  * list (another live worker's entries are in-flight, not orphans);
+  * stable so a restarted worker inherits — and recovers — its
+  * predecessor's parked claims. The API node's queue never claims, so its
+  * `workerId` names nothing. */
+final class RedisQueue(host: String, port: Int, prefix: String = "graft:",
+    workerId: String = "w0") extends SharedQueue {
   import RedisControlPlane.RespClient
   type Receipt = String
   private val c = new RespClient(host, port)
   private val processingKey = s"${prefix}processing:$workerId"
   /** The current sweep's queue keys; the head is drained before the next. */
   private var sweep: List[String] = Nil
+
+  private def queueKey(q: String) = s"${prefix}queue:$q"
+  private def allQueueKeys(): Seq[String] = c.cmdSeq("KEYS", queueKey("*")).map(_.toString)
+
+  def publish(job: Job, epoch: Long, attempt: Int): Unit =
+    c.cmd("LPUSH", queueKey(job.queue), JobWire.encode(job, epoch, attempt)): Unit
+
+  /** Newest-first: LPUSH puts the newest at the head, LRANGE walks
+    * head→tail — the reference's reversed pending listing for free. */
+  def pending(queue: String): Seq[String] =
+    c.cmdSeq("LRANGE", queueKey(queue), "0", "-1")
+      .flatMap(p => JobWire.decode(p.toString).map(_._1.id))
+
+  /** Drop unclaimed payloads: LREM the exact strings LRANGE returned
+    * (payloads round-trip bytes-exactly). */
+  def drop(jobId: String): Unit =
+    allQueueKeys().foreach { qk =>
+      c.cmdSeq("LRANGE", qk, "0", "-1").map(_.toString).foreach { p =>
+        if (JobWire.decode(p).exists(_._1.id == jobId))
+          c.cmd("LREM", qk, "0", p): Unit
+      }
+    }
+
+  def isEmpty: Boolean = !allQueueKeys().exists(qk => c.cmdLong("LLEN", qk) > 0)
 
   /** Payloads handed to the local scheduler whose ack (LREM) has not been
     * confirmed yet — the reaper's disambiguator between "hand-off done,
@@ -383,7 +372,7 @@ private[graft] final class RedisClaims(store: JobStateStore, host: String, port:
     *     epoch, torn): drop — a re-queue would double-run.
     *
     * Every step removes the head, so the LLEN-bounded loop terminates. */
-  def recoverOrphans(): Unit = {
+  def recoverOrphans(store: JobStateStore): Unit = {
     var remaining = c.cmdLong("LLEN", processingKey)
     while (remaining > 0) {
       remaining -= 1
@@ -402,20 +391,14 @@ private[graft] final class RedisClaims(store: JobStateStore, host: String, port:
         case Some((job, epoch, _)) if
             store.get(job.id).exists(s => JobState.isLive(s.state)) &&
             store.epoch(job.id) == epoch =>
-          c.cmd("LMOVE", processingKey, s"${prefix}queue:${job.queue}",
-            "LEFT", "RIGHT")
+          c.cmd("LMOVE", processingKey, queueKey(job.queue), "LEFT", "RIGHT")
         case _ => c.cmd("LPOP", processingKey)
       }
     }
   }
 
-  private def queueKeys(): List[String] = queues match {
-    case Some(qs) => qs.map(q => s"${prefix}queue:$q").toList
-    case None => c.cmdSeq("KEYS", s"${prefix}queue:*").map(_.toString).toList
-  }
-
-  def claim(): Option[Claimed[String]] = {
-    if (sweep.isEmpty) sweep = queueKeys()
+  def claim(queues: Option[Seq[String]]): Option[Claimed[String]] = {
+    if (sweep.isEmpty) sweep = queues.fold(allQueueKeys())(_.map(queueKey)).toList
     while (sweep.nonEmpty) {
       val payload = c.cmd("LMOVE", sweep.head, processingKey, "RIGHT", "LEFT")
       if (payload == null) sweep = sweep.tail
@@ -439,9 +422,6 @@ private[graft] final class RedisClaims(store: JobStateStore, host: String, port:
     c.cmd("LREM", processingKey, "1", cl.receipt)
     handedOff.remove(cl.receipt): Unit
   }
-
-  def republish(job: Job, attempt: Int, epoch: Long): Unit =
-    c.cmd("LPUSH", s"${prefix}queue:${job.queue}", JobWire.encode(job, epoch, attempt)): Unit
 
   /** Socket/protocol errors (broker restart, dropped connection) are
     * transient: dial a fresh connection (throws while the broker is still

@@ -28,7 +28,9 @@ import org.apache.spark.sql.SparkSession
 final class Scheduler(spark: SparkSession, store: JobStateStore) extends BrokerBase(store) {
   private val pools = new ConcurrentHashMap[String, ThreadPoolExecutor]()
   private val pending = new ConcurrentHashMap[String, ConcurrentLinkedDeque[String]]()
-  private val running = new ConcurrentHashMap[String, Thread]()
+  /** A running attempt: its worker thread and its admission epoch. */
+  private final class Run(val thread: Thread, val epoch: Long)
+  private val running = new ConcurrentHashMap[String, Run]()
   // per-task concurrency limit (tasqueue registers task.Conc workers per
   // task, core.go:437-440); fixed at first sight like queue concurrency
   private val taskSlots = new ConcurrentHashMap[String, java.util.concurrent.Semaphore]()
@@ -109,7 +111,8 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends BrokerB
     // backoff): a stale attempt must not touch the fresh job's state/results
     if (store.epoch(job.id) != myEpoch) return
     val worker = Thread.currentThread()
-    running.put(job.id, worker)
+    val run = new Run(worker, myEpoch)
+    running.put(job.id, run)
     try {
       store.setIfPresent(job.id, JobState.Started)
       // TTL watchdog (core.go:354-357): cancel the job group AND interrupt
@@ -131,9 +134,10 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends BrokerB
       } catch {
         case e: Throwable =>
           attemptLive.set(false); ttlTimer.cancel(false)
-          if (store.get(job.id).isEmpty) {
-            // canceled: kill any stages that slipped in after the canceler's
-            // cancelJobGroup (e.g. cancel landed during planning), then stop.
+          if (store.get(job.id).isEmpty || store.epoch(job.id) != myEpoch) {
+            // canceled (or canceled and re-admitted): kill any stages that
+            // slipped in after the canceler's cancelJobGroup (e.g. cancel
+            // landed during planning), then stop.
             Thread.interrupted() // clear the canceler's interrupt
             spark.sparkContext.cancelJobGroup(job.id)
           }
@@ -153,7 +157,7 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends BrokerB
           }
           else store.setIfPresent(job.id, JobState.Failure, -1, safeMsg(e))
       } finally Thread.interrupted() // drop any stray TTL interrupt
-    } finally running.remove(job.id)
+    } finally run.synchronized(running.remove(job.id, run))
   }
 
   private def safeMsg(e: Throwable): String =
@@ -172,13 +176,27 @@ final class Scheduler(spark: SparkSession, store: JobStateStore) extends BrokerB
     pending.values().asScala.foreach(_.remove(jobId))
     // only a running job has Spark jobs to kill: a queued or finished job's
     // group has none, and cancelling it would only log DAGScheduler's
-    // "Failed to cancel job group" WARN. The in-flight query may still be
-    // in planning (no Spark jobs tagged yet) — interrupt the worker thread
-    // so the driver-side wait aborts; the worker then re-fires
-    // cancelJobGroup for late-submitted stages.
-    Option(running.get(jobId)).foreach { worker =>
+    // "Failed to cancel job group" WARN
+    Option(running.get(jobId)).foreach(stop(jobId, _))
+  }
+
+  /** Stop every local run whose admission the shared store no longer
+    * holds (entry gone, or epoch moved on): a queue worker's [[ClaimLoop]]
+    * calls this every tick, as a cancel issued on another node cannot reach
+    * this process's threads otherwise. */
+  private[graft] def stopCanceled(): Unit =
+    running.forEach { (id, run) =>
+      if (store.get(id).isEmpty || store.epoch(id) != run.epoch) stop(id, run)
+    }
+
+  /** Kill a running attempt's Spark jobs and interrupt its worker, whose
+    * query may still be in planning (the worker then re-fires
+    * cancelJobGroup for late stages). Only while the run is registered, so
+    * an attempt that just ended never passes the interrupt on. */
+  private def stop(jobId: String, run: Run): Unit = run.synchronized {
+    if (running.get(jobId) eq run) {
       spark.sparkContext.cancelJobGroup(jobId)
-      worker.interrupt()
+      run.thread.interrupt()
     }
   }
 

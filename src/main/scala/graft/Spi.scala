@@ -22,8 +22,9 @@ package graft
   *     [[GroupStatus.reduce]].
   *   - [[JobBroker]] — enqueue/cancel/backlog. In-process impl:
   *     [[Scheduler]] (JVM thread pools per queue; Spark schedules the rest).
-  *     A queue-backed impl would push job IDs to a shared broker and run
-  *     `Scheduler`-like consumers in each worker process.
+  *     A shared plane's impl is a [[QueueBroker]] over its [[SharedQueue]],
+  *     whose jobs each worker process's [[ClaimLoop]] claims and runs on a
+  *     local `Scheduler`.
   *
   * `GraftCore`/`Api`/`HttpApi` depend only on these traits, so a deployment
   * swaps the control plane without touching the API surface. The

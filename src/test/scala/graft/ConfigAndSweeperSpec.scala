@@ -283,4 +283,16 @@ class ConfigAndSweeperSpec extends AnyFunSuite {
       assert(core.store.get(job.id).exists(_.state == JobState.Success))
     } finally { stopWorker(); core.scheduler.shutdown() }
   }
+
+  test("[control] with both dir and jdbc_url is refused, naming both keys") {
+    val toml = """[control]
+                 |dir = "/tmp/graft-ctl"
+                 |jdbc_url = "jdbc:derby:memory:cfgboth;create=true"
+                 |""".stripMargin
+    val e = intercept[IllegalArgumentException](GraftConfig.fromString(toml, env = Map.empty))
+    assert(e.getMessage.contains("dir") && e.getMessage.contains("jdbc_url"), e.getMessage)
+    // the environment overlay can make the second key too
+    intercept[IllegalArgumentException](GraftConfig.fromString("[control]\ndir = \"/tmp/x\"\n",
+      env = Map("GRAFT_CONTROL__JDBC_URL" -> "jdbc:derby:memory:cfgenv;create=true")))
+  }
 }

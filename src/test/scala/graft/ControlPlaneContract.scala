@@ -3,16 +3,17 @@ package graft
 import java.nio.file.{Files, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The control-plane contract: every shared [[JobStateStore]] +
-  * [[BrokerBase]] + [[ClaimLoop]] backend (File, JDBC, Redis) must pass
-  * these cases. A backend suite extends this class with a [[Plane]] and
-  * adds its backend-only cases. Independent store, broker and worker
-  * instances over one plane stand in for separate processes: the API
-  * nodes and the worker fleet of the reference's shared-Redis topology.
+/** The control-plane contract: every shared plane's [[JobStateStore]] and
+  * [[SharedQueue]] (File, JDBC, Redis), under a [[QueueBroker]] and
+  * [[ClaimLoop]] workers, must pass these cases. A backend suite extends
+  * this class with a [[Plane]] and adds its backend-only cases.
+  * Independent store, broker and worker instances over one plane stand in
+  * for separate processes: the API nodes and the worker fleet of the
+  * reference's shared-Redis topology.
   *
   * `names` maps a case's key (`run`, `codegen`, `dup`, `cancel`, `race`,
-  * `retry`, `backoff`, `orphan`, `notask`, `fault`, `wire`) to the name of the backend
-  * test it replaced, so that test keeps its ID.
+  * `retry`, `backoff`, `orphan`, `notask`, `fault`, `wire`, `cancelrun`) to
+  * the name of the backend test it replaced, so that test keeps its ID.
   */
 abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
     extends AnyFunSuite {
@@ -21,10 +22,12 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
   /** One backend's shared state (a directory, a database, a Redis server). */
   protected trait Plane {
     def store(): JobStateStore
-    def broker(store: JobStateStore): JobBroker
-    def backend(store: JobStateStore): ClaimBackend
-    def worker(tasks: Map[String, Task], store: JobStateStore,
-        pollMs: Long = ClaimLoop.DefaultPollMs): ClaimLoop
+    /** A new client of the plane's queue. */
+    def queue(): SharedQueue
+    final def broker(store: JobStateStore): JobBroker = new QueueBroker(queue(), store)
+    final def worker(tasks: Map[String, Task], store: JobStateStore,
+        pollMs: Long = ClaimLoop.DefaultPollMs): ClaimLoop =
+      new ClaimLoop(spark, tasks, store, queue(), None, pollMs, "graft-contract-worker")
     /** Leave `job` claimed by a worker that died before executing it. */
     def strandClaim(job: Job): Unit
     /** Claims currently held by any worker, live or dead. */
@@ -57,7 +60,8 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
     }
   }
 
-  /** `count_events` and `profit` over the sf0.001 fixture, or over an empty
+  /** `count_events`, `profit` and `slow_count` (minutes of work whose
+    * tasks stop when killed) over the sf0.001 fixture, or over an empty
     * source directory (every run fails until [[Fixture.makeEvents]]). */
   protected def fixture(emptySource: Boolean = false): Fixture = {
     val tasksDir = TempDirs.make("graft-cp-tasks")
@@ -68,6 +72,9 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
         |-- name: profit
         |SELECT CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
         |FROM events WHERE user_id = $1;
+        |
+        |-- name: slow_count
+        |SELECT COUNT(*) AS n FROM range(0, 1000000000000) WHERE id % 7 <> $1;
         |""".stripMargin)
     val srcDir = TempDirs.make("graft-cp-src")
     val results = TempDirs.make("graft-cp-results").toString
@@ -217,9 +224,9 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
       // retry, so the attempt provably crosses workers
       val storeA = p.store()
       val workerA = new ClaimLoop(spark, fx.tasks, storeA,
-        new ControlPlaneContract.ClaimOnce(p.backend(storeA)), 25, "graft-contract-worker")
+        new ControlPlaneContract.ClaimOnce(p.queue()), None, 25, "graft-contract-worker")
       try {
-        // the re-published entry carries attempt 2: a republish that kept
+        // the re-published entry carries attempt 2: a publish that kept
         // attempt 1 would retry across workers forever
         assert(await(30000) {
           apiStore.get(job.id).exists(_.state == JobState.Retry) &&
@@ -300,8 +307,8 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
       val job = fx.job("cp-fault")
       assert(broker.submit(job, fx.task))
       val workerStore = p.store()
-      val flaky = new ControlPlaneContract.FailFirstClaim(p.backend(workerStore))
-      val worker = new ClaimLoop(spark, fx.tasks, workerStore, flaky, 25,
+      val flaky = new ControlPlaneContract.FailFirstClaim(p.queue())
+      val worker = new ClaimLoop(spark, fx.tasks, workerStore, flaky, None, 25,
         "graft-contract-worker")
       try {
         assert(awaitDone(store, job.id).exists(_.state == JobState.Success),
@@ -314,59 +321,98 @@ abstract class ControlPlaneContract(names: Map[String, String] = Map.empty)
     }
   }
 
+  /** The Spark tasks of `group`'s jobs still running in this JVM, also
+    * those of a cancelled job whose task has not noticed the kill yet. */
+  private def activeTasks(group: String): Int = {
+    val tracker = spark.sparkContext.statusTracker
+    tracker.getJobIdsForGroup(group).flatMap(tracker.getJobInfo(_)).flatMap(_.stageIds)
+      .flatMap(tracker.getStageInfo(_)).map(_.numActiveTasks).sum
+  }
+
+  contract("cancelrun", "cancel while running: the worker stops the job's Spark work") {
+    withPlane { p =>
+      val fx = fixture()
+      val apiStore = p.store()
+      val api = new GraftCore(spark, fx.tasks, fx.src, fx.bk,
+        mkStore = () => apiStore, mkBroker = (_, st) => p.broker(st))
+      val worker = p.worker(fx.tasks, p.store())
+      val id = "cp-cancelrun"
+      try {
+        api.postJob(JobReq("slow_count", jobId = id, args = Seq("3"), ttlSec = 600))
+        // cancel once the count's tasks run: a cancel that lands while the
+        // job is still being planned is a separate race
+        assert(await(60000)(activeTasks(id) > 0),
+          s"the job never ran a Spark task; state=${apiStore.get(id)}")
+        api.deleteJob(id)
+        assert(await(10000)(activeTasks(id) == 0 && worker.awaitQuiescence(100)),
+          s"the cancel left ${activeTasks(id)} Spark task(s) of the job running")
+        assert(apiStore.get(id).isEmpty)
+      } finally {
+        // where the cancel did not reach the worker, stop the count here
+        await(60000) {
+          if (activeTasks(id) > 0) spark.sparkContext.cancelJobGroup(id)
+          activeTasks(id) == 0 && worker.awaitQuiescence(100)
+        }
+        worker.stop(); api.scheduler.shutdown()
+      }
+    }
+  }
+
   contract("wire", "a claim returns the job as submitted, with its epoch and attempt") {
     withPlane { p =>
       val fx = fixture()
       val store = p.store()
       val broker = p.broker(store)
-      val backend = p.backend(p.store())
+      val queue = p.queue()
       val full = Job("cp-wire-1", "count_events", "default",
         Some(java.time.LocalDateTime.of(2031, 1, 2, 3, 4, 5, 6000)), 2, 90,
         Seq("", "a\nb", "c,d;e%f", "\u00fc"), Some("db"))
       val bare = Job("cp-wire-2", "count_events", "default", None, 0, 60, Nil, None)
       try {
         Seq(full, bare).foreach(j => assert(broker.submit(j, fx.task)))
-        val claims = Seq(backend.claim(), backend.claim()).flatten
-        claims.foreach(backend.ack(_))
+        val claims = Seq(queue.claim(None), queue.claim(None)).flatten
+        claims.foreach(queue.ack(_))
         assert(claims.map(c => (c.job, c.epoch, c.attempt)).toSet ==
           Set((full, store.epoch(full.id), 1), (bare, store.epoch(bare.id), 1)))
-        backend.republish(full, 2, store.epoch(full.id))
-        val retry = backend.claim()
-        retry.foreach(backend.ack(_))
+        queue.publish(full, store.epoch(full.id), 2)
+        val retry = queue.claim(None)
+        retry.foreach(queue.ack(_))
         assert(retry.map(c => (c.job, c.epoch, c.attempt)) ==
           Some((full, store.epoch(full.id), 2)))
-      } finally { backend.close(); broker.shutdown() }
+      } finally { queue.close(); broker.shutdown() }
     }
   }
 }
 
 object ControlPlaneContract {
-  /** A backend that passes every call on to `inner`. */
-  abstract class Forwarding(val inner: ClaimBackend) extends ClaimBackend {
+  /** A queue that passes every call on to `inner`. */
+  abstract class Forwarding(val inner: SharedQueue) extends SharedQueue {
     type Receipt = inner.Receipt
-    def recoverOrphans(): Unit = inner.recoverOrphans()
-    def claim(): Option[Claimed[Receipt]] = inner.claim()
+    def publish(job: Job, epoch: Long, attempt: Int): Unit = inner.publish(job, epoch, attempt)
+    def pending(queue: String): Seq[String] = inner.pending(queue)
+    def drop(jobId: String): Unit = inner.drop(jobId)
+    def isEmpty: Boolean = inner.isEmpty
+    def recoverOrphans(store: JobStateStore): Unit = inner.recoverOrphans(store)
+    def claim(queues: Option[Seq[String]]): Option[Claimed[Receipt]] = inner.claim(queues)
     def ack(c: Claimed[Receipt]): Unit = inner.ack(c)
-    def republish(job: Job, attempt: Int, epoch: Long): Unit =
-      inner.republish(job, attempt, epoch)
     override def reset(): Unit = inner.reset()
     override def close(): Unit = inner.close()
   }
 
-  /** A backend whose first `claim` throws an I/O error. */
-  final class FailFirstClaim(backend: ClaimBackend) extends Forwarding(backend) {
+  /** A queue whose first `claim` throws an I/O error. */
+  final class FailFirstClaim(queue: SharedQueue) extends Forwarding(queue) {
     @volatile var faults = 0
-    override def claim(): Option[Claimed[Receipt]] =
+    override def claim(queues: Option[Seq[String]]): Option[Claimed[Receipt]] =
       if (faults == 0) { faults += 1; throw new java.io.IOException("injected claim fault") }
-      else super.claim()
+      else super.claim(queues)
   }
 
-  /** A backend that claims one job and then finds every queue empty. */
-  final class ClaimOnce(backend: ClaimBackend) extends Forwarding(backend) {
+  /** A queue that claims one job and then finds every queue empty. */
+  final class ClaimOnce(queue: SharedQueue) extends Forwarding(queue) {
     @volatile private var claimed = false
-    override def claim(): Option[Claimed[Receipt]] =
+    override def claim(queues: Option[Seq[String]]): Option[Claimed[Receipt]] =
       if (claimed) None
-      else { val c = super.claim(); claimed = c.isDefined; c }
+      else { val c = super.claim(queues); claimed = c.isDefined; c }
   }
 
   /** A store that notes when each state was first written. */

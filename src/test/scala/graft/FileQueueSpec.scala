@@ -3,10 +3,9 @@ package graft
 import java.io.File
 import java.nio.file.{Files, Path}
 
-/** The shared-directory control plane ([[FileQueueBroker]] +
-  * [[FileQueueWorker]] + [[FileJobStateStore]]) under the
-  * [[ControlPlaneContract]]: store, broker and worker instances are
-  * separate objects over the same directories. */
+/** The shared-directory control plane ([[FileQueue]] +
+  * [[FileJobStateStore]]) under the [[ControlPlaneContract]]: store, broker
+  * and worker instances are separate objects over the same directories. */
 class FileQueueSpec extends ControlPlaneContract(Map(
     "run" -> "API core enqueues; a separate worker claims, executes, API sees SUCCESS",
     "dup" -> "duplicate ID is refused cross-process while queued/running",
@@ -20,32 +19,29 @@ class FileQueueSpec extends ControlPlaneContract(Map(
     private val root = TempDirs.make("graft-fq").toFile
     private val stateDir = new File(root, "state")
     val queueDir = new File(root, "queue")
-    private def claimedDir = Files.createDirectories(queueDir.toPath.resolve("_claimed"))
+    private val layout = new FileQueue(queueDir)
 
     def store(): JobStateStore = new FileJobStateStore(stateDir)
-    def broker(st: JobStateStore): JobBroker = new FileQueueBroker(queueDir, st)
-    def backend(st: JobStateStore): ClaimBackend = new FileClaims(queueDir, None)
-    def worker(tasks: Map[String, Task], st: JobStateStore, pollMs: Long): ClaimLoop =
-      new FileQueueWorker(spark, tasks, st, queueDir, pollMs = pollMs)
+    def queue(): SharedQueue = new FileQueue(queueDir)
 
     /** Move the queue file into `_claimed` under a PID that is not alive
       * on this host. */
     def strandClaim(job: Job): Unit = strandClaim(job, FileQueue.host): Unit
 
     def strandClaim(job: Job, host: String): Path = {
-      val qdir = FileQueue.queueDir(queueDir, job.queue)
+      val qdir = layout.queueDir(job.queue)
       val qfile = queueFiles(job).head
-      Files.move(qfile, claimedDir.resolve(
+      Files.move(qfile, layout.claimedDir.resolve(
         s"${host}__${deadPid}__${qdir.getFileName}__${qfile.getFileName}"))
     }
 
-    def claimsHeld(): Long = FileQueue.list(claimedDir).size.toLong
+    def claimsHeld(): Long = FileQueue.list(layout.claimedDir).size.toLong
 
     def queuedAttempt(job: Job): Option[Int] =
       queueFiles(job).flatMap(FileQueue.read).map(_._3).headOption
 
     private def queueFiles(job: Job): List[Path] =
-      FileQueue.list(FileQueue.queueDir(queueDir, job.queue))
+      FileQueue.list(layout.queueDir(job.queue))
         .filter(_.getFileName.toString.endsWith(s"_${FsUtil.safe(job.id)}${FileQueue.Suffix}"))
   }
 

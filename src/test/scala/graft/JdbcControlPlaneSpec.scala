@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Cross-process control plane over JDBC ([[JdbcJobStateStore]] /
-  * [[JdbcQueueBroker]] / [[JdbcQueueWorker]]) — the deployment topology with
+  * [[JdbcQueue]]) — the deployment topology with
   * no shared filesystem — under the [[ControlPlaneContract]] and the
   * [[StateStoreContract]], plus its backend-only cases. Embedded Derby
   * stands in for the network database; every test drives independent
@@ -35,11 +35,8 @@ class JdbcControlPlaneSpec extends ControlPlaneContract(Map(
   protected def newPlane(): Plane = new Plane {
     private val url = freshUrl()
     def store(): JobStateStore = new JdbcJobStateStore(url)
-    def broker(st: JobStateStore): JobBroker = new JdbcQueueBroker(url, st)
     // a short lease, so the orphan case need not wait out the default
-    def backend(st: JobStateStore): ClaimBackend = new JdbcClaims(url, st, None, 1000)
-    def worker(tasks: Map[String, Task], st: JobStateStore, pollMs: Long): ClaimLoop =
-      new JdbcQueueWorker(spark, tasks, st, url, pollMs = pollMs, claimLeaseMs = 1000)
+    def queue(): SharedQueue = new JdbcQueue(url, claimLeaseMs = 1000)
 
     /** Mark the row claimed by a dead host, with an ancient stamp. */
     def strandClaim(job: Job): Unit = Jdbc.withConn(url) { c =>
@@ -70,7 +67,7 @@ class JdbcControlPlaneSpec extends ControlPlaneContract(Map(
     val url = freshUrl()
     val tasks = fixture().tasks
     val store = new JdbcJobStateStore(url)
-    val broker = new JdbcQueueBroker(url, store)
+    val broker = new QueueBroker(new JdbcQueue(url), store)
     // job 1: owner died AFTER completing (store says Success, row never deleted)
     val j1 = JobFactory.make(JobReq("count_events", jobId = "jq-reap-done"), tasks("count_events"))
     assert(broker.submit(j1, tasks("count_events")))
@@ -88,8 +85,8 @@ class JdbcControlPlaneSpec extends ControlPlaneContract(Map(
     } finally c.close()
     // without reaping, awaitQuiescence could never return true: both rows
     // stay in graft_queue forever (nobody re-claims a terminal/purged job)
-    val worker = new JdbcQueueWorker(spark, tasks, new JdbcJobStateStore(url), url,
-      claimLeaseMs = 1000)
+    val worker = new ClaimLoop(spark, tasks, new JdbcJobStateStore(url),
+      new JdbcQueue(url, claimLeaseMs = 1000), None, ClaimLoop.DefaultPollMs, "graft-jdbc-queue-worker")
     try assert(broker.awaitQuiescence(15000), "stranded claim rows were not reaped")
     finally worker.stop()
   }
@@ -145,19 +142,19 @@ class JdbcControlPlaneSpec extends ControlPlaneContract(Map(
     val url = freshUrl()
     val tasks = fixture().tasks
     val store = new JdbcJobStateStore(url)
-    val broker = new JdbcQueueBroker(url, store)
+    val broker = new QueueBroker(new JdbcQueue(url), store)
     val mk = (id: String) =>
       JobFactory.make(JobReq("count_events", jobId = id), tasks("count_events"))
     assert(broker.submit(mk("jq-f1"), tasks("count_events")))
     // a worker filtered to a queue nobody posts to must touch nothing
-    val idle = new JdbcQueueWorker(spark, tasks, new JdbcJobStateStore(url), url,
-      queues = Some(Seq("other_queue")))
+    val idle = new ClaimLoop(spark, tasks, new JdbcJobStateStore(url), new JdbcQueue(url),
+      Some(Seq("other_queue")), ClaimLoop.DefaultPollMs, "graft-jdbc-queue-worker")
     try {
       Thread.sleep(400)
       assert(broker.pendingJobs("default") == Seq("jq-f1"), "filtered worker must not claim")
     } finally idle.stop()
-    val right = new JdbcQueueWorker(spark, tasks, new JdbcJobStateStore(url), url,
-      queues = Some(Seq("default")))
+    val right = new ClaimLoop(spark, tasks, new JdbcJobStateStore(url), new JdbcQueue(url),
+      Some(Seq("default")), ClaimLoop.DefaultPollMs, "graft-jdbc-queue-worker")
     try assert(awaitDone(store, "jq-f1").exists(_.state == JobState.Success))
     finally right.stop()
   }

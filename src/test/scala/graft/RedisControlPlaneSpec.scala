@@ -20,11 +20,7 @@ class RedisControlPlaneSpec extends ControlPlaneContract(Map(
     private val (h, p) = ("127.0.0.1", srv.boundPort)
     private val probe = new RedisControlPlane.RespClient(h, p)
     def store(): JobStateStore = new RedisJobStateStore(h, p)
-    def broker(st: JobStateStore): JobBroker = new RedisQueueBroker(h, p, st)
-    def backend(st: JobStateStore): ClaimBackend =
-      new RedisClaims(st, h, p, None, "graft:", "w0")
-    def worker(tasks: Map[String, Task], st: JobStateStore, pollMs: Long): ClaimLoop =
-      new RedisQueueWorker(spark, tasks, st, h, p, pollMs = pollMs)
+    def queue(): SharedQueue = new RedisQueue(h, p)
 
     /** The lost-reply claim: the payload moved into worker `w0`'s
       * processing list, but no worker ever saw the reply. A worker with
@@ -256,6 +252,25 @@ class RedisControlPlaneSpec extends ControlPlaneContract(Map(
             s"${job.id} was never claimed; state=${apiStore.get(job.id)}")
         }
       } finally { workers.foreach(_.stop()); broker.shutdown(); apiStore.close() }
+    }
+  }
+
+  // The job-path benchmark's start-up (`JobBench.startWorker`) finds the
+  // worker by this thread name and waits for it to sleep between ticks.
+  // Delete this case together with that restart loop when the benchmark
+  // next changes.
+  test("a RedisQueueWorker's poll thread is graft-redis-queue-worker and sleeps after its first tick") {
+    withServer { (h, p) =>
+      def pollThreads = Thread.getAllStackTraces.keySet.asScala
+        .filter(_.getName == "graft-redis-queue-worker").toSet
+      val before = pollThreads
+      val worker = new RedisQueueWorker(spark, Map.empty, new RedisJobStateStore(h, p), h, p)
+      try {
+        val fresh = pollThreads -- before
+        assert(fresh.size == 1, s"expected one new poll thread, found ${fresh.size}")
+        assert(await(5000)(fresh.head.getState == Thread.State.TIMED_WAITING),
+          s"the poll thread never slept; state=${fresh.head.getState}")
+      } finally worker.stop()
     }
   }
 }
